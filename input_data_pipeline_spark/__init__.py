@@ -17,6 +17,8 @@ pipeline; see SURVEY.md) as a distributed, Spark-first engine:
 
 __version__ = "0.1.0"
 
+# first: makes the per-task zip-cache invalidation in Python workers cheap
+from input_data_pipeline_spark import _zipcache  # noqa: F401
 from input_data_pipeline_spark.session import get_spark  # noqa: F401
 from input_data_pipeline_spark.plans.registry import (  # noqa: F401
     all_oracle_sql,

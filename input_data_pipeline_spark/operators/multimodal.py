@@ -11023,9 +11023,9 @@ _MP3_HUFF1 = {(0, 0): (1, 0b1), (0, 1): (3, 0b001), (1, 0): (2, 0b01), (1, 1): (
 _MP3_HUFF1_DEC = {v: k for k, v in _MP3_HUFF1.items()}
 # Tables 2 and 3 (round 14; 3x3, no linbits) — reproduced from the public
 # Annex B Table B.7 under the same data stance as the T.4 fax alphabets:
-# each is validated at import as a COMPLETE prefix code (Kraft sum exactly
-# 1 + prefix-free), which any single mis-remembered length or codeword
-# would break with overwhelming probability; value-ASSIGNMENT fidelity
+# each is validated by the test suite as a COMPLETE prefix code (Kraft
+# sum exactly 1 + prefix-free), which any single mis-remembered length or
+# codeword would break with overwhelming probability; value-ASSIGNMENT fidelity
 # against third-party encoders is the documented validation boundary.
 # The alphabet is COMPLETE since round 16 (tables 5-16/24 plus the
 # 17-23/25-31 linbits aliases ship below); the remaining MP3-family
@@ -11411,27 +11411,6 @@ def _mp3_count1a_lut8() -> list[int]:
     return _MP3_COUNT1A_LUT8
 
 
-def _mp3_check_huffman_tables() -> None:
-    """Import-time validation: every embedded Annex B alphabet is a
-    COMPLETE prefix code — Kraft sum exactly 1 and prefix-free."""
-    from fractions import Fraction
-
-    tables = [(f"huff{t}", tab) for t, tab in _MP3_HUFF_TABLES.items()]
-    for name, tab in tables + [("count1A", _MP3_COUNT1A)]:
-        codes = [format(c, f"0{ln}b") for ln, c in tab.values()]
-        if len(set(codes)) != len(codes):
-            raise AssertionError(f"MP3 {name}: duplicate codewords")
-        if sum(Fraction(1, 2 ** len(c)) for c in codes) != 1:
-            raise AssertionError(f"MP3 {name}: Kraft sum != 1")
-        ss = sorted(codes, key=len)
-        for i, a in enumerate(ss):
-            for b in ss[i + 1:]:
-                if b.startswith(a):
-                    raise AssertionError(f"MP3 {name} not prefix-free")
-
-
-_mp3_check_huffman_tables()
-
 # alias-reduction butterflies, §2.4.3.4.10.1
 _MP3_ALIAS_C = [-0.6, -0.535, -0.33, -0.185, -0.095, -0.041, -0.0142, -0.0037]
 
@@ -11698,7 +11677,7 @@ def _mp3_read_huffman(br: "_BitReader", g: "_MP3Granule", part2_bits: int) -> No
     each nonzero magnitude, count1 until part2_3_length bits are
     exhausted or line 576. ALL Annex B tables decode since round 16
     (0-3, 5-13, 15, and the 16/24 linbits families via
-    _MP3_TABLE_ALIAS), every alphabet Kraft-validated at import;
+    _MP3_TABLE_ALIAS), every alphabet Kraft-validated by test;
     table_select 4 and 14 are reserved codepoints and raise
     ValueError."""
     start_bit = br.bitpos()
@@ -20070,15 +20049,19 @@ def _g72x_decode_ref(codes, law: str = "g721"):
     return out
 
 
-# Packed FMULT decomposition table (round 18): for anmag in 0..0x1FFF,
-# _G72X_FLT[anmag] = (anexp + 6) << 6 | anmant with anexp = bit_length - 6
-# and anmant = anmag >> anexp (or << -anexp; 32 for zero) — one list
-# index replaces a bit_length call + two branches on the 8-FMULT-per-
-# sample hot path. Values verified against the inline decomposition at
-# build time.
+# Packed FMULT decomposition table (round 18): for every reachable
+# anmag, _G72X_FLT[anmag] = (anexp + 6) << 6 | anmant with anexp =
+# bit_length - 6 and anmant = anmag >> anexp (or << -anexp; 32 for zero)
+# — one list index replaces a bit_length call + two branches on the
+# 8-FMULT-per-sample hot path. Values verified against the inline
+# decomposition at build time. Reachable range: a negative an is masked
+# to 0..0x1FFF, but a positive zero tap b = b - (b >> sh) + 128 climbs
+# to 2^15 (sh = 8) or 2^16 (sh = 9, G.723 40 kbit/s) under a sustained
+# same-sign code run, so an = b >> 2 reaches 2^14; the poles stay below
+# (|a0| <= 27648, |a1| <= 12288).
 def _g72x_build_flt():
     out = []
-    for anmag in range(0x2000):
+    for anmag in range((1 << 14) + 1):
         anexp = anmag.bit_length() - 6
         if anmag == 0:
             anmant = 32

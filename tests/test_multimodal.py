@@ -3245,20 +3245,33 @@ def test_mp3_huffman_tables_2_to_10_and_count1a_roundtrip():
     table A: magnitudes up to each table's cap — PAST 15 on the ESC
     tables, so linbits extension bits are exercised — round-trip
     bit-exactly through encode_mp3_l3/_decode_mp3_l3 with per-granule
-    table selection; the embedded alphabets are validated at import as
+    table selection; the embedded alphabets are validated here as
     COMPLETE prefix codes (Kraft sum exactly 1 + prefix-free), so a
-    mis-transcribed length or codeword cannot load (two earlier table
+    mis-transcribed length or codeword cannot pass (two earlier table
     11/12 recollections failed exactly that check); the reserved
     table_select codepoints 4/14 still raise by name."""
+    from fractions import Fraction
+
     import pytest
 
     from input_data_pipeline_spark.operators.multimodal import (
+        _MP3_COUNT1A,
+        _MP3_HUFF_TABLES,
         _decode_mp3_l3,
-        _mp3_check_huffman_tables,
         encode_mp3_l3,
     )
 
-    _mp3_check_huffman_tables()  # idempotent re-validation
+    tables = [(f"huff{t}", tab) for t, tab in _MP3_HUFF_TABLES.items()]
+    for name, tab in tables + [("count1A", _MP3_COUNT1A)]:
+        codes = [format(c, f"0{ln}b") for ln, c in tab.values()]
+        assert len(set(codes)) == len(codes), f"MP3 {name}: duplicate codewords"
+        assert sum(Fraction(1, 2 ** len(c)) for c in codes) == 1, (
+            f"MP3 {name}: Kraft sum != 1"
+        )
+        ss = sorted(codes, key=len)
+        for i, a in enumerate(ss):
+            for b in ss[i + 1:]:
+                assert not b.startswith(a), f"MP3 {name} not prefix-free"
     caps = {2: 2, 3: 2, 5: 3, 6: 3, 7: 5, 8: 5, 9: 5, 10: 7,
             11: 7, 12: 7, 13: 15, 15: 15, 16: 16, 24: 30,
             21: 40, 29: 50, 23: 60, 31: 70}
@@ -6328,8 +6341,16 @@ def test_g72x_inlined_loop_matches_spec_blocks():
         assert np.array_equal(
             mm._g72x_decode_ref(allc, law), mm.g72x_decode(allc, law)
         )
+        # long constant-code runs: a sustained same-sign stream drives
+        # the zero taps to their ceiling (an = 2^13, or 2^14 at 40 kbit/s)
+        mask = (1 << bits) - 1
+        for c in (1, (1 << (bits - 1)) - 1, mask - 1):
+            run = np.full(20000, c, np.uint8)
+            assert np.array_equal(
+                mm._g72x_decode_ref(run, law), mm.g72x_decode(run, law)
+            )
     # the packed FMULT table agrees with the inline decomposition
-    for anmag in (0, 1, 31, 32, 63, 64, 4095, 8191):
+    for anmag in (0, 1, 31, 32, 63, 64, 4095, 8191, 8192, 16383, 16384):
         anexp = anmag.bit_length() - 6
         anmant = (
             32 if anmag == 0
