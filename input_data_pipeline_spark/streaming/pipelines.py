@@ -1113,38 +1113,33 @@ def stream_curation_gate(
     rows append to ``accepted_dir``; their fingerprints append to the
     ledger.
 
-    Replay safety: a batch whose id is already in the ledger is skipped
-    whole; if a crash lands between the accepted write and the ledger
-    write, the replayed batch may re-append accepted rows — which is why
+    Replay safety: the content-keyed ledger anti-join is the only guard.
+    A replayed batch re-reads the same rows, and once its ledger write
+    landed the ledger holds every stage-2 fingerprint it could accept,
+    so nothing passes again; a partly written ledger is repaired rather
+    than skipped. There is no batch-id check: a fresh checkpoint restarts
+    at batch id 0, and new documents in it must still be accepted. If a
+    crash lands between the accepted write and the ledger write, the
+    replayed batch re-appends accepted rows — which is why
     ``accepted_docs`` deduplicates by doc_id on read (min batch_id wins),
     the same merge-on-read discipline as the sketch ledgers. State per
     batch is one fingerprint row per accepted doc — the ledger grows with
-    the ACCEPTED corpus, not the raw stream."""
+    the ACCEPTED corpus, not the raw stream. The ledger is read with a
+    declared schema, so a micro-batch runs no schema-inference job."""
     from pyspark.sql import Window
 
     from input_data_pipeline_spark.operators.curation import funnel_stage_flags
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         # Only the expected missing-ledger (first batch) case is swallowed,
-        # and only as AnalysisException: a transient IO failure on either
+        # and only as AnalysisException: a transient IO failure on the
         # ledger read must FAIL the batch (foreachBatch retries it), not
-        # silently disable replay-skip or cross-batch dedup — a swallowed
-        # `seen` read would permanently accept duplicate-content docs,
-        # since accepted_docs dedups by doc_id, not fp.
+        # silently disable cross-batch dedup — a swallowed `seen` read
+        # would permanently accept duplicate-content docs, since
+        # accepted_docs dedups by doc_id, not fp.
         from pyspark.errors import AnalysisException
 
         spark = batch_df.sparkSession
-        try:
-            replayed = (
-                spark.read.parquet(ledger_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        except AnalysisException:  # first batch: ledger doesn't exist yet
-            pass
         flags = funnel_stage_flags(batch_df).filter("f2")
         w = Window.partitionBy("fp").orderBy("doc_id")
         firsts = (
@@ -1153,7 +1148,7 @@ def stream_curation_gate(
             .drop("_rn")
         )
         try:
-            seen = spark.read.parquet(ledger_dir).select("fp").distinct()
+            seen = spark.read.schema("fp string").parquet(ledger_dir)
             fresh = firsts.join(seen, "fp", "left_anti")
         except AnalysisException:  # first batch only; IO errors propagate
             fresh = firsts

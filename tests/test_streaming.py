@@ -757,40 +757,58 @@ def test_stream_bloom_update_parity(spark, sf_dir, tmp_path):
     assert spark.read.parquet(state).select("batch_id").distinct().count() == 2
 
 
-def test_stream_curation_gate_parity_and_replay(spark, sf_dir, tmp_path):
-    """The streamed gate over two micro-batches must accept exactly the
-    batch funnel's stage-3 survivor fingerprint set: per accepted fp one
-    doc, every accepted doc passes the quality gates, and the accepted
-    fp set equals the stage-2-survivor distinct fp set. Restarting the
-    stream over the same source must add nothing (ledger replay skip)."""
-    import pyspark.sql.functions as F
+def _doc_rows(docs) -> list[dict]:
+    return [
+        {"doc_id": r.doc_id, "ts": "2024-01-01T00:00:00", "text": r.text,
+         "lang": r.lang, "source": r.source}
+        for r in docs.orderBy("doc_id").collect()
+    ]
 
-    from input_data_pipeline_spark.operators.curation import funnel_stage_flags
+
+def _gate_starter(spark, src, acc, led):
+    """``start(checkpoint)`` for a curation gate over ``src`` that shares
+    one accepted dir and one ledger across restarts."""
     from input_data_pipeline_spark.streaming.pipelines import (
-        accepted_docs,
         stream_curation_gate,
         stream_docs,
     )
 
+    def start(checkpoint: str):
+        return (
+            stream_curation_gate(stream_docs(spark, str(src)), acc, led, checkpoint)
+            .queryName(_unique("gate"))
+            .start()
+        )
+
+    return start
+
+
+def _run_once(q) -> None:
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_stream_curation_gate_parity_and_replay(spark, sf_dir, tmp_path):
+    """The streamed gate over two micro-batches must accept exactly the
+    batch funnel's stage-3 survivor fingerprint set: per accepted fp one
+    doc, every accepted doc passes the quality gates, and the accepted
+    fp set equals the stage-2-survivor distinct fp set. Replaying the
+    whole source under a fresh checkpoint (every file re-read as batch 0)
+    must add nothing: the ledger anti-join drops every fingerprint."""
+    from input_data_pipeline_spark.operators.curation import funnel_stage_flags
+    from input_data_pipeline_spark.streaming.pipelines import accepted_docs
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rows = [
-        {"doc_id": r.doc_id, "ts": "2024-01-01T00:00:00", "text": r.text,
-         "lang": r.lang, "source": r.source}
-        for r in docs.collect()
-    ]
+    rows = _doc_rows(docs)
     src = tmp_path / "gate_in"
     src.mkdir()
     acc = str(tmp_path / "gate_accepted")
     led = str(tmp_path / "gate_ledger")
+    start = _gate_starter(spark, src, acc, led)
 
-    def start():
-        return (
-            stream_curation_gate(
-                stream_docs(spark, str(src)), acc, led, str(tmp_path / "gate_ckpt")
-            ).queryName(_unique("gate")).start()
-        )
-
-    q = start()
+    q = start(str(tmp_path / "gate_ckpt"))
     _write_events(src, "a.jsonl", rows[: len(rows) // 2])
     try:
         q.processAllAvailable()
@@ -809,14 +827,94 @@ def test_stream_curation_gate_parity_and_replay(spark, sf_dir, tmp_path):
     ok_ids = {r.doc_id for r in expect.collect()}
     assert all(r.doc_id in ok_ids for r in got_rows)
 
-    # replay: a fresh stream over the same source must change nothing
-    n_before = got.count()
-    q2 = start()
+    # replay: a fresh checkpoint re-runs both files as batch 0
+    n_raw = spark.read.parquet(acc).count()
+    _run_once(start(str(tmp_path / "gate_ckpt2")))
+    assert spark.read.parquet(acc).count() == n_raw
+    assert accepted_docs(spark, acc).count() == len(want_fps)
+
+
+def test_stream_curation_gate_fresh_checkpoint_accepts_new_docs(
+    spark, sf_dir, tmp_path
+):
+    """A fresh checkpoint restarts at batch id 0, which the ledger already
+    holds from the first run. The gate must still accept the new file's
+    unseen fingerprints (dedup is keyed on content, not batch id), and a
+    third fresh-checkpoint run must append no row at all."""
+    from input_data_pipeline_spark.operators.curation import funnel_stage_flags
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rows = _doc_rows(docs)
+    src = tmp_path / "gate_in"
+    src.mkdir()
+    acc = str(tmp_path / "gate_accepted")
+    led = str(tmp_path / "gate_ledger")
+    start = _gate_starter(spark, src, acc, led)
+
+    _write_events(src, "a.jsonl", rows[: len(rows) // 2])
+    _run_once(start(str(tmp_path / "c1")))
+    _write_events(src, "b.jsonl", rows[len(rows) // 2 :])
+    _run_once(start(str(tmp_path / "c2")))
+
+    flags = funnel_stage_flags(docs).filter("f2")
+    want_fps = {r.fp for r in flags.select("fp").distinct().collect()}
+    half = rows[len(rows) // 2]["doc_id"]
+    a_fps = {r.fp for r in flags.filter(f"doc_id < {half}").select("fp").collect()}
+    assert want_fps - a_fps, "file b must carry fingerprints file a lacks"
+
+    got = spark.read.parquet(acc).select("doc_id", "fp").collect()
+    assert {r.fp for r in got} == want_fps
+    assert len(got) == len(want_fps)               # one doc per fp
+    assert len({r.doc_id for r in got}) == len(got)
+
+    _run_once(start(str(tmp_path / "c3")))
+    assert spark.read.parquet(acc).count() == len(got)
+
+
+def _sync_stage_ids(spark) -> dict[int, str]:
+    """Stage id -> status of every stage the status store holds, after the
+    listener bus has delivered all pending events."""
+    from input_data_pipeline_spark.plans.metrics import _stage_list
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    stages = _stage_list(spark)
+    return {
+        stages.apply(i).stageId(): stages.apply(i).status().toString()
+        for i in range(stages.size())
+    }
+
+
+def test_stream_curation_gate_stage_budget(spark, sf_dir, tmp_path):
+    """Each micro-batch after the first runs 6 Spark stages: per output
+    (accepted rows, ledger rows) one shuffle-map stage for the first-wins
+    window, one broadcast of the ledger scan and one write stage. The
+    ledger is read with a declared schema and probed by the anti-join
+    alone, so there is no batch-id job, no schema-inference job and no
+    distinct() shuffle."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rows = _doc_rows(docs)
+    src = tmp_path / "gate_in"
+    src.mkdir()
+    start = _gate_starter(
+        spark, src, str(tmp_path / "gate_accepted"), str(tmp_path / "gate_ledger")
+    )
+    third = len(rows) // 3
+    parts = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+
+    q = start(str(tmp_path / "gate_ckpt"))
+    per_batch = []
     try:
-        q2.processAllAvailable()
+        for i, part in enumerate(parts):
+            before = set(_sync_stage_ids(spark))
+            _write_events(src, f"{i}.jsonl", part)
+            q.processAllAvailable()
+            after = _sync_stage_ids(spark)
+            per_batch.append(
+                sum(1 for s, st in after.items() if s not in before and st != "SKIPPED")
+            )
     finally:
-        q2.stop()
-    assert accepted_docs(spark, acc).count() == n_before
+        q.stop()
+    assert per_batch[1:] == [6, 6], per_batch
 
 
 def test_stream_histogram_update_parity_and_replay(spark, sf_dir, tmp_path):
