@@ -3,10 +3,11 @@
 
 Usage: python capture_plans.py before|after [--only name1,name2] [--all]
 
-Writes plans/r17/<query>_<tag>.txt for each query. Building a DataFrame
-executes any driver-side actions the query performs while composing its
-plan (iterative loops, collected models), so this is slower than pure
-analysis for a handful of queries — that is inherent to their shape.
+Writes plans/<SPARK_GRAFT_PLANS_DIR>/<query>_<tag>.txt for each query
+(plans/r18/ by default). Building a DataFrame executes any driver-side
+actions the query performs while composing its plan (iterative loops,
+collected models), so this is slower than pure analysis for a handful of
+queries — that is inherent to their shape.
 """
 
 from __future__ import annotations

@@ -41,7 +41,7 @@ worker process, reference U2) — see ``tests/test_multimodal.py``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
@@ -5884,6 +5884,38 @@ def attach_binary_payload(docs: DataFrame) -> DataFrame:
     return docs.withColumn("payload", F.encode("text", "UTF-8"))
 
 
+def doc_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    schema: str,
+    per_doc: Callable[[int], Iterable[tuple]],
+) -> DataFrame:
+    """The one Spark stage behind every decode gate: ``per_doc(d)`` runs
+    once per ``documents.doc_id`` and yields one tuple per output row, in
+    the column order of the flat DDL ``schema`` (zero rows or several are
+    fine).
+
+    The kernel is CPU-dense per row over a tiny id list, so the ids are
+    fanned across every core explicitly — the one-file parquet scan
+    otherwise yields a single partition and the whole decode runs on one
+    thread. Map-only mapInPandas: no shuffle after the fan-out."""
+    cols = [field.split()[0] for field in schema.split(",")]
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [row for d in pdf["doc_id"] for row in per_doc(int(d))]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return docs.mapInPandas(run, schema)
+
+
 @register(
     "multimodal_binary_meta",
     oracle="""
@@ -5979,69 +6011,46 @@ def image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     other media kernel (U1); at 100 TB the payloads would arrive from a
     binaryFile scan instead of being synthesized, with the identical
     downstream plan."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    encoders = (encode_bmp, encode_png, encode_gif)
+    names = ("bmp", "png", "gif")
 
-        encoders = (encode_bmp, encode_png, encode_gif)
-        names = ("bmp", "png", "gif")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "fmt": [], "variant": [], "width": [],
-                "height": [], "n_pixels": [], "mean_b": [], "mean_g": [],
-                "mean_r": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 5 + d % 4, 4 + d % 3
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                plane = np.dstack([
-                    (7 * d + 11 * r_idx + 13 * c_idx) % 256,
-                    (5 * d + 3 * r_idx + 17 * c_idx) % 256,
-                    (d + 23 * r_idx + 29 * c_idx) % 256,
-                ]).astype(np.uint8)
-                variant = "plain"
-                if d % 3 == 1:
-                    il, d16 = d % 5 == 2, d % 7 == 3
-                    payload = encode_png(plane, interlace=il, depth16=d16)
-                    variant = {
-                        (False, False): "plain", (True, False): "adam7",
-                        (False, True): "rgb48", (True, True): "adam7_rgb48",
-                    }[(il, d16)]
-                else:
-                    payload = encoders[d % 3](plane)
-                meta = decode_media(payload, "image")  # the REAL decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                )
-                n = meta["n_pixels"]
-                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                out["doc_id"].append(d)
-                out["fmt"].append(names[d % 3])
-                out["variant"].append(variant)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["n_pixels"].append(n)
-                out["mean_b"].append(int(sums[0]) // n)
-                out["mean_g"].append(int(sums[1]) // n)
-                out["mean_r"].append(int(sums[2]) // n)
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w, h = 5 + d % 4, 4 + d % 3
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        plane = np.dstack([
+            (7 * d + 11 * r_idx + 13 * c_idx) % 256,
+            (5 * d + 3 * r_idx + 17 * c_idx) % 256,
+            (d + 23 * r_idx + 29 * c_idx) % 256,
+        ]).astype(np.uint8)
+        variant = "plain"
+        if d % 3 == 1:
+            il, d16 = d % 5 == 2, d % 7 == 3
+            payload = encode_png(plane, interlace=il, depth16=d16)
+            variant = {
+                (False, False): "plain", (True, False): "adam7",
+                (False, True): "rgb48", (True, True): "adam7_rgb48",
+            }[(il, d16)]
+        else:
+            payload = encoders[d % 3](plane)
+        meta = decode_media(payload, "image")  # the REAL decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        n = meta["n_pixels"]
+        sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        yield (
+            d, names[d % 3], variant, meta["width"], meta["height"], n,
+            int(sums[0]) // n, int(sums[1]) // n, int(sums[2]) // n,
+        )
 
     schema = (
         "doc_id long, fmt string, variant string, width long, height long, "
         "n_pixels long, mean_b long, mean_g long, mean_r long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -6086,60 +6095,37 @@ def video_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding (width 5 ⇒ 15-byte rows padded to 16: padding bytes counted
     would break the hash) — fails the comparison. Map-only mapInPandas,
     same scale shape as every media kernel."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "frame_idx": [], "width": [], "height": [],
-                "n_frames": [], "t_micros": [], "mean_b": [], "mean_g": [],
-                "mean_r": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = 4 + d % 3, 3 + d % 2, 2 + d % 3
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                clip = [
-                    np.dstack([
-                        (3 * d + 7 * f + 11 * r_idx + 13 * c_idx) % 256,
-                        (5 * d + 9 * f + 3 * r_idx + 17 * c_idx) % 256,
-                        (d + 2 * f + 23 * r_idx + 29 * c_idx) % 256,
-                    ]).astype(np.uint8)
-                    for f in range(nf)
-                ]
-                meta = decode_media(encode_avi(clip), "video")  # REAL decode
-                stride = (meta["width"] * 3 + 3) // 4 * 4
-                for f in range(0, meta["n_frames"], 2):
-                    dib = np.frombuffer(meta["frames"][f], np.uint8)
-                    plane = dib.reshape(meta["height"], stride)[:, : w * 3]
-                    sums = plane.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    out["doc_id"].append(d)
-                    out["frame_idx"].append(f)
-                    out["width"].append(meta["width"])
-                    out["height"].append(meta["height"])
-                    out["n_frames"].append(meta["n_frames"])
-                    out["t_micros"].append(f * meta["usec_per_frame"])
-                    out["mean_b"].append(int(sums[0]) // (w * h))
-                    out["mean_g"].append(int(sums[1]) // (w * h))
-                    out["mean_r"].append(int(sums[2]) // (w * h))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w, h, nf = 4 + d % 3, 3 + d % 2, 2 + d % 3
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        clip = [
+            np.dstack([
+                (3 * d + 7 * f + 11 * r_idx + 13 * c_idx) % 256,
+                (5 * d + 9 * f + 3 * r_idx + 17 * c_idx) % 256,
+                (d + 2 * f + 23 * r_idx + 29 * c_idx) % 256,
+            ]).astype(np.uint8)
+            for f in range(nf)
+        ]
+        meta = decode_media(encode_avi(clip), "video")  # REAL decode
+        stride = (meta["width"] * 3 + 3) // 4 * 4
+        for f in range(0, meta["n_frames"], 2):
+            dib = np.frombuffer(meta["frames"][f], np.uint8)
+            plane = dib.reshape(meta["height"], stride)[:, : w * 3]
+            sums = plane.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+            yield (
+                d, f, meta["width"], meta["height"], meta["n_frames"],
+                f * meta["usec_per_frame"], int(sums[0]) // (w * h),
+                int(sums[1]) // (w * h), int(sums[2]) // (w * h),
+            )
 
     schema = (
         "doc_id long, frame_idx int, width long, height long, n_frames long, "
         "t_micros long, mean_b long, mean_g long, mean_r long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -6174,47 +6160,25 @@ def audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM bytes only. The oracle recomputes them from the closed form, so
     an endianness slip, header misread, or off-by-one in the frame count
     breaks the hash. Map-only mapInPandas."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "frame_rate": [],
-                "n_channels": [], "sample_width": [], "mean_abs": [],
-                "peak": [], "energy_mean": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 160 + (d % 7) * 16
-                i = np.arange(n, dtype=np.int64)
-                samples = ((11 * d + 7 * i) % 2001 - 1000).astype(np.int16)
-                meta = decode_media(encode_wav(samples), "audio")  # REAL decode
-                pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
-                out["doc_id"].append(d)
-                out["n_frames"].append(meta["n_frames"])
-                out["frame_rate"].append(meta["frame_rate"])
-                out["n_channels"].append(meta["n_channels"])
-                out["sample_width"].append(meta["sample_width"])
-                out["mean_abs"].append(int(np.abs(pcm).sum()) // n)
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["energy_mean"].append(int((pcm * pcm).sum()) // n)
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 160 + (d % 7) * 16
+        i = np.arange(n, dtype=np.int64)
+        samples = ((11 * d + 7 * i) % 2001 - 1000).astype(np.int16)
+        meta = decode_media(encode_wav(samples), "audio")  # REAL decode
+        pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
+        yield (
+            d, meta["n_frames"], meta["frame_rate"], meta["n_channels"],
+            meta["sample_width"], int(np.abs(pcm).sum()) // n,
+            int(np.abs(pcm).max()), int((pcm * pcm).sum()) // n,
+        )
 
     schema = (
         "doc_id long, n_frames long, frame_rate long, n_channels long, "
         "sample_width long, mean_abs long, peak long, energy_mean long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # --- perceptual-hash image near-dup dedup (round 11) ------------------------
@@ -6476,34 +6440,19 @@ def image_dhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-count arithmetic plus one per-hash neighborhood rollup, all
     partial-combining. The oracle states the naive doc-grain semantics
     and is byte-identical to this group-grain plan."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    encoders = (encode_bmp, encode_png, encode_gif)
 
-        encoders = (encode_bmp, encode_png, encode_gif)
-        for pdf in batches:
-            ids, hs = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                p = _dh_pixels(d)
-                plane = np.dstack([p, p, p]).astype(np.uint8)
-                # REAL encode + decode through the shared serving kernel
-                ids.append(d)
-                hs.append(dhash56(encoders[d % 3](plane)))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hs})
+    def per_doc(d: int):
+        p = _dh_pixels(d)
+        plane = np.dstack([p, p, p]).astype(np.uint8)
+        # REAL encode + decode through the shared serving kernel
+        yield d, dhash56(encoders[d % 3](plane))
 
-    hashes = docs.mapInPandas(run, "doc_id long, dhash long").localCheckpoint(
-        eager=False
-    )
+    hashes = doc_gate(
+        spark, sf_dir, "doc_id long, dhash long", per_doc
+    ).localCheckpoint(eager=False)
 
     # Collapse exact duplicates BEFORE any pairwise work: real image
     # corpora carry giant identical-image clusters (re-uploads), and a
@@ -6656,50 +6605,28 @@ def g711_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     misread breaks the hash. Map-only mapInPandas — the decode runs beside
     the scan with no shuffle; at 100 TB each task decodes only its own
     Arrow batch."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "n_frames": [], "frame_rate": [],
-                "sample_width": [], "mean_abs": [], "peak": [],
-                "energy_mean": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 128 + (d % 5) * 32
-                i = np.arange(n, dtype=np.int64)
-                codes = ((17 * d + 31 * i) % 256).astype(np.uint8)
-                tag = _WAVE_FORMAT_MULAW if d % 2 == 0 else _WAVE_FORMAT_ALAW
-                meta = decode_media(
-                    encode_wav_codes(codes.tobytes(), tag), "audio"
-                )  # REAL G.711 expansion
-                pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["n_frames"].append(meta["n_frames"])
-                out["frame_rate"].append(meta["frame_rate"])
-                out["sample_width"].append(meta["sample_width"])
-                out["mean_abs"].append(int(np.abs(pcm).sum()) // n)
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["energy_mean"].append(int((pcm * pcm).sum()) // n)
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 128 + (d % 5) * 32
+        i = np.arange(n, dtype=np.int64)
+        codes = ((17 * d + 31 * i) % 256).astype(np.uint8)
+        tag = _WAVE_FORMAT_MULAW if d % 2 == 0 else _WAVE_FORMAT_ALAW
+        meta = decode_media(
+            encode_wav_codes(codes.tobytes(), tag), "audio"
+        )  # REAL G.711 expansion
+        pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
+        yield (
+            d, meta["codec"], meta["n_frames"], meta["frame_rate"],
+            meta["sample_width"], int(np.abs(pcm).sum()) // n,
+            int(np.abs(pcm).max()), int((pcm * pcm).sum()) // n,
+        )
 
     schema = (
         "doc_id long, codec string, n_frames long, frame_rate long, "
         "sample_width long, mean_abs long, peak long, energy_mean long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -8988,59 +8915,38 @@ def audio_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tone. Map-only mapInPandas with the standard core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    pairs = ((8000, 16000), (44100, 16000), (16000, 8000),
+             (22050, 16000))
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        pairs = ((8000, 16000), (44100, 16000), (16000, 8000),
-                 (22050, 16000))
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sr_in": [], "sr_out": [], "n_in": [],
-                "n_out": [], "dc_exact": [], "sine_snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sr_in, sr_out = pairs[d % 4]
-                n_in = 1500 + (d % 5) * 200
-                g = np.gcd(sr_in, sr_out)
-                L, M = sr_out // g, sr_in // g
-                marg = 20 * max(1, -(-L // M)) + 20
-                dc = np.full(n_in, float(500 + d % 1000))
-                ydc = resample_pcm(dc, sr_in, sr_out)
-                dc_ok = bool(
-                    np.abs(ydc[marg:-marg] - dc[0]).max() < 1e-9
-                )
-                f0 = 200.0 + (d % 7) * 150.0  # < min(sr)/2 always
-                t1 = np.arange(n_in) / sr_in
-                x = np.sin(2 * np.pi * f0 * t1) * 10000.0
-                y = resample_pcm(x, sr_in, sr_out)
-                t2 = np.arange(len(y)) / sr_out
-                ref = np.sin(2 * np.pi * f0 * t2) * 10000.0
-                e = y[marg:-marg] - ref[marg:-marg]
-                snr = 10.0 * np.log10(
-                    (ref[marg:-marg] ** 2).sum()
-                    / max(float((e ** 2).sum()), 1e-30)
-                )
-                out["doc_id"].append(d)
-                out["sr_in"].append(sr_in)
-                out["sr_out"].append(sr_out)
-                out["n_in"].append(n_in)
-                out["n_out"].append(len(y))
-                out["dc_exact"].append(dc_ok)
-                out["sine_snr_ok"].append(bool(snr > 55.0))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        sr_in, sr_out = pairs[d % 4]
+        n_in = 1500 + (d % 5) * 200
+        g = np.gcd(sr_in, sr_out)
+        L, M = sr_out // g, sr_in // g
+        marg = 20 * max(1, -(-L // M)) + 20
+        dc = np.full(n_in, float(500 + d % 1000))
+        ydc = resample_pcm(dc, sr_in, sr_out)
+        dc_ok = bool(
+            np.abs(ydc[marg:-marg] - dc[0]).max() < 1e-9
+        )
+        f0 = 200.0 + (d % 7) * 150.0  # < min(sr)/2 always
+        t1 = np.arange(n_in) / sr_in
+        x = np.sin(2 * np.pi * f0 * t1) * 10000.0
+        y = resample_pcm(x, sr_in, sr_out)
+        t2 = np.arange(len(y)) / sr_out
+        ref = np.sin(2 * np.pi * f0 * t2) * 10000.0
+        e = y[marg:-marg] - ref[marg:-marg]
+        snr = 10.0 * np.log10(
+            (ref[marg:-marg] ** 2).sum()
+            / max(float((e ** 2).sum()), 1e-30)
+        )
+        yield d, sr_in, sr_out, n_in, len(y), dc_ok, bool(snr > 55.0)
 
     schema = (
         "doc_id long, sr_in long, sr_out long, n_in long, n_out long, "
         "dc_exact boolean, sine_snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -9092,42 +8998,26 @@ def audio_vad_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    sr = 8000
+    flen = sr * 20 // 1000
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        sr = 8000
-        flen = sr * 20 // 1000
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "n_hot": [],
-                   "n_segments": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 20 + d % 7
-                hot_plan = [
-                    (d + f) % 5 < 2 or (d + f) % 11 == 7
-                    for f in range(nf)
-                ]
-                pcm = np.concatenate([
-                    np.full(flen, 5000.0) if hflag else np.zeros(flen)
-                    for hflag in hot_plan
-                ])
-                hot, segs = vad_segments(pcm, sr)  # REAL state machine
-                out["doc_id"].append(d)
-                out["n_frames"].append(len(hot))
-                out["n_hot"].append(int(hot.sum()))
-                out["n_segments"].append(len(segs))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        nf = 20 + d % 7
+        hot_plan = [
+            (d + f) % 5 < 2 or (d + f) % 11 == 7
+            for f in range(nf)
+        ]
+        pcm = np.concatenate([
+            np.full(flen, 5000.0) if hflag else np.zeros(flen)
+            for hflag in hot_plan
+        ])
+        hot, segs = vad_segments(pcm, sr)  # REAL state machine
+        yield d, len(hot), int(hot.sum()), len(segs)
 
     schema = (
         "doc_id long, n_frames long, n_hot long, n_segments long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -9157,55 +9047,34 @@ def audio_mfcc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-energy aggregate). Map-only mapInPandas."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    sr = 16000
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        sr = 16000
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "n_mfcc": [],
-                "all_finite": [], "tone_peak_stable": [],
-                "louder_is_bigger_c0": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 4000 + (d % 4) * 512
-                f0 = 300.0 + (d % 9) * 400.0
-                t = np.arange(n) / sr
-                x = np.sin(2 * np.pi * f0 * t) * 10000.0
-                mf = mfcc_features(x, sr)
-                fb = _mel_filterbank(sr, 256, 20)
-                idx = np.arange(256)[None, :] + 128 * np.arange(
-                    mf.shape[0]
-                )[:, None]
-                pw = np.abs(np.fft.rfft(
-                    x[idx] * np.hanning(256)[None, :], axis=1
-                )) ** 2
-                peaks = np.argmax(pw @ fb.T, axis=1)
-                quiet = mfcc_features(x * 0.1, sr)
-                out["doc_id"].append(d)
-                out["n_frames"].append(mf.shape[0])
-                out["n_mfcc"].append(mf.shape[1])
-                out["all_finite"].append(bool(np.isfinite(mf).all()))
-                out["tone_peak_stable"].append(
-                    bool((peaks == peaks[0]).all())
-                )
-                out["louder_is_bigger_c0"].append(
-                    bool((mf[:, 0] > quiet[:, 0]).all())
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 4000 + (d % 4) * 512
+        f0 = 300.0 + (d % 9) * 400.0
+        t = np.arange(n) / sr
+        x = np.sin(2 * np.pi * f0 * t) * 10000.0
+        mf = mfcc_features(x, sr)
+        fb = _mel_filterbank(sr, 256, 20)
+        idx = np.arange(256)[None, :] + 128 * np.arange(
+            mf.shape[0]
+        )[:, None]
+        pw = np.abs(np.fft.rfft(
+            x[idx] * np.hanning(256)[None, :], axis=1
+        )) ** 2
+        peaks = np.argmax(pw @ fb.T, axis=1)
+        quiet = mfcc_features(x * 0.1, sr)
+        yield (
+            d, mf.shape[0], mf.shape[1], bool(np.isfinite(mf).all()),
+            bool((peaks == peaks[0]).all()),
+            bool((mf[:, 0] > quiet[:, 0]).all()),
+        )
 
     schema = (
         "doc_id long, n_frames long, n_mfcc long, all_finite boolean, "
         "tone_peak_stable boolean, louder_is_bigger_c0 boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # --- audio tag / metadata extraction (round 17) -------------------------------
@@ -9810,52 +9679,29 @@ def mp3_probe_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form, so an off-by-one in the frame-length arithmetic, a
     mis-skipped ID3 tag, or a wrong bitrate-table row breaks the hash.
     Map-only mapInPandas, same scale shape as every media kernel."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "sample_rate": [],
-                "duration_ms": [], "n_bytes": [], "mean_bitrate_kbps": [],
-                "vbr": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 4 + d % 5
-                frames = [
-                    (
-                        ((d + (0 if d % 3 == 0 else f)) % 14) + 1,
-                        (d + f) % 2,
-                    )
-                    for f in range(nf)
-                ]
-                blob = encode_mp3(
-                    frames, sr_index=d % 3, ver_bits=3, id3_payload=d % 17
-                )
-                m = probe_mpeg_audio(blob)  # REAL frame-header walk
-                out["doc_id"].append(d)
-                out["n_frames"].append(m["n_frames"])
-                out["sample_rate"].append(m["sample_rate"])
-                out["duration_ms"].append(m["duration_ms"])
-                out["n_bytes"].append(m["n_bytes"])
-                out["mean_bitrate_kbps"].append(m["mean_bitrate_kbps"])
-                out["vbr"].append(m["vbr"])
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        nf = 4 + d % 5
+        frames = [
+            (
+                ((d + (0 if d % 3 == 0 else f)) % 14) + 1,
+                (d + f) % 2,
+            )
+            for f in range(nf)
+        ]
+        blob = encode_mp3(
+            frames, sr_index=d % 3, ver_bits=3, id3_payload=d % 17
+        )
+        m = probe_mpeg_audio(blob)  # REAL frame-header walk
+        yield (
+            d, m["n_frames"], m["sample_rate"], m["duration_ms"],
+            m["n_bytes"], m["mean_bitrate_kbps"], m["vbr"],
+        )
 
     schema = (
         "doc_id long, n_frames long, sample_rate long, duration_ms long, "
         "n_bytes long, mean_bitrate_kbps long, vbr boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -10826,55 +10672,36 @@ def flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     form, so predictor algebra, zigzag/unary coding, partition geometry
     (block size varies by doc; the last block is short) and checksum
     handling are all under the hash. Map-only mapInPandas."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_samples": [], "sample_rate": [],
-                "mean_abs": [], "peak": [], "energy_mean": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 192 + (d % 5) * 64
-                sr = 8000 + (d % 2) * 8000
-                i = np.arange(n, dtype=np.int64)
-                samples = ((7 * d + 11 * i) % 2001 - 1000).astype(np.int16)
-                blob = encode_flac(
-                    samples,
-                    sample_rate=sr,
-                    block_size=64 << (d % 2),
-                    partition_order=d % 3,
-                    # every third doc routes through the LPC subframe
-                    # path (quantized coefs + arithmetic shift), the
-                    # rest through the FIXED predictors — both real
-                    force_lpc=([3, -1], 1, 4) if d % 3 == 0 else None,
-                )
-                meta = decode_media(blob, "audio")  # REAL FLAC decode
-                pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
-                out["doc_id"].append(d)
-                out["n_samples"].append(meta["n_frames"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["mean_abs"].append(int(np.abs(pcm).sum()) // n)
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["energy_mean"].append(int((pcm * pcm).sum()) // n)
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 192 + (d % 5) * 64
+        sr = 8000 + (d % 2) * 8000
+        i = np.arange(n, dtype=np.int64)
+        samples = ((7 * d + 11 * i) % 2001 - 1000).astype(np.int16)
+        blob = encode_flac(
+            samples,
+            sample_rate=sr,
+            block_size=64 << (d % 2),
+            partition_order=d % 3,
+            # every third doc routes through the LPC subframe
+            # path (quantized coefs + arithmetic shift), the
+            # rest through the FIXED predictors — both real
+            force_lpc=([3, -1], 1, 4) if d % 3 == 0 else None,
+        )
+        meta = decode_media(blob, "audio")  # REAL FLAC decode
+        pcm = np.frombuffer(meta["pcm"], np.dtype("<i2")).astype(np.int64)
+        yield (
+            d, meta["n_frames"], meta["frame_rate"],
+            int(np.abs(pcm).sum()) // n, int(np.abs(pcm).max()),
+            int((pcm * pcm).sum()) // n,
+        )
 
     schema = (
         "doc_id long, n_samples long, sample_rate long, mean_abs long, "
         "peak long, energy_mean long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -14183,67 +14010,41 @@ def mp3_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one pass over doc ids, no shuffle but the final sort;
     per-row cost is bounded by the fixed 576-line granule geometry."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def granule_spec(d: int, gi: int) -> dict:
+        is_vals = [0] * 576
+        for i in range(96):
+            if (7 * i + d + gi) % 13 == 0:
+                is_vals[i] = -1 if (i + d) % 2 else 1
+        return {
+            "is": is_vals,
+            "global_gain": 210 + 4 * ((d + gi) % 8),
+            "scalefac": [(d + s + gi) % 4 for s in range(21)],
+            "big_values": 36,
+            "scalefac_scale": 1,
+        }
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        bounds = _MP3_SFB_LONG_44100
-
-        def granule_spec(d: int, gi: int) -> dict:
-            is_vals = [0] * 576
-            for i in range(96):
-                if (7 * i + d + gi) % 13 == 0:
-                    is_vals[i] = -1 if (i + d) % 2 else 1
-            return {
-                "is": is_vals,
-                "global_gain": 210 + 4 * ((d + gi) % 8),
-                "scalefac": [(d + s + gi) % 4 for s in range(21)],
-                "big_values": 36,
-                "scalefac_scale": 1,
-            }
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_granules": [], "nonzero_lines": [],
-                "neg_lines": [], "gg_sum": [], "energy_micros": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_gran = 2 + 2 * (d % 2)
-                blob = encode_mp3_l3(
-                    [granule_spec(d, gi) for gi in range(n_gran)],
-                    use_crc=(d % 2 == 0),
-                    use_reservoir=(d % 3 == 0),
-                )
-                m = _decode_mp3_l3(blob)  # REAL entropy-layer decode
-                nz = neg = gg = 0
-                energy = 0.0
-                for g in m["granules"]:
-                    nz += sum(1 for v in g.is_vals if v)
-                    neg += sum(1 for v in g.is_vals if v < 0)
-                    gg += g.global_gain
-                    energy += sum(x * x for x in g.xr)
-                out["doc_id"].append(d)
-                out["n_granules"].append(m["n_granules"])
-                out["nonzero_lines"].append(nz)
-                out["neg_lines"].append(neg)
-                out["gg_sum"].append(gg)
-                out["energy_micros"].append(int(round(1_000_000 * energy)))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n_gran = 2 + 2 * (d % 2)
+        blob = encode_mp3_l3(
+            [granule_spec(d, gi) for gi in range(n_gran)],
+            use_crc=(d % 2 == 0),
+            use_reservoir=(d % 3 == 0),
+        )
+        m = _decode_mp3_l3(blob)  # REAL entropy-layer decode
+        nz = neg = gg = 0
+        energy = 0.0
+        for g in m["granules"]:
+            nz += sum(1 for v in g.is_vals if v)
+            neg += sum(1 for v in g.is_vals if v < 0)
+            gg += g.global_gain
+            energy += sum(x * x for x in g.xr)
+        yield d, m["n_granules"], nz, neg, gg, int(round(1_000_000 * energy))
 
     schema = (
         "doc_id long, n_granules long, nonzero_lines long, neg_lines long, "
         "gg_sum long, energy_micros long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -14293,77 +14094,55 @@ def mp3_stereo_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     irrational 1/sqrt(2) MS reconstruction itself is pinned by pytest
     where float-exactness rules don't bind the hash. Map-only
     mapInPandas."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def chan_spec(d: int, gi: int, ch: int) -> dict:
+        is_vals = [0] * 576
+        for i in range(96):
+            if ch == 0:
+                if (7 * i + d + gi) % 13 == 0:
+                    is_vals[i] = -1 if (i + d) % 2 else 1
+            else:
+                if (5 * i + d + gi) % 11 == 0:
+                    is_vals[i] = -1 if (i + gi) % 2 else 1
+        return {
+            "is": is_vals,
+            "global_gain": 210 + 4 * (
+                (d + gi) % 8 if ch == 0 else (d + 2 * gi + 1) % 8
+            ),
+            "scalefac": [
+                (d + s + gi) % 4 if ch == 0 else (d + 2 * s + gi) % 4
+                for s in range(21)
+            ],
+            "big_values": 36,
+            "scalefac_scale": 1,
+        }
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def chan_spec(d: int, gi: int, ch: int) -> dict:
-            is_vals = [0] * 576
-            for i in range(96):
-                if ch == 0:
-                    if (7 * i + d + gi) % 13 == 0:
-                        is_vals[i] = -1 if (i + d) % 2 else 1
-                else:
-                    if (5 * i + d + gi) % 11 == 0:
-                        is_vals[i] = -1 if (i + gi) % 2 else 1
-            return {
-                "is": is_vals,
-                "global_gain": 210 + 4 * (
-                    (d + gi) % 8 if ch == 0 else (d + 2 * gi + 1) % 8
-                ),
-                "scalefac": [
-                    (d + s + gi) % 4 if ch == 0 else (d + 2 * s + gi) % 4
-                    for s in range(21)
-                ],
-                "big_values": 36,
-                "scalefac_scale": 1,
-            }
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_granule_channels": [], "ms_mode": [],
-                "nonzero_lines": [], "ch0_energy_micros": [],
-                "ch1_energy_micros": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                specs = [
-                    chan_spec(d, gi, ch) for gi in range(2) for ch in range(2)
-                ]
-                blob = encode_mp3_l3(
-                    specs,
-                    mode="ms_stereo" if d % 2 else "stereo",
-                    use_crc=(d % 3 == 0),
-                    use_reservoir=(d % 4 == 0),
-                )
-                m = _decode_mp3_l3(blob)  # REAL stereo decode
-                assert m["n_channels"] == 2
-                nz = 0
-                e = [0.0, 0.0]
-                for k, g in enumerate(m["granules"]):
-                    nz += sum(1 for v in g.is_vals if v)
-                    e[k % 2] += sum(x * x for x in g.xr_coded)
-                out["doc_id"].append(d)
-                out["n_granule_channels"].append(m["n_granules"])
-                out["ms_mode"].append(d % 2 == 1)
-                out["nonzero_lines"].append(nz)
-                out["ch0_energy_micros"].append(int(round(1_000_000 * e[0])))
-                out["ch1_energy_micros"].append(int(round(1_000_000 * e[1])))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        specs = [
+            chan_spec(d, gi, ch) for gi in range(2) for ch in range(2)
+        ]
+        blob = encode_mp3_l3(
+            specs,
+            mode="ms_stereo" if d % 2 else "stereo",
+            use_crc=(d % 3 == 0),
+            use_reservoir=(d % 4 == 0),
+        )
+        m = _decode_mp3_l3(blob)  # REAL stereo decode
+        assert m["n_channels"] == 2
+        nz = 0
+        e = [0.0, 0.0]
+        for k, g in enumerate(m["granules"]):
+            nz += sum(1 for v in g.is_vals if v)
+            e[k % 2] += sum(x * x for x in g.xr_coded)
+        yield (
+            d, m["n_granules"], d % 2 == 1, nz,
+            int(round(1_000_000 * e[0])), int(round(1_000_000 * e[1])),
+        )
 
     schema = (
         "doc_id long, n_granule_channels long, ms_mode boolean, "
         "nonzero_lines long, ch0_energy_micros long, ch1_energy_micros long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # Short-band boundary tables as DuckDB list literals (1-indexed in SQL).
@@ -14443,70 +14222,47 @@ def mp3_shortblock_decode_features(spark: SparkSession, sf_dir: str) -> DataFram
     requantization (``energy_micros``), and the entropy layer
     (``nonzero_lines``/``neg_lines``/``gg_sum``) against the REAL
     decoder. Map-only mapInPandas with the standard core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def granule_spec(d: int, gi: int, mixed: bool) -> dict:
+        is_vals = [0] * 576
+        for j in range(43):
+            is_vals[7 * j] = -1 if (j + d + gi) % 2 else 1
+        return {
+            "is": is_vals,
+            "global_gain": 210 + 4 * (3 + (d + gi) % 5),
+            "scalefac": [(d + gi + b) % 2 for b in range(21)],
+            "scalefac_s": [
+                [(d + gi + sfb + w) % 2 for w in range(3)]
+                for sfb in range(12)
+            ],
+            "big_values": 150,
+            "block_type": 2,
+            "mixed_block_flag": 1 if mixed else 0,
+            "subblock_gain": [d % 2, (d + gi + 1) % 2, gi % 2],
+            "scalefac_compress": 5,
+            "scalefac_scale": 1,
+        }
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def granule_spec(d: int, gi: int, mixed: bool) -> dict:
-            is_vals = [0] * 576
-            for j in range(43):
-                is_vals[7 * j] = -1 if (j + d + gi) % 2 else 1
-            return {
-                "is": is_vals,
-                "global_gain": 210 + 4 * (3 + (d + gi) % 5),
-                "scalefac": [(d + gi + b) % 2 for b in range(21)],
-                "scalefac_s": [
-                    [(d + gi + sfb + w) % 2 for w in range(3)]
-                    for sfb in range(12)
-                ],
-                "big_values": 150,
-                "block_type": 2,
-                "mixed_block_flag": 1 if mixed else 0,
-                "subblock_gain": [d % 2, (d + gi + 1) % 2, gi % 2],
-                "scalefac_compress": 5,
-                "scalefac_scale": 1,
-            }
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "mixed": [], "nonzero_lines": [],
-                "neg_lines": [], "gg_sum": [], "pos_weight": [],
-                "energy_micros": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mixed = d % 2 == 1
-                blob = encode_mp3_l3(
-                    [granule_spec(d, gi, mixed) for gi in range(2)]
-                )
-                m = _decode_mp3_l3(blob)  # REAL short-block decode
-                nz = neg = gg = posw = 0
-                energy = 0.0
-                for g in m["granules"]:
-                    nz += sum(1 for v in g.is_vals if v)
-                    neg += sum(1 for v in g.is_vals if v < 0)
-                    gg += g.global_gain
-                    posw += sum(ri + 1 for ri, v in enumerate(g.xr) if v)
-                    energy += sum(x * x for x in g.xr)
-                out["doc_id"].append(d)
-                out["mixed"].append(mixed)
-                out["nonzero_lines"].append(nz)
-                out["neg_lines"].append(neg)
-                out["gg_sum"].append(gg)
-                out["pos_weight"].append(posw)
-                out["energy_micros"].append(int(round(1_000_000 * energy)))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        mixed = d % 2 == 1
+        blob = encode_mp3_l3(
+            [granule_spec(d, gi, mixed) for gi in range(2)]
+        )
+        m = _decode_mp3_l3(blob)  # REAL short-block decode
+        nz = neg = gg = posw = 0
+        energy = 0.0
+        for g in m["granules"]:
+            nz += sum(1 for v in g.is_vals if v)
+            neg += sum(1 for v in g.is_vals if v < 0)
+            gg += g.global_gain
+            posw += sum(ri + 1 for ri, v in enumerate(g.xr) if v)
+            energy += sum(x * x for x in g.xr)
+        yield d, mixed, nz, neg, gg, posw, int(round(1_000_000 * energy))
 
     schema = (
         "doc_id long, mixed boolean, nonzero_lines long, neg_lines long, "
         "gg_sum long, pos_weight long, energy_micros long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -14597,130 +14353,108 @@ def mp3_pcm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the standard core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def silent(bt: int = 0) -> dict:
-            s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
-                 "big_values": 0, "scalefac_scale": 1, "scalefac_compress": 0}
-            if bt:
-                s["block_type"] = bt
-                s["subblock_gain"] = [0, 0, 0]
-                if bt == 2:
-                    s["scalefac_s"] = [[0] * 3 for _ in range(12)]
-            return s
-
-        def active(d: int, gi: int, st: int, lim: int, bv: int,
-                   exp_shift: int = 0, phase: int = 0) -> dict:
-            is_vals = [0] * 576
-            for i in range(phase, lim, st):
-                is_vals[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
-            return {"is": is_vals,
-                    "global_gain": 210 + 4 * ((d + gi + exp_shift) % 6),
-                    "scalefac": [0] * 21, "big_values": bv,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
-
-        def short_active(d: int, gi: int, st: int, mixed: bool) -> dict:
-            s = active(d, gi, st, 300, 150)
-            s["block_type"] = 2
-            s["mixed_block_flag"] = 1 if mixed else 0
+    def silent(bt: int = 0) -> dict:
+        s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
+             "big_values": 0, "scalefac_scale": 1, "scalefac_compress": 0}
+        if bt:
+            s["block_type"] = bt
             s["subblock_gain"] = [0, 0, 0]
-            s["scalefac_s"] = [[0] * 3 for _ in range(12)]
-            return s
+            if bt == 2:
+                s["scalefac_s"] = [[0] * 3 for _ in range(12)]
+        return s
 
-        def intensity_right(d: int, gi: int) -> dict:
-            s = active(d, gi, 5, 36, 18, exp_shift=1)
-            s["scalefac_compress"] = 15
-            s["scalefac"] = [0] * 8 + [
-                [0, 3, 6, 7][(d + gi + b) % 4] for b in range(8, 21)
-            ]
-            return s
+    def active(d: int, gi: int, st: int, lim: int, bv: int,
+               exp_shift: int = 0, phase: int = 0) -> dict:
+        is_vals = [0] * 576
+        for i in range(phase, lim, st):
+            is_vals[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
+        return {"is": is_vals,
+                "global_gain": 210 + 4 * ((d + gi + exp_shift) % 6),
+                "scalefac": [0] * 21, "big_values": bv,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "n_channels": [],
-                "n_frames": [], "n_samples": [], "xr_energy_micros": [],
-                "chain_energy_milli": [], "rt_peak": [], "rt_sum_abs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                st = 7 + d % 5
-                st2 = 7 + (d + 2) % 5
-                if v == 0:
-                    variant, mode = "long", "mono"
-                    specs = [silent(), active(d, 0, st, 480, 240),
-                             active(d, 1, st, 480, 240), silent()]
-                elif v == 1:
-                    mixed = d % 8 == 5
-                    variant, mode = ("short_mixed" if mixed else "short"), "mono"
-                    specs = [silent(), silent(1),
-                             short_active(d, 0, st, mixed),
-                             short_active(d, 1, st, mixed),
-                             silent(3), silent()]
-                elif v == 2:
-                    variant, mode = "ms", "ms_stereo"
-                    specs = [silent(), silent(),
-                             active(d, 0, st, 480, 240),
-                             active(d, 0, st2, 480, 240, exp_shift=3, phase=3),
-                             active(d, 1, st, 480, 240),
-                             active(d, 1, st2, 480, 240, exp_shift=3, phase=3),
-                             silent(), silent()]
-                else:
-                    variant, mode = "intensity", "intensity_stereo"
-                    specs = [silent(), silent(),
-                             active(d, 0, st, 480, 240), intensity_right(d, 0),
-                             active(d, 1, st, 480, 240), intensity_right(d, 1),
-                             silent(), silent()]
-                blob = encode_mp3_l3(specs, mode=mode)
-                m = _decode_mp3_l3(blob)
-                dec = decode_mp3_to_pcm(blob)  # REAL full chain
-                e_xr = 0.0
-                e_weighted = 0.0
-                for g in m["granules"]:
-                    e_g = sum(x * x for x in g.xr)
-                    e_xr += e_g
-                    if g.block_type == 2 and g.mixed_block_flag:
-                        e_long = sum(x * x for x in g.xr[:36])
-                        e_weighted += e_long + (e_g - e_long) / 3.0
-                    elif g.block_type == 2:
-                        e_weighted += e_g / 3.0
-                    else:
-                        e_weighted += e_g
-                e_pcm = sum(float(np.sum(p * p)) for p in dec["pcm_f"])
-                # roundtrip: closed-form int16 PCM -> analysis -> synthesis
-                n_rt = 1024 + 32 * (d % 4)
-                i = np.arange(n_rt, dtype=np.int64)
-                x = ((11 * d + 5 * i) % 4001 - 2000).astype(np.float64)
-                svecs, fb_state = mp3_analysis_filterbank(x)
-                tail, _ = mp3_analysis_filterbank(np.zeros(512), fb_state)
-                y, _ = mp3_synthesize_pcm(list(svecs) + list(tail))
-                r = np.rint(y[481: 481 + n_rt]).astype(np.int64)
-                out["doc_id"].append(d)
-                out["variant"].append(variant)
-                out["n_channels"].append(dec["n_channels"])
-                out["n_frames"].append(dec["n_frames"])
-                out["n_samples"].append(len(dec["pcm_f"][0]))
-                out["xr_energy_micros"].append(int(round(1_000_000 * e_xr)))
-                out["chain_energy_milli"].append(
-                    int(round(1000.0 * e_pcm / (1152.0 * e_weighted)))
-                )
-                out["rt_peak"].append(int(np.abs(r).max()))
-                out["rt_sum_abs"].append(int(np.abs(r).sum()))
-            yield pd.DataFrame(out)
+    def short_active(d: int, gi: int, st: int, mixed: bool) -> dict:
+        s = active(d, gi, st, 300, 150)
+        s["block_type"] = 2
+        s["mixed_block_flag"] = 1 if mixed else 0
+        s["subblock_gain"] = [0, 0, 0]
+        s["scalefac_s"] = [[0] * 3 for _ in range(12)]
+        return s
+
+    def intensity_right(d: int, gi: int) -> dict:
+        s = active(d, gi, 5, 36, 18, exp_shift=1)
+        s["scalefac_compress"] = 15
+        s["scalefac"] = [0] * 8 + [
+            [0, 3, 6, 7][(d + gi + b) % 4] for b in range(8, 21)
+        ]
+        return s
+
+    def per_doc(d: int):
+        v = d % 4
+        st = 7 + d % 5
+        st2 = 7 + (d + 2) % 5
+        if v == 0:
+            variant, mode = "long", "mono"
+            specs = [silent(), active(d, 0, st, 480, 240),
+                     active(d, 1, st, 480, 240), silent()]
+        elif v == 1:
+            mixed = d % 8 == 5
+            variant, mode = ("short_mixed" if mixed else "short"), "mono"
+            specs = [silent(), silent(1),
+                     short_active(d, 0, st, mixed),
+                     short_active(d, 1, st, mixed),
+                     silent(3), silent()]
+        elif v == 2:
+            variant, mode = "ms", "ms_stereo"
+            specs = [silent(), silent(),
+                     active(d, 0, st, 480, 240),
+                     active(d, 0, st2, 480, 240, exp_shift=3, phase=3),
+                     active(d, 1, st, 480, 240),
+                     active(d, 1, st2, 480, 240, exp_shift=3, phase=3),
+                     silent(), silent()]
+        else:
+            variant, mode = "intensity", "intensity_stereo"
+            specs = [silent(), silent(),
+                     active(d, 0, st, 480, 240), intensity_right(d, 0),
+                     active(d, 1, st, 480, 240), intensity_right(d, 1),
+                     silent(), silent()]
+        blob = encode_mp3_l3(specs, mode=mode)
+        m = _decode_mp3_l3(blob)
+        dec = decode_mp3_to_pcm(blob)  # REAL full chain
+        e_xr = 0.0
+        e_weighted = 0.0
+        for g in m["granules"]:
+            e_g = sum(x * x for x in g.xr)
+            e_xr += e_g
+            if g.block_type == 2 and g.mixed_block_flag:
+                e_long = sum(x * x for x in g.xr[:36])
+                e_weighted += e_long + (e_g - e_long) / 3.0
+            elif g.block_type == 2:
+                e_weighted += e_g / 3.0
+            else:
+                e_weighted += e_g
+        e_pcm = sum(float(np.sum(p * p)) for p in dec["pcm_f"])
+        # roundtrip: closed-form int16 PCM -> analysis -> synthesis
+        n_rt = 1024 + 32 * (d % 4)
+        i = np.arange(n_rt, dtype=np.int64)
+        x = ((11 * d + 5 * i) % 4001 - 2000).astype(np.float64)
+        svecs, fb_state = mp3_analysis_filterbank(x)
+        tail, _ = mp3_analysis_filterbank(np.zeros(512), fb_state)
+        y, _ = mp3_synthesize_pcm(list(svecs) + list(tail))
+        r = np.rint(y[481: 481 + n_rt]).astype(np.int64)
+        yield (
+            d, variant, dec["n_channels"], dec["n_frames"],
+            len(dec["pcm_f"][0]), int(round(1_000_000 * e_xr)),
+            int(round(1000.0 * e_pcm / (1152.0 * e_weighted))),
+            int(np.abs(r).max()), int(np.abs(r).sum()),
+        )
 
     schema = (
         "doc_id long, variant string, n_channels long, n_frames long, "
         "n_samples long, xr_energy_micros long, chain_energy_milli long, "
         "rt_peak long, rt_sum_abs long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -14760,74 +14494,55 @@ def cross_codec_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB that is the same shuffle shape as ``dedup_exact``."""
     import pyspark.sql.functions as F
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def silent() -> dict:
+        return {"is": [0] * 576, "global_gain": 210,
+                "scalefac": [0] * 21, "big_values": 0,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-        def silent() -> dict:
-            return {"is": [0] * 576, "global_gain": 210,
-                    "scalefac": [0] * 21, "big_values": 0,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
+    def active(d: int, gi: int, gg: int) -> dict:
+        # md5-derived line pattern: doc-injective by construction (a
+        # modular-polynomial pattern collides — its image mod p only
+        # covers the quadratic residues). The oracle never models the
+        # pattern (its columns are decode-parity constants), so a
+        # cryptographic mix is free here.
+        import hashlib
 
-        def active(d: int, gi: int, gg: int) -> dict:
-            # md5-derived line pattern: doc-injective by construction (a
-            # modular-polynomial pattern collides — its image mod p only
-            # covers the quadratic residues). The oracle never models the
-            # pattern (its columns are decode-parity constants), so a
-            # cryptographic mix is free here.
-            import hashlib
+        seed = hashlib.md5(f"xc:{d}:{gi}".encode()).digest()
+        is_vals = [0] * 576
+        for i in range(480):
+            b = hashlib.md5(seed + i.to_bytes(2, "big")).digest()[0]
+            if b < 64:
+                is_vals[i] = 1 if b % 2 == 0 else -1
+        return {"is": is_vals, "global_gain": gg,
+                "scalefac": [0] * 21, "big_values": 240,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-            seed = hashlib.md5(f"xc:{d}:{gi}".encode()).digest()
-            is_vals = [0] * 576
-            for i in range(480):
-                b = hashlib.md5(seed + i.to_bytes(2, "big")).digest()[0]
-                if b < 64:
-                    is_vals[i] = 1 if b % 2 == 0 else -1
-            return {"is": is_vals, "global_gain": gg,
-                    "scalefac": [0] * 21, "big_values": 240,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_variants": [], "n_exact_keys": [],
-                "n_robust_keys": [], "n_samples": [], "probe_frames": [],
-                "exact_key": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                gg = 170 + 4 * (d % 3)
-                mp3 = encode_mp3_l3(
-                    [silent(), active(d, 0, gg), active(d, 1, gg), silent()]
-                )
-                meta = decode_media(mp3, "audio")  # REAL full MP3 decode
-                y = np.frombuffer(meta["pcm"], "<i2")
-                variants = [
-                    mp3,
-                    encode_wav(y, 44100),
-                    encode_flac(y, sample_rate=44100),
-                    encode_au(y, sample_rate=44100, float_width=4),
-                    encode_wav_float(y, frame_rate=44100),
-                ]
-                # one REAL decode per container, both keys from it
-                metas = [meta] + [
-                    decode_media(b, "audio") for b in variants[1:]
-                ]
-                ek = [_content_key_from_meta(m) for m in metas]
-                rk = [_robust_key_from_meta(m) for m in metas]
-                out["doc_id"].append(d)
-                out["n_variants"].append(len(variants))
-                out["n_exact_keys"].append(len(set(ek)))
-                out["n_robust_keys"].append(len(set(rk)))
-                out["n_samples"].append(len(y))
-                out["probe_frames"].append(probe_audio(mp3)["n_frames"])
-                out["exact_key"].append(ek[0])
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        gg = 170 + 4 * (d % 3)
+        mp3 = encode_mp3_l3(
+            [silent(), active(d, 0, gg), active(d, 1, gg), silent()]
+        )
+        meta = decode_media(mp3, "audio")  # REAL full MP3 decode
+        y = np.frombuffer(meta["pcm"], "<i2")
+        variants = [
+            mp3,
+            encode_wav(y, 44100),
+            encode_flac(y, sample_rate=44100),
+            encode_au(y, sample_rate=44100, float_width=4),
+            encode_wav_float(y, frame_rate=44100),
+        ]
+        # one REAL decode per container, both keys from it
+        metas = [meta] + [
+            decode_media(b, "audio") for b in variants[1:]
+        ]
+        ek = [_content_key_from_meta(m) for m in metas]
+        rk = [_robust_key_from_meta(m) for m in metas]
+        yield (
+            d, len(variants), len(set(ek)), len(set(rk)), len(y),
+            probe_audio(mp3)["n_frames"], ek[0],
+        )
 
     schema = (
         "doc_id long, n_variants long, n_exact_keys long, "
@@ -14840,7 +14555,9 @@ def cross_codec_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executes the mapInPandas subtree once per consumer — the
     # image_dhash_near_dups idiom applies: localCheckpoint so the kernel
     # runs exactly once.
-    keyed = docs.mapInPandas(run, schema).localCheckpoint(eager=False)
+    keyed = doc_gate(spark, sf_dir, schema, per_doc).localCheckpoint(
+        eager=False
+    )
     clusters = keyed.groupBy("exact_key").agg(
         F.count("*").alias("exact_cluster_docs")
     )
@@ -14948,85 +14665,65 @@ def mp3_rate_profiles_decode_features(spark: SparkSession, sf_dir: str) -> DataF
     geometry + reordering), or the region-boundary dispatch breaks the
     hash or the decode outright. Map-only mapInPandas with the
     standard core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def silent(bt: int = 0) -> dict:
+        s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
+             "big_values": 0, "scalefac_scale": 1,
+             "scalefac_compress": 0}
+        if bt:
+            s["block_type"] = bt
+            s["subblock_gain"] = [0, 0, 0]
+            if bt == 2:
+                s["scalefac_s"] = [[0] * 3 for _ in range(12)]
+        return s
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def long_a(d: int, gi: int, st: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 480, st):
+            iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
+                "scalefac": [(d + gi + b) % 4 for b in range(21)],
+                "scalefac_compress": 9, "big_values": 240,
+                "scalefac_scale": 1}
 
-        def silent(bt: int = 0) -> dict:
-            s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
-                 "big_values": 0, "scalefac_scale": 1,
-                 "scalefac_compress": 0}
-            if bt:
-                s["block_type"] = bt
-                s["subblock_gain"] = [0, 0, 0]
-                if bt == 2:
-                    s["scalefac_s"] = [[0] * 3 for _ in range(12)]
-            return s
+    def short_a(d: int, gi: int, st: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 300, st):
+            iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
+                "scalefac": [0] * 21, "big_values": 150,
+                "scalefac_scale": 1, "scalefac_compress": 9,
+                "block_type": 2, "mixed_block_flag": 0,
+                "subblock_gain": [0, 0, 0],
+                "scalefac_s": [
+                    [(d + gi + sfb + w) % 4 for w in range(3)]
+                    for sfb in range(12)
+                ]}
 
-        def long_a(d: int, gi: int, st: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 480, st):
-                iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
-                    "scalefac": [(d + gi + b) % 4 for b in range(21)],
-                    "scalefac_compress": 9, "big_values": 240,
-                    "scalefac_scale": 1}
-
-        def short_a(d: int, gi: int, st: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 300, st):
-                iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
-                    "scalefac": [0] * 21, "big_values": 150,
-                    "scalefac_scale": 1, "scalefac_compress": 9,
-                    "block_type": 2, "mixed_block_flag": 0,
-                    "subblock_gain": [0, 0, 0],
-                    "scalefac_s": [
-                        [(d + gi + sfb + w) % 4 for w in range(3)]
-                        for sfb in range(12)
-                    ]}
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "sample_rate": [],
-                "n_frames": [], "xr_energy_micros": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                st = 7 + d % 5
-                rate = 48000 if v < 2 else 32000
-                if v % 2 == 0:
-                    variant = f"long_{rate}"
-                    specs = [silent(), long_a(d, 0, st),
-                             long_a(d, 1, st), silent()]
-                else:
-                    variant = f"short_{rate}"
-                    specs = [silent(), silent(1), short_a(d, 0, st),
-                             short_a(d, 1, st), silent(3), silent()]
-                m = _decode_mp3_l3(
-                    encode_mp3_l3(specs, sample_rate=rate)
-                )
-                e = sum(
-                    sum(x * x for x in g.xr) for g in m["granules"]
-                )
-                out["doc_id"].append(d)
-                out["variant"].append(variant)
-                out["sample_rate"].append(m["sample_rate"])
-                out["n_frames"].append(m["n_frames"])
-                out["xr_energy_micros"].append(int(round(1e6 * e)))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 4
+        st = 7 + d % 5
+        rate = 48000 if v < 2 else 32000
+        if v % 2 == 0:
+            variant = f"long_{rate}"
+            specs = [silent(), long_a(d, 0, st),
+                     long_a(d, 1, st), silent()]
+        else:
+            variant = f"short_{rate}"
+            specs = [silent(), silent(1), short_a(d, 0, st),
+                     short_a(d, 1, st), silent(3), silent()]
+        m = _decode_mp3_l3(
+            encode_mp3_l3(specs, sample_rate=rate)
+        )
+        e = sum(
+            sum(x * x for x in g.xr) for g in m["granules"]
+        )
+        yield d, variant, m["sample_rate"], m["n_frames"], int(round(1e6 * e))
 
     schema = (
         "doc_id long, variant string, sample_rate long, n_frames long, "
         "xr_energy_micros long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -15122,176 +14819,155 @@ def mp3_stereo_matrix_decode_features(spark: SparkSession, sf_dir: str) -> DataF
     rotation-invariant closed form (MS preserves it; intensity scales
     by (k_l^2 + k_r^2)). Map-only mapInPandas with the standard core
     fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    sb = _MP3_SFB_SHORT_44100
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def silent(bt: int = 0) -> dict:
+        s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
+             "big_values": 0, "scalefac_scale": 1,
+             "scalefac_compress": 0}
+        if bt:
+            s["block_type"] = bt
+            s["subblock_gain"] = [0, 0, 0]
+            if bt == 2:
+                s["scalefac_s"] = [[0] * 3 for _ in range(12)]
+        return s
 
-        sb = _MP3_SFB_SHORT_44100
+    def ch0_long(d: int, gi: int, st: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 480, st):
+            iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
+                "scalefac": [0] * 21, "big_values": 240,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-        def silent(bt: int = 0) -> dict:
-            s = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
-                 "big_values": 0, "scalefac_scale": 1,
-                 "scalefac_compress": 0}
-            if bt:
-                s["block_type"] = bt
-                s["subblock_gain"] = [0, 0, 0]
-                if bt == 2:
-                    s["scalefac_s"] = [[0] * 3 for _ in range(12)]
-            return s
+    def ch1_long(d: int, gi: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 36, 5):
+            iv[i] = 1 if i % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
+                "scalefac_compress": 15,
+                "scalefac": [0] * 8 + [[0, 3, 6, 7][(d + gi + b) % 4]
+                                       for b in range(8, 21)],
+                "big_values": 18, "scalefac_scale": 1}
 
-        def ch0_long(d: int, gi: int, st: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 480, st):
-                iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
-                    "scalefac": [0] * 21, "big_values": 240,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
+    def ch0_short(d: int, gi: int, st: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 300, st):
+            iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
+                "scalefac": [0] * 21, "big_values": 150,
+                "scalefac_scale": 1, "scalefac_compress": 0,
+                "block_type": 2, "mixed_block_flag": 0,
+                "subblock_gain": [0, 0, 0],
+                "scalefac_s": [[0] * 3 for _ in range(12)]}
 
-        def ch1_long(d: int, gi: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 36, 5):
-                iv[i] = 1 if i % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
-                    "scalefac_compress": 15,
-                    "scalefac": [0] * 8 + [[0, 3, 6, 7][(d + gi + b) % 4]
-                                           for b in range(8, 21)],
-                    "big_values": 18, "scalefac_scale": 1}
+    def ch1_short(d: int, gi: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 48, 5):
+            iv[i] = 1 if i % 2 == 0 else -1
+        # scalefac_s rows 0-3 (the sub-bound bands carrying REAL
+        # data) stay zero: there they are true scalefactors and
+        # would attenuate; rows 4+ are is_pos angles
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
+                "scalefac": [0] * 21, "big_values": 24,
+                "scalefac_scale": 1, "scalefac_compress": 15,
+                "block_type": 2, "mixed_block_flag": 0,
+                "subblock_gain": [0, 0, 0],
+                "scalefac_s": [
+                    [[0, 3, 6, 7][(d + gi + sfb + w) % 4]
+                     if sfb >= 4 else 0
+                     for w in range(3)] for sfb in range(12)
+                ]}
 
-        def ch0_short(d: int, gi: int, st: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 300, st):
-                iv[i] = 1 if (i // st + d + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
-                    "scalefac": [0] * 21, "big_values": 150,
-                    "scalefac_scale": 1, "scalefac_compress": 0,
-                    "block_type": 2, "mixed_block_flag": 0,
-                    "subblock_gain": [0, 0, 0],
-                    "scalefac_s": [[0] * 3 for _ in range(12)]}
+    def ch0_mixed(d: int, gi: int, st: int) -> dict:
+        spec = ch0_short(d, gi, st)
+        spec["mixed_block_flag"] = 1
+        return spec
 
-        def ch1_short(d: int, gi: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 48, 5):
-                iv[i] = 1 if i % 2 == 0 else -1
-            # scalefac_s rows 0-3 (the sub-bound bands carrying REAL
-            # data) stay zero: there they are true scalefactors and
-            # would attenuate; rows 4+ are is_pos angles
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
-                    "scalefac": [0] * 21, "big_values": 24,
-                    "scalefac_scale": 1, "scalefac_compress": 15,
-                    "block_type": 2, "mixed_block_flag": 0,
-                    "subblock_gain": [0, 0, 0],
-                    "scalefac_s": [
-                        [[0, 3, 6, 7][(d + gi + sfb + w) % 4]
-                         if sfb >= 4 else 0
-                         for w in range(3)] for sfb in range(12)
-                    ]}
+    def ch1_mixed(d: int, gi: int) -> dict:
+        # real data fills the LONG part (coded lines < 36, where the
+        # long scalefac rows are true scalefactors and stay zero);
+        # every scalefac_s row is an is_pos angle — the whole short
+        # region is the intensity zone
+        iv = [0] * 576
+        for i in range(0, 36, 5):
+            iv[i] = 1 if i % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
+                "scalefac": [0] * 21, "big_values": 18,
+                "scalefac_scale": 1, "scalefac_compress": 15,
+                "block_type": 2, "mixed_block_flag": 1,
+                "subblock_gain": [0, 0, 0],
+                "scalefac_s": [
+                    [[0, 3, 6, 7][(d + gi + sfb + w) % 4]
+                     for w in range(3)] for sfb in range(12)
+                ]}
 
-        def ch0_mixed(d: int, gi: int, st: int) -> dict:
-            spec = ch0_short(d, gi, st)
-            spec["mixed_block_flag"] = 1
-            return spec
+    def short_int_region_indices(bound: int) -> list[int]:
+        # reordered-domain image of coded lines >= bound (whole
+        # triplets; the gate's bound sits on a triplet boundary)
+        idxs = []
+        for sfb in range(13):
+            width = sb[sfb + 1] - sb[sfb]
+            if 3 * sb[sfb] < bound:
+                continue
+            for w in range(3):
+                for k in range(width):
+                    f = sb[sfb] + k
+                    idxs.append(18 * (f // 6) + 6 * w + (f % 6))
+        return idxs
 
-        def ch1_mixed(d: int, gi: int) -> dict:
-            # real data fills the LONG part (coded lines < 36, where the
-            # long scalefac rows are true scalefactors and stay zero);
-            # every scalefac_s row is an is_pos angle — the whole short
-            # region is the intensity zone
-            iv = [0] * 576
-            for i in range(0, 36, 5):
-                iv[i] = 1 if i % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi + 2) % 6),
-                    "scalefac": [0] * 21, "big_values": 18,
-                    "scalefac_scale": 1, "scalefac_compress": 15,
-                    "block_type": 2, "mixed_block_flag": 1,
-                    "subblock_gain": [0, 0, 0],
-                    "scalefac_s": [
-                        [[0, 3, 6, 7][(d + gi + sfb + w) % 4]
-                         for w in range(3)] for sfb in range(12)
-                    ]}
+    short_idxs = short_int_region_indices(48)
+    mixed_idxs = short_int_region_indices(36)  # sfb 3+: all >= 36
 
-        def short_int_region_indices(bound: int) -> list[int]:
-            # reordered-domain image of coded lines >= bound (whole
-            # triplets; the gate's bound sits on a triplet boundary)
-            idxs = []
-            for sfb in range(13):
-                width = sb[sfb + 1] - sb[sfb]
-                if 3 * sb[sfb] < bound:
-                    continue
-                for w in range(3):
-                    for k in range(width):
-                        f = sb[sfb] + k
-                        idxs.append(18 * (f // 6) + 6 * w + (f % 6))
-            return idxs
-
-        short_idxs = short_int_region_indices(48)
-        mixed_idxs = short_int_region_indices(36)  # sfb 3+: all >= 36
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "n_channels": [],
-                "n_frames": [], "xr_energy_micros": [],
-                "right_int_energy_micros": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                st = 7 + d % 5
-                if v == 0:
-                    variant, mode = "combined_long", "ms_intensity_stereo"
-                    specs = [silent(), silent(),
-                             ch0_long(d, 0, st), ch1_long(d, 0),
-                             ch0_long(d, 1, st), ch1_long(d, 1),
-                             silent(), silent()]
-                elif v == 3:
-                    variant, mode = "intensity_mixed", "intensity_stereo"
-                    specs = [silent(), silent(), silent(1), silent(1),
-                             ch0_mixed(d, 0, st), ch1_mixed(d, 0),
-                             ch0_mixed(d, 1, st), ch1_mixed(d, 1),
-                             silent(3), silent(3), silent(), silent()]
-                else:
-                    variant = ("intensity_short" if v == 1
-                               else "combined_short")
-                    mode = ("intensity_stereo" if v == 1
-                            else "ms_intensity_stereo")
-                    specs = [silent(), silent(), silent(1), silent(1),
-                             ch0_short(d, 0, st), ch1_short(d, 0),
-                             ch0_short(d, 1, st), ch1_short(d, 1),
-                             silent(3), silent(3), silent(), silent()]
-                m = _decode_mp3_l3(encode_mp3_l3(specs, mode=mode))
-                e_tot = 0.0
-                r_int = 0.0
-                gr = m["granules"]
-                for j in range(0, len(gr), 2):
-                    l_g, r_g = gr[j], gr[j + 1]
-                    e_tot += sum(x * x for x in l_g.xr)
-                    e_tot += sum(x * x for x in r_g.xr)
-                    if r_g.block_type == 2:
-                        idxs = (mixed_idxs if r_g.mixed_block_flag
-                                else short_idxs)
-                        r_int += sum(r_g.xr[i] * r_g.xr[i] for i in idxs)
-                    else:
-                        bound = 36 if v == 0 else 48
-                        r_int += sum(x * x for x in r_g.xr[bound:])
-                out["doc_id"].append(d)
-                out["variant"].append(variant)
-                out["n_channels"].append(m["n_channels"])
-                out["n_frames"].append(m["n_frames"])
-                out["xr_energy_micros"].append(int(round(1e6 * e_tot)))
-                out["right_int_energy_micros"].append(
-                    int(round(1e6 * r_int))
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 4
+        st = 7 + d % 5
+        if v == 0:
+            variant, mode = "combined_long", "ms_intensity_stereo"
+            specs = [silent(), silent(),
+                     ch0_long(d, 0, st), ch1_long(d, 0),
+                     ch0_long(d, 1, st), ch1_long(d, 1),
+                     silent(), silent()]
+        elif v == 3:
+            variant, mode = "intensity_mixed", "intensity_stereo"
+            specs = [silent(), silent(), silent(1), silent(1),
+                     ch0_mixed(d, 0, st), ch1_mixed(d, 0),
+                     ch0_mixed(d, 1, st), ch1_mixed(d, 1),
+                     silent(3), silent(3), silent(), silent()]
+        else:
+            variant = ("intensity_short" if v == 1
+                       else "combined_short")
+            mode = ("intensity_stereo" if v == 1
+                    else "ms_intensity_stereo")
+            specs = [silent(), silent(), silent(1), silent(1),
+                     ch0_short(d, 0, st), ch1_short(d, 0),
+                     ch0_short(d, 1, st), ch1_short(d, 1),
+                     silent(3), silent(3), silent(), silent()]
+        m = _decode_mp3_l3(encode_mp3_l3(specs, mode=mode))
+        e_tot = 0.0
+        r_int = 0.0
+        gr = m["granules"]
+        for j in range(0, len(gr), 2):
+            l_g, r_g = gr[j], gr[j + 1]
+            e_tot += sum(x * x for x in l_g.xr)
+            e_tot += sum(x * x for x in r_g.xr)
+            if r_g.block_type == 2:
+                idxs = (mixed_idxs if r_g.mixed_block_flag
+                        else short_idxs)
+                r_int += sum(r_g.xr[i] * r_g.xr[i] for i in idxs)
+            else:
+                bound = 36 if v == 0 else 48
+                r_int += sum(x * x for x in r_g.xr[bound:])
+        yield (
+            d, variant, m["n_channels"], m["n_frames"],
+            int(round(1e6 * e_tot)), int(round(1e6 * r_int)),
+        )
 
     schema = (
         "doc_id long, variant string, n_channels long, n_frames long, "
         "xr_energy_micros long, right_int_energy_micros long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -15371,93 +15047,68 @@ def mp3_huffman_tables_decode_features(spark: SparkSession, sf_dir: str) -> Data
     requantize to irrational |is|^(4/3) scales, so they are pinned by
     mag_sum and position, keeping the hash float-exact). Map-only
     mapInPandas with the standard core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    pairs = [(2, 3), (5, 6), (7, 8), (9, 10),
+             (11, 12), (13, 15), (16, 24), (21, 29)]
+    caps = {2: 2, 3: 2, 5: 3, 6: 3, 7: 5, 8: 5, 9: 5, 10: 7,
+            11: 7, 12: 7, 13: 15, 15: 15, 16: 16, 24: 30,
+            21: 40, 29: 50}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        pairs = [(2, 3), (5, 6), (7, 8), (9, 10),
-                 (11, 12), (13, 15), (16, 24), (21, 29)]
-        caps = {2: 2, 3: 2, 5: 3, 6: 3, 7: 5, 8: 5, 9: 5, 10: 7,
-                11: 7, 12: 7, 13: 15, 15: 15, 16: 16, 24: 30,
-                21: 40, 29: 50}
-
-        def granule_spec(d: int, gi: int, table: int) -> dict:
-            cap = caps[table]
-            is_vals = [0] * 576
-            for j in range(29):
-                mag = 1 + (j + d + gi) % cap
-                is_vals[7 * j] = mag if (j + d) % 2 == 0 else -mag
-            for q in range(25):
-                if (q + d) % 3 == 0:
-                    is_vals[200 + 4 * q + (d + q) % 4] = (
-                        1 if q % 2 == 0 else -1
-                    )
-            return {
-                "is": is_vals,
-                "global_gain": 210 + 4 * ((d + gi) % 6),
-                "scalefac": [0] * 21,
-                "big_values": 100,
-                "scalefac_scale": 1,
-                "scalefac_compress": 0,
-                "huff_table": table,
-                "count1table": "A",
-            }
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "big_lines": [], "mag_sum": [],
-                "big_neg": [], "big_pos_weight": [], "energy1_micros": [],
-                "quad_lines": [], "quad_pos_weight": [], "quad_neg": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                t0, t1 = pairs[d % 8]
-                blob = encode_mp3_l3(
-                    [granule_spec(d, 0, t0), granule_spec(d, 1, t1)]
+    def granule_spec(d: int, gi: int, table: int) -> dict:
+        cap = caps[table]
+        is_vals = [0] * 576
+        for j in range(29):
+            mag = 1 + (j + d + gi) % cap
+            is_vals[7 * j] = mag if (j + d) % 2 == 0 else -mag
+        for q in range(25):
+            if (q + d) % 3 == 0:
+                is_vals[200 + 4 * q + (d + q) % 4] = (
+                    1 if q % 2 == 0 else -1
                 )
-                m = _decode_mp3_l3(blob)  # REAL multi-table decode
-                bl = ms = bn = bpw = ql = qpw = qn = 0
-                e1 = 0.0
-                for g in m["granules"]:
-                    assert g.count1table_select == 0
-                    for i, v in enumerate(g.is_vals):
-                        if not v:
-                            continue
-                        if i < 200:
-                            bl += 1
-                            ms += abs(v)
-                            if v < 0:
-                                bn += 1
-                            bpw += i + 1
-                            if abs(v) == 1:
-                                e1 += g.xr[i] * g.xr[i]
-                        else:
-                            ql += 1
-                            if v < 0:
-                                qn += 1
-                            qpw += i + 1
-                out["doc_id"].append(d)
-                out["big_lines"].append(bl)
-                out["mag_sum"].append(ms)
-                out["big_neg"].append(bn)
-                out["big_pos_weight"].append(bpw)
-                out["energy1_micros"].append(int(round(1_000_000 * e1)))
-                out["quad_lines"].append(ql)
-                out["quad_pos_weight"].append(qpw)
-                out["quad_neg"].append(qn)
-            yield pd.DataFrame(out)
+        return {
+            "is": is_vals,
+            "global_gain": 210 + 4 * ((d + gi) % 6),
+            "scalefac": [0] * 21,
+            "big_values": 100,
+            "scalefac_scale": 1,
+            "scalefac_compress": 0,
+            "huff_table": table,
+            "count1table": "A",
+        }
+
+    def per_doc(d: int):
+        t0, t1 = pairs[d % 8]
+        blob = encode_mp3_l3(
+            [granule_spec(d, 0, t0), granule_spec(d, 1, t1)]
+        )
+        m = _decode_mp3_l3(blob)  # REAL multi-table decode
+        bl = ms = bn = bpw = ql = qpw = qn = 0
+        e1 = 0.0
+        for g in m["granules"]:
+            assert g.count1table_select == 0
+            for i, v in enumerate(g.is_vals):
+                if not v:
+                    continue
+                if i < 200:
+                    bl += 1
+                    ms += abs(v)
+                    if v < 0:
+                        bn += 1
+                    bpw += i + 1
+                    if abs(v) == 1:
+                        e1 += g.xr[i] * g.xr[i]
+                else:
+                    ql += 1
+                    if v < 0:
+                        qn += 1
+                    qpw += i + 1
+        yield d, bl, ms, bn, bpw, int(round(1_000_000 * e1)), ql, qpw, qn
 
     schema = (
         "doc_id long, big_lines long, mag_sum long, big_neg long, "
         "big_pos_weight long, energy1_micros long, quad_lines long, "
         "quad_pos_weight long, quad_neg long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -15505,225 +15156,203 @@ def mpeg1_layer1_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    rates = (44100, 48000, 32000)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        rates = (44100, 48000, 32000)
-
-        def frame_spec(d: int, f: int) -> dict:
-            alloc = [
-                (3 + (d + sb) % 9) if (sb + d + f) % 3 else 0
+    def frame_spec(d: int, f: int) -> dict:
+        alloc = [
+            (3 + (d + sb) % 9) if (sb + d + f) % 3 else 0
+            for sb in range(32)
+        ]
+        scf = [3 * ((d + sb) % 10) for sb in range(32)]
+        codes = [
+            [
+                int((11 * d + 7 * t + 13 * sb) % (1 << (alloc[sb] + 1)))
+                if alloc[sb] else 0
                 for sb in range(32)
             ]
-            scf = [3 * ((d + sb) % 10) for sb in range(32)]
-            codes = [
+            for t in range(12)
+        ]
+        return {"alloc": alloc, "scf_idx": scf, "codes": codes}
+
+    def frame_spec_joint(d: int, f: int, bound: int) -> dict:
+        # sparser allocations than the mono profile (two channels
+        # share the slot budget); above the bound channel 1 copies
+        # channel 0's allocation and its codes go unused (one
+        # shared sample code per the §2.4.2.4 intensity rule)
+        def al(c: int) -> list:
+            return [
+                (2 + (d + c + sb) % 6) if (sb + d + f) % 3 else 0
+                for sb in range(32)
+            ]
+
+        a0, a1 = al(0), al(1)
+        for sb in range(bound, 32):
+            a1[sb] = a0[sb]
+        alloc = [a0, a1]
+        scf = [
+            [3 * ((d + c + sb) % 10) for sb in range(32)]
+            for c in range(2)
+        ]
+        codes = [
+            [
                 [
-                    int((11 * d + 7 * t + 13 * sb) % (1 << (alloc[sb] + 1)))
-                    if alloc[sb] else 0
+                    int((11 * d + 7 * t + 13 * sb + 5 * c)
+                        % (1 << (alloc[c][sb] + 1)))
+                    if alloc[c][sb] else 0
                     for sb in range(32)
                 ]
                 for t in range(12)
             ]
-            return {"alloc": alloc, "scf_idx": scf, "codes": codes}
+            for c in range(2)
+        ]
+        return {"alloc": alloc, "scf_idx": scf, "codes": codes,
+                "bound": bound}
 
-        def frame_spec_joint(d: int, f: int, bound: int) -> dict:
-            # sparser allocations than the mono profile (two channels
-            # share the slot budget); above the bound channel 1 copies
-            # channel 0's allocation and its codes go unused (one
-            # shared sample code per the §2.4.2.4 intensity rule)
-            def al(c: int) -> list:
-                return [
-                    (2 + (d + c + sb) % 6) if (sb + d + f) % 3 else 0
-                    for sb in range(32)
-                ]
+    def _req(nb: int, q: int) -> float:
+        frac = q / 2.0 ** (nb - 1) - 1.0
+        return (1 << nb) / ((1 << nb) - 1) * (frac + 2.0 ** (1 - nb))
 
-            a0, a1 = al(0), al(1)
-            for sb in range(bound, 32):
-                a1[sb] = a0[sb]
-            alloc = [a0, a1]
-            scf = [
-                [3 * ((d + c + sb) % 10) for sb in range(32)]
-                for c in range(2)
+    def _req_rows(alloc: list, scf_idx: list):
+        # per-subband scalar constants, computed with the exact
+        # _req/_mp1_scalefactor expressions (vectorized round 17:
+        # numpy then only divides/multiplies elementwise in _req's
+        # order; unallocated columns are zeroed explicitly)
+        sfv = np.empty(32)
+        gain = np.empty(32)
+        add = np.empty(32)
+        div = np.empty(32)
+        for sb in range(32):
+            a = alloc[sb]
+            nb = a + 1
+            sfv[sb] = _mp1_scalefactor(scf_idx[sb]) if a else 0.0
+            gain[sb] = (1 << nb) / ((1 << nb) - 1)
+            add[sb] = 2.0 ** (1 - nb)
+            div[sb] = 2.0 ** (nb - 1)
+        return sfv, gain, add, div
+
+    def expected_svecs(specs: list) -> list:
+        out = []
+        for sp in specs:
+            sfv, gain, add, div = _req_rows(sp["alloc"], sp["scf_idx"])
+            codes = np.asarray(sp["codes"], dtype=np.int64)
+            M = sfv * (gain * (codes / div - 1.0 + add))
+            zero = [sb for sb in range(32) if not sp["alloc"][sb]]
+            if zero:
+                M[:, zero] = 0.0
+            out.extend(M.tolist())
+        return out
+
+    def expected_svecs_joint(specs: list, c: int) -> list:
+        out = []
+        for sp in specs:
+            bound = sp["bound"]
+            sfv, gain, add, div = _req_rows(
+                sp["alloc"][c], sp["scf_idx"][c]
+            )
+            codes = np.asarray(sp["codes"][c], dtype=np.int64).copy()
+            codes0 = np.asarray(sp["codes"][0], dtype=np.int64)
+            codes[:, bound:] = codes0[:, bound:]
+            M = sfv * (gain * (codes / div - 1.0 + add))
+            zero = [sb for sb in range(32) if not sp["alloc"][c][sb]]
+            if zero:
+                M[:, zero] = 0.0
+            out.extend(M.tolist())
+        return out
+
+    # the SNR leg is doc-independent: compute once per task
+    snr_cache = {}
+
+    def chain_snr() -> float:
+        if "v" in snr_cache:
+            return snr_cache["v"]
+        t = np.arange(384 * 6) / 44100.0
+        src = 0.6 * np.sin(2 * np.pi * 700.0 * t)
+        svecs, _ = mp3_analysis_filterbank(src)
+        nbv = 9
+        A = (2 ** nbv - 1) / 2 ** nbv
+        B = -(2.0 ** (-nbv))
+        frames = []
+        for f in range(6):
+            codes = []
+            for tt in range(12):
+                S = svecs[f * 12 + tt]
+                row = []
+                for sb in range(32):
+                    sv = float(np.clip(S[sb] / 2.0, -0.999, 0.999))
+                    q = int(np.floor((A * sv + B + 1.0) * 2 ** (nbv - 1)))
+                    row.append(max(0, min((1 << nbv) - 1, q)))
+                codes.append(row)
+            frames.append({"alloc": [nbv - 1] * 32,
+                           "scf_idx": [0] * 32, "codes": codes})
+        out = decode_mpeg1_layer1(
+            encode_mpeg1_layer1(frames, bitrate_index=14)
+        )["pcm_f"][0]
+        best = -1e9
+        for dshift in range(480, 620):
+            n = len(src) - dshift
+            e = out[dshift: dshift + n] - src[:n]
+            v = 10 * np.log10(
+                np.sum(src[:n] ** 2) / max(np.sum(e ** 2), 1e-12)
+            )
+            best = max(best, v)
+        snr_cache["v"] = best
+        return best
+
+    def per_doc(d: int):
+        rate = rates[d % 3]
+        nf = 2 + d % 3
+        if d % 4 == 3:
+            # joint (intensity) stereo variant (round 17): the
+            # emitted geometry columns keep the same closed
+            # forms (per-channel frame/sample counts and the
+            # slot framing are mode-independent), so the oracle
+            # is untouched; parity_exact now also pins the
+            # shared-sample bound rule for both channels
+            bound = 4 * (d % 3 + 1)
+            specs = [
+                frame_spec_joint(d, f, bound) for f in range(nf)
             ]
-            codes = [
-                [
-                    [
-                        int((11 * d + 7 * t + 13 * sb + 5 * c)
-                            % (1 << (alloc[c][sb] + 1)))
-                        if alloc[c][sb] else 0
-                        for sb in range(32)
-                    ]
-                    for t in range(12)
-                ]
-                for c in range(2)
-            ]
-            return {"alloc": alloc, "scf_idx": scf, "codes": codes,
-                    "bound": bound}
-
-        def _req(nb: int, q: int) -> float:
-            frac = q / 2.0 ** (nb - 1) - 1.0
-            return (1 << nb) / ((1 << nb) - 1) * (frac + 2.0 ** (1 - nb))
-
-        def _req_rows(alloc: list, scf_idx: list):
-            # per-subband scalar constants, computed with the exact
-            # _req/_mp1_scalefactor expressions (vectorized round 17:
-            # numpy then only divides/multiplies elementwise in _req's
-            # order; unallocated columns are zeroed explicitly)
-            sfv = np.empty(32)
-            gain = np.empty(32)
-            add = np.empty(32)
-            div = np.empty(32)
-            for sb in range(32):
-                a = alloc[sb]
-                nb = a + 1
-                sfv[sb] = _mp1_scalefactor(scf_idx[sb]) if a else 0.0
-                gain[sb] = (1 << nb) / ((1 << nb) - 1)
-                add[sb] = 2.0 ** (1 - nb)
-                div[sb] = 2.0 ** (nb - 1)
-            return sfv, gain, add, div
-
-        def expected_svecs(specs: list) -> list:
-            out = []
-            for sp in specs:
-                sfv, gain, add, div = _req_rows(sp["alloc"], sp["scf_idx"])
-                codes = np.asarray(sp["codes"], dtype=np.int64)
-                M = sfv * (gain * (codes / div - 1.0 + add))
-                zero = [sb for sb in range(32) if not sp["alloc"][sb]]
-                if zero:
-                    M[:, zero] = 0.0
-                out.extend(M.tolist())
-            return out
-
-        def expected_svecs_joint(specs: list, c: int) -> list:
-            out = []
-            for sp in specs:
-                bound = sp["bound"]
-                sfv, gain, add, div = _req_rows(
-                    sp["alloc"][c], sp["scf_idx"][c]
+            blob = encode_mpeg1_layer1(
+                specs, bitrate_index=12, sample_rate=rate,
+                mode="joint", use_crc=(d % 7 == 5),
+            )
+            meta = decode_media(blob, "audio")
+            refs = []
+            for c in range(2):
+                sv = expected_svecs_joint(specs, c)
+                pc, _ = mp3_synthesize_pcm(
+                    sv + [[0.0] * 32] * 16
                 )
-                codes = np.asarray(sp["codes"][c], dtype=np.int64).copy()
-                codes0 = np.asarray(sp["codes"][0], dtype=np.int64)
-                codes[:, bound:] = codes0[:, bound:]
-                M = sfv * (gain * (codes / div - 1.0 + add))
-                zero = [sb for sb in range(32) if not sp["alloc"][c][sb]]
-                if zero:
-                    M[:, zero] = 0.0
-                out.extend(M.tolist())
-            return out
-
-        # the SNR leg is doc-independent: compute once per executor
-        snr_cache = {}
-
-        def chain_snr() -> float:
-            if "v" in snr_cache:
-                return snr_cache["v"]
-            t = np.arange(384 * 6) / 44100.0
-            src = 0.6 * np.sin(2 * np.pi * 700.0 * t)
-            svecs, _ = mp3_analysis_filterbank(src)
-            nbv = 9
-            A = (2 ** nbv - 1) / 2 ** nbv
-            B = -(2.0 ** (-nbv))
-            frames = []
-            for f in range(6):
-                codes = []
-                for tt in range(12):
-                    S = svecs[f * 12 + tt]
-                    row = []
-                    for sb in range(32):
-                        sv = float(np.clip(S[sb] / 2.0, -0.999, 0.999))
-                        q = int(np.floor((A * sv + B + 1.0) * 2 ** (nbv - 1)))
-                        row.append(max(0, min((1 << nbv) - 1, q)))
-                    codes.append(row)
-                frames.append({"alloc": [nbv - 1] * 32,
-                               "scf_idx": [0] * 32, "codes": codes})
-            out = decode_mpeg1_layer1(
-                encode_mpeg1_layer1(frames, bitrate_index=14)
-            )["pcm_f"][0]
-            best = -1e9
-            for dshift in range(480, 620):
-                n = len(src) - dshift
-                e = out[dshift: dshift + n] - src[:n]
-                v = 10 * np.log10(
-                    np.sum(src[:n] ** 2) / max(np.sum(e ** 2), 1e-12)
-                )
-                best = max(best, v)
-            snr_cache["v"] = best
-            return best
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sample_rate": [], "n_frames": [],
-                "n_samples": [], "stream_bytes": [], "parity_exact": [],
-                "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = rates[d % 3]
-                nf = 2 + d % 3
-                if d % 4 == 3:
-                    # joint (intensity) stereo variant (round 17): the
-                    # emitted geometry columns keep the same closed
-                    # forms (per-channel frame/sample counts and the
-                    # slot framing are mode-independent), so the oracle
-                    # is untouched; parity_exact now also pins the
-                    # shared-sample bound rule for both channels
-                    bound = 4 * (d % 3 + 1)
-                    specs = [
-                        frame_spec_joint(d, f, bound) for f in range(nf)
-                    ]
-                    blob = encode_mpeg1_layer1(
-                        specs, bitrate_index=12, sample_rate=rate,
-                        mode="joint", use_crc=(d % 7 == 5),
-                    )
-                    meta = decode_media(blob, "audio")
-                    refs = []
-                    for c in range(2):
-                        sv = expected_svecs_joint(specs, c)
-                        pc, _ = mp3_synthesize_pcm(
-                            sv + [[0.0] * 32] * 16
-                        )
-                        refs.append(pc)
-                    ref_pcm = np.stack(refs, axis=1).reshape(-1)
-                else:
-                    specs = [frame_spec(d, f) for f in range(nf)]
-                    # every seventh doc emits a CRC-protected stream
-                    # (round 17): the slot framing is bitrate-fixed, so
-                    # every geometry column is CRC-invariant and the
-                    # oracle is untouched; a CRC-span slip in either
-                    # half fails the decode outright
-                    blob = encode_mpeg1_layer1(
-                        specs, bitrate_index=12, sample_rate=rate,
-                        use_crc=(d % 7 == 5),
-                    )
-                    meta = decode_media(blob, "audio")  # routed Layer I
-                    ref_svecs = expected_svecs(specs) + [[0.0] * 32] * 16
-                    ref_pcm, _ = mp3_synthesize_pcm(ref_svecs)
-                ref16 = np.clip(
-                    np.rint(np.asarray(ref_pcm) * 32768.0), -32768, 32767
-                ).astype("<i2")
-                got = np.frombuffer(meta["pcm"], "<i2")
-                out["doc_id"].append(d)
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_frames"].append(nf)
-                out["n_samples"].append(meta["n_frames"])
-                out["stream_bytes"].append(len(blob))
-                out["parity_exact"].append(
-                    bool(np.array_equal(got, ref16))
-                )
-                out["snr_ok"].append(bool(chain_snr() >= 25.0))
-            yield pd.DataFrame(out)
+                refs.append(pc)
+            ref_pcm = np.stack(refs, axis=1).reshape(-1)
+        else:
+            specs = [frame_spec(d, f) for f in range(nf)]
+            # every seventh doc emits a CRC-protected stream
+            # (round 17): the slot framing is bitrate-fixed, so
+            # every geometry column is CRC-invariant and the
+            # oracle is untouched; a CRC-span slip in either
+            # half fails the decode outright
+            blob = encode_mpeg1_layer1(
+                specs, bitrate_index=12, sample_rate=rate,
+                use_crc=(d % 7 == 5),
+            )
+            meta = decode_media(blob, "audio")  # routed Layer I
+            ref_svecs = expected_svecs(specs) + [[0.0] * 32] * 16
+            ref_pcm, _ = mp3_synthesize_pcm(ref_svecs)
+        ref16 = np.clip(
+            np.rint(np.asarray(ref_pcm) * 32768.0), -32768, 32767
+        ).astype("<i2")
+        got = np.frombuffer(meta["pcm"], "<i2")
+        yield (
+            d, meta["frame_rate"], nf, meta["n_frames"], len(blob),
+            bool(np.array_equal(got, ref16)), bool(chain_snr() >= 25.0),
+        )
 
     schema = (
         "doc_id long, sample_rate long, n_frames long, n_samples long, "
         "stream_bytes long, parity_exact boolean, snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # LSF Table B.8 band boundaries as independent SQL literals (the oracle's
@@ -15851,106 +15480,86 @@ def mp3_lsf_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's yt-dlp download path
     (reference repo ``transcribe_audio.py``) constantly yields
     low-rate voice files; this closes the LSF seam engine-side."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    rates = (22050, 24000, 16000, 12000, 11025, 8000)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def silent(bt: int = 0) -> dict:
+        s = {"is": [0] * 576, "global_gain": 210,
+             "scalefac": [0] * 21, "big_values": 0,
+             "scalefac_scale": 1, "scalefac_compress": 0}
+        if bt:
+            s["block_type"] = bt
+            s["subblock_gain"] = [0, 0, 0]
+            if bt == 2:
+                s["scalefac_s"] = [[0] * 3 for _ in range(12)]
+        return s
 
-        rates = (22050, 24000, 16000, 12000, 11025, 8000)
+    def long_a(dd: int, gi: int, st: int, sfc: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 480, st):
+            iv[i] = 1 if (i // st + dd + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((dd + gi) % 6),
+                "scalefac": [(dd + gi + b) % 4 for b in range(21)],
+                "scalefac_compress": sfc, "big_values": 240,
+                "scalefac_scale": 1}
 
-        def silent(bt: int = 0) -> dict:
-            s = {"is": [0] * 576, "global_gain": 210,
-                 "scalefac": [0] * 21, "big_values": 0,
-                 "scalefac_scale": 1, "scalefac_compress": 0}
-            if bt:
-                s["block_type"] = bt
-                s["subblock_gain"] = [0, 0, 0]
-                if bt == 2:
-                    s["scalefac_s"] = [[0] * 3 for _ in range(12)]
-            return s
+    def short_a(dd: int, gi: int, st: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 300, st):
+            iv[i] = 1 if (i // st + dd + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((dd + gi) % 6),
+                "scalefac": [0] * 21, "big_values": 150,
+                "scalefac_scale": 1, "scalefac_compress": 202,
+                "block_type": 2, "mixed_block_flag": 0,
+                "subblock_gain": [0, 0, 0],
+                "scalefac_s": [
+                    [(dd + gi + sfb + w) % 4 for w in range(3)]
+                    for sfb in range(12)
+                ]}
 
-        def long_a(dd: int, gi: int, st: int, sfc: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 480, st):
-                iv[i] = 1 if (i // st + dd + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((dd + gi) % 6),
-                    "scalefac": [(dd + gi + b) % 4 for b in range(21)],
-                    "scalefac_compress": sfc, "big_values": 240,
-                    "scalefac_scale": 1}
-
-        def short_a(dd: int, gi: int, st: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 300, st):
-                iv[i] = 1 if (i // st + dd + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((dd + gi) % 6),
-                    "scalefac": [0] * 21, "big_values": 150,
-                    "scalefac_scale": 1, "scalefac_compress": 202,
-                    "block_type": 2, "mixed_block_flag": 0,
-                    "subblock_gain": [0, 0, 0],
-                    "scalefac_s": [
-                        [(dd + gi + sfb + w) % 4 for w in range(3)]
-                        for sfb in range(12)
-                    ]}
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "sample_rate": [],
-                "n_frames": [], "xr_energy_q12": [], "ms_exact": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = rates[d % 6]
-                vs = d % 3
-                st = 7 + d % 5
-                if vs == 0:
-                    variant = f"long_{rate}"
-                    specs = [silent(), long_a(d, 0, st, 202),
-                             long_a(d, 1, st, 202), silent()]
-                    mode = "mono"
-                elif vs == 1:
-                    variant = f"short_{rate}"
-                    specs = [silent(), silent(1), short_a(d, 0, st),
-                             short_a(d, 1, st), silent(3)]
-                    mode = "mono"
-                else:
-                    variant = f"ms_{rate}"
-                    # channel-minor: frame f = [ch0 gr, ch1 gr]
-                    specs = [long_a(d, 0, st, 508),
-                             long_a(d + 1, 0, st, 508),
-                             long_a(d, 1, st, 508),
-                             long_a(d + 1, 1, st, 508)]
-                    mode = "ms_stereo"
-                m = _decode_mp3_l3(
-                    encode_mp3_lsf(specs, bitrate_index=13, mode=mode,
-                                   sample_rate=rate)
-                )
-                e_coded = sum(
-                    sum(x * x for x in g.xr_coded)
-                    for g in m["granules"]
-                )
-                e_post = sum(
-                    sum(x * x for x in g.xr) for g in m["granules"]
-                )
-                out["doc_id"].append(d)
-                out["variant"].append(variant)
-                out["sample_rate"].append(m["sample_rate"])
-                out["n_frames"].append(m["n_frames"])
-                out["xr_energy_q12"].append(int(round(4096.0 * e_coded)))
-                out["ms_exact"].append(
-                    bool(abs(e_post - e_coded)
-                         <= 1e-9 * max(1.0, e_coded))
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        rate = rates[d % 6]
+        vs = d % 3
+        st = 7 + d % 5
+        if vs == 0:
+            variant = f"long_{rate}"
+            specs = [silent(), long_a(d, 0, st, 202),
+                     long_a(d, 1, st, 202), silent()]
+            mode = "mono"
+        elif vs == 1:
+            variant = f"short_{rate}"
+            specs = [silent(), silent(1), short_a(d, 0, st),
+                     short_a(d, 1, st), silent(3)]
+            mode = "mono"
+        else:
+            variant = f"ms_{rate}"
+            # channel-minor: frame f = [ch0 gr, ch1 gr]
+            specs = [long_a(d, 0, st, 508),
+                     long_a(d + 1, 0, st, 508),
+                     long_a(d, 1, st, 508),
+                     long_a(d + 1, 1, st, 508)]
+            mode = "ms_stereo"
+        m = _decode_mp3_l3(
+            encode_mp3_lsf(specs, bitrate_index=13, mode=mode,
+                           sample_rate=rate)
+        )
+        e_coded = sum(
+            sum(x * x for x in g.xr_coded)
+            for g in m["granules"]
+        )
+        e_post = sum(
+            sum(x * x for x in g.xr) for g in m["granules"]
+        )
+        yield (
+            d, variant, m["sample_rate"], m["n_frames"],
+            int(round(4096.0 * e_coded)),
+            bool(abs(e_post - e_coded) <= 1e-9 * max(1.0, e_coded)),
+        )
 
     schema = (
         "doc_id long, variant string, sample_rate long, n_frames long, "
         "xr_energy_q12 long, ms_exact boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -16009,240 +15618,217 @@ def mpeg1_layer2_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last MPEG-1 audio layer engine-side."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    profiles = (  # (rate, bitrate_index) -> B.2a/b/c/d + LSF B.1 x2
+        (48000, 10), (44100, 10), (44100, 2), (32000, 2),
+        (22050, 10), (16000, 10),
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def eff_scf(idx: tuple, si: int) -> tuple:
+        if si == 0:
+            return idx
+        if si == 1:
+            return (idx[0], idx[0], idx[2])
+        if si == 3:
+            return (idx[0], idx[1], idx[1])
+        return (idx[0], idx[0], idx[0])
 
-        profiles = (  # (rate, bitrate_index) -> B.2a/b/c/d + LSF B.1 x2
-            (48000, 10), (44100, 10), (44100, 2), (32000, 2),
-            (22050, 10), (16000, 10),
-        )
-
-        def eff_scf(idx: tuple, si: int) -> tuple:
-            if si == 0:
-                return idx
-            if si == 1:
-                return (idx[0], idx[0], idx[2])
-            if si == 3:
-                return (idx[0], idx[1], idx[1])
-            return (idx[0], idx[0], idx[0])
-
-        def frame_spec(d: int, f: int, tab: tuple, c: int = 0) -> dict:
-            sblimit = len(tab)
-            alloc, scfsi, scf, samples = [], [], [], []
+    def frame_spec(d: int, f: int, tab: tuple, c: int = 0) -> dict:
+        sblimit = len(tab)
+        alloc, scfsi, scf, samples = [], [], [], []
+        for sb in range(sblimit):
+            nbal = _mp2_nbal(tab[sb])
+            a = (
+                (d + c + sb + f) % min(4, (1 << nbal) - 1)
+                if (sb + d + c + f) % 3 else 0
+            )
+            alloc.append(a)
+            scfsi.append((d + c + sb) % 4)
+            scf.append((
+                (3 * (d + c + sb)) % 63, (d + c + 2 * sb) % 63,
+                (2 * d + c + 5 * sb) % 63,
+            ))
+        for gr in range(12):
+            row = []
             for sb in range(sblimit):
-                nbal = _mp2_nbal(tab[sb])
-                a = (
-                    (d + c + sb + f) % min(4, (1 << nbal) - 1)
-                    if (sb + d + c + f) % 3 else 0
-                )
-                alloc.append(a)
-                scfsi.append((d + c + sb) % 4)
-                scf.append((
-                    (3 * (d + c + sb)) % 63, (d + c + 2 * sb) % 63,
-                    (2 * d + c + 5 * sb) % 63,
-                ))
-            for gr in range(12):
-                row = []
-                for sb in range(sblimit):
-                    a = alloc[sb]
-                    if a:
-                        n = _MP2_QC[tab[sb][a - 1]][0]
-                        row.append((
-                            (7 * d + 13 * gr + sb + c) % n,
-                            (11 * d + 3 * gr + 5 * sb) % n,
-                            (5 * d + gr + 2 * sb + c) % n,
-                        ))
-                    else:
-                        row.append((0, 0, 0))
-                samples.append(row)
-            return {"alloc": alloc, "scfsi": scfsi, "scf_idx": scf,
-                    "samples": samples}
-
-        def expected_one(sp: dict, tab: tuple,
-                         samples_src: list | None = None) -> list:
-            # vectorized closed form (round 17): identical IEEE ops in
-            # the scalar loop's order — (sf * C) * ((v / 2^(nb-1) -
-            # 1.0) + D) elementwise over the (granule, k, subband)
-            # block; unallocated subbands stay exactly 0.0
-            src = samples_src if samples_src is not None else sp["samples"]
-            out = np.zeros((12, 3, 32))
-            sbs = [sb for sb in range(len(tab)) if sp["alloc"][sb]]
-            if sbs:
-                Cs, Ds, divs = [], [], []
-                sfv = np.empty((3, len(sbs)))
-                for i, sb in enumerate(sbs):
-                    _n, _w, _g, C, D, nb = _MP2_QC[
-                        tab[sb][sp["alloc"][sb] - 1]
-                    ]
-                    Cs.append(C)
-                    Ds.append(D)
-                    divs.append(float(1 << (nb - 1)))
-                    eff = eff_scf(sp["scf_idx"][sb], sp["scfsi"][sb])
-                    for part in range(3):
-                        sfv[part, i] = _mp1_scalefactor(eff[part])
-                A = np.asarray(src, dtype=np.float64)[:, sbs, :]
-                Vt = A.transpose(0, 2, 1)            # (12, k, sb)
-                part_idx = np.arange(12) >> 2
-                out[:, :, sbs] = (
-                    sfv[part_idx][:, None, :] * np.asarray(Cs)
-                ) * (
-                    Vt / np.asarray(divs) - 1.0 + np.asarray(Ds)
-                )
-            return out.reshape(36, 32).tolist()
-
-        def expected_svecs(specs: list, tab: tuple) -> list:
-            out = []
-            for sp in specs:
-                out.extend(expected_one(sp, tab))
-            return out
-
-        # the SNR leg is doc-independent: compute once per executor
-        snr_cache = {}
-
-        def chain_snr() -> float:
-            if "v" in snr_cache:
-                return snr_cache["v"]
-            tab = _MP2_ALLOC_TABLES["a"]
-            n, _w, _g, C, D, nb = _MP2_QC[tab[0][12]]  # code 13: 16383
-            t = np.arange(1152 * 4) / 48000.0
-            src = 0.6 * np.sin(2 * np.pi * 700.0 * t)
-            svecs, _ = mp3_analysis_filterbank(src)
-            frames = []
-            for f in range(4):
-                samples = []
-                for gr in range(12):
-                    row = [(0, 0, 0)] * 27
-                    for sb in range(3):
-                        vals = []
-                        for k in range(3):
-                            S = svecs[f * 36 + 3 * gr + k]
-                            s = float(np.clip(S[sb] / 2.0, -0.99, 0.99))
-                            v = int(np.floor(
-                                (s / C - D + 1.0) * (1 << (nb - 1)) + 0.5
-                            ))
-                            vals.append(max(0, min(n - 1, v)))
-                        row[sb] = tuple(vals)
-                    samples.append(row)
-                frames.append({
-                    "alloc": [13, 13, 13] + [0] * 24,
-                    "scfsi": [0] * 27,
-                    "scf_idx": [(0, 0, 0)] * 27,
-                    "samples": samples,
-                })
-            out = decode_mpeg1_layer2(
-                encode_mpeg1_layer2(frames, bitrate_index=10,
-                                    sample_rate=48000)
-            )["pcm_f"][0]
-            best = -1e9
-            for dshift in range(450, 620):
-                m = len(src) - dshift
-                e = out[dshift: dshift + m] - src[:m]
-                v = 10 * np.log10(
-                    np.sum(src[:m] ** 2) / max(np.sum(e ** 2), 1e-12)
-                )
-                best = max(best, v)
-            snr_cache["v"] = best
-            return best
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sample_rate": [], "sblimit": [],
-                "n_frames": [], "n_samples": [], "stream_bytes": [],
-                "parity_exact": [], "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, bi = profiles[d % 6]
-                lsf = rate in (22050, 24000, 16000)
-                tab = _MP2_ALLOC_TABLES[
-                    "lsf" if lsf else
-                    _mp2_table_select(_MP2_KBPS[bi - 1], 1, rate)
-                ]
-                sblimit = len(tab)
-                nf = 2 + d % 2
-                joint = d % 6 in (0, 1, 4, 5) and d % 5 == 4
-                if joint:
-                    bound = 4 * (d % 4 + 1)
-                    eb = min(bound, sblimit)
-                    specs = []
-                    for f in range(nf):
-                        c0 = frame_spec(d, f, tab, 0)
-                        c1 = frame_spec(d, f, tab, 1)
-                        for sb in range(eb, sblimit):
-                            c1["alloc"][sb] = c0["alloc"][sb]
-                        specs.append({
-                            "alloc": [c0["alloc"], c1["alloc"]],
-                            "scfsi": [c0["scfsi"], c1["scfsi"]],
-                            "scf_idx": [c0["scf_idx"], c1["scf_idx"]],
-                            "samples": [c0["samples"], c1["samples"]],
-                            "bound": bound, "_chs": (c0, c1),
-                        })
-                    blob = encode_mpeg1_layer2(
-                        specs, bitrate_index=bi, sample_rate=rate,
-                        mode="joint", use_crc=(d % 7 == 5),
-                    )
-                    meta = decode_media(blob, "audio")
-                    refs = []
-                    for c in range(2):
-                        sv = []
-                        for sp in specs:
-                            c0, c1 = sp["_chs"]
-                            cs = (c0, c1)[c]
-                            src = [
-                                [c0["samples"][gr][sb] if sb >= eb
-                                 else cs["samples"][gr][sb]
-                                 for sb in range(sblimit)]
-                                for gr in range(12)
-                            ]
-                            sv.extend(expected_one(cs, tab, src))
-                        pc, _ = mp3_synthesize_pcm(
-                            sv + [[0.0] * 32] * 16
-                        )
-                        refs.append(pc)
-                    ref_pcm = np.stack(refs, axis=1).reshape(-1)
+                a = alloc[sb]
+                if a:
+                    n = _MP2_QC[tab[sb][a - 1]][0]
+                    row.append((
+                        (7 * d + 13 * gr + sb + c) % n,
+                        (11 * d + 3 * gr + 5 * sb) % n,
+                        (5 * d + gr + 2 * sb + c) % n,
+                    ))
                 else:
-                    specs = [frame_spec(d, f, tab) for f in range(nf)]
-                    # CRC-protected every seventh doc (round 17) — see
-                    # the Layer I gate note; oracle-invariant
-                    blob = encode_mpeg1_layer2(
-                        specs, bitrate_index=bi, sample_rate=rate,
-                        use_crc=(d % 7 == 5),
-                    )
-                    meta = decode_media(blob, "audio")  # routed path
-                    ref_svecs = (
-                        expected_svecs(specs, tab) + [[0.0] * 32] * 16
-                    )
-                    ref_pcm, _ = mp3_synthesize_pcm(ref_svecs)
-                ref16 = np.clip(
-                    np.rint(np.asarray(ref_pcm) * 32768.0),
-                    -32768, 32767,
-                ).astype("<i2")
-                got = np.frombuffer(meta["pcm"], "<i2")
-                out["doc_id"].append(d)
-                out["sample_rate"].append(meta["frame_rate"])
-                out["sblimit"].append(len(tab))
-                out["n_frames"].append(nf)
-                out["n_samples"].append(meta["n_frames"])
-                out["stream_bytes"].append(len(blob))
-                out["parity_exact"].append(
-                    bool(meta["codec"] == "mp2")
-                    and bool(np.array_equal(got, ref16))
+                    row.append((0, 0, 0))
+            samples.append(row)
+        return {"alloc": alloc, "scfsi": scfsi, "scf_idx": scf,
+                "samples": samples}
+
+    def expected_one(sp: dict, tab: tuple,
+                     samples_src: list | None = None) -> list:
+        # vectorized closed form (round 17): identical IEEE ops in
+        # the scalar loop's order — (sf * C) * ((v / 2^(nb-1) -
+        # 1.0) + D) elementwise over the (granule, k, subband)
+        # block; unallocated subbands stay exactly 0.0
+        src = samples_src if samples_src is not None else sp["samples"]
+        out = np.zeros((12, 3, 32))
+        sbs = [sb for sb in range(len(tab)) if sp["alloc"][sb]]
+        if sbs:
+            Cs, Ds, divs = [], [], []
+            sfv = np.empty((3, len(sbs)))
+            for i, sb in enumerate(sbs):
+                _n, _w, _g, C, D, nb = _MP2_QC[
+                    tab[sb][sp["alloc"][sb] - 1]
+                ]
+                Cs.append(C)
+                Ds.append(D)
+                divs.append(float(1 << (nb - 1)))
+                eff = eff_scf(sp["scf_idx"][sb], sp["scfsi"][sb])
+                for part in range(3):
+                    sfv[part, i] = _mp1_scalefactor(eff[part])
+            A = np.asarray(src, dtype=np.float64)[:, sbs, :]
+            Vt = A.transpose(0, 2, 1)            # (12, k, sb)
+            part_idx = np.arange(12) >> 2
+            out[:, :, sbs] = (
+                sfv[part_idx][:, None, :] * np.asarray(Cs)
+            ) * (
+                Vt / np.asarray(divs) - 1.0 + np.asarray(Ds)
+            )
+        return out.reshape(36, 32).tolist()
+
+    def expected_svecs(specs: list, tab: tuple) -> list:
+        out = []
+        for sp in specs:
+            out.extend(expected_one(sp, tab))
+        return out
+
+    # the SNR leg is doc-independent: compute once per task
+    snr_cache = {}
+
+    def chain_snr() -> float:
+        if "v" in snr_cache:
+            return snr_cache["v"]
+        tab = _MP2_ALLOC_TABLES["a"]
+        n, _w, _g, C, D, nb = _MP2_QC[tab[0][12]]  # code 13: 16383
+        t = np.arange(1152 * 4) / 48000.0
+        src = 0.6 * np.sin(2 * np.pi * 700.0 * t)
+        svecs, _ = mp3_analysis_filterbank(src)
+        frames = []
+        for f in range(4):
+            samples = []
+            for gr in range(12):
+                row = [(0, 0, 0)] * 27
+                for sb in range(3):
+                    vals = []
+                    for k in range(3):
+                        S = svecs[f * 36 + 3 * gr + k]
+                        s = float(np.clip(S[sb] / 2.0, -0.99, 0.99))
+                        v = int(np.floor(
+                            (s / C - D + 1.0) * (1 << (nb - 1)) + 0.5
+                        ))
+                        vals.append(max(0, min(n - 1, v)))
+                    row[sb] = tuple(vals)
+                samples.append(row)
+            frames.append({
+                "alloc": [13, 13, 13] + [0] * 24,
+                "scfsi": [0] * 27,
+                "scf_idx": [(0, 0, 0)] * 27,
+                "samples": samples,
+            })
+        out = decode_mpeg1_layer2(
+            encode_mpeg1_layer2(frames, bitrate_index=10,
+                                sample_rate=48000)
+        )["pcm_f"][0]
+        best = -1e9
+        for dshift in range(450, 620):
+            m = len(src) - dshift
+            e = out[dshift: dshift + m] - src[:m]
+            v = 10 * np.log10(
+                np.sum(src[:m] ** 2) / max(np.sum(e ** 2), 1e-12)
+            )
+            best = max(best, v)
+        snr_cache["v"] = best
+        return best
+
+    def per_doc(d: int):
+        rate, bi = profiles[d % 6]
+        lsf = rate in (22050, 24000, 16000)
+        tab = _MP2_ALLOC_TABLES[
+            "lsf" if lsf else
+            _mp2_table_select(_MP2_KBPS[bi - 1], 1, rate)
+        ]
+        sblimit = len(tab)
+        nf = 2 + d % 2
+        joint = d % 6 in (0, 1, 4, 5) and d % 5 == 4
+        if joint:
+            bound = 4 * (d % 4 + 1)
+            eb = min(bound, sblimit)
+            specs = []
+            for f in range(nf):
+                c0 = frame_spec(d, f, tab, 0)
+                c1 = frame_spec(d, f, tab, 1)
+                for sb in range(eb, sblimit):
+                    c1["alloc"][sb] = c0["alloc"][sb]
+                specs.append({
+                    "alloc": [c0["alloc"], c1["alloc"]],
+                    "scfsi": [c0["scfsi"], c1["scfsi"]],
+                    "scf_idx": [c0["scf_idx"], c1["scf_idx"]],
+                    "samples": [c0["samples"], c1["samples"]],
+                    "bound": bound, "_chs": (c0, c1),
+                })
+            blob = encode_mpeg1_layer2(
+                specs, bitrate_index=bi, sample_rate=rate,
+                mode="joint", use_crc=(d % 7 == 5),
+            )
+            meta = decode_media(blob, "audio")
+            refs = []
+            for c in range(2):
+                sv = []
+                for sp in specs:
+                    c0, c1 = sp["_chs"]
+                    cs = (c0, c1)[c]
+                    src = [
+                        [c0["samples"][gr][sb] if sb >= eb
+                         else cs["samples"][gr][sb]
+                         for sb in range(sblimit)]
+                        for gr in range(12)
+                    ]
+                    sv.extend(expected_one(cs, tab, src))
+                pc, _ = mp3_synthesize_pcm(
+                    sv + [[0.0] * 32] * 16
                 )
-                out["snr_ok"].append(bool(chain_snr() >= 25.0))
-            yield pd.DataFrame(out)
+                refs.append(pc)
+            ref_pcm = np.stack(refs, axis=1).reshape(-1)
+        else:
+            specs = [frame_spec(d, f, tab) for f in range(nf)]
+            # CRC-protected every seventh doc (round 17) — see
+            # the Layer I gate note; oracle-invariant
+            blob = encode_mpeg1_layer2(
+                specs, bitrate_index=bi, sample_rate=rate,
+                use_crc=(d % 7 == 5),
+            )
+            meta = decode_media(blob, "audio")  # routed path
+            ref_svecs = (
+                expected_svecs(specs, tab) + [[0.0] * 32] * 16
+            )
+            ref_pcm, _ = mp3_synthesize_pcm(ref_svecs)
+        ref16 = np.clip(
+            np.rint(np.asarray(ref_pcm) * 32768.0),
+            -32768, 32767,
+        ).astype("<i2")
+        got = np.frombuffer(meta["pcm"], "<i2")
+        yield (
+            d, meta["frame_rate"], len(tab), nf, meta["n_frames"], len(blob),
+            bool(meta["codec"] == "mp2") and bool(np.array_equal(got, ref16)),
+            bool(chain_snr() >= 25.0),
+        )
 
     schema = (
         "doc_id long, sample_rate long, sblimit long, n_frames long, "
         "n_samples long, stream_bytes long, parity_exact boolean, "
         "snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -16293,53 +15879,32 @@ def adts_probe_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms. Sample decode is the named AAC codec seam; this is the
     ffprobe-shaped half a pipeline needs to route and budget those
     files. Map-only mapInPandas with the standard core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sample_rate": [], "n_channels": [],
-                "adts_frames": [], "n_samples": [], "duration_ms": [],
-                "mean_bitrate_kbps": [], "vbr": [], "crc_frames": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 3 + d % 4
-                cbr = d % 5 == 0
-                payloads = [
-                    bytes((11 * d + 7 * k + j) % 256 for j in range(
-                        40 if cbr else 40 + (d + k) % 25
-                    ))
-                    for k in range(nf)
-                ]
-                blob = encode_adts(
-                    payloads, sr_index=d % 13, channels=1 + d % 3,
-                    with_crc=(d % 2 == 1),
-                )
-                m = probe_audio(blob)  # REAL ADTS header walk
-                out["doc_id"].append(d)
-                out["sample_rate"].append(m["sample_rate"])
-                out["n_channels"].append(m["n_channels"])
-                out["adts_frames"].append(m["adts_frames"])
-                out["n_samples"].append(m["n_frames"])
-                out["duration_ms"].append(m["duration_ms"])
-                out["mean_bitrate_kbps"].append(m["mean_bitrate_kbps"])
-                out["vbr"].append(m["vbr"])
-                out["crc_frames"].append(m["crc_frames"])
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        nf = 3 + d % 4
+        cbr = d % 5 == 0
+        payloads = [
+            bytes((11 * d + 7 * k + j) % 256 for j in range(
+                40 if cbr else 40 + (d + k) % 25
+            ))
+            for k in range(nf)
+        ]
+        blob = encode_adts(
+            payloads, sr_index=d % 13, channels=1 + d % 3,
+            with_crc=(d % 2 == 1),
+        )
+        m = probe_audio(blob)  # REAL ADTS header walk
+        yield (
+            d, m["sample_rate"], m["n_channels"], m["adts_frames"],
+            m["n_frames"], m["duration_ms"], m["mean_bitrate_kbps"], m["vbr"],
+            m["crc_frames"],
+        )
 
     schema = (
         "doc_id long, sample_rate long, n_channels long, "
         "adts_frames long, n_samples long, duration_ms long, "
         "mean_bitrate_kbps long, vbr boolean, crc_frames long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -16398,77 +15963,55 @@ def ogg_probe_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     error breaks the hash. Sample decode of the packet payloads is the
     named external-codec seam. Map-only mapInPandas with the standard
     core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "n_channels": [],
-                "sample_rate": [], "n_pages": [], "n_packets": [],
-                "n_samples": [], "duration_ms": [], "ogg_bytes": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                opus = d % 2 == 0
-                ch = 2 if d % 3 == 0 else 1
-                na = 5 + d % 7
-                audio = [
-                    bytes([(d + i) % 256]) * (40 + (d + i) % 50)
-                    for i in range(na)
-                ]
-                if opus:
-                    pre = 312
-                    pk = [
-                        make_opus_head(
-                            channels=ch, pre_skip=pre, input_rate=44100
-                        ),
-                        b"OpusTags" + (7).to_bytes(4, "little")
-                        + b"fixture" + (0).to_bytes(4, "little"),
-                    ] + audio
-                    nh, spp = 2, 960
-                    grans = [
-                        pre + spp * min(na, 3 * (k + 1))
-                        for k in range((na + 2) // 3)
-                    ]
-                else:
-                    rate = 22050 if d % 4 == 1 else 44100
-                    pk = [
-                        make_vorbis_ident(channels=ch, rate=rate),
-                        b"\x03vorbis" + bytes(8) + b"\x01",
-                        b"\x05vorbis" + bytes(20),
-                    ] + audio
-                    nh, spp = 3, 512
-                    grans = [
-                        spp * min(na, 3 * (k + 1))
-                        for k in range((na + 2) // 3)
-                    ]
-                blob = encode_ogg(
-                    pk, grans, n_header_packets=nh, audio_per_page=3
-                )
-                m = probe_audio(blob)  # REAL page walk + CRC + ident
-                out["doc_id"].append(d)
-                out["codec"].append(m["codec"])
-                out["n_channels"].append(m["n_channels"])
-                out["sample_rate"].append(m["sample_rate"])
-                out["n_pages"].append(m["ogg_pages"])
-                out["n_packets"].append(m["ogg_packets"])
-                out["n_samples"].append(m["n_frames"])
-                out["duration_ms"].append(m["duration_ms"])
-                out["ogg_bytes"].append(len(blob))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        opus = d % 2 == 0
+        ch = 2 if d % 3 == 0 else 1
+        na = 5 + d % 7
+        audio = [
+            bytes([(d + i) % 256]) * (40 + (d + i) % 50)
+            for i in range(na)
+        ]
+        if opus:
+            pre = 312
+            pk = [
+                make_opus_head(
+                    channels=ch, pre_skip=pre, input_rate=44100
+                ),
+                b"OpusTags" + (7).to_bytes(4, "little")
+                + b"fixture" + (0).to_bytes(4, "little"),
+            ] + audio
+            nh, spp = 2, 960
+            grans = [
+                pre + spp * min(na, 3 * (k + 1))
+                for k in range((na + 2) // 3)
+            ]
+        else:
+            rate = 22050 if d % 4 == 1 else 44100
+            pk = [
+                make_vorbis_ident(channels=ch, rate=rate),
+                b"\x03vorbis" + bytes(8) + b"\x01",
+                b"\x05vorbis" + bytes(20),
+            ] + audio
+            nh, spp = 3, 512
+            grans = [
+                spp * min(na, 3 * (k + 1))
+                for k in range((na + 2) // 3)
+            ]
+        blob = encode_ogg(
+            pk, grans, n_header_packets=nh, audio_per_page=3
+        )
+        m = probe_audio(blob)  # REAL page walk + CRC + ident
+        yield (
+            d, m["codec"], m["n_channels"], m["sample_rate"], m["ogg_pages"],
+            m["ogg_packets"], m["n_frames"], m["duration_ms"], len(blob),
+        )
 
     schema = (
         "doc_id long, codec string, n_channels long, sample_rate long, "
         "n_pages long, n_packets long, n_samples long, duration_ms long, "
         "ogg_bytes long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 def _vorbis_fixture_plan(d: int):
@@ -16684,53 +16227,27 @@ def vorbis_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "residue_type": [], "coupled": [],
-                "floor_partitioned": [], "n_channels": [],
-                "sample_rate": [], "n_samples": [], "n_pages": [],
-                "n_packets": [], "pcm_matches_plan": [],
-                "probe_agrees": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                plan = _vorbis_fixture_plan(d)
-                blob = encode_vorbis(
-                    plan["frames"], channels=plan["channels"],
-                    rate=plan["rate"], residue_type=plan["rtype"],
-                    coupling=plan["coupling"],
-                    floor_partitioned=plan["partitioned"],
-                )
-                pcm, st = _decode_vorbis_float(blob)  # REAL decode
-                exp = _vorbis_plan_synthesis(plan)
-                probe = _probe_ogg(blob)  # REAL page walk + CRC
-                out["doc_id"].append(d)
-                out["residue_type"].append(plan["rtype"])
-                out["coupled"].append(plan["coupling"])
-                out["floor_partitioned"].append(plan["partitioned"])
-                out["n_channels"].append(plan["channels"])
-                out["sample_rate"].append(st["rate"])
-                out["n_samples"].append(pcm.shape[1])
-                out["n_pages"].append(probe["ogg_pages"])
-                out["n_packets"].append(probe["ogg_packets"])
-                out["pcm_matches_plan"].append(bool(
-                    pcm.shape == exp.shape
-                    and float(np.abs(pcm - exp).max()) <= 1e-12
-                ))
-                out["probe_agrees"].append(
-                    probe["n_frames"] == pcm.shape[1]
-                    and probe["codec"] == "vorbis"
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        plan = _vorbis_fixture_plan(d)
+        blob = encode_vorbis(
+            plan["frames"], channels=plan["channels"],
+            rate=plan["rate"], residue_type=plan["rtype"],
+            coupling=plan["coupling"],
+            floor_partitioned=plan["partitioned"],
+        )
+        pcm, st = _decode_vorbis_float(blob)  # REAL decode
+        exp = _vorbis_plan_synthesis(plan)
+        probe = _probe_ogg(blob)  # REAL page walk + CRC
+        pcm_matches_plan = bool(
+            pcm.shape == exp.shape
+            and float(np.abs(pcm - exp).max()) <= 1e-12
+        )
+        yield (
+            d, plan["rtype"], plan["coupling"], plan["partitioned"],
+            plan["channels"], st["rate"], pcm.shape[1], probe["ogg_pages"],
+            probe["ogg_packets"], pcm_matches_plan,
+            probe["n_frames"] == pcm.shape[1] and probe["codec"] == "vorbis",
+        )
 
     schema = (
         "doc_id long, residue_type long, coupled boolean, "
@@ -16738,7 +16255,7 @@ def vorbis_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_samples long, n_pages long, n_packets long, "
         "pcm_matches_plan boolean, probe_agrees boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -16809,81 +16326,60 @@ def wav_ext_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    names = ("ext_pcm16", "ext_f32", "ext_alaw", "rf64_pcm16")
+    rates = (16000, 22050, 48000)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        names = ("ext_pcm16", "ext_f32", "ext_alaw", "rf64_pcm16")
-        rates = (16000, 22050, 48000)
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "n_frames": [],
-                "frame_rate": [], "n_channels": [], "channel_mask": [],
-                "sample_width": [], "mean_abs": [], "peak": [],
-                "energy_mean": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                ch = 2 if d % 3 == 0 else 1
-                rate = rates[d % 3]
-                n = 160 + (d % 7) * 16
-                mask = 0x3 if ch == 2 else 0x4
-                j = np.arange(n * ch, dtype=np.int64)
-                src = ((11 * d + 7 * j) % 2001 - 1000).astype(np.int16)
-                if v == 0:
-                    blob = encode_wav_extensible(
-                        src.astype("<i2").tobytes(), _WAVE_FORMAT_PCM,
-                        ch, rate, 16, channel_mask=mask,
-                    )
-                elif v == 1:
-                    f = (
-                        src.astype(np.float32) / np.float32(32768.0)
-                    ).astype("<f4").tobytes()
-                    blob = encode_wav_extensible(
-                        f, _WAVE_FORMAT_IEEE_FLOAT, ch, rate, 32,
-                        channel_mask=mask,
-                    )
-                elif v == 2:
-                    codes = (
-                        (17 * d + 31 * j) % 256
-                    ).astype(np.uint8).tobytes()
-                    blob = encode_wav_extensible(
-                        codes, _WAVE_FORMAT_ALAW, ch, rate, 8,
-                        valid_bits=8, channel_mask=mask,
-                    )
-                else:
-                    blob = encode_wav_extensible(
-                        src.astype("<i2").tobytes(), _WAVE_FORMAT_PCM,
-                        ch, rate, 16, channel_mask=mask, n_frames=n,
-                        rf64=True,
-                    )
-                meta = decode_media(blob, "audio")  # REAL container walk
-                pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
-                w = _parse_wav_chunks(blob)
-                out["doc_id"].append(d)
-                out["variant"].append(names[v])
-                out["n_frames"].append(meta["n_frames"])
-                out["frame_rate"].append(meta["frame_rate"])
-                out["n_channels"].append(meta["n_channels"])
-                out["channel_mask"].append(w["channel_mask"])
-                out["sample_width"].append(meta["sample_width"])
-                out["mean_abs"].append(int(np.abs(pcm).sum()) // len(pcm))
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["energy_mean"].append(int((pcm * pcm).sum()) // len(pcm))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 4
+        ch = 2 if d % 3 == 0 else 1
+        rate = rates[d % 3]
+        n = 160 + (d % 7) * 16
+        mask = 0x3 if ch == 2 else 0x4
+        j = np.arange(n * ch, dtype=np.int64)
+        src = ((11 * d + 7 * j) % 2001 - 1000).astype(np.int16)
+        if v == 0:
+            blob = encode_wav_extensible(
+                src.astype("<i2").tobytes(), _WAVE_FORMAT_PCM,
+                ch, rate, 16, channel_mask=mask,
+            )
+        elif v == 1:
+            f = (
+                src.astype(np.float32) / np.float32(32768.0)
+            ).astype("<f4").tobytes()
+            blob = encode_wav_extensible(
+                f, _WAVE_FORMAT_IEEE_FLOAT, ch, rate, 32,
+                channel_mask=mask,
+            )
+        elif v == 2:
+            codes = (
+                (17 * d + 31 * j) % 256
+            ).astype(np.uint8).tobytes()
+            blob = encode_wav_extensible(
+                codes, _WAVE_FORMAT_ALAW, ch, rate, 8,
+                valid_bits=8, channel_mask=mask,
+            )
+        else:
+            blob = encode_wav_extensible(
+                src.astype("<i2").tobytes(), _WAVE_FORMAT_PCM,
+                ch, rate, 16, channel_mask=mask, n_frames=n,
+                rf64=True,
+            )
+        meta = decode_media(blob, "audio")  # REAL container walk
+        pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
+        w = _parse_wav_chunks(blob)
+        yield (
+            d, names[v], meta["n_frames"], meta["frame_rate"],
+            meta["n_channels"], w["channel_mask"], meta["sample_width"],
+            int(np.abs(pcm).sum()) // len(pcm), int(np.abs(pcm).max()),
+            int((pcm * pcm).sum()) // len(pcm),
+        )
 
     schema = (
         "doc_id long, variant string, n_frames long, frame_rate long, "
         "n_channels long, channel_mask long, sample_width long, "
         "mean_abs long, peak long, energy_mean long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -16997,89 +16493,73 @@ def netpbm_tga_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    names = ("p6", "p5", "p3", "p2_maxval15", "p4", "tga_raw",
+             "tga_rle", "tga_gray_rle", "tga_cmap_raw",
+             "tga_cmap_rle", "tga_cmap16")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        names = ("p6", "p5", "p3", "p2_maxval15", "p4", "tga_raw",
-                 "tga_rle", "tga_gray_rle", "tga_cmap_raw",
-                 "tga_cmap_rle", "tga_cmap16")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "width": [], "height": [],
-                "mean_b": [], "mean_g": [], "mean_r": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 11
-                w, h = 6 + d % 5, 5 + d % 4
-                r = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c = np.arange(w, dtype=np.int64)
-                bgr = np.stack([
-                    (19 * d + 7 * r + 31 * c) % 256,
-                    (11 * d + 5 * r + 23 * c) % 256,
-                    (3 * d + 13 * r + 37 * c) % 256,
-                ], axis=2).astype(np.uint8)
-                gray = ((19 * d + 7 * r + 31 * c) % 256).astype(np.uint8)
-                k = np.arange(16, dtype=np.int64)
-                pal = np.stack([
-                    (7 * d + 11 * k) % 256,
-                    (13 * d + 5 * k) % 256,
-                    (3 * d + 17 * k) % 256,
-                ], axis=1).astype(np.uint8)
-                idx = ((d + 3 * r + 5 * c) % 16).astype(np.uint8)
-                if v == 0:
-                    blob = encode_netpbm(bgr, 6)
-                elif v == 1:
-                    blob = encode_netpbm(gray, 5)
-                elif v == 2:
-                    blob = encode_netpbm(bgr, 3)
-                elif v == 3:
-                    blob = encode_netpbm(
-                        (gray % 16).astype(np.uint8), 2, maxval=15
-                    )
-                elif v == 4:
-                    blob = encode_netpbm(
-                        ((d + r + c) % 2).astype(np.uint8), 4
-                    )
-                elif v == 5:
-                    blob = encode_tga(bgr)
-                elif v == 6:
-                    blob = encode_tga(bgr, rle=True, top_down=True)
-                elif v == 7:
-                    blob = encode_tga(gray, rle=True)
-                elif v == 8:
-                    blob = encode_tga(idx, palette=pal, cmap_first=4)
-                elif v == 9:
-                    blob = encode_tga(
-                        idx, rle=True, top_down=True, palette=pal,
-                        cmap_bits=32,
-                    )
-                else:
-                    blob = encode_tga(idx, palette=pal, cmap_bits=16)
-                meta = decode_media(blob, "image")  # REAL decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                ).astype(np.int64)
-                out["doc_id"].append(d)
-                out["variant"].append(names[v])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["mean_b"].append(int(px[:, :, 0].sum()) // (w * h))
-                out["mean_g"].append(int(px[:, :, 1].sum()) // (w * h))
-                out["mean_r"].append(int(px[:, :, 2].sum()) // (w * h))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 11
+        w, h = 6 + d % 5, 5 + d % 4
+        r = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c = np.arange(w, dtype=np.int64)
+        bgr = np.stack([
+            (19 * d + 7 * r + 31 * c) % 256,
+            (11 * d + 5 * r + 23 * c) % 256,
+            (3 * d + 13 * r + 37 * c) % 256,
+        ], axis=2).astype(np.uint8)
+        gray = ((19 * d + 7 * r + 31 * c) % 256).astype(np.uint8)
+        k = np.arange(16, dtype=np.int64)
+        pal = np.stack([
+            (7 * d + 11 * k) % 256,
+            (13 * d + 5 * k) % 256,
+            (3 * d + 17 * k) % 256,
+        ], axis=1).astype(np.uint8)
+        idx = ((d + 3 * r + 5 * c) % 16).astype(np.uint8)
+        if v == 0:
+            blob = encode_netpbm(bgr, 6)
+        elif v == 1:
+            blob = encode_netpbm(gray, 5)
+        elif v == 2:
+            blob = encode_netpbm(bgr, 3)
+        elif v == 3:
+            blob = encode_netpbm(
+                (gray % 16).astype(np.uint8), 2, maxval=15
+            )
+        elif v == 4:
+            blob = encode_netpbm(
+                ((d + r + c) % 2).astype(np.uint8), 4
+            )
+        elif v == 5:
+            blob = encode_tga(bgr)
+        elif v == 6:
+            blob = encode_tga(bgr, rle=True, top_down=True)
+        elif v == 7:
+            blob = encode_tga(gray, rle=True)
+        elif v == 8:
+            blob = encode_tga(idx, palette=pal, cmap_first=4)
+        elif v == 9:
+            blob = encode_tga(
+                idx, rle=True, top_down=True, palette=pal,
+                cmap_bits=32,
+            )
+        else:
+            blob = encode_tga(idx, palette=pal, cmap_bits=16)
+        meta = decode_media(blob, "image")  # REAL decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        ).astype(np.int64)
+        yield (
+            d, names[v], meta["width"], meta["height"],
+            int(px[:, :, 0].sum()) // (w * h),
+            int(px[:, :, 1].sum()) // (w * h),
+            int(px[:, :, 2].sum()) // (w * h),
+        )
 
     schema = (
         "doc_id long, variant string, width long, height long, "
         "mean_b long, mean_g long, mean_r long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -17125,49 +16605,27 @@ def jpeg_lossless_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame
     hash. Map-only mapInPandas with the standard core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "predictor": [], "precision": [],
-                "width": [], "height": [], "sample_sum": [],
-                "sample_posw": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pred = 1 + d % 7
-                prec = [8, 12, 16][d % 3]
-                h, w = 6 + d % 5, 9 + d % 6
-                i, j = np.mgrid[0:h, 0:w]
-                x = (3 * d + 7 * i * j + 11 * i + 5 * j) % (1 << prec)
-                blob = encode_jpeg_lossless(
-                    x, predictor=pred, precision=prec
-                )
-                m = decode_media(blob, "image")  # REAL SOF3 decode
-                got = m["samples"][:, :, 0].astype(np.int64)
-                out["doc_id"].append(d)
-                out["predictor"].append(pred)
-                out["precision"].append(prec)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["sample_sum"].append(int(got.sum()))
-                out["sample_posw"].append(
-                    int((got * (i + 1) * (j + 1)).sum())
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        pred = 1 + d % 7
+        prec = [8, 12, 16][d % 3]
+        h, w = 6 + d % 5, 9 + d % 6
+        i, j = np.mgrid[0:h, 0:w]
+        x = (3 * d + 7 * i * j + 11 * i + 5 * j) % (1 << prec)
+        blob = encode_jpeg_lossless(
+            x, predictor=pred, precision=prec
+        )
+        m = decode_media(blob, "image")  # REAL SOF3 decode
+        got = m["samples"][:, :, 0].astype(np.int64)
+        yield (
+            d, pred, prec, m["width"], m["height"], int(got.sum()),
+            int((got * (i + 1) * (j + 1)).sum()),
+        )
 
     schema = (
         "doc_id long, predictor long, precision long, width long, "
         "height long, sample_sum long, sample_posw long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -17247,85 +16705,68 @@ def mp4_pcm_variants_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    fmts = ("ulaw", "alaw", "fl32", "fl64", "in24", "in32")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        fmts = ("ulaw", "alaw", "fl32", "fl64", "in24", "in32")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "sample_rate": [],
-                "n_samples": [], "peak": [], "sum_abs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 6
-                n = 192 + (d % 4) * 64
-                rate = (
-                    8000 if v < 2
-                    else (16000, 22050, 44100)[d % 3]
-                )
-                i = np.arange(n, dtype=np.int64)
-                if v < 2:
-                    stream = ((17 * d + 31 * i) % 256).astype(
-                        np.uint8
-                    ).tobytes()
-                else:
-                    s = ((13 * d + 7 * i) % 3201 - 1600).astype(np.int16)
-                    if v == 2:
-                        stream = (
-                            s.astype(np.float32) / np.float32(32768.0)
-                        ).astype(">f4").tobytes()
-                    elif v == 3:
-                        stream = (
-                            s.astype(np.float64) / 32768.0
-                        ).astype(">f8").tobytes()
-                    elif v == 4:
-                        w24 = (s.astype(np.int64) * 256).astype("<i4")
-                        stream = (
-                            w24.view(np.uint8).reshape(-1, 4)[:, 2::-1]
-                        ).tobytes()
-                    else:
-                        stream = (
-                            s.astype(np.int64) * 65536
-                        ).astype(">i4").tobytes()
-                blob = encode_mp4_audio(
-                    stream, codec=fmts[v], sample_rate=rate, n_chunks=3
-                )
-                meta = decode_media(blob, "audio")  # REAL stbl walk
-                if meta["sample_width"] == 2:
-                    vals = np.frombuffer(meta["pcm"], "<i2").astype(
-                        np.int64
-                    )
-                elif meta["sample_width"] == 3:
-                    b3 = np.frombuffer(meta["pcm"], np.uint8).reshape(
-                        -1, 3
-                    ).astype(np.int64)
-                    raw = b3[:, 0] | (b3[:, 1] << 8) | (b3[:, 2] << 16)
-                    raw = np.where(raw >= 1 << 23, raw - (1 << 24), raw)
-                    vals = raw // 256
-                else:
-                    vals = np.frombuffer(meta["pcm"], "<i4").astype(
-                        np.int64
-                    ) // 65536
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["peak"].append(int(np.abs(vals).max()))
-                out["sum_abs"].append(int(np.abs(vals).sum()))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 6
+        n = 192 + (d % 4) * 64
+        rate = (
+            8000 if v < 2
+            else (16000, 22050, 44100)[d % 3]
+        )
+        i = np.arange(n, dtype=np.int64)
+        if v < 2:
+            stream = ((17 * d + 31 * i) % 256).astype(
+                np.uint8
+            ).tobytes()
+        else:
+            s = ((13 * d + 7 * i) % 3201 - 1600).astype(np.int16)
+            if v == 2:
+                stream = (
+                    s.astype(np.float32) / np.float32(32768.0)
+                ).astype(">f4").tobytes()
+            elif v == 3:
+                stream = (
+                    s.astype(np.float64) / 32768.0
+                ).astype(">f8").tobytes()
+            elif v == 4:
+                w24 = (s.astype(np.int64) * 256).astype("<i4")
+                stream = (
+                    w24.view(np.uint8).reshape(-1, 4)[:, 2::-1]
+                ).tobytes()
+            else:
+                stream = (
+                    s.astype(np.int64) * 65536
+                ).astype(">i4").tobytes()
+        blob = encode_mp4_audio(
+            stream, codec=fmts[v], sample_rate=rate, n_chunks=3
+        )
+        meta = decode_media(blob, "audio")  # REAL stbl walk
+        if meta["sample_width"] == 2:
+            vals = np.frombuffer(meta["pcm"], "<i2").astype(
+                np.int64
+            )
+        elif meta["sample_width"] == 3:
+            b3 = np.frombuffer(meta["pcm"], np.uint8).reshape(
+                -1, 3
+            ).astype(np.int64)
+            raw = b3[:, 0] | (b3[:, 1] << 8) | (b3[:, 2] << 16)
+            raw = np.where(raw >= 1 << 23, raw - (1 << 24), raw)
+            vals = raw // 256
+        else:
+            vals = np.frombuffer(meta["pcm"], "<i4").astype(
+                np.int64
+            ) // 65536
+        yield (
+            d, meta["codec"], meta["frame_rate"], meta["n_frames"],
+            int(np.abs(vals).max()), int(np.abs(vals).sum()),
+        )
 
     schema = (
         "doc_id long, codec string, sample_rate long, n_samples long, "
         "peak long, sum_abs long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -17377,88 +16818,67 @@ def mp4_audio_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def granule(d: int, gi: int) -> dict:
+        iv = [0] * 576
+        for i in range(0, 480, 7):
+            iv[i] = 1 if (i // 7 + d + gi) % 2 == 0 else -1
+        return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
+                "scalefac": [0] * 21, "big_values": 240,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def mp3_frame_sizes(mp3: bytes) -> list[int]:
+        sizes = []
+        pos = 0
+        while pos < len(mp3):
+            h2 = mp3[pos + 2]
+            kbps = _MP3_KBPS[3][((h2 >> 4) & 0xF) - 1]
+            fl = _mp3_frame_len(3, kbps, 44100, (h2 >> 1) & 1)
+            sizes.append(fl)
+            pos += fl
+        return sizes
 
-        def granule(d: int, gi: int) -> dict:
-            iv = [0] * 576
-            for i in range(0, 480, 7):
-                iv[i] = 1 if (i // 7 + d + gi) % 2 == 0 else -1
-            return {"is": iv, "global_gain": 210 + 4 * ((d + gi) % 6),
-                    "scalefac": [0] * 21, "big_values": 240,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
-
-        def mp3_frame_sizes(mp3: bytes) -> list[int]:
-            sizes = []
-            pos = 0
-            while pos < len(mp3):
-                h2 = mp3[pos + 2]
-                kbps = _MP3_KBPS[3][((h2 >> 4) & 0xF) - 1]
-                fl = _mp3_frame_len(3, kbps, 44100, (h2 >> 1) & 1)
-                sizes.append(fl)
-                pos += fl
-            return sizes
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "codec": [],
-                "sample_rate": [], "n_samples": [], "peak": [],
-                "sum_abs": [], "parity_raw": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                if v % 2 == 0:
-                    variant = "mp3_2chunk" if v == 0 else "mp3_1chunk"
-                    mp3 = encode_mp3_l3(
-                        [granule(d, 0), granule(d, 1),
-                         granule(d, 2), granule(d, 3)]
-                    )
-                    raw = decode_media(mp3, "audio")
-                    blob = encode_mp4_audio(
-                        mp3, codec="mp3", sample_rate=44100,
-                        sample_sizes=mp3_frame_sizes(mp3),
-                        n_chunks=2 if v == 0 else 1,
-                    )
-                    meta = decode_media(blob, "audio")
-                    parity = meta["pcm"] == raw["pcm"]
-                    peak = sum_abs = 0
-                else:
-                    variant = "pcm_be" if v == 1 else "pcm_le"
-                    codec = "twos" if v == 1 else "sowt"
-                    n = 256 + (d % 5) * 64
-                    i = np.arange(n, dtype=np.int64)
-                    y = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
-                    stream = y.astype(">i2" if v == 1 else "<i2").tobytes()
-                    blob = encode_mp4_audio(
-                        stream, codec=codec, sample_rate=16000, n_chunks=3
-                    )
-                    meta = decode_media(blob, "audio")
-                    got = np.frombuffer(meta["pcm"], "<i2")
-                    parity = np.array_equal(got, y)
-                    peak = int(np.abs(got.astype(np.int64)).max())
-                    sum_abs = int(np.abs(got.astype(np.int64)).sum())
-                out["doc_id"].append(d)
-                out["variant"].append(variant)
-                out["codec"].append(meta["codec"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["peak"].append(peak)
-                out["sum_abs"].append(sum_abs)
-                out["parity_raw"].append(bool(parity))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 4
+        if v % 2 == 0:
+            variant = "mp3_2chunk" if v == 0 else "mp3_1chunk"
+            mp3 = encode_mp3_l3(
+                [granule(d, 0), granule(d, 1),
+                 granule(d, 2), granule(d, 3)]
+            )
+            raw = decode_media(mp3, "audio")
+            blob = encode_mp4_audio(
+                mp3, codec="mp3", sample_rate=44100,
+                sample_sizes=mp3_frame_sizes(mp3),
+                n_chunks=2 if v == 0 else 1,
+            )
+            meta = decode_media(blob, "audio")
+            parity = meta["pcm"] == raw["pcm"]
+            peak = sum_abs = 0
+        else:
+            variant = "pcm_be" if v == 1 else "pcm_le"
+            codec = "twos" if v == 1 else "sowt"
+            n = 256 + (d % 5) * 64
+            i = np.arange(n, dtype=np.int64)
+            y = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
+            stream = y.astype(">i2" if v == 1 else "<i2").tobytes()
+            blob = encode_mp4_audio(
+                stream, codec=codec, sample_rate=16000, n_chunks=3
+            )
+            meta = decode_media(blob, "audio")
+            got = np.frombuffer(meta["pcm"], "<i2")
+            parity = np.array_equal(got, y)
+            peak = int(np.abs(got.astype(np.int64)).max())
+            sum_abs = int(np.abs(got.astype(np.int64)).sum())
+        yield (
+            d, variant, meta["codec"], meta["frame_rate"], meta["n_frames"],
+            peak, sum_abs, bool(parity),
+        )
 
     schema = (
         "doc_id long, variant string, codec string, sample_rate long, "
         "n_samples long, peak long, sum_abs long, parity_raw boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -17494,74 +16914,54 @@ def mp3_container_routing_features(spark: SparkSession, sf_dir: str) -> DataFram
     geometry (sample counts, the AVI's coexisting video frame count)
     hashes against closed forms. Map-only mapInPandas with the standard
     explicit core fan-out."""
+    import hashlib
+
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def granule(d: int, gi: int, gg: int) -> dict:
+        seed = hashlib.md5(f"mc:{d}:{gi}".encode()).digest()
+        is_vals = [0] * 576
+        for i in range(480):
+            b = hashlib.md5(seed + i.to_bytes(2, "big")).digest()[0]
+            if b < 64:
+                is_vals[i] = 1 if b % 2 == 0 else -1
+        return {"is": is_vals, "global_gain": gg,
+                "scalefac": [0] * 21, "big_values": 240,
+                "scalefac_scale": 1, "scalefac_compress": 0}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
-        import pandas as pd
-
-        def granule(d: int, gi: int, gg: int) -> dict:
-            seed = hashlib.md5(f"mc:{d}:{gi}".encode()).digest()
-            is_vals = [0] * 576
-            for i in range(480):
-                b = hashlib.md5(seed + i.to_bytes(2, "big")).digest()[0]
-                if b < 64:
-                    is_vals[i] = 1 if b % 2 == 0 else -1
-            return {"is": is_vals, "global_gain": gg,
-                    "scalefac": [0] * 21, "big_values": 240,
-                    "scalefac_scale": 1, "scalefac_compress": 0}
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "container": [], "codec": [],
-                "sample_rate": [], "n_samples": [], "n_video_frames": [],
-                "parity_raw": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                gg = 170 + 4 * (d % 3)
-                mp3 = encode_mp3_l3([granule(d, 0, gg), granule(d, 1, gg)])
-                raw = decode_media(mp3, "audio")  # bare-stream reference
-                if d % 2 == 0:
-                    fact = 1200 + (d % 5) * 100
-                    meta = decode_media(
-                        encode_wav_mp3(mp3, 44100, n_frames=fact), "audio"
-                    )
-                    ref = raw["pcm"][: fact * 2]
-                    container, nvid = "wav", 0
-                else:
-                    nvid = 2 + d % 3
-                    frames = [
-                        np.full((3, 4, 3), (d + 17 * f) % 256, np.uint8)
-                        for f in range(nvid)
-                    ]
-                    meta = extract_avi_audio(
-                        encode_avi(frames, audio=mp3, audio_rate=44100,
-                                   audio_format="mp3")
-                    )
-                    ref = raw["pcm"]
-                    container = "avi"
-                out["doc_id"].append(d)
-                out["container"].append(container)
-                out["codec"].append(meta["codec"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["n_video_frames"].append(nvid)
-                out["parity_raw"].append(bool(meta["pcm"] == ref))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        gg = 170 + 4 * (d % 3)
+        mp3 = encode_mp3_l3([granule(d, 0, gg), granule(d, 1, gg)])
+        raw = decode_media(mp3, "audio")  # bare-stream reference
+        if d % 2 == 0:
+            fact = 1200 + (d % 5) * 100
+            meta = decode_media(
+                encode_wav_mp3(mp3, 44100, n_frames=fact), "audio"
+            )
+            ref = raw["pcm"][: fact * 2]
+            container, nvid = "wav", 0
+        else:
+            nvid = 2 + d % 3
+            frames = [
+                np.full((3, 4, 3), (d + 17 * f) % 256, np.uint8)
+                for f in range(nvid)
+            ]
+            meta = extract_avi_audio(
+                encode_avi(frames, audio=mp3, audio_rate=44100,
+                           audio_format="mp3")
+            )
+            ref = raw["pcm"]
+            container = "avi"
+        yield (
+            d, container, meta["codec"], meta["frame_rate"], meta["n_frames"],
+            nvid, bool(meta["pcm"] == ref),
+        )
 
     schema = (
         "doc_id long, container string, codec string, sample_rate long, "
         "n_samples long, n_video_frames long, parity_raw boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -18413,66 +17813,45 @@ def jpeg_precision12_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "n_pixels": [],
-                "grayscale": [], "err_ok": [], "consistent_with_8bit": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 10 + d % 7, 9 + d % 6
-                gray = d % 2 == 1
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                card = ((97 * d + 173 * r_idx + 311 * c_idx) % 4096
-                        ).astype(np.float64)
-                if gray:
-                    jp = encode_jpeg(gray_rows=card, precision=12)
-                else:
-                    jp = encode_jpeg(
-                        rows_rgb=np.stack([card] * 3, axis=2),
-                        precision=12,
-                    )
-                meta = decode_media(jp, "image")  # routed SOF1 decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                )
-                err = np.abs(
-                    px[:, :, 0].astype(np.float64) - card / 16.0
-                ).max()
-                v8 = (97 * d + 173 * r_idx + 311 * c_idx) % 256
-                pa = np.frombuffer(decode_media(encode_jpeg(
-                    gray_rows=v8.astype(np.float64)), "image",
-                )["pixels"], np.uint8).astype(np.int64)
-                pb = np.frombuffer(decode_media(encode_jpeg(
-                    gray_rows=v8.astype(np.float64) * 16 + 8,
-                    precision=12), "image",
-                )["pixels"], np.uint8).astype(np.int64)
-                out["doc_id"].append(d)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["n_pixels"].append(meta["n_pixels"])
-                out["grayscale"].append(gray)
-                out["err_ok"].append(bool(err <= 2.0))
-                out["consistent_with_8bit"].append(
-                    bool(np.abs(pa - pb).max() <= 4)
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w, h = 10 + d % 7, 9 + d % 6
+        gray = d % 2 == 1
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        card = ((97 * d + 173 * r_idx + 311 * c_idx) % 4096
+                ).astype(np.float64)
+        if gray:
+            jp = encode_jpeg(gray_rows=card, precision=12)
+        else:
+            jp = encode_jpeg(
+                rows_rgb=np.stack([card] * 3, axis=2),
+                precision=12,
+            )
+        meta = decode_media(jp, "image")  # routed SOF1 decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        err = np.abs(
+            px[:, :, 0].astype(np.float64) - card / 16.0
+        ).max()
+        v8 = (97 * d + 173 * r_idx + 311 * c_idx) % 256
+        pa = np.frombuffer(decode_media(encode_jpeg(
+            gray_rows=v8.astype(np.float64)), "image",
+        )["pixels"], np.uint8).astype(np.int64)
+        pb = np.frombuffer(decode_media(encode_jpeg(
+            gray_rows=v8.astype(np.float64) * 16 + 8,
+            precision=12), "image",
+        )["pixels"], np.uint8).astype(np.int64)
+        yield (
+            d, meta["width"], meta["height"], meta["n_pixels"], gray,
+            bool(err <= 2.0), bool(np.abs(pa - pb).max() <= 4),
+        )
 
     schema = (
         "doc_id long, width long, height long, n_pixels long, "
         "grayscale boolean, err_ok boolean, consistent_with_8bit boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -18521,127 +17900,101 @@ def jpeg_in_tiff_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "form": [],
-                "tables_hoisted": [], "n_strips": [],
-                "strips_match_reference": [], "err_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 9 + d % 8, 8 + d % 5
-                rps = 3 + d % 3
-                # doc_id % 7 == 4: OLD-style OJPEG (round 17, closing
-                # the named compression-6 seam): tags 513/514 point at
-                # one whole-image interchange stream, no strip tags at
-                # all — hoisting/striping do not apply.
-                # doc_id % 7 == 2: HEADERLESS OJPEG (round 17, closing
-                # the last OJPEG seam): raw markerless entropy strip +
-                # tag-51x tables the decoder must reassemble; odd docs
-                # 4:2:0 so tag 530 drives a real subsampled rebuild
-                oj = d % 7 == 4
-                hl = d % 7 == 2
-                hoist = d % 2 == 1 and not oj and not hl
-                # every fifth doc additionally exercises NON-DIVISOR
-                # sampling (round 17): a monotone luma ramp card under
-                # Y factor 2 vs chroma 3 — the decoder's nearest-floor
-                # fractional upsampler reconstructs a gentle ramp
-                # within a small bound, while a mapping slip compresses
-                # the ramp and blows past it; divisor docs keep the
-                # neutral-chroma card and the tight quant-1 bound
-                # (tag 530 cannot express a non-divisor factor, so the
-                # headerless docs stay divisor-sampled)
-                nondiv = d % 5 == 3 and not oj and not hl
-                if nondiv:
-                    # monotone, wrap-free ramp: a fractional-upsample
-                    # index is off by at most ~1 source pixel, so the
-                    # reconstruction error stays within ~2 ramp steps
-                    ramp = (3 * d) % 120 + 8 * np.arange(w, dtype=np.int64)
-                    g = np.tile(ramp, (h, 1)).astype(np.uint8)
-                else:
-                    r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                    c_idx = np.arange(w, dtype=np.int64)
-                    g = ((7 * d + 11 * r_idx + 5 * c_idx) % 256).astype(
-                        np.uint8
-                    )
-                plane = np.dstack([g, g, g])
-                if nondiv:
-                    sub = ((2, 1), (3, 1), (3, 1))
-                elif hl and d % 2 == 1:
-                    sub = "420"
-                else:
-                    sub = "444"
-                if oj:
-                    blob = encode_tiff(
-                        plane, ojpeg=True, big_endian=(d % 3 == 2),
-                        jpeg_subsampling=sub,
-                    )
-                elif hl:
-                    blob = encode_tiff(
-                        plane, ojpeg_headerless=True,
-                        big_endian=(d % 3 == 2), jpeg_subsampling=sub,
-                    )
-                else:
-                    blob = encode_tiff(
-                        plane, rows_per_strip=rps, jpeg=True,
-                        jpeg_tables=hoist, big_endian=(d % 3 == 2),
-                        jpeg_subsampling=sub,
-                    )
-                meta = decode_media(blob, "image")  # REAL TIFF decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
+    def per_doc(d: int):
+        w, h = 9 + d % 8, 8 + d % 5
+        rps = 3 + d % 3
+        # doc_id % 7 == 4: OLD-style OJPEG (round 17, closing
+        # the named compression-6 seam): tags 513/514 point at
+        # one whole-image interchange stream, no strip tags at
+        # all — hoisting/striping do not apply.
+        # doc_id % 7 == 2: HEADERLESS OJPEG (round 17, closing
+        # the last OJPEG seam): raw markerless entropy strip +
+        # tag-51x tables the decoder must reassemble; odd docs
+        # 4:2:0 so tag 530 drives a real subsampled rebuild
+        oj = d % 7 == 4
+        hl = d % 7 == 2
+        hoist = d % 2 == 1 and not oj and not hl
+        # every fifth doc additionally exercises NON-DIVISOR
+        # sampling (round 17): a monotone luma ramp card under
+        # Y factor 2 vs chroma 3 — the decoder's nearest-floor
+        # fractional upsampler reconstructs a gentle ramp
+        # within a small bound, while a mapping slip compresses
+        # the ramp and blows past it; divisor docs keep the
+        # neutral-chroma card and the tight quant-1 bound
+        # (tag 530 cannot express a non-divisor factor, so the
+        # headerless docs stay divisor-sampled)
+        nondiv = d % 5 == 3 and not oj and not hl
+        if nondiv:
+            # monotone, wrap-free ramp: a fractional-upsample
+            # index is off by at most ~1 source pixel, so the
+            # reconstruction error stays within ~2 ramp steps
+            ramp = (3 * d) % 120 + 8 * np.arange(w, dtype=np.int64)
+            g = np.tile(ramp, (h, 1)).astype(np.uint8)
+        else:
+            r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+            c_idx = np.arange(w, dtype=np.int64)
+            g = ((7 * d + 11 * r_idx + 5 * c_idx) % 256).astype(
+                np.uint8
+            )
+        plane = np.dstack([g, g, g])
+        if nondiv:
+            sub = ((2, 1), (3, 1), (3, 1))
+        elif hl and d % 2 == 1:
+            sub = "420"
+        else:
+            sub = "444"
+        if oj:
+            blob = encode_tiff(
+                plane, ojpeg=True, big_endian=(d % 3 == 2),
+                jpeg_subsampling=sub,
+            )
+        elif hl:
+            blob = encode_tiff(
+                plane, ojpeg_headerless=True,
+                big_endian=(d % 3 == 2), jpeg_subsampling=sub,
+            )
+        else:
+            blob = encode_tiff(
+                plane, rows_per_strip=rps, jpeg=True,
+                jpeg_tables=hoist, big_endian=(d % 3 == 2),
+                jpeg_subsampling=sub,
+            )
+        meta = decode_media(blob, "image")  # REAL TIFF decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        refs = []
+        whole = oj or hl
+        for s0 in range(0, h, h if whole else rps):
+            jp = encode_jpeg(
+                rows_rgb=plane[s0: s0 + (h if whole else rps)][
+                    :, :, ::-1
+                ],
+                subsampling=sub,
+            )
+            mm = _decode_jpeg(jp)
+            refs.append(
+                np.frombuffer(mm["pixels"], np.uint8).reshape(
+                    -1, w, 3
                 )
-                refs = []
-                whole = oj or hl
-                for s0 in range(0, h, h if whole else rps):
-                    jp = encode_jpeg(
-                        rows_rgb=plane[s0: s0 + (h if whole else rps)][
-                            :, :, ::-1
-                        ],
-                        subsampling=sub,
-                    )
-                    mm = _decode_jpeg(jp)
-                    refs.append(
-                        np.frombuffer(mm["pixels"], np.uint8).reshape(
-                            -1, w, 3
-                        )
-                    )
-                ref = np.concatenate(refs)
-                err = np.abs(
-                    px.astype(np.int64) - plane.astype(np.int64)
-                ).max()
-                out["doc_id"].append(d)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["form"].append(
-                    "interchange" if oj
-                    else ("headerless" if hl else "jpeg7")
-                )
-                out["tables_hoisted"].append(hoist)
-                out["n_strips"].append(
-                    1 if whole else (h + rps - 1) // rps
-                )
-                out["strips_match_reference"].append(
-                    bool(np.array_equal(px, ref))
-                )
-                out["err_ok"].append(bool(err <= (25 if nondiv else 4)))
-            yield pd.DataFrame(out)
+            )
+        ref = np.concatenate(refs)
+        err = np.abs(
+            px.astype(np.int64) - plane.astype(np.int64)
+        ).max()
+        yield (
+            d, meta["width"], meta["height"],
+            "interchange" if oj else ("headerless" if hl else "jpeg7"), hoist,
+            1 if whole else (h + rps - 1) // rps,
+            bool(np.array_equal(px, ref)), bool(err <= (25 if nondiv else 4)),
+        )
 
     schema = (
         "doc_id long, width long, height long, form string, "
         "tables_hoisted boolean, "
         "n_strips long, strips_match_reference boolean, err_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -18676,60 +18029,41 @@ def jpeg_hierarchical_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "gray": [],
-                "levels": [], "n_differential": [], "err_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 9 + d % 8, 8 + d % 5
-                gray = d % 2 == 0
-                levels = 2 + d % 3
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                g = ((7 * d + 11 * r_idx + 5 * c_idx) % 256).astype(
-                    np.uint8
-                )
-                if gray:
-                    blob = encode_jpeg_hierarchical(
-                        gray_rows=g, levels=levels
-                    )
-                else:
-                    blob = encode_jpeg_hierarchical(
-                        rows_rgb=np.dstack([g, g, g]), levels=levels
-                    )
-                meta = decode_media(blob, "image")  # REAL decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                )
-                ref = np.dstack([g, g, g])
-                err = np.abs(
-                    px.astype(np.int64) - ref.astype(np.int64)
-                ).max()
-                out["doc_id"].append(d)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["gray"].append(gray)
-                out["levels"].append(levels)
-                out["n_differential"].append(blob.count(b"\xff\xc5"))
-                out["err_ok"].append(bool(err <= 2))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w, h = 9 + d % 8, 8 + d % 5
+        gray = d % 2 == 0
+        levels = 2 + d % 3
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        g = ((7 * d + 11 * r_idx + 5 * c_idx) % 256).astype(
+            np.uint8
+        )
+        if gray:
+            blob = encode_jpeg_hierarchical(
+                gray_rows=g, levels=levels
+            )
+        else:
+            blob = encode_jpeg_hierarchical(
+                rows_rgb=np.dstack([g, g, g]), levels=levels
+            )
+        meta = decode_media(blob, "image")  # REAL decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        ref = np.dstack([g, g, g])
+        err = np.abs(
+            px.astype(np.int64) - ref.astype(np.int64)
+        ).max()
+        yield (
+            d, meta["width"], meta["height"], gray, levels,
+            blob.count(b"\xff\xc5"), bool(err <= 2),
+        )
 
     schema = (
         "doc_id long, width long, height long, gray boolean, "
         "levels long, n_differential long, err_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -18773,71 +18107,46 @@ def tiff_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     widths). The oracle recomputes the per-channel
     means from the closed form; a byte misread anywhere in either half
     breaks the hash. Map-only mapInPandas."""
-    # CPU-dense per-row kernel over a tiny id list: fan the ids across
-    # every core explicitly — the one-file parquet scan otherwise yields
-    # a single partition and the whole decode runs on one thread
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "big_endian": [], "compression": [],
-                "planar": [], "width": [], "height": [], "mean_b": [],
-                "mean_g": [], "mean_r": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 6 + d % 3, 5 + d % 4
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                plane = np.dstack([
-                    (19 * d + 7 * r_idx + 31 * c_idx) % 256,
-                    (11 * d + 5 * r_idx + 23 * c_idx) % 256,
-                    (3 * d + 13 * r_idx + 37 * c_idx) % 256,
-                ]).astype(np.uint8)
-                blob = encode_tiff(
-                    plane,
-                    big_endian=(d % 2 == 1),
-                    packbits=(d % 3 == 0),
-                    lzw=(d % 3 == 1),
-                    # half the LZW docs difference horizontally first —
-                    # the decoder must undo it or the means break
-                    predictor2=(d % 6 == 1),
-                    rows_per_strip=1 + d % 3,
-                    planar2=(d % 5 == 2),
-                )
-                meta = decode_media(blob, "image")  # REAL TIFF decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                )
-                n = meta["n_pixels"]
-                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                out["doc_id"].append(d)
-                out["big_endian"].append(d % 2 == 1)
-                out["compression"].append(
-                    ("packbits", "lzw", "none")[d % 3]
-                )
-                out["planar"].append(d % 5 == 2)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["mean_b"].append(int(sums[0]) // n)
-                out["mean_g"].append(int(sums[1]) // n)
-                out["mean_r"].append(int(sums[2]) // n)
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w, h = 6 + d % 3, 5 + d % 4
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        plane = np.dstack([
+            (19 * d + 7 * r_idx + 31 * c_idx) % 256,
+            (11 * d + 5 * r_idx + 23 * c_idx) % 256,
+            (3 * d + 13 * r_idx + 37 * c_idx) % 256,
+        ]).astype(np.uint8)
+        blob = encode_tiff(
+            plane,
+            big_endian=(d % 2 == 1),
+            packbits=(d % 3 == 0),
+            lzw=(d % 3 == 1),
+            # half the LZW docs difference horizontally first —
+            # the decoder must undo it or the means break
+            predictor2=(d % 6 == 1),
+            rows_per_strip=1 + d % 3,
+            planar2=(d % 5 == 2),
+        )
+        meta = decode_media(blob, "image")  # REAL TIFF decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        n = meta["n_pixels"]
+        sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        yield (
+            d, d % 2 == 1, ("packbits", "lzw", "none")[d % 3], d % 5 == 2,
+            meta["width"], meta["height"], int(sums[0]) // n,
+            int(sums[1]) // n, int(sums[2]) // n,
+        )
 
     schema = (
         "doc_id long, big_endian boolean, compression string, "
         "planar boolean, width long, height long, mean_b long, "
         "mean_g long, mean_r long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 # TIFF 6.0 §13 LZW: MSB-first code packing, 9->12 bit widths with the
@@ -19571,59 +18880,34 @@ def tiff_g4_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "big_endian": [],
-                "photometric": [], "compression": [], "t4_two_d": [],
-                "t4_uncompressed": [], "black_count": [], "pos_weight": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w = 18 + d % 13
-                h = 10 + d % 7
-                photo = (d // 2) % 2
-                sel = d % 7
-                comp = {0: 2, 4: 3, 5: 3, 6: 3}.get(sel, 4)
-                two_d = sel in (4, 6)
-                uncomp = sel == 4
-                i, j = np.mgrid[0:h, 0:w]
-                bm = (((7 * j + 3 * i * i + d) % 11) < 4).astype(np.uint8)
-                blob = encode_tiff_g4(
-                    bm, big_endian=(d % 2 == 1), photometric=photo,
-                    compression=comp, two_d=two_d, uncompressed=uncomp,
-                )
-                m = decode_media(blob, "image")  # REAL G4 decode
-                px = np.frombuffer(m["pixels"], np.uint8).reshape(h, w, 3)
-                black = (px[:, :, 0] == 0)
-                out["doc_id"].append(d)
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["big_endian"].append(d % 2 == 1)
-                out["photometric"].append(photo)
-                out["compression"].append(comp)
-                out["t4_two_d"].append(two_d)
-                out["t4_uncompressed"].append(uncomp)
-                out["black_count"].append(int(black.sum()))
-                out["pos_weight"].append(
-                    int((((i + 1) * (j + 1)) * black).sum())
-                )
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        w = 18 + d % 13
+        h = 10 + d % 7
+        photo = (d // 2) % 2
+        sel = d % 7
+        comp = {0: 2, 4: 3, 5: 3, 6: 3}.get(sel, 4)
+        two_d = sel in (4, 6)
+        uncomp = sel == 4
+        i, j = np.mgrid[0:h, 0:w]
+        bm = (((7 * j + 3 * i * i + d) % 11) < 4).astype(np.uint8)
+        blob = encode_tiff_g4(
+            bm, big_endian=(d % 2 == 1), photometric=photo,
+            compression=comp, two_d=two_d, uncompressed=uncomp,
+        )
+        m = decode_media(blob, "image")  # REAL G4 decode
+        px = np.frombuffer(m["pixels"], np.uint8).reshape(h, w, 3)
+        black = (px[:, :, 0] == 0)
+        yield (
+            d, m["width"], m["height"], d % 2 == 1, photo, comp, two_d, uncomp,
+            int(black.sum()), int((((i + 1) * (j + 1)) * black).sum()),
+        )
 
     schema = (
         "doc_id long, width long, height long, big_endian boolean, "
         "photometric long, compression long, t4_two_d boolean, "
         "t4_uncompressed boolean, black_count long, pos_weight long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 _AU_MAGIC = b".snd"
@@ -21303,59 +20587,41 @@ def au_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out as the other decode gates."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "sample_rate": [],
-                "n_samples": [], "peak": [], "sum_abs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 256 + (d % 4) * 64
-                sr = 8000 + (d % 3) * 4000
-                i = np.arange(n, dtype=np.int64)
-                if d % 4 == 0:
-                    codes = ((13 * d + 7 * i) % 256).astype(np.uint8)
-                    pcm_src = _g711_expand(codes, "ulaw").astype(np.int16)
-                    blob = (
-                        b".snd"
-                        + (24).to_bytes(4, "big")
-                        + len(codes).to_bytes(4, "big")
-                        + (1).to_bytes(4, "big")
-                        + sr.to_bytes(4, "big")
-                        + (1).to_bytes(4, "big")
-                        + codes.tobytes()
-                    )
-                else:
-                    pcm_src = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
-                    blob = encode_au(
-                        pcm_src,
-                        sample_rate=sr,
-                        float_width={1: 0, 2: 4, 3: 8}[d % 4],
-                    )
-                meta = decode_media(blob, "audio")  # REAL AU decode
-                pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["sum_abs"].append(int(np.abs(pcm).sum()))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 256 + (d % 4) * 64
+        sr = 8000 + (d % 3) * 4000
+        i = np.arange(n, dtype=np.int64)
+        if d % 4 == 0:
+            codes = ((13 * d + 7 * i) % 256).astype(np.uint8)
+            pcm_src = _g711_expand(codes, "ulaw").astype(np.int16)
+            blob = (
+                b".snd"
+                + (24).to_bytes(4, "big")
+                + len(codes).to_bytes(4, "big")
+                + (1).to_bytes(4, "big")
+                + sr.to_bytes(4, "big")
+                + (1).to_bytes(4, "big")
+                + codes.tobytes()
+            )
+        else:
+            pcm_src = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
+            blob = encode_au(
+                pcm_src,
+                sample_rate=sr,
+                float_width={1: 0, 2: 4, 3: 8}[d % 4],
+            )
+        meta = decode_media(blob, "audio")  # REAL AU decode
+        pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
+        yield (
+            d, meta["codec"], meta["frame_rate"], meta["n_frames"],
+            int(np.abs(pcm).max()), int(np.abs(pcm).sum()),
+        )
 
     schema = (
         "doc_id long, codec string, sample_rate long, n_samples long, "
         "peak long, sum_abs long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -21401,107 +20667,90 @@ def au_adpcm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    laws = ("g721", "g723_24", "g723_40", "g722")
+    floors = {"g721": 25.0, "g723_24": 20.0, "g723_40": 30.0,
+              "g722": 25.0}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        laws = ("g721", "g723_24", "g723_40", "g722")
-        floors = {"g721": 25.0, "g723_24": 20.0, "g723_40": 30.0,
-                  "g722": 25.0}
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "n_samples": [], "au_bytes": [],
-                "tracking_exact": [], "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                law = laws[d % 4]
-                n = 384 + (d % 4) * 64
-                amp = 4000.0 + 125.0 * (d % 8)
-                period = 24 + d % 16
-                i = np.arange(n, dtype=np.float64)
-                src = np.round(
-                    amp * np.sin(2.0 * np.pi * i / period)
-                ).astype(np.int16)
-                # one encoder pass feeds BOTH the container bytes and the
-                # tracking reference (encode_au would re-run the state
-                # machine; at 5k docs that third pass is real money)
-                if law == "g722":
-                    # the g722 docs (d%4==3) cycle the THREE modes by
-                    # d%16: 7 -> mode 1 (round 17: the 6-bit QM6
-                    # lattice end-to-end, SNR floor 40 dB), 15 ->
-                    # mode 2 (round-17 continuation: the 5-bit QM5
-                    # lattice, floor 35 dB — above the 4-bit core's
-                    # measured 32.3 dB worst on these cards, below
-                    # mode 2's 38.9), 3/11 -> mode 3 (the always-safe
-                    # core, floor 25). Encode emits real enhancement
-                    # bits, decode honors them. Mode is a session
-                    # parameter, so the mode-1/2 legs decode via
-                    # g722_decode(mode=) on the AU payload; container
-                    # columns still come from the decode_media walk.
-                    g722_mode = {7: 1, 15: 2}.get(d % 16, 3)
-                    data, recon = g722_encode(
-                        src, return_reconstruction=True, mode=g722_mode,
-                    )
-                    enc_id, rate, delay = 24, 16000, 22
-                else:
-                    g722_mode = 3
-                    codes, recon = g72x_encode(
-                        src, law, return_reconstruction=True
-                    )
-                    bits = {"g721": 4, "g723_24": 3, "g723_40": 5}[law]
-                    data = _g72x_pack(codes, bits)
-                    enc_id = {"g721": 23, "g723_24": 25, "g723_40": 26}[law]
-                    rate, delay = 8000, 0
-                blob = (
-                    b".snd" + (24).to_bytes(4, "big")
-                    + len(data).to_bytes(4, "big")
-                    + enc_id.to_bytes(4, "big")
-                    + rate.to_bytes(4, "big") + (1).to_bytes(4, "big")
-                    + data
-                )
-                meta = decode_media(blob, "audio")  # REAL AU ADPCM decode
-                if law == "g722" and g722_mode != 3:
-                    pcm = np.asarray(
-                        g722_decode(data, mode=g722_mode), dtype="<i2"
-                    )
-                else:
-                    pcm = np.frombuffer(meta["pcm"], "<i2")
-                # SNR against the source, past warm-up; G.722's QMF
-                # cascade delays by 22 samples (deterministic; re-measured
-                # after the r16 odd-tap fix), so the comparison shifts by
-                # that group delay
-                a = pcm[256 + delay:].astype(np.float64)
-                b = src[256: len(src) - delay if delay else None].astype(
-                    np.float64
-                )
-                m = min(len(a), len(b))
-                err = a[:m] - b[:m]
-                sig = (b[:m] ** 2).mean()
-                snr = 10.0 * np.log10(sig / max((err ** 2).mean(), 1e-12))
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["n_samples"].append(meta["n_frames"])
-                out["au_bytes"].append(len(blob))
-                out["tracking_exact"].append(bool(np.array_equal(pcm, recon)))
-                floor = floors[law]
-                if law == "g722" and g722_mode == 1:
-                    floor = 40.0  # above the 4-bit core's band
-                elif law == "g722" and g722_mode == 2:
-                    floor = 35.0  # between the core and mode-1 bands
-                out["snr_ok"].append(bool(snr >= floor))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        law = laws[d % 4]
+        n = 384 + (d % 4) * 64
+        amp = 4000.0 + 125.0 * (d % 8)
+        period = 24 + d % 16
+        i = np.arange(n, dtype=np.float64)
+        src = np.round(
+            amp * np.sin(2.0 * np.pi * i / period)
+        ).astype(np.int16)
+        # one encoder pass feeds BOTH the container bytes and the
+        # tracking reference (encode_au would re-run the state
+        # machine; at 5k docs that third pass is real money)
+        if law == "g722":
+            # the g722 docs (d%4==3) cycle the THREE modes by
+            # d%16: 7 -> mode 1 (round 17: the 6-bit QM6
+            # lattice end-to-end, SNR floor 40 dB), 15 ->
+            # mode 2 (round-17 continuation: the 5-bit QM5
+            # lattice, floor 35 dB — above the 4-bit core's
+            # measured 32.3 dB worst on these cards, below
+            # mode 2's 38.9), 3/11 -> mode 3 (the always-safe
+            # core, floor 25). Encode emits real enhancement
+            # bits, decode honors them. Mode is a session
+            # parameter, so the mode-1/2 legs decode via
+            # g722_decode(mode=) on the AU payload; container
+            # columns still come from the decode_media walk.
+            g722_mode = {7: 1, 15: 2}.get(d % 16, 3)
+            data, recon = g722_encode(
+                src, return_reconstruction=True, mode=g722_mode,
+            )
+            enc_id, rate, delay = 24, 16000, 22
+        else:
+            g722_mode = 3
+            codes, recon = g72x_encode(
+                src, law, return_reconstruction=True
+            )
+            bits = {"g721": 4, "g723_24": 3, "g723_40": 5}[law]
+            data = _g72x_pack(codes, bits)
+            enc_id = {"g721": 23, "g723_24": 25, "g723_40": 26}[law]
+            rate, delay = 8000, 0
+        blob = (
+            b".snd" + (24).to_bytes(4, "big")
+            + len(data).to_bytes(4, "big")
+            + enc_id.to_bytes(4, "big")
+            + rate.to_bytes(4, "big") + (1).to_bytes(4, "big")
+            + data
+        )
+        meta = decode_media(blob, "audio")  # REAL AU ADPCM decode
+        if law == "g722" and g722_mode != 3:
+            pcm = np.asarray(
+                g722_decode(data, mode=g722_mode), dtype="<i2"
+            )
+        else:
+            pcm = np.frombuffer(meta["pcm"], "<i2")
+        # SNR against the source, past warm-up; G.722's QMF
+        # cascade delays by 22 samples (deterministic; re-measured
+        # after the r16 odd-tap fix), so the comparison shifts by
+        # that group delay
+        a = pcm[256 + delay:].astype(np.float64)
+        b = src[256: len(src) - delay if delay else None].astype(
+            np.float64
+        )
+        m = min(len(a), len(b))
+        err = a[:m] - b[:m]
+        sig = (b[:m] ** 2).mean()
+        snr = 10.0 * np.log10(sig / max((err ** 2).mean(), 1e-12))
+        floor = floors[law]
+        if law == "g722" and g722_mode == 1:
+            floor = 40.0  # above the 4-bit core's band
+        elif law == "g722" and g722_mode == 2:
+            floor = 35.0  # between the core and mode-1 bands
+        yield (
+            d, meta["codec"], meta["n_frames"], len(blob),
+            bool(np.array_equal(pcm, recon)), bool(snr >= floor),
+        )
 
     schema = (
         "doc_id long, codec string, n_samples long, au_bytes long, "
         "tracking_exact boolean, snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -21545,72 +20794,53 @@ def ms_adpcm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    rates = (8000, 11025, 16000)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        rates = (8000, 11025, 16000)
-        for pdf in batches:
-            out = {
-                "doc_id": [], "mode": [], "sample_rate": [],
-                "n_samples": [], "wav_bytes": [], "tracking_exact": [],
-                "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch = 1 + d % 2
-                rate = rates[d % 3]
-                n = 128 * (2 + d % 3)
-                fact = n - (7 if d % 5 == 0 else 0)
-                amp = 2500.0 + 100.0 * (d % 8)
-                period = 20 + d % 12
-                i = np.arange(n, dtype=np.float64)
-                chans = [
-                    np.round(
-                        amp * np.sin(2.0 * np.pi * (i + c * 5.0) / period)
-                    ).astype(np.int16)
-                    for c in range(ch)
-                ]
-                src = np.stack(chans, axis=1).reshape(-1)
-                # pin the predictor by doc (all seven exercised
-                # corpus-wide) instead of trialling all seven per block
-                # — 7x less fixture CPU, identical wire validity
-                data, ba, recon = encode_ms_adpcm(
-                    src, n_channels=ch, frames_per_block=128,
-                    predictor=d % 7,
-                )
-                wav = encode_wav_ms_adpcm(data, ba, ch, rate, fact, 128)
-                meta = decode_media(wav, "audio")  # REAL MS ADPCM decode
-                pcm = np.frombuffer(meta["pcm"], "<i2")
-                track = bool(np.array_equal(pcm, recon[: fact * ch]))
-                a = pcm.astype(np.float64)
-                b = src[: fact * ch].astype(np.float64)
-                err = a - b
-                snr = 10.0 * np.log10(
-                    (b * b).mean() / max((err * err).mean(), 1e-12)
-                )
-                out["doc_id"].append(d)
-                out["mode"].append("mono" if ch == 1 else "stereo")
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["wav_bytes"].append(len(wav))
-                out["tracking_exact"].append(track)
-                # measured worst per pinned predictor on these cards:
-                # 26.6/39.5/15.4/24.3/26.7/40.3/20.1 dB
-                floor = (20.0, 33.0, 10.0, 18.0, 20.0, 33.0, 14.0)[d % 7]
-                out["snr_ok"].append(bool(snr >= floor))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        ch = 1 + d % 2
+        rate = rates[d % 3]
+        n = 128 * (2 + d % 3)
+        fact = n - (7 if d % 5 == 0 else 0)
+        amp = 2500.0 + 100.0 * (d % 8)
+        period = 20 + d % 12
+        i = np.arange(n, dtype=np.float64)
+        chans = [
+            np.round(
+                amp * np.sin(2.0 * np.pi * (i + c * 5.0) / period)
+            ).astype(np.int16)
+            for c in range(ch)
+        ]
+        src = np.stack(chans, axis=1).reshape(-1)
+        # pin the predictor by doc (all seven exercised
+        # corpus-wide) instead of trialling all seven per block
+        # — 7x less fixture CPU, identical wire validity
+        data, ba, recon = encode_ms_adpcm(
+            src, n_channels=ch, frames_per_block=128,
+            predictor=d % 7,
+        )
+        wav = encode_wav_ms_adpcm(data, ba, ch, rate, fact, 128)
+        meta = decode_media(wav, "audio")  # REAL MS ADPCM decode
+        pcm = np.frombuffer(meta["pcm"], "<i2")
+        track = bool(np.array_equal(pcm, recon[: fact * ch]))
+        a = pcm.astype(np.float64)
+        b = src[: fact * ch].astype(np.float64)
+        err = a - b
+        snr = 10.0 * np.log10(
+            (b * b).mean() / max((err * err).mean(), 1e-12)
+        )
+        # measured worst per pinned predictor on these cards:
+        # 26.6/39.5/15.4/24.3/26.7/40.3/20.1 dB
+        floor = (20.0, 33.0, 10.0, 18.0, 20.0, 33.0, 14.0)[d % 7]
+        yield (
+            d, "mono" if ch == 1 else "stereo", meta["frame_rate"],
+            meta["n_frames"], len(wav), track, bool(snr >= floor),
+        )
 
     schema = (
         "doc_id long, mode string, sample_rate long, n_samples long, "
         "wav_bytes long, tracking_exact boolean, snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -21665,108 +20895,86 @@ def aiff_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    comps = (
+        (b"NONE", 2), (b"sowt", 2), (b"NONE", 1), (b"fl32", 2),
+        (b"ulaw", 2), (b"alaw", 2), (b"ima4", 2),
     )
+    rates = (8000, 22050, 44100)
+    # lossless variants must be exact; 8-bit loses the low byte of a
+    # ±3k-amplitude card (~14 dB here), companded laws ~38 dB, ima4
+    # ~30 dB on these cards
+    floors = {0: None, 1: None, 3: None, 2: 8.0, 4: 30.0, 5: 30.0,
+              6: 20.0}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        comps = (
-            (b"NONE", 2), (b"sowt", 2), (b"NONE", 1), (b"fl32", 2),
-            (b"ulaw", 2), (b"alaw", 2), (b"ima4", 2),
+    def per_doc(d: int):
+        v = d % 7
+        comp, width = comps[v]
+        ch = 2 if d % 3 == 0 else 1
+        rate = rates[d % 3]
+        n = 64 * (3 + d % 3)
+        amp = 2600.0 + 90.0 * (d % 9)
+        period = 19 + d % 14
+        i = np.arange(n, dtype=np.float64)
+        chans = [
+            np.round(
+                amp * np.sin(2.0 * np.pi * (i + 7.0 * c) / period)
+            ).astype(np.int16)
+            for c in range(ch)
+        ]
+        src = np.stack(chans, axis=1).reshape(-1)
+        blob = encode_aiff(
+            src, rate, comp=comp, n_channels=ch, width=width
         )
-        rates = (8000, 22050, 44100)
-        # lossless variants must be exact; 8-bit loses the low byte of a
-        # ±3k-amplitude card (~14 dB here), companded laws ~38 dB, ima4
-        # ~30 dB on these cards
-        floors = {0: None, 1: None, 3: None, 2: 8.0, 4: 30.0, 5: 30.0,
-                  6: 20.0}
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "container": [],
-                "n_samples": [], "n_channels": [], "sample_rate": [],
-                "aiff_bytes": [], "pcm_exact": [], "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 7
-                comp, width = comps[v]
-                ch = 2 if d % 3 == 0 else 1
-                rate = rates[d % 3]
-                n = 64 * (3 + d % 3)
-                amp = 2600.0 + 90.0 * (d % 9)
-                period = 19 + d % 14
-                i = np.arange(n, dtype=np.float64)
-                chans = [
-                    np.round(
-                        amp * np.sin(2.0 * np.pi * (i + 7.0 * c) / period)
-                    ).astype(np.int16)
-                    for c in range(ch)
-                ]
-                src = np.stack(chans, axis=1).reshape(-1)
-                blob = encode_aiff(
-                    src, rate, comp=comp, n_channels=ch, width=width
-                )
-                meta = decode_media(blob, "audio")  # REAL AIFF decode
-                if meta["sample_width"] == 2:
-                    pcm = np.frombuffer(meta["pcm"], "<i2")
-                else:
-                    pcm = np.frombuffer(meta["pcm"], np.uint8)
-                if v in (0, 1, 3):
-                    expect = src
-                elif v == 2:
-                    expect = (
-                        (src.astype(np.int16) >> 8).astype(np.int16) + 128
-                    ).astype(np.uint8)
-                elif v in (4, 5):
-                    law = "ulaw" if v == 4 else "alaw"
-                    expect = _g711_expand(_g711_compress(src, law), law)
-                else:
-                    _, expect = encode_ima4(src, n_channels=ch)
-                exact = bool(np.array_equal(pcm, expect))
-                floor = floors[v]
-                if floor is None:
-                    snr_ok = exact
-                else:
-                    # ima4 starts from (pred 0, index 0): its attack
-                    # transient spans the first block, so the fidelity
-                    # window opens after 64 frames (worst card measures
-                    # ~32 dB there vs the 20 dB floor; including the
-                    # ramp it can dip under 16)
-                    skip = 64 * ch if v == 6 else 0
-                    a = (
-                        (pcm.astype(np.float64) - 128.0) * 256.0
-                        if v == 2 else pcm.astype(np.float64)
-                    )[skip:]
-                    b = src.astype(np.float64)[skip:]
-                    err = a - b
-                    snr = 10.0 * np.log10(
-                        max((b * b).mean(), 1e-12)
-                        / max((err * err).mean(), 1e-12)
-                    )
-                    snr_ok = bool(snr >= floor)
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["container"].append(
-                    "aiff" if blob[8:12] == b"AIFF" else "aifc"
-                )
-                out["n_samples"].append(meta["n_frames"])
-                out["n_channels"].append(meta["n_channels"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["aiff_bytes"].append(len(blob))
-                out["pcm_exact"].append(exact)
-                out["snr_ok"].append(snr_ok)
-            yield pd.DataFrame(out)
+        meta = decode_media(blob, "audio")  # REAL AIFF decode
+        if meta["sample_width"] == 2:
+            pcm = np.frombuffer(meta["pcm"], "<i2")
+        else:
+            pcm = np.frombuffer(meta["pcm"], np.uint8)
+        if v in (0, 1, 3):
+            expect = src
+        elif v == 2:
+            expect = (
+                (src.astype(np.int16) >> 8).astype(np.int16) + 128
+            ).astype(np.uint8)
+        elif v in (4, 5):
+            law = "ulaw" if v == 4 else "alaw"
+            expect = _g711_expand(_g711_compress(src, law), law)
+        else:
+            _, expect = encode_ima4(src, n_channels=ch)
+        exact = bool(np.array_equal(pcm, expect))
+        floor = floors[v]
+        if floor is None:
+            snr_ok = exact
+        else:
+            # ima4 starts from (pred 0, index 0): its attack
+            # transient spans the first block, so the fidelity
+            # window opens after 64 frames (worst card measures
+            # ~32 dB there vs the 20 dB floor; including the
+            # ramp it can dip under 16)
+            skip = 64 * ch if v == 6 else 0
+            a = (
+                (pcm.astype(np.float64) - 128.0) * 256.0
+                if v == 2 else pcm.astype(np.float64)
+            )[skip:]
+            b = src.astype(np.float64)[skip:]
+            err = a - b
+            snr = 10.0 * np.log10(
+                max((b * b).mean(), 1e-12)
+                / max((err * err).mean(), 1e-12)
+            )
+            snr_ok = bool(snr >= floor)
+        yield (
+            d, meta["codec"], "aiff" if blob[8:12] == b"AIFF" else "aifc",
+            meta["n_frames"], meta["n_channels"], meta["frame_rate"],
+            len(blob), exact, snr_ok,
+        )
 
     schema = (
         "doc_id long, codec string, container string, n_samples long, "
         "n_channels long, sample_rate long, aiff_bytes long, "
         "pcm_exact boolean, snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -21818,99 +21026,79 @@ def caf_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
+    kw = (
+        dict(width=2), dict(width=2, little=True),
+        dict(width=4, is_float=True, little=True),
+        dict(width=8, is_float=True), dict(width=1), {}, {}, {},
     )
+    fmts = (b"lpcm", b"lpcm", b"lpcm", b"lpcm", b"lpcm", b"ulaw",
+            b"alaw", b"ima4")
+    rates = (16000, 22050, 44100)
+    floors = {4: 8.0, 5: 30.0, 6: 30.0, 7: 20.0}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        kw = (
-            dict(width=2), dict(width=2, little=True),
-            dict(width=4, is_float=True, little=True),
-            dict(width=8, is_float=True), dict(width=1), {}, {}, {},
+    def per_doc(d: int):
+        v = d % 8
+        ch = 2 if d % 3 == 0 else 1
+        rate = rates[d % 3]
+        n = 64 * (3 + d % 3)
+        amp = 2550.0 + 85.0 * (d % 9)
+        period = 18 + d % 15
+        i = np.arange(n, dtype=np.float64)
+        chans = [
+            np.round(
+                amp * np.sin(2.0 * np.pi * (i + 6.0 * c) / period)
+            ).astype(np.int16)
+            for c in range(ch)
+        ]
+        src = np.stack(chans, axis=1).reshape(-1)
+        blob = encode_caf(
+            src, rate, fmt=fmts[v], n_channels=ch,
+            unsized_data=(d % 7 == 2), **kw[v],
         )
-        fmts = (b"lpcm", b"lpcm", b"lpcm", b"lpcm", b"lpcm", b"ulaw",
-                b"alaw", b"ima4")
-        rates = (16000, 22050, 44100)
-        floors = {4: 8.0, 5: 30.0, 6: 30.0, 7: 20.0}
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "n_samples": [],
-                "n_channels": [], "sample_rate": [], "caf_bytes": [],
-                "pcm_exact": [], "snr_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 8
-                ch = 2 if d % 3 == 0 else 1
-                rate = rates[d % 3]
-                n = 64 * (3 + d % 3)
-                amp = 2550.0 + 85.0 * (d % 9)
-                period = 18 + d % 15
-                i = np.arange(n, dtype=np.float64)
-                chans = [
-                    np.round(
-                        amp * np.sin(2.0 * np.pi * (i + 6.0 * c) / period)
-                    ).astype(np.int16)
-                    for c in range(ch)
-                ]
-                src = np.stack(chans, axis=1).reshape(-1)
-                blob = encode_caf(
-                    src, rate, fmt=fmts[v], n_channels=ch,
-                    unsized_data=(d % 7 == 2), **kw[v],
-                )
-                meta = decode_media(blob, "audio")  # REAL CAF decode
-                if meta["sample_width"] == 2:
-                    pcm = np.frombuffer(meta["pcm"], "<i2")
-                else:
-                    pcm = np.frombuffer(meta["pcm"], np.uint8)
-                if v in (0, 1, 2, 3):
-                    expect = src
-                elif v == 4:
-                    expect = (
-                        (src.astype(np.int16) >> 8).astype(np.int16) + 128
-                    ).astype(np.uint8)
-                elif v in (5, 6):
-                    law = "ulaw" if v == 5 else "alaw"
-                    expect = _g711_expand(_g711_compress(src, law), law)
-                else:
-                    _, expect = encode_ima4(src, n_channels=ch)
-                exact = bool(np.array_equal(pcm, expect))
-                floor = floors.get(v)
-                if floor is None:
-                    snr_ok = exact
-                else:
-                    skip = 64 * ch if v == 7 else 0
-                    a = (
-                        (pcm.astype(np.float64) - 128.0) * 256.0
-                        if v == 4 else pcm.astype(np.float64)
-                    )[skip:]
-                    b = src.astype(np.float64)[skip:]
-                    err = a - b
-                    snr = 10.0 * np.log10(
-                        max((b * b).mean(), 1e-12)
-                        / max((err * err).mean(), 1e-12)
-                    )
-                    snr_ok = bool(snr >= floor)
-                out["doc_id"].append(d)
-                out["codec"].append(meta["codec"])
-                out["n_samples"].append(meta["n_frames"])
-                out["n_channels"].append(meta["n_channels"])
-                out["sample_rate"].append(meta["frame_rate"])
-                out["caf_bytes"].append(len(blob))
-                out["pcm_exact"].append(exact)
-                out["snr_ok"].append(snr_ok)
-            yield pd.DataFrame(out)
+        meta = decode_media(blob, "audio")  # REAL CAF decode
+        if meta["sample_width"] == 2:
+            pcm = np.frombuffer(meta["pcm"], "<i2")
+        else:
+            pcm = np.frombuffer(meta["pcm"], np.uint8)
+        if v in (0, 1, 2, 3):
+            expect = src
+        elif v == 4:
+            expect = (
+                (src.astype(np.int16) >> 8).astype(np.int16) + 128
+            ).astype(np.uint8)
+        elif v in (5, 6):
+            law = "ulaw" if v == 5 else "alaw"
+            expect = _g711_expand(_g711_compress(src, law), law)
+        else:
+            _, expect = encode_ima4(src, n_channels=ch)
+        exact = bool(np.array_equal(pcm, expect))
+        floor = floors.get(v)
+        if floor is None:
+            snr_ok = exact
+        else:
+            skip = 64 * ch if v == 7 else 0
+            a = (
+                (pcm.astype(np.float64) - 128.0) * 256.0
+                if v == 4 else pcm.astype(np.float64)
+            )[skip:]
+            b = src.astype(np.float64)[skip:]
+            err = a - b
+            snr = 10.0 * np.log10(
+                max((b * b).mean(), 1e-12)
+                / max((err * err).mean(), 1e-12)
+            )
+            snr_ok = bool(snr >= floor)
+        yield (
+            d, meta["codec"], meta["n_frames"], meta["n_channels"],
+            meta["frame_rate"], len(blob), exact, snr_ok,
+        )
 
     schema = (
         "doc_id long, codec string, n_samples long, n_channels long, "
         "sample_rate long, caf_bytes long, pcm_exact boolean, "
         "snr_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -22010,115 +21198,96 @@ def y4m_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ) // 2
         return out
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    names = ("c444", "c420jpeg", "cmono", "c444_limited",
+             "c420mpeg2", "c420paldv")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        names = ("c444", "c420jpeg", "cmono", "c444_limited",
-                 "c420mpeg2", "c420paldv")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "width": [], "height": [],
-                "n_frames": [], "usec_per_frame": [], "mean_px": [],
-                "chroma_ok": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 6
-                nf = 2 + d % 3
-                w, h = 8 + 2 * (d % 4), 6 + 2 * (d % 3)
-                fps = (25, 30, 24)[d % 3]
-                r = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c = np.arange(w, dtype=np.int64)
-                ys = [
-                    ((19 * d + 7 * r + 31 * c + 11 * t) % 256).astype(
-                        np.uint8
-                    )
-                    for t in range(nf)
-                ]
-                if v == 0 or v == 3:
-                    neutral = np.full((h, w), 128, np.uint8)
-                    frames = [(y, neutral, neutral) for y in ys]
-                    cs, full = b"C444", v == 0
-                elif v == 1 or v >= 4:
-                    n2 = np.full((h // 2, w // 2), 128, np.uint8)
-                    frames = [(y, n2, n2) for y in ys]
-                    cs = (b"C420jpeg", b"C420mpeg2", b"C420paldv")[
-                        0 if v == 1 else v - 3
-                    ]
-                    full = True
-                else:
-                    frames = [(y, None, None) for y in ys]
-                    cs, full = b"Cmono", True
-                blob = encode_y4m(
-                    frames, frame_rate=(fps, 1), colorspace=cs,
-                    full_range=full,
-                )
-                m = decode_media(blob, "video")  # REAL Y4M decode
-                stride = (w * 3 + 3) // 4 * 4
-                total = 0
-                for f in m["frames"]:
-                    a = np.frombuffer(f, np.uint8).reshape(h, stride)
-                    total += int(a[:, 0 : w * 3 : 3].astype(np.int64).sum())
-                # chroma leg: one colored frame in the doc's own
-                # colorspace vs an independent reference computed here
-                # from the same planes (per-pixel siting + BT.601)
-                if v in (4, 5):
-                    r2 = np.arange(h // 2, dtype=np.int64).reshape(-1, 1)
-                    c2 = np.arange(w // 2, dtype=np.int64)
-                    cb = ((r2 + 2 * c2 + d) % 256).astype(np.uint8)
-                    cr = ((3 * r2 + c2 + d) % 256).astype(np.uint8)
-                    mode = "mpeg2" if v == 4 else "paldv"
-                    cbu = ref_upsample(cb, w, h, mode, "cb").astype(
-                        np.float64
-                    )
-                    cru = ref_upsample(cr, w, h, mode, "cr").astype(
-                        np.float64
-                    )
-                    ccs = b"C420mpeg2" if v == 4 else b"C420paldv"
-                else:
-                    cb = ((r + 2 * c + d) % 256).astype(np.uint8)
-                    cr = ((3 * r + c + d) % 256).astype(np.uint8)
-                    cbu = cb.astype(np.float64)
-                    cru = cr.astype(np.float64)
-                    ccs = b"C444"
-                cblob = encode_y4m(
-                    [(ys[0], cb, cr)], colorspace=ccs,
-                    full_range=True,
-                )
-                cm = decode_media(cblob, "video")
-                got = np.frombuffer(
-                    cm["frames"][0], np.uint8
-                ).reshape(h, stride)[:, : w * 3][::-1].reshape(h, w, 3)
-                yf = ys[0].astype(np.float64)
-                cbf = cbu - 128.0
-                crf = cru - 128.0
-                ref = np.clip(np.round(np.stack([
-                    yf + 1.772 * cbf,
-                    yf - 0.344136 * cbf - 0.714136 * crf,
-                    yf + 1.402 * crf,
-                ], axis=2)), 0, 255).astype(np.uint8)
-                out["doc_id"].append(d)
-                out["variant"].append(names[v])
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["n_frames"].append(m["n_frames"])
-                out["usec_per_frame"].append(m["usec_per_frame"])
-                out["mean_px"].append(total // (nf * w * h))
-                out["chroma_ok"].append(bool(np.array_equal(got, ref)))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 6
+        nf = 2 + d % 3
+        w, h = 8 + 2 * (d % 4), 6 + 2 * (d % 3)
+        fps = (25, 30, 24)[d % 3]
+        r = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c = np.arange(w, dtype=np.int64)
+        ys = [
+            ((19 * d + 7 * r + 31 * c + 11 * t) % 256).astype(
+                np.uint8
+            )
+            for t in range(nf)
+        ]
+        if v == 0 or v == 3:
+            neutral = np.full((h, w), 128, np.uint8)
+            frames = [(y, neutral, neutral) for y in ys]
+            cs, full = b"C444", v == 0
+        elif v == 1 or v >= 4:
+            n2 = np.full((h // 2, w // 2), 128, np.uint8)
+            frames = [(y, n2, n2) for y in ys]
+            cs = (b"C420jpeg", b"C420mpeg2", b"C420paldv")[
+                0 if v == 1 else v - 3
+            ]
+            full = True
+        else:
+            frames = [(y, None, None) for y in ys]
+            cs, full = b"Cmono", True
+        blob = encode_y4m(
+            frames, frame_rate=(fps, 1), colorspace=cs,
+            full_range=full,
+        )
+        m = decode_media(blob, "video")  # REAL Y4M decode
+        stride = (w * 3 + 3) // 4 * 4
+        total = 0
+        for f in m["frames"]:
+            a = np.frombuffer(f, np.uint8).reshape(h, stride)
+            total += int(a[:, 0 : w * 3 : 3].astype(np.int64).sum())
+        # chroma leg: one colored frame in the doc's own
+        # colorspace vs an independent reference computed here
+        # from the same planes (per-pixel siting + BT.601)
+        if v in (4, 5):
+            r2 = np.arange(h // 2, dtype=np.int64).reshape(-1, 1)
+            c2 = np.arange(w // 2, dtype=np.int64)
+            cb = ((r2 + 2 * c2 + d) % 256).astype(np.uint8)
+            cr = ((3 * r2 + c2 + d) % 256).astype(np.uint8)
+            mode = "mpeg2" if v == 4 else "paldv"
+            cbu = ref_upsample(cb, w, h, mode, "cb").astype(
+                np.float64
+            )
+            cru = ref_upsample(cr, w, h, mode, "cr").astype(
+                np.float64
+            )
+            ccs = b"C420mpeg2" if v == 4 else b"C420paldv"
+        else:
+            cb = ((r + 2 * c + d) % 256).astype(np.uint8)
+            cr = ((3 * r + c + d) % 256).astype(np.uint8)
+            cbu = cb.astype(np.float64)
+            cru = cr.astype(np.float64)
+            ccs = b"C444"
+        cblob = encode_y4m(
+            [(ys[0], cb, cr)], colorspace=ccs,
+            full_range=True,
+        )
+        cm = decode_media(cblob, "video")
+        got = np.frombuffer(
+            cm["frames"][0], np.uint8
+        ).reshape(h, stride)[:, : w * 3][::-1].reshape(h, w, 3)
+        yf = ys[0].astype(np.float64)
+        cbf = cbu - 128.0
+        crf = cru - 128.0
+        ref = np.clip(np.round(np.stack([
+            yf + 1.772 * cbf,
+            yf - 0.344136 * cbf - 0.714136 * crf,
+            yf + 1.402 * crf,
+        ], axis=2)), 0, 255).astype(np.uint8)
+        yield (
+            d, names[v], m["width"], m["height"], m["n_frames"],
+            m["usec_per_frame"], total // (nf * w * h),
+            bool(np.array_equal(got, ref)),
+        )
 
     schema = (
         "doc_id long, variant string, width long, height long, "
         "n_frames long, usec_per_frame long, mean_px long, "
         "chroma_ok boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -22151,65 +21320,49 @@ def audio_tags_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     0xFF 0x00 unsync reversal, Vorbis comment length framing, and INFO
     sub-chunk padding. The oracle rebuilds every string closed-form.
     Map-only mapInPandas with the standard explicit core fan-out."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    names = ("id3v24", "id3v23_unsync", "ogg", "wav_info",
+             "id3v22_utf16")
 
-        names = ("id3v24", "id3v23_unsync", "ogg", "wav_info",
-                 "id3v22_utf16")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "source": [], "title": [], "artist": [],
-                "album": [], "date_tag": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 5
-                tags = {
-                    "title": f"Tïtle-{d}",
-                    "artist": f"Ärtist-{d % 97}",
-                    "album": f"Album-{d % 53}",
-                    "date": str(1990 + d % 30),
-                }
-                if v in (0, 1, 4):
-                    v2 = {k: tags[k] for k in ("title", "artist", "date")}
-                    blob = encode_id3v2(
-                        v2, version={0: 4, 1: 3, 4: 2}[v],
-                        utf16=(v in (1, 4)), unsync=(v == 1),
-                    ) + encode_id3v1({"album": tags["album"]})
-                elif v == 2:
-                    pk = [
-                        make_opus_head(),
-                        make_vorbis_comments(tags),
-                        bytes(40),
-                    ]
-                    blob = encode_ogg(pk, [960], n_header_packets=2)
-                else:
-                    i = np.arange(64, dtype=np.int64)
-                    wav = encode_wav(
-                        ((7 * d + 11 * i) % 1001 - 500).astype(np.int16)
-                    )
-                    blob = encode_wav_info(wav, tags)
-                got = extract_audio_tags(blob)  # REAL tag walk
-                out["doc_id"].append(d)
-                out["source"].append(names[v])
-                out["title"].append(got.get("title"))
-                out["artist"].append(got.get("artist"))
-                out["album"].append(got.get("album"))
-                out["date_tag"].append(got.get("date"))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 5
+        tags = {
+            "title": f"Tïtle-{d}",
+            "artist": f"Ärtist-{d % 97}",
+            "album": f"Album-{d % 53}",
+            "date": str(1990 + d % 30),
+        }
+        if v in (0, 1, 4):
+            v2 = {k: tags[k] for k in ("title", "artist", "date")}
+            blob = encode_id3v2(
+                v2, version={0: 4, 1: 3, 4: 2}[v],
+                utf16=(v in (1, 4)), unsync=(v == 1),
+            ) + encode_id3v1({"album": tags["album"]})
+        elif v == 2:
+            pk = [
+                make_opus_head(),
+                make_vorbis_comments(tags),
+                bytes(40),
+            ]
+            blob = encode_ogg(pk, [960], n_header_packets=2)
+        else:
+            i = np.arange(64, dtype=np.int64)
+            wav = encode_wav(
+                ((7 * d + 11 * i) % 1001 - 500).astype(np.int16)
+            )
+            blob = encode_wav_info(wav, tags)
+        got = extract_audio_tags(blob)  # REAL tag walk
+        yield (
+            d, names[v], got.get("title"), got.get("artist"), got.get("album"),
+            got.get("date"),
+        )
 
     schema = (
         "doc_id long, source string, title string, artist string, "
         "album string, date_tag string"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -22255,78 +21408,58 @@ def jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    variants = ("baseline_444", "baseline_420_dri",
+                "progressive_444", "progressive_420")
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        variants = ("baseline_444", "baseline_420_dri",
-                    "progressive_444", "progressive_420")
-        for pdf in batches:
-            out = {
-                "doc_id": [], "variant": [], "quant16": [], "width": [],
-                "height": [], "n_pixels": [], "err_ok": [],
-                "prog_matches_baseline": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                v = d % 4
-                # the DRI variant widens past one 16x16 MCU so restart
-                # markers actually flow (ri=1 restarts at every MCU
-                # boundary; a single-MCU card would never emit one)
-                w = 9 + d % 8 + (8 if v == 1 else 0)
-                h = 8 + d % 5
-                r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
-                c_idx = np.arange(w, dtype=np.int64)
-                gray = (7 * d + 5 * r_idx + 3 * c_idx) % 236 + 10
-                rows = [[(int(gray[r, c]),) * 3 for c in range(w)]
-                        for r in range(h)]
-                sub = "444" if v % 2 == 0 else "420"
-                q16 = v < 2 and d % 5 == 0
-                base_blob = encode_jpeg(
-                    rows_rgb=rows, quant=1, subsampling=sub,
-                    restart_interval=1 if v == 1 else 0, quant16=q16,
-                )
-                if v < 2:
-                    blob = base_blob
-                else:
-                    blob = encode_jpeg_progressive(
-                        rows_rgb=rows, quant=1, subsampling=sub
-                    )
-                meta = decode_media(blob, "image")  # the REAL decode
-                px = np.frombuffer(meta["pixels"], np.uint8).reshape(
-                    meta["height"], meta["width"], 3
-                )
-                err = np.abs(px.astype(np.int64) - gray[:, :, None]).max()
-                bound = 2 if sub == "444" else 6
-                if v < 2:
-                    prog_same = True  # vacuous for the baseline rows
-                else:
-                    base = decode_media(
-                        encode_jpeg(rows_rgb=rows, quant=1, subsampling=sub),
-                        "image",
-                    )
-                    prog_same = meta["pixels"] == base["pixels"]
-                out["doc_id"].append(d)
-                out["variant"].append(variants[v])
-                out["quant16"].append(q16)
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["n_pixels"].append(meta["n_pixels"])
-                out["err_ok"].append(bool(err <= bound))
-                out["prog_matches_baseline"].append(bool(prog_same))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        v = d % 4
+        # the DRI variant widens past one 16x16 MCU so restart
+        # markers actually flow (ri=1 restarts at every MCU
+        # boundary; a single-MCU card would never emit one)
+        w = 9 + d % 8 + (8 if v == 1 else 0)
+        h = 8 + d % 5
+        r_idx = np.arange(h, dtype=np.int64).reshape(-1, 1)
+        c_idx = np.arange(w, dtype=np.int64)
+        gray = (7 * d + 5 * r_idx + 3 * c_idx) % 236 + 10
+        rows = [[(int(gray[r, c]),) * 3 for c in range(w)]
+                for r in range(h)]
+        sub = "444" if v % 2 == 0 else "420"
+        q16 = v < 2 and d % 5 == 0
+        base_blob = encode_jpeg(
+            rows_rgb=rows, quant=1, subsampling=sub,
+            restart_interval=1 if v == 1 else 0, quant16=q16,
+        )
+        if v < 2:
+            blob = base_blob
+        else:
+            blob = encode_jpeg_progressive(
+                rows_rgb=rows, quant=1, subsampling=sub
+            )
+        meta = decode_media(blob, "image")  # the REAL decode
+        px = np.frombuffer(meta["pixels"], np.uint8).reshape(
+            meta["height"], meta["width"], 3
+        )
+        err = np.abs(px.astype(np.int64) - gray[:, :, None]).max()
+        bound = 2 if sub == "444" else 6
+        if v < 2:
+            prog_same = True  # vacuous for the baseline rows
+        else:
+            base = decode_media(
+                encode_jpeg(rows_rgb=rows, quant=1, subsampling=sub),
+                "image",
+            )
+            prog_same = meta["pixels"] == base["pixels"]
+        yield (
+            d, variants[v], q16, meta["width"], meta["height"],
+            meta["n_pixels"], bool(err <= bound), bool(prog_same),
+        )
 
     schema = (
         "doc_id long, variant string, quant16 boolean, width long, "
         "height long, n_pixels long, err_ok boolean, "
         "prog_matches_baseline boolean"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)
 
 
 @register(
@@ -22374,53 +21507,34 @@ def avi_audio_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas with the standard explicit core fan-out."""
     import numpy as np
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "codec": [], "sample_rate": [],
-                "n_samples": [], "n_video_frames": [], "peak": [],
-                "sum_abs": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 256 + (d % 4) * 64
-                sr = 8000 + (d % 3) * 4000
-                nf = 2 + d % 3
-                i = np.arange(n, dtype=np.int64)
-                frames = [
-                    np.full((3, 4, 3), (d + 17 * f) % 256, np.uint8)
-                    for f in range(nf)
-                ]
-                if d % 2 == 0:
-                    codes = ((13 * d + 7 * i) % 256).astype(np.uint8)
-                    src = _g711_expand(codes, "ulaw").astype(np.int16)
-                    blob = encode_avi(frames, audio=src, audio_rate=sr,
-                                      audio_format="ulaw")
-                else:
-                    src = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
-                    blob = encode_avi(frames, audio=src, audio_rate=sr)
-                meta = extract_avi_audio(blob)  # REAL container + decode
-                pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
-                probe = _decode_avi(blob, probe=True)
-                out["doc_id"].append(d)
-                out["codec"].append(meta.get("codec", "pcm_s16le"))
-                out["sample_rate"].append(meta["frame_rate"])
-                out["n_samples"].append(meta["n_frames"])
-                out["n_video_frames"].append(probe["n_frames"])
-                out["peak"].append(int(np.abs(pcm).max()))
-                out["sum_abs"].append(int(np.abs(pcm).sum()))
-            yield pd.DataFrame(out)
+    def per_doc(d: int):
+        n = 256 + (d % 4) * 64
+        sr = 8000 + (d % 3) * 4000
+        nf = 2 + d % 3
+        i = np.arange(n, dtype=np.int64)
+        frames = [
+            np.full((3, 4, 3), (d + 17 * f) % 256, np.uint8)
+            for f in range(nf)
+        ]
+        if d % 2 == 0:
+            codes = ((13 * d + 7 * i) % 256).astype(np.uint8)
+            src = _g711_expand(codes, "ulaw").astype(np.int16)
+            blob = encode_avi(frames, audio=src, audio_rate=sr,
+                              audio_format="ulaw")
+        else:
+            src = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
+            blob = encode_avi(frames, audio=src, audio_rate=sr)
+        meta = extract_avi_audio(blob)  # REAL container + decode
+        pcm = np.frombuffer(meta["pcm"], "<i2").astype(np.int64)
+        probe = _decode_avi(blob, probe=True)
+        yield (
+            d, meta.get("codec", "pcm_s16le"), meta["frame_rate"],
+            meta["n_frames"], probe["n_frames"], int(np.abs(pcm).max()),
+            int(np.abs(pcm).sum()),
+        )
 
     schema = (
         "doc_id long, codec string, sample_rate long, n_samples long, "
         "n_video_frames long, peak long, sum_abs long"
     )
-    return docs.mapInPandas(run, schema)
+    return doc_gate(spark, sf_dir, schema, per_doc)

@@ -78,59 +78,9 @@ def _load_all() -> None:
     import input_data_pipeline_spark.operators.tokenizer  # noqa: F401
 
 
-# Externally-visible enumeration order. External snapshots of the registry
-# truncate to a prefix (50 slots), so the queries that most need fresh
-# differential evidence must enumerate first. Round-17 rotation (the plan
-# the r16 registry note + r16 verdict task 1 recorded): the r16 window went
-# 50/50 driver-green, so the window is now
-# (a) the 16 r12-bucket leftovers the r16 note named (last driver green
-#     CORRECTNESS_r12 — the stalest evidence in the registry);
-# (b) the 7 round-16 additions (registered after the r16 window, never
-#     driver-checked; each pre-verified driver-canon at sf0.01 + sf0.1 and
-#     independently re-run by the r16 judge);
-# (c) 21 of the 44 r13-bucket queries (last driver green
-#     CORRECTNESS_r13). The 23 deferred to r18 each have an in-window (or
-#     r16-fresh) same-family sibling exercising the same operator code:
-#     `mp3_decode_features` / `mp3_stereo_decode_features` ~ the four
-#     in-window MP3 gates, `tiff_decode_features` ~
-#     `jpeg_lossless_decode_features` + `image_decode_features`,
-#     `knn_ivf_pq` / `pq_reconstruction_stats` ~ `knn_ivf` [anchor] +
-#     `knn_hyperplane_lsh`, `semdedup_embedding_clusters` /
-#     `kmeans_embedding_clusters` / `embedding_norm_stats` ~
-#     `embedding_near_pairs` [anchor] + `semantic_doc_search`,
-#     `lang_distribution` ~ `charngram_language_id` / `language_confusion`,
-#     `bpe_token_estimate` ~ `bpe_encode_fixed` /
-#     `tokenizer_fertility_audit`, `bloom_dedup_precheck` /
-#     `dup_cluster_size_histogram` / `source_dup_rates` ~
-#     `dedup_cluster_assignment` / `incremental_batch_dedup` /
-#     `dedup_soft_weights` + the dedup anchors, `exact_substring_coverage`
-#     / `intradoc_repetition` ~ `contamination_overlap` [anchor] +
-#     `semantic_contamination`, `pii_redaction_scaffold` ~
-#     `pii_redaction_stats` (green r16), `quality_calibration` /
-#     `quality_percentile_filter` ~ `doc_quality` [anchor],
-#     `hll_union_sources` ~ `hll_distinct_tokens`, `countmin_merge_sources`
-#     ~ `countmin_token_freq`, `user_rolling_distinct_types` /
-#     `user_trailing_window` ~ `user_sessions` / `user_value_intervals`,
-#     `mixture_sampling_plan` ~ `stratified_doc_sample` /
-#     `weighted_doc_sample_pps`;
-# (d) the 6 LLM-core anchors close the window at exactly 50.
-# Round-17 additions register AFTER the window (the established
-# precedent), entering the rotation in r18.
-#
-# r18 rotation note (write the new window at the START of r18): head
-# with the 23 r13-bucket leftovers named in (c) above, then the 14
-# r17 additions (session 1: mpeg1_layer2 / mp3_lsf / jpeg_in_tiff /
-# jpeg_precision12; session 2: ms_adpcm / aiff / ogg_probe / wav_ext /
-# netpbm_tga / caf / y4m / audio_tags; continuation: mp4_pcm_variants;
-# final session: vorbis_decode_features, jpeg_hierarchical_features —
-# that is 15 total, so either widen to 51 or defer one with an
-# in-window sibling, e.g. jpeg_precision12 ~ jpeg_lossless/jpeg_in_tiff),
-# then r14-bucket fills to 50 with the 6 anchors. Also replace the r17
-# first-entry bench floors with BENCH_r17 driver numbers per the
-# bench.py comments.
+# Externally-visible enumeration order: external snapshots of the registry
+# truncate to the first 50 slots, so these queries must enumerate first.
 _PRIORITY: list[str] = [
-    # --- (a) the 16 r12-bucket leftovers (last driver green
-    #     CORRECTNESS_r12; named in the r16 registry note) ---
     "knn_bruteforce_np",
     "knn_hyperplane_lsh",
     "incremental_batch_dedup",
@@ -147,7 +97,6 @@ _PRIORITY: list[str] = [
     "charngram_language_id",
     "language_confusion",
     "lang_rebalance_plan",
-    # --- (b) round-16 additions, never driver-checked ---
     "mp3_container_routing_features",
     "mp3_stereo_matrix_decode_features",
     "mp3_rate_profiles_decode_features",
@@ -155,7 +104,6 @@ _PRIORITY: list[str] = [
     "jpeg_lossless_decode_features",
     "adts_probe_features",
     "mpeg1_layer1_decode_features",
-    # --- (c) last driver green r13 (21 of 44; deferrals noted above) ---
     "bigram_lm_doc_scores",
     "brand_size_qty_revenue",
     "cheapest_supplier_per_part",
@@ -177,8 +125,7 @@ _PRIORITY: list[str] = [
     "user_value_intervals",
     "weighted_doc_sample_pps",
     "widget_revenue_by_nation_year",
-    # --- (d) LLM-core anchors (stay in every window; workflow rule
-    #     pinned by tests/test_registry_contract.py) ---
+    # LLM-core anchors (pinned by tests/test_registry_contract.py)
     "dedup_minhash_lsh",
     "ngram_jaccard_pairs",
     "embedding_near_pairs",
@@ -186,17 +133,6 @@ _PRIORITY: list[str] = [
     "contamination_overlap",
     "doc_quality",
 ]
-# Round-17 state: if this window goes driver-green, the stalest remaining
-# evidence is the 23 r13 leftovers named above; they head the r18 window,
-# then the TWELVE round-17 additions (registered after this window, each
-# pre-verified driver-canon at sf0.01 + sf0.1): mpeg1_layer2_decode_
-# features, mp3_lsf_decode_features, jpeg_in_tiff_decode_features,
-# jpeg_precision12_features (session 1) and ms_adpcm_decode_features,
-# aiff_decode_features, ogg_probe_features, wav_ext_decode_features,
-# netpbm_tga_decode_features, caf_decode_features, y4m_decode_features,
-# audio_tags_features (session 2's container/format sweep); then the
-# r14 bucket fills to 50 with the 6 anchors.
-
 
 
 def _ordered() -> dict[str, QuerySpec]:

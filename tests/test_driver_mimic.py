@@ -115,6 +115,11 @@ QUERIES = [
     "audio_resample_features",
     "audio_vad_features",
     "audio_mfcc_features",
+    # the image/video/audio round-trip gates, the last decode gates
+    # without a tier-1 oracle run
+    "image_decode_features",
+    "video_decode_features",
+    "audio_decode_features",
 ]
 
 

@@ -12,6 +12,7 @@ import pytest
 from input_data_pipeline_spark.operators.multimodal import (
     attach_binary_payload,
     decode_media,
+    doc_gate,
     decode_media_stub,
     frame_sample,
     multimodal_binary_meta,
@@ -6431,3 +6432,44 @@ def test_mp3_sign_fold_lut_census():
                 )
             checked += 1
     assert checked == 256 * 29
+
+
+def test_doc_gate_rows_types_and_plan(spark, sf_dir):
+    """``doc_gate`` is the one stage every decode gate builds on: each doc
+    contributes exactly the rows ``per_doc`` yields (0, 1 or 3 here), in
+    the schema's column order and types; an all-empty ``per_doc`` gives an
+    empty, schema-typed frame; and the plan is one MapInPandas over
+    ``run(doc_id…)`` right above the round-robin fan-out to every core."""
+    from input_data_pipeline_spark.tables import load_table
+
+    schema = "doc_id long, k int, tag string, even boolean"
+
+    def per_doc(d: int):
+        for k in range((0, 1, 3)[d % 3]):
+            yield d, k, f"{d}:{k}", k % 2 == 0
+
+    df = doc_gate(spark, sf_dir, schema, per_doc)
+    # the plan before execution: AQE's initial plan, one line per node
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    py_nodes = [n for n, line in enumerate(lines) if "MapInPandas" in line]
+    assert len(py_nodes) == 1
+    assert "MapInPandas run(doc_id#" in lines[py_nodes[0]]
+    n_cores = spark.sparkContext.defaultParallelism
+    assert f"Exchange RoundRobinPartitioning({n_cores})" in lines[py_nodes[0] + 1]
+
+    ids = [r.doc_id for r in load_table(spark, sf_dir, "documents").collect()]
+    expected = sorted(
+        (d, k, f"{d}:{k}", k % 2 == 0) for d in ids for k in range((0, 1, 3)[d % 3])
+    )
+    rows = sorted(tuple(r) for r in df.collect())
+    assert len(rows) == sum((0, 1, 3)[d % 3] for d in ids) > 0
+    assert rows == expected
+    assert {r[0] for r in rows} == {d for d in ids if d % 3}
+    types = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    assert types == [
+        ("doc_id", "bigint"), ("k", "int"), ("tag", "string"), ("even", "boolean")
+    ]
+
+    empty = doc_gate(spark, sf_dir, schema, lambda d: ())
+    assert empty.collect() == []
+    assert empty.schema == df.schema
