@@ -221,16 +221,6 @@ def sql_corr_expr(x: str, y: str, scale: int) -> str:
     )
 
 
-def sql_corr(x: str, y: str, scale: int, alias: str) -> str:
-    """Oracle-side fragment matching :func:`stable_corr`."""
-    return f"{sql_corr_expr(x, y, scale)} AS {alias}"
-
-
-def sql_sum(expr: str, scale: int, alias: str) -> str:
-    """Oracle-side fragment matching :func:`stable_sum`."""
-    return f"CAST(ROUND(SUM(CAST({expr} AS DECIMAL(18,6))), {scale}) AS DOUBLE) AS {alias}"
-
-
 def sql_sum_micros(expr: str, alias: str) -> str:
     """Oracle-side fragment matching :func:`stable_sum_micros`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS {alias}"
@@ -239,14 +229,6 @@ def sql_sum_micros(expr: str, alias: str) -> str:
 def sql_micros(expr: str, alias: str) -> str:
     """Oracle-side fragment matching :func:`micros`."""
     return f"CAST(CAST({expr} AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS {alias}"
-
-
-def sql_avg(expr: str, scale: int, alias: str) -> str:
-    """Oracle-side fragment matching :func:`stable_avg`."""
-    return (
-        f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / COUNT({expr}), {scale}) AS {alias}"
-    )
 
 
 def sql_stddev_samp_expr(expr: str, scale: int) -> str:
@@ -258,8 +240,3 @@ def sql_stddev_samp_expr(expr: str, scale: int) -> str:
         f"ROUND(SQRT(GREATEST(0.0, ({s2} - {s1} * {s1} / {n}) / ({n} - 1.0))),"
         f" {scale})"
     )
-
-
-def sql_stddev_samp(expr: str, scale: int, alias: str) -> str:
-    """Oracle-side fragment matching :func:`stable_stddev_samp`."""
-    return f"{sql_stddev_samp_expr(expr, scale)} AS {alias}"

@@ -110,19 +110,6 @@ def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     return F.when(F.size(toks) > 0, F.size(hits) / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def quality_score(col: Column | str) -> Column:
-    """Deterministic [0,1] doc-quality heuristic from length/token shape:
-    rewards mid-length docs, mid-length tokens, and some punctuation —
-    the classic cheap pre-filter before expensive dedup/inference stages.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    n_tok = token_count(c)
-    avg_tok_len = F.when(n_tok > 0, (F.length(F.regexp_replace(c, r"\s+", "")) / n_tok)).otherwise(F.lit(0.0))
-    len_component = F.least(n_tok / F.lit(200.0), F.lit(1.0))
-    tok_component = F.when((avg_tok_len >= 2) & (avg_tok_len <= 12), F.lit(1.0)).otherwise(F.lit(0.5))
-    return F.round(len_component * 0.7 + tok_component * 0.3, 6)
-
-
 # ---------------------------------------------------------------------------
 # Fingerprints / hashes
 # ---------------------------------------------------------------------------

@@ -301,11 +301,9 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The filtered shingle table feeds BOTH join sides; without
     # materialization Spark re-runs the explode→distinct→df-filter pipeline
-    # once per consumer (~4 passes measured). CORPUS-scale table
-    # (shingle-row-sized): see tables.materialize for the 100 TB landing
-    # story (a persisted shingle index); the narrow (doc_id, sh)
+    # once per consumer (~4 passes measured). The narrow (doc_id, sh)
     # projection is what materializes.
-    shr = materialize(sh.join(rare, "sh"), "corpus")
+    shr = materialize(sh.join(rare, "sh"))
     ev = shr.filter(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("eval_doc"), "sh"
     )

@@ -64,31 +64,6 @@ def norm(x: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(x, lambda p: p * p), F.lit(0.0), lambda a, v: a + v))
 
 
-def dot_lit(x: Column, vals: list[float]) -> Column:
-    """Dot product against a CONSTANT vector as a flat codegen expression.
-
-    Higher-order array functions (F.aggregate/transform lambdas) run in the
-    interpreter, not whole-stage codegen — measured ~3-10× slower per call.
-    A left-associated chain of element_at(x,i)*lit adds in the exact same
-    sequence as both the lambda fold and DuckDB's list_sum, so results are
-    bit-identical while staying inside codegen. Only viable for literal
-    vectors (plan size grows with dim) — which is exactly the
-    centroid/hyperplane case.
-    """
-    acc: Column = F.lit(0.0) + F.element_at(x, 1) * F.lit(vals[0])
-    for i in range(1, len(vals)):
-        acc = acc + F.element_at(x, i + 1) * F.lit(vals[i])
-    return acc
-
-
-def norm_sq_lit(x: Column, dim: int) -> Column:
-    """sum(x_i^2) as a flat codegen chain, same fold order as norm()."""
-    acc: Column = F.lit(0.0) + F.element_at(x, 1) * F.element_at(x, 1)
-    for i in range(2, dim + 1):
-        acc = acc + F.element_at(x, i) * F.element_at(x, i)
-    return acc
-
-
 def cosine(x: Column, y: Column) -> Column:
     return dot(x, y) / (norm(x) * norm(y))
 

@@ -1972,16 +1972,12 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once (round 17): the stats reduce and the scorer
     # both consume per_doc, and without the checkpoint each leg
     # re-executes the corpus tokenize+groupBy (2 tokenizes -> 1).
-    # CORPUS-scale table (one narrow int row per doc): see
-    # tables.materialize for the 100 TB landing story (a storage-backed
-    # per-doc stats table).
     per_doc = materialize(
         tok.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("dl"),
             *[F.sum(F.when(F.col("token") == q, 1).otherwise(0))
               .alias(f"tf{i}") for i, q in enumerate(BM25_QUERY)],
         ),
-        "corpus",
     )
     n_docs_df = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     stats = per_doc.agg(

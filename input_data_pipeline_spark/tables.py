@@ -115,33 +115,15 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-def materialize(df: DataFrame, scale: str) -> DataFrame:
-    """Materialization policy for multi-consumer intermediates (round 18,
-    guide §5; VERDICT r17 item 5). ``scale`` declares the table's growth
-    law and is the documented 100 TB landing story:
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize a multi-consumer intermediate with a lazy
+    ``localCheckpoint``. Project ``df`` to the consumed columns first:
+    the checkpoint must sit on a narrow projection.
 
-    - ``"bounded"``: the table is bounded by schema/dimensions (vocab-,
-      nation²-, users×days-sized), NOT by the corpus. A lazy
-      ``localCheckpoint`` is the right call at every scale — the
-      resident is small, and losing lineage costs only a cheap rebuild
-      of the whole (bounded) table on executor loss.
-    - ``"corpus"``: the table is row-per-document or larger. Locally it
-      is still materialized with a lazy ``localCheckpoint`` — the
-      corpus is MBs — but at 100 TB this is a large executor-resident
-      WITHOUT lineage, so the production landing is a storage-backed
-      intermediate table (write + read back), or
-      ``persist(MEMORY_AND_DISK)`` with lineage kept plus a
-      pipeline-managed ``unpersist``. ``persist`` is deliberately NOT
-      used here: it registers the plan in Spark's CacheManager, and a
-      later build of the same query would silently reuse the cached
-      rows across bench sweeps — result caching this engine's bench
-      contract forbids. ``localCheckpoint`` stays run-local: every
-      fresh query build recomputes from parquet.
-
-    Either way the checkpoint must sit on a NARROW projection — project
-    to the consumed columns before materializing."""
-    if scale not in ("bounded", "corpus"):
-        raise ValueError(f"materialize scale must be bounded|corpus: {scale!r}")
+    ``persist`` is deliberately not used: it registers the plan in
+    Spark's CacheManager, so a later build of the same query would
+    silently reuse the cached rows. ``localCheckpoint`` stays run-local,
+    and every fresh query build recomputes from parquet."""
     return df.localCheckpoint(eager=False)
 
 

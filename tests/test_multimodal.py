@@ -9,11 +9,10 @@ import hashlib
 import pyspark.sql.functions as F
 import pytest
 
+from input_data_pipeline_spark.codecs.route import decode_media
 from input_data_pipeline_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_media,
     doc_gate,
-    decode_media_stub,
     frame_sample,
     multimodal_binary_meta,
 )
@@ -77,7 +76,7 @@ def test_decode_nonaudio_is_explicitly_unimplemented():
     """Only image/video remain a seam; WAV audio decode is real now."""
     for modality in ("image", "video"):
         with pytest.raises(NotImplementedError, match="media libraries"):
-            decode_media_stub(b"\x89PNG", modality)
+            decode_media(b"\x89PNG", modality)
 
 
 def test_decode_media_parses_real_wav(tmp_path):
@@ -770,7 +769,7 @@ def test_decode_gif_animation_counting_and_malformed():
     meta = decode_media(ok, "image")
     assert meta["n_frames"] == 3
     assert meta["n_pixels"] == 6 and meta["bit_count"] == 24
-    from input_data_pipeline_spark.operators.multimodal import _decode_gif
+    from input_data_pipeline_spark.codecs.image import _decode_gif
 
     with pytest.raises(ValueError, match="magic"):
         _decode_gif(b"GIF90a" + ok[6:])  # unknown version
@@ -783,7 +782,7 @@ def test_decode_gif_animation_counting_and_malformed():
     with pytest.raises(ValueError, match="block introducer"):
         decode_media(ok[:13 + 6] + b"\x99" + ok[14 + 6 :], "image")
     # LZW stream cut mid-frame: fewer indices than pixels
-    from input_data_pipeline_spark.operators.multimodal import _gif_lzw_decode
+    from input_data_pipeline_spark.codecs.image import _gif_lzw_decode
 
     data = _gif_lzw_encode(bytes([0, 1] * 200), 2)
     assert _gif_lzw_decode(data, 2, 400) == bytes([0, 1] * 200)
@@ -991,7 +990,7 @@ def test_decode_avi_mjpeg_real_frame_decode():
     within the still decoder's DCT-rounding budget of the source."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import _decode_jpeg
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg
 
     w, h = 9, 8
     payload, jpegs, srcs = _mjpeg_fixture(w, h)
@@ -1018,7 +1017,7 @@ def test_decode_avi_mjpeg_rejections_and_probe():
     the codec fourcc without decoding any frame."""
     import struct
 
-    from input_data_pipeline_spark.operators.multimodal import _decode_avi
+    from input_data_pipeline_spark.codecs.avi import _decode_avi
 
     payload, jpegs, _ = _mjpeg_fixture(9, 8)
     # probe: counted + routed, never decoded
@@ -1047,7 +1046,8 @@ def test_engine_avi_and_wav_encoders_roundtrip():
     int16 PCM and header fields."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import encode_avi, encode_wav
+    from input_data_pipeline_spark.codecs.avi import encode_avi
+    from input_data_pipeline_spark.codecs.wav import encode_wav
 
     rng = np.random.RandomState(11)
     frames = [rng.randint(0, 256, (4, 5, 3)).astype(np.uint8) for _ in range(3)]
@@ -1070,8 +1070,8 @@ def test_sample_video_frames_on_mjpeg_avi(spark):
     """The frame-sampling kernel consumes MJPEG and raw AVIs through one
     code path: fingerprints equal the sha of the top-down de-padded
     plane the still JPEG decoder produces for each kept frame."""
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg
     from input_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg,
         sample_video_frames,
     )
 
@@ -1094,10 +1094,10 @@ def test_sample_video_frames_on_mjpeg_avi(spark):
 # encode_jpeg_progressive, driving the jpeg_decode_features oracle gate);
 # the historic fixture names stay as aliases so every existing test reads
 # unchanged.
-from input_data_pipeline_spark.operators.multimodal import (  # noqa: E402
+from input_data_pipeline_spark.codecs.jpeg import (  # noqa: E402
     encode_jpeg as make_jpeg,
 )
-from input_data_pipeline_spark.operators.multimodal import (  # noqa: E402
+from input_data_pipeline_spark.codecs.jpeg import (  # noqa: E402
     _jpeg_canonical_tables as _jpeg_fixture_tables,  # noqa: F401
 )
 
@@ -1351,7 +1351,7 @@ def test_probe_mp4_metadata():
     """Box-walk metadata probe: duration from mvhd (v0 and v1), display
     dims from the video trak's tkhd, handlers from mdia/hdlr — including
     the 64-bit largesize header branch."""
-    from input_data_pipeline_spark.operators.multimodal import probe_video
+    from input_data_pipeline_spark.codecs.route import probe_video
 
     for ver, large in ((0, False), (1, False), (0, True)):
         m = probe_video(make_mp4(duration_ms=7250, mvhd_version=ver,
@@ -1416,9 +1416,9 @@ def test_extract_video_metadata_avih_fields_above_int31(spark):
     int32 cast and killing the whole batch (round-11 ADVICE fix)."""
     import struct
 
+    from input_data_pipeline_spark.codecs.route import probe_video
     from input_data_pipeline_spark.operators.multimodal import (
         extract_video_metadata,
-        probe_video,
     )
 
     avi = bytearray(make_avi(3, 2, [[[(9, 9, 9)] * 3] * 2]))
@@ -1434,7 +1434,7 @@ def test_extract_video_metadata_avih_fields_above_int31(spark):
     assert rows[0].height == 2 and rows[0].n_frames == 1
 
 
-from input_data_pipeline_spark.operators.multimodal import (  # noqa: E402
+from input_data_pipeline_spark.codecs.jpeg import (  # noqa: E402
     encode_jpeg_progressive as make_progressive_jpeg,
 )
 
@@ -1515,7 +1515,7 @@ def test_progressive_jpeg_zrl_paths():
     path that advances over zero-history runs with ZRL."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.jpeg import (
         _JPEG_ZIGZAG,
         _idct_matrix,
     )
@@ -1613,7 +1613,7 @@ def test_g711_expand_bit_exact_vs_audioop_all_codes():
     int16 sample audioop's ITU-T reference tables produce."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import _g711_expand
+    from input_data_pipeline_spark.codecs.g711 import _g711_expand
 
     codes = np.arange(256, dtype=np.uint8)
     for law, fn in (("ulaw", audioop.ulaw2lin), ("alaw", audioop.alaw2lin)):
@@ -1632,10 +1632,8 @@ def test_g711_wav_end_to_end(tag, law, fn):
     'fact' truncation (the pad byte must NOT decode as a sample)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        encode_wav_codes,
-    )
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav_codes
 
     codes = bytes((7 * i + 3) % 256 for i in range(257))  # odd length
     meta = decode_media(encode_wav_codes(codes, tag, frame_rate=8000), "audio")
@@ -1655,9 +1653,7 @@ def test_ima_adpcm_block_decode_bit_exact_vs_audioop():
     low-first order."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _ima_adpcm_decode_block,
-    )
+    from input_data_pipeline_spark.codecs.wav import _ima_adpcm_decode_block
 
     rng = np.random.RandomState(11)
     pcm = rng.randint(-30000, 30000, 512).astype("<i2")
@@ -1677,7 +1673,7 @@ def test_ima_adpcm_wav_multiblock_end_to_end():
     'fact' frame count truncates the final block's pad tail."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     rng = np.random.RandomState(23)
     pcm = rng.randint(-20000, 20000, 1 + 16 + 1 + 16).astype("<i2")
@@ -1720,10 +1716,8 @@ def test_companded_wav_error_paths():
 
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        encode_wav_codes,
-    )
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav_codes
 
     with pytest.raises(ValueError, match="G.711 tags"):
         encode_wav_codes(b"\x00", 1)
@@ -1765,7 +1759,7 @@ def test_companded_wav_error_paths():
     # IMA: step index out of range and runt block_align must raise
     with pytest.raises(ValueError, match="step index"):
         decode_media(_ima_wav([(0, 89, bytes(8))]), "audio")
-    from input_data_pipeline_spark.operators.multimodal import _decode_ima_adpcm
+    from input_data_pipeline_spark.codecs.wav import _decode_ima_adpcm
 
     with pytest.raises(ValueError, match="block align"):
         _decode_ima_adpcm(bytes(8), 4, None)
@@ -1775,9 +1769,7 @@ def test_companded_wav_error_paths():
     # truncated chunk: data chunk length larger than the payload
     trunc = ok[:-10]
     with pytest.raises(ValueError, match="truncated|past the payload"):
-        from input_data_pipeline_spark.operators.multimodal import (
-            _parse_wav_chunks,
-        )
+        from input_data_pipeline_spark.codecs.wav import _parse_wav_chunks
 
         _parse_wav_chunks(trunc)
 
@@ -1919,7 +1911,7 @@ def test_image_dhash_giant_cluster_is_group_grain(spark, tmp_path):
 
 
 def test_mp3_probe_walks_vbr_frames_exactly():
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_KBPS,
         _mp3_frame_len,
         encode_mp3,
@@ -1942,7 +1934,7 @@ def test_mp3_probe_walks_vbr_frames_exactly():
 
 
 def test_mp3_probe_mpeg2_and_trailing_id3v1():
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         encode_mp3,
         probe_mpeg_audio,
     )
@@ -1958,7 +1950,7 @@ def test_mp3_probe_mpeg2_and_trailing_id3v1():
 def test_mp3_probe_error_paths():
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         encode_mp3,
         probe_mpeg_audio,
     )
@@ -1982,10 +1974,8 @@ def test_mp3_probe_error_paths():
 def test_probe_audio_wav_face_and_bitrate():
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        encode_wav,
-        probe_audio,
-    )
+    from input_data_pipeline_spark.codecs.route import probe_audio
+    from input_data_pipeline_spark.codecs.wav import encode_wav
 
     samples = np.arange(800, dtype=np.int16)
     m = probe_audio(encode_wav(samples, frame_rate=16000))
@@ -1999,9 +1989,9 @@ def test_probe_audio_wav_face_and_bitrate():
 def test_extract_audio_metadata_routes_errors(spark):
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
-        encode_mp3,
-        encode_wav,
         extract_audio_metadata,
     )
 
@@ -2028,10 +2018,7 @@ def test_flac_rejects_corruption():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_flac,
-        encode_flac,
-    )
+    from input_data_pipeline_spark.codecs.flac import _decode_flac, encode_flac
 
     sig = (np.arange(200) * 37 % 1999 - 999).astype(np.int16)
     blob = bytearray(encode_flac(sig, block_size=128))
@@ -2069,11 +2056,11 @@ def test_flac_probe_and_cross_codec_content_key():
     different signal stays distinct."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.flac import encode_flac
+    from input_data_pipeline_spark.codecs.route import probe_audio
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
-        encode_flac,
-        encode_wav,
-        probe_audio,
     )
 
     sig = ((np.arange(640) * 13) % 2001 - 1000).astype(np.int16)
@@ -2095,7 +2082,7 @@ def test_probe_mp4_sample_tables_give_exact_frame_count():
     """Round 12: the stbl walk sums stts runs to the exact video sample
     count; streams without sample tables still probe with n_frames=None
     (the pre-r12 behavior, pinned above)."""
-    from input_data_pipeline_spark.operators.multimodal import probe_video
+    from input_data_pipeline_spark.codecs.route import probe_video
 
     m = probe_video(make_mp4(duration_ms=2000, n_samples=50))
     assert m["container"] == "mp4"
@@ -2111,10 +2098,10 @@ def test_stereo_content_key_parity_flac_vs_wav():
     audio hash to the same content key; swapping the channels does not."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.flac import encode_flac
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
-        encode_flac,
-        encode_wav,
     )
 
     rng = np.random.RandomState(11)
@@ -2137,10 +2124,7 @@ def test_flac_block_size_code_192_roundtrip():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_flac,
-        encode_flac,
-    )
+    from input_data_pipeline_spark.codecs.flac import _decode_flac, encode_flac
 
     sig = (np.arange(384) * 91 % 4093 - 2046).astype(np.int16)
     blob = encode_flac(sig, block_size=192)
@@ -2166,10 +2150,8 @@ def test_probe_audio_rejects_nonstreaminfo_first_block():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        encode_flac,
-        probe_audio,
-    )
+    from input_data_pipeline_spark.codecs.flac import encode_flac
+    from input_data_pipeline_spark.codecs.route import probe_audio
 
     sig = (np.arange(64) * 17 % 997 - 498).astype(np.int16)
     blob = bytearray(encode_flac(sig))
@@ -2215,7 +2197,7 @@ def test_mp3_l3_roundtrip_plain_crc_and_reservoir():
     global_gain/side-info fields equal the encoder inputs, under no-CRC,
     CRC-16, and bit-reservoir packing — and the reservoir stream really
     does use a nonzero main_data_begin."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -2246,7 +2228,7 @@ def test_mp3_l3_roundtrip_plain_crc_and_reservoir():
 def test_mp3_l3_crc_and_structure_rejection():
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -2279,7 +2261,7 @@ def test_mp3_l3_crc_and_structure_rejection():
 
 
 def test_mp3_scfsi_shares_granule0_groups():
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -2299,7 +2281,7 @@ def test_mp3_scfsi_shares_granule0_groups():
 def test_mp3_requantize_closed_form():
     """xr follows §2.4.3.4.1 exactly: power-of-two scaling from
     global_gain, scalefac_scale multiplier, preflag pretab."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_PRETAB,
         _MP3_SFB_LONG_44100,
         _decode_mp3_l3,
@@ -2332,7 +2314,7 @@ def test_mp3_alias_butterflies_are_rotations():
     import math
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import mp3_alias_reduce
+    from input_data_pipeline_spark.codecs.mpeg import mp3_alias_reduce
 
     rnd = random.Random(7)
     xr = [rnd.uniform(-2, 2) for _ in range(576)]
@@ -2356,7 +2338,7 @@ def test_mp3_imdct_overlap_add_reconstructs():
     import math
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import mp3_imdct_granule
+    from input_data_pipeline_spark.codecs.mpeg import mp3_imdct_granule
 
     rnd = random.Random(3)
     x = [rnd.uniform(-1, 1) for _ in range(54)]
@@ -2390,7 +2372,7 @@ def test_mp3_synthesis_prototype_invariants():
     non-adjacent alias images land)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import _MP3_SYNTH_PROTO
+    from input_data_pipeline_spark.codecs.mpeg import _MP3_SYNTH_PROTO
 
     h = np.asarray(_MP3_SYNTH_PROTO)
     assert h.shape == (512,)
@@ -2414,7 +2396,7 @@ def test_mp3_analysis_synthesis_roundtrip_is_int16_exact():
     hashes. DC passes at unity."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         mp3_analysis_filterbank,
         mp3_synthesize_pcm,
     )
@@ -2443,7 +2425,7 @@ def test_mp3_full_chain_energy_constants():
     rotation, and the synthesis bank is unity-gain to the NPR ripple."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         decode_mp3_to_pcm,
         encode_mp3_l3,
@@ -2515,7 +2497,7 @@ def test_mp3_full_chain_energy_constants():
 def test_mp3_l3_streams_walk_through_the_probe():
     """encode_mp3_l3 output is header-compatible with the round-12 probe:
     same frame walk, correct frame count and CBR bitrate."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         encode_mp3_l3,
         probe_mpeg_audio,
     )
@@ -2535,7 +2517,7 @@ def test_mp3_stereo_roundtrip_and_ms_butterfly():
     spectra; independent mode leaves xr == xr_coded."""
     import math
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -2563,7 +2545,7 @@ def test_mp3_stereo_roundtrip_and_ms_butterfly():
 def test_mp3_stereo_scfsi_is_per_channel():
     """scfsi groups are tracked PER CHANNEL in stereo: granule 1 of each
     channel copies its own channel's granule-0 scalefactors."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -2592,7 +2574,7 @@ def test_mp3_combined_ms_intensity_and_short_intensity_decode():
 
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_SFB_LONG_44100 as LB,
         _decode_mp3_l3,
         encode_mp3_l3,
@@ -2660,7 +2642,7 @@ def test_mp3_combined_ms_intensity_and_short_intensity_decode():
     # region takes per-(sfb, window) is_pos from scalefac_s
     import math as _math
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_SFB_SHORT_44100 as SB,
     )
 
@@ -2728,11 +2710,11 @@ def test_jpeg_lossless_sof3_roundtrip_and_seams():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.jpeg import (
         _decode_jpeg_lossless,
-        decode_media,
         encode_jpeg_lossless,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     rng = np.random.default_rng(163)
     for pred in range(1, 8):
@@ -2774,12 +2756,9 @@ def test_tiff_g3_uncompressed_mode_roundtrip():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _g3_decode,
-        decode_media,
-        encode_tiff_g4,
-        g3_encode,
-    )
+    from input_data_pipeline_spark.codecs.fax import _g3_decode, g3_encode
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff_g4
 
     rng = np.random.default_rng(16)
     for _ in range(10):
@@ -2811,7 +2790,7 @@ def test_tiff_g3_uncompressed_mode_roundtrip():
     with pytest.raises(ValueError, match="1D-only"):
         decode_media(bytes(bad), "image")
     # unknown extension codes raise by name (0000001 110)
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.fax import (
         _bits_to_bytes,
         _fax_row_2d,
         _FaxBits,
@@ -2826,10 +2805,7 @@ def test_tiff_rejects_malformed_structures():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_tiff,
-        encode_tiff,
-    )
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
 
     plane = (np.arange(60, dtype=np.uint8).reshape(4, 5, 3) * 3) % 256
     blob = bytearray(encode_tiff(plane, packbits=True, rows_per_strip=2))
@@ -2873,10 +2849,7 @@ def test_tiff_lzw_width_growth_and_predictor_seam():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_tiff,
-        encode_tiff,
-    )
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
 
     rng = np.random.default_rng(11)
     plane = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)  # ~2.8KB strip
@@ -2906,7 +2879,7 @@ def test_g711_compress_is_inverse_on_decoder_lattice():
     compressor emits 0xFF for linear 0 (ITU-T G.711's two zeros)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.g711 import (
         _g711_compress,
         _g711_expand,
     )
@@ -2937,13 +2910,12 @@ def test_au_container_roundtrip_and_cross_container_content_key():
     import numpy as np
     import pytest
 
+    from input_data_pipeline_spark.codecs.au import _decode_au, encode_au
+    from input_data_pipeline_spark.codecs.g711 import _g711_compress
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav_codes
     from input_data_pipeline_spark.operators.multimodal import (
-        _decode_au,
         audio_content_key,
-        decode_media,
-        encode_au,
-        encode_wav_codes,
-        _g711_compress,
     )
 
     sig = (np.arange(300) * 57 % 3001 - 1500).astype(np.int16)
@@ -2983,6 +2955,21 @@ def test_au_container_roundtrip_and_cross_container_content_key():
     with pytest.raises(ValueError, match="non-finite"):
         _decode_au(bytes(fblob))
 
+    # probe and decode parse the header once, the same way: a data
+    # offset past the end holds 0 frames, one inside the header raises
+    import struct
+
+    from input_data_pipeline_spark.codecs.route import probe_audio
+
+    past = b".snd" + struct.pack(">5I", 1000, 0xFFFFFFFF, 3, 8000, 1) + bytes(8)
+    assert probe_audio(past)["n_frames"] == 0
+    assert decode_media(past, "audio")["n_frames"] == 0
+    inside = b".snd" + struct.pack(">5I", 8, 0xFFFFFFFF, 3, 8000, 1) + bytes(8)
+    with pytest.raises(ValueError, match="offset inside the header"):
+        probe_audio(inside)
+    with pytest.raises(ValueError, match="offset inside the header"):
+        decode_media(inside, "audio")
+
 
 def test_g711_alaw_compress_exact_involution_and_au_alaw():
     """A-law compression inverts the expander EXACTLY on all 256 codes
@@ -2991,13 +2978,15 @@ def test_g711_alaw_compress_exact_involution_and_au_alaw():
     content-key parity against A-law WAV (format tag 6)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.au import encode_au
+    from input_data_pipeline_spark.codecs.g711 import (
         _g711_compress,
         _g711_expand,
+    )
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav_codes
+    from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
-        decode_media,
-        encode_au,
-        encode_wav_codes,
     )
 
     codes = np.arange(256, dtype=np.uint8)
@@ -3021,12 +3010,12 @@ def test_audio_robust_key_folds_near_dups_and_separates_contours():
     keys — the reference's ffmpeg-normalize folding semantics."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.au import encode_au
+    from input_data_pipeline_spark.codecs.flac import encode_flac
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
         audio_robust_key,
-        encode_au,
-        encode_flac,
-        encode_wav,
     )
 
     i = np.arange(32 * 256, dtype=np.int64)
@@ -3057,12 +3046,12 @@ def test_mp3_decodes_through_decode_media_and_content_keys_fold():
     decoded PCM share an exact audio_content_key (and the robust key)."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3_l3
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
         audio_robust_key,
-        decode_media,
-        encode_mp3_l3,
-        encode_wav,
     )
 
     def silent():
@@ -3094,12 +3083,9 @@ def test_g4_codec_roundtrip_exercises_all_modes_and_raises_on_junk():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _g4_decode,
-        decode_media,
-        encode_tiff_g4,
-        g4_encode,
-    )
+    from input_data_pipeline_spark.codecs.fax import _g4_decode, g4_encode
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff_g4
 
     rng = np.random.default_rng(3)
     totals = {"P": 0, "H": 0, "V": 0}
@@ -3141,12 +3127,9 @@ def test_mh_codec_roundtrip_and_bilevel_tiff_both_compressions():
     both fax compressions decode through the same TIFF bilevel branch."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _mh_decode,
-        decode_media,
-        encode_tiff_g4,
-        mh_encode,
-    )
+    from input_data_pipeline_spark.codecs.fax import _mh_decode, mh_encode
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff_g4
 
     rng = np.random.default_rng(5)
     for t in range(15):
@@ -3174,10 +3157,8 @@ def test_au_pcm8_and_multichannel_decode():
 
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_au,
-        probe_audio,
-    )
+    from input_data_pipeline_spark.codecs.au import _decode_au
+    from input_data_pipeline_spark.codecs.route import probe_audio
 
     s8 = np.array([1, -1, 2, -2, 100, -100], np.int8)  # 3 frames x 2ch
     hdr = struct.pack(">4sIIIII", b".snd", 24, len(s8), 2, 8000, 2)
@@ -3205,12 +3186,9 @@ def test_g3_codec_roundtrip_with_eols_and_tag_bits():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _g3_decode,
-        decode_media,
-        encode_tiff_g4,
-        g3_encode,
-    )
+    from input_data_pipeline_spark.codecs.fax import _g3_decode, g3_encode
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff_g4
 
     rng = np.random.default_rng(11)
     for t in range(10):
@@ -3255,7 +3233,7 @@ def test_mp3_huffman_tables_2_to_10_and_count1a_roundtrip():
 
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_COUNT1A,
         _MP3_HUFF_TABLES,
         _decode_mp3_l3,
@@ -3332,11 +3310,13 @@ def test_ieee_float_wav_decode_and_content_key_fold():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        audio_content_key,
-        decode_media,
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import (
         encode_wav,
         encode_wav_float,
+    )
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
 
     i = np.arange(600, dtype=np.int64)
@@ -3369,7 +3349,7 @@ def test_au_wide_pcm_24_and_32_bit_decode():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import _decode_au
+    from input_data_pipeline_spark.codecs.au import _decode_au
 
     vals24 = [(5 << 8), -(7 << 8), (100 << 8) + 127, (100 << 8) + 128,
               -(3 << 8) - 129]
@@ -3434,10 +3414,7 @@ def test_tiff_planar_configuration_2_roundtrips_every_codec():
     orders, all four codecs, the predictor, and multi-strip geometry."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_tiff,
-        encode_tiff,
-    )
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
 
     rng = np.random.default_rng(1507)
     plane = rng.integers(0, 256, (7, 5, 3), dtype=np.uint8)
@@ -3464,7 +3441,7 @@ def test_tiff_planar_strip_count_and_ccitt_guards():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.tiff import (
         _decode_tiff,
         encode_tiff_g4,
         encode_tiff,
@@ -3509,34 +3486,35 @@ def test_g72x_tables_are_structurally_certified():
     structural invariant and watch it fail."""
     import pytest
 
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import g72x as mm
+    from tests import codec_reference as ref
 
-    mm._g72x_check_tables()  # the shipped tables certify
+    ref._g72x_check_tables()  # the shipped tables certify
 
-    orig = mm._G72X_LAWS
+    orig = ref._G72X_LAWS
     try:
         # output level pushed outside its decision interval
         bad_dqln = list(mm._G721_DQLN)
         bad_dqln[2], bad_dqln[13] = 500, 500
-        mm._G72X_LAWS = {"g721": (4, mm._G721_QTAB, tuple(bad_dqln),
+        ref._G72X_LAWS = {"g721": (4, mm._G721_QTAB, tuple(bad_dqln),
                                   orig["g721"][3], mm._G721_FI)}
         with pytest.raises(AssertionError, match="decision interval"):
-            mm._g72x_check_tables()
+            ref._g72x_check_tables()
         # symmetry break
         bad_wi = list(orig["g721"][3])
         bad_wi[15] += 32
-        mm._G72X_LAWS = {"g721": (4, mm._G721_QTAB, mm._G721_DQLN,
+        ref._G72X_LAWS = {"g721": (4, mm._G721_QTAB, mm._G721_DQLN,
                                   tuple(bad_wi), mm._G721_FI)}
         with pytest.raises(AssertionError, match="mirror-symmetric"):
-            mm._g72x_check_tables()
+            ref._g72x_check_tables()
         # non-increasing decision levels
         bad_q = (80, -124, 178, 246, 300, 349, 400)
-        mm._G72X_LAWS = {"g721": (4, bad_q, mm._G721_DQLN,
+        ref._G72X_LAWS = {"g721": (4, bad_q, mm._G721_DQLN,
                                   orig["g721"][3], mm._G721_FI)}
         with pytest.raises(AssertionError, match="not increasing"):
-            mm._g72x_check_tables()
+            ref._g72x_check_tables()
     finally:
-        mm._G72X_LAWS = orig
+        ref._G72X_LAWS = orig
 
 
 def test_g72x_decoder_tracks_encoder_and_meets_codec_snr():
@@ -3547,10 +3525,7 @@ def test_g72x_decoder_tracks_encoder_and_meets_codec_snr():
     24k lower, 40k higher; sine far above)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        g72x_decode,
-        g72x_encode,
-    )
+    from input_data_pipeline_spark.codecs.g72x import g72x_decode, g72x_encode
 
     t = np.arange(1500, dtype=np.float64)
     sine = np.round(5000 * np.sin(2 * np.pi * t / 31)).astype(np.int16)
@@ -3587,11 +3562,10 @@ def test_au_adpcm_roundtrip_and_named_seams():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_au,
+    from input_data_pipeline_spark.codecs.au import _decode_au, encode_au
+    from input_data_pipeline_spark.codecs.g72x import (
         _g72x_pack,
         _g72x_unpack,
-        encode_au,
         g72x_decode,
         g72x_encode,
     )
@@ -3643,10 +3617,7 @@ def test_png_adam7_and_16bit_roundtrip_all_geometries():
     seven; non-multiples leave ragged passes)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_png,
-        encode_png,
-    )
+    from input_data_pipeline_spark.codecs.image import _decode_png, encode_png
 
     rng = np.random.default_rng(157)
     for h, w in [(1, 1), (2, 3), (7, 7), (8, 8), (9, 13), (16, 5), (31, 17)]:
@@ -3667,10 +3638,7 @@ def test_png_adam7_guards():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_png,
-        encode_png,
-    )
+    from input_data_pipeline_spark.codecs.image import _decode_png, encode_png
 
     plane = np.arange(9 * 9 * 3, dtype=np.uint8).reshape(9, 9, 3) % 256
     blob = encode_png(plane, interlace=True)
@@ -3728,7 +3696,7 @@ def test_jpeg_411_and_440_sampling_factors():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import _decode_jpeg
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg
 
     h, w = 9, 19  # partial edge MCUs for both layouts
     rows = [[(200, 30, 90)] * w for _ in range(h)]
@@ -3767,10 +3735,7 @@ def test_jpeg_nondivisor_sampling():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg,
-        encode_jpeg,
-    )
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg, encode_jpeg
 
     h, w = 17, 30
     ramp = np.clip(np.arange(w) * 8, 0, 255).astype(np.float64)
@@ -3805,10 +3770,7 @@ def test_jpeg_12bit_extended_sequential():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg,
-        encode_jpeg,
-    )
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg, encode_jpeg
 
     rng = np.random.RandomState(9)
     h, w = 18, 22
@@ -3879,12 +3841,9 @@ def test_avi_audio_extraction_full_matrix_and_seams():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_avi,
-        _g711_expand,
-        encode_avi,
-        extract_avi_audio,
-    )
+    from input_data_pipeline_spark.codecs.avi import _decode_avi, encode_avi
+    from input_data_pipeline_spark.codecs.g711 import _g711_expand
+    from input_data_pipeline_spark.codecs.route import extract_avi_audio
 
     frames = [np.full((3, 5, 3), 40 * f, np.uint8) for f in range(3)]
     i = np.arange(321)
@@ -3928,19 +3887,20 @@ def test_g722_tables_certify_and_decoder_tracks_encoder():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import g72x as mm
+    from tests import codec_reference as ref
 
-    mm._g722_check_tables()
+    ref._g722_check_tables()
     # a broken tap breaks power complementarity
-    orig = mm._G722_QMF
+    orig = ref._G722_QMF
     try:
-        mm._G722_QMF = tuple(
+        ref._G722_QMF = tuple(
             v + (100 if i == 11 else 0) for i, v in enumerate(orig)
         )
         with pytest.raises(AssertionError):
-            mm._g722_check_tables()
+            ref._g722_check_tables()
     finally:
-        mm._G722_QMF = orig
+        ref._G722_QMF = orig
 
     def codec_snr(src: "np.ndarray") -> float:
         dec = mm.g722_decode(mm.g722_encode(src))
@@ -3983,13 +3943,13 @@ def test_mp3_in_wav_and_avi_route_to_the_pcm_chain():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.avi import encode_avi
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3_l3
+    from input_data_pipeline_spark.codecs.route import (
         decode_media,
-        encode_avi,
-        encode_mp3_l3,
-        encode_wav_mp3,
         extract_avi_audio,
     )
+    from input_data_pipeline_spark.codecs.wav import encode_wav_mp3
 
     is_vals = [0] * 576
     for i in range(0, 480, 7):
@@ -4034,12 +3994,12 @@ def test_mpeg1_layer1_decode_and_quantizer_pair():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        decode_media,
+    from input_data_pipeline_spark.codecs.mpeg import (
         decode_mpeg1_layer1,
         encode_mpeg1_layer1,
         mp3_analysis_filterbank,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     def frame(d, f):
         alloc = [(3 + (d + sb) % 9) if (sb + d + f) % 3 else 0
@@ -4089,9 +4049,7 @@ def test_mpeg1_layer1_decode_and_quantizer_pair():
 
     # Layer II routes through its own decoder (round 17) — a real
     # Layer II stream decodes with codec "mp2" via decode_media
-    from input_data_pipeline_spark.operators.multimodal import (
-        encode_mpeg1_layer2,
-    )
+    from input_data_pipeline_spark.codecs.mpeg import encode_mpeg1_layer2
 
     l2 = encode_mpeg1_layer2(
         [{
@@ -4108,7 +4066,7 @@ def test_mpeg1_layer1_decode_and_quantizer_pair():
     # joint (intensity) stereo (round 17): one shared sample code above
     # the bound, per-channel scalefactors — both channels decode to the
     # independently synthesized expectation
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _mp1_scalefactor,
         mp3_synthesize_pcm,
     )
@@ -4178,7 +4136,7 @@ def test_mpeg1_layer1_wire_convention():
     (it recomputes with the decoder's own formula)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         decode_mpeg1_layer1,
         mp3_synthesize_pcm,
     )
@@ -4230,7 +4188,7 @@ def test_mpeg1_layer12_crc_protection():
     = 0xAEE7); (2) a flipped bit INSIDE the protected span must fail
     the decode; (3) a flipped sample bit OUTSIDE it must decode
     cleanly (proving the span does not over-reach into sample data)."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _crc16_mpeg,
         _crc16_mpeg_bits,
         _bits_of,
@@ -4295,13 +4253,13 @@ def test_ms_adpcm_roundtrip_and_tables():
     the negative-predictor vector), and malformed streams raise."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import (
         _MS_ADPCM_ADAPT,
         _MS_ADPCM_COEFS,
         _div256_trunc,
         _ms_adpcm_decode,
         _ms_adpcm_step,
-        decode_media,
         encode_ms_adpcm,
         encode_wav_ms_adpcm,
     )
@@ -4361,17 +4319,21 @@ def test_aiff_container_and_codecs():
     dedup), and malformed files raise by name."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.aiff_caf import (
         _decode_aiff,
         _f80_decode,
         _f80_encode,
         _ima4_decode,
-        audio_content_key,
-        decode_media,
         encode_aiff,
         encode_ima4,
-        encode_wav,
+    )
+    from input_data_pipeline_spark.codecs.route import (
+        decode_media,
         probe_audio,
+    )
+    from input_data_pipeline_spark.codecs.wav import encode_wav
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
 
     for rate in (8000, 11025, 16000, 22050, 44100, 48000, 96000, 192000):
@@ -4438,13 +4400,15 @@ def test_ogg_container_probe():
     packets continuation-aware across spanning packets; Opus duration
     subtracts pre-skip; every corruption class raises; sample decode is
     the named seam."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _ogg_crc,
         _probe_ogg,
-        decode_media,
         encode_ogg,
         make_opus_head,
         make_vorbis_ident,
+    )
+    from input_data_pipeline_spark.codecs.route import (
+        decode_media,
         probe_audio,
     )
 
@@ -4516,16 +4480,20 @@ def test_wav_extensible_and_rf64():
 
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.route import (
+        decode_media,
+        probe_audio,
+    )
+    from input_data_pipeline_spark.codecs.wav import (
         _WAVE_FORMAT_EXTENSIBLE,
         _WAVE_FORMAT_IEEE_FLOAT,
         _WAVE_FORMAT_PCM,
         _parse_wav_chunks,
-        audio_content_key,
-        decode_media,
         encode_wav,
         encode_wav_extensible,
-        probe_audio,
+    )
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
 
     n = 160
@@ -4591,14 +4559,14 @@ def test_netpbm_and_tga_decode():
     raise."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.image import (
         _decode_netpbm,
         _decode_tga,
         _looks_like_tga,
-        decode_media,
         encode_netpbm,
         encode_tga,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     h, w = 7, 11
     r = np.arange(h).reshape(-1, 1)
@@ -4709,14 +4677,18 @@ def test_caf_container_and_codecs():
 
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.aiff_caf import (
         _decode_caf,
-        audio_content_key,
-        decode_media,
         encode_caf,
         encode_ima4,
-        encode_wav,
+    )
+    from input_data_pipeline_spark.codecs.route import (
+        decode_media,
         probe_audio,
+    )
+    from input_data_pipeline_spark.codecs.wav import encode_wav
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
 
     n = 192
@@ -4777,12 +4749,11 @@ def test_y4m_decode():
     without touching planes, and named seams for siting variants."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_y4m,
+    from input_data_pipeline_spark.codecs.route import (
         decode_media,
-        encode_y4m,
         probe_video,
     )
+    from input_data_pipeline_spark.codecs.y4m import _decode_y4m, encode_y4m
 
     h, w = 6, 10
     r = np.arange(h).reshape(-1, 1)
@@ -4828,9 +4799,7 @@ def test_y4m_decode():
 
     # co-sited sitings (round-17 continuation): neutral chroma is a
     # fixed point of every reconstruction filter, so gray == Y exactly
-    from input_data_pipeline_spark.operators.multimodal import (
-        _y4m_upsample_chroma,
-    )
+    from input_data_pipeline_spark.codecs.y4m import _y4m_upsample_chroma
 
     n2 = neutral[::2, ::2]
     for cs in (b"C420mpeg2", b"C420paldv"):
@@ -4861,6 +4830,12 @@ def test_y4m_decode():
     # colorspace token still raises by name
     with pytest.raises(NotImplementedError, match="C410"):
         _decode_y4m(blob.replace(b"C444", b"C410", 1))
+    # the probe parses the same header: an unknown colorspace raises
+    # there too instead of probing as 4:2:0
+    with pytest.raises(NotImplementedError, match="Cfoo"):
+        probe_video(blob.replace(b"C444", b"Cfoo", 1))
+    with pytest.raises(NotImplementedError, match="Cfoo"):
+        decode_media(blob.replace(b"C444", b"Cfoo", 1), "video")
     with pytest.raises(ValueError, match="truncated Y4M frame"):
         _decode_y4m(blob[:-3])
     with pytest.raises(ValueError, match="FRAME marker"):
@@ -4878,11 +4853,9 @@ def test_ima_adpcm_stereo_wav():
     way) — fact counts frames, and malformed stereo geometry raises."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_ima_adpcm,
-        decode_media,
-        encode_ima_wav,
-    )
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import _decode_ima_adpcm
+    from tests.codec_reference import encode_ima_wav
 
     n = 9 * 14
     i = np.arange(n, dtype=np.float64)
@@ -4930,18 +4903,20 @@ def test_audio_tags_extraction():
     and the ID3v2.2 named seam."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
+        encode_ogg,
+        make_opus_head,
+        make_vorbis_ident,
+    )
+    from input_data_pipeline_spark.codecs.tags import (
         _parse_id3v2,
         encode_id3v1,
         encode_id3v2,
-        encode_ogg,
-        encode_wav,
         encode_wav_info,
         extract_audio_tags,
-        make_opus_head,
         make_vorbis_comments,
-        make_vorbis_ident,
     )
+    from input_data_pipeline_spark.codecs.wav import encode_wav
 
     tags = {"title": "Tïtle-5", "artist": "Ärtist-5",
             "album": "Album-5", "date": "1995"}
@@ -4999,13 +4974,15 @@ def test_mp4_quicktime_pcm_entries():
     entries still raise the named seam listing the supported set."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.g711 import (
         _g711_compress,
         _g711_expand,
-        decode_media,
+    )
+    from input_data_pipeline_spark.codecs.mp4 import (
         encode_mp4_audio,
         extract_mp4_audio,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     n = 160
     s = (np.arange(n, dtype=np.int64) * 43 % 1901 - 950).astype(np.int16)
@@ -5062,10 +5039,12 @@ def test_audio_content_keys_cover_layer2_and_lsf():
     stream each produce stable content keys; the SAME Layer II stream
     with container-irrelevant trailing zero padding keys identically;
     different content keys apart."""
-    from input_data_pipeline_spark.operators.multimodal import (
-        audio_content_key,
+    from input_data_pipeline_spark.codecs.mpeg import (
         encode_mp3_lsf,
         encode_mpeg1_layer2,
+    )
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
 
     def l2(d):
@@ -5105,12 +5084,8 @@ def test_jpeg_in_tiff_decode():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg,
-        _decode_tiff,
-        encode_jpeg,
-        encode_tiff,
-    )
+    from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg, encode_jpeg
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
 
     rng = np.random.RandomState(11)
     h, w = 19, 13
@@ -5233,13 +5208,13 @@ def test_mp3_lsf_decode_paths():
     long/short at 8 kHz)."""
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_SFB_LONG,
         _MP3_SFB_SHORT,
         _mp3_lsf_slen,
-        decode_media,
         encode_mp3_lsf,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     def long_a(sfc=202):
         return {"is": [0] * 576, "global_gain": 210,
@@ -5310,18 +5285,18 @@ def test_mpeg1_layer2_decode_tables_and_requantizer():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP2_ALLOC_TABLES,
         _MP2_KBPS,
         _MP2_QC,
         _mp1_scalefactor,
         _mp2_nbal,
         _mp2_table_select,
-        decode_media,
         decode_mpeg1_layer2,
         encode_mpeg1_layer2,
         mp3_synthesize_pcm,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     def frame(d, f, tab):
         sblimit = len(tab)
@@ -5494,14 +5469,16 @@ def test_mp4_audio_extraction_routes_mp3_and_pcm():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _MP3_KBPS,
-        _mp3_frame_len,
-        decode_media,
-        encode_mp3_l3,
+    from input_data_pipeline_spark.codecs.mp4 import (
         encode_mp4_audio,
         extract_mp4_audio,
     )
+    from input_data_pipeline_spark.codecs.mpeg import (
+        _MP3_KBPS,
+        _mp3_frame_len,
+        encode_mp3_l3,
+    )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     iv = [0] * 576
     for i in range(0, 480, 7):
@@ -5566,19 +5543,20 @@ def test_g722_mode1_enhancement_bits():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import g72x as mm
+    from tests import codec_reference as ref
 
     # certificate rejects a perturbed entry (bracket + mirror break)
-    orig = mm._G722_QM6
+    orig = ref._G722_QM6
     try:
-        mm._G722_QM6 = tuple(
+        ref._G722_QM6 = tuple(
             v + (4000 if i == 10 else 0) for i, v in enumerate(orig)
         )
         with pytest.raises(AssertionError):
-            mm._g722_check_tables()
+            ref._g722_check_tables()
     finally:
-        mm._G722_QM6 = orig
-    mm._g722_check_tables()
+        ref._G722_QM6 = orig
+    ref._g722_check_tables()
 
     n = 4096
     t = np.arange(n) / 16000.0
@@ -5611,16 +5589,16 @@ def test_g722_mode1_enhancement_bits():
     # above) and rejects a perturbed entry; tracking holds; fidelity
     # sits BETWEEN the core and mode 1 (~6 dB each way, one bit per
     # step); the embedded property holds; the aux LSB stays zero
-    orig5 = mm._G722_QM5
+    orig5 = ref._G722_QM5
     try:
-        mm._G722_QM5 = tuple(
+        ref._G722_QM5 = tuple(
             v + (900 if i == 6 else 0) for i, v in enumerate(orig5)
         )
         with pytest.raises(AssertionError):
-            mm._g722_check_tables()
+            ref._g722_check_tables()
     finally:
-        mm._G722_QM5 = orig5
-    mm._g722_check_tables()
+        ref._G722_QM5 = orig5
+    ref._g722_check_tables()
     d2, r2 = mm.g722_encode(src, return_reconstruction=True, mode=2)
     assert np.array_equal(mm.g722_decode(d2, mode=2), r2)
     s2 = snr(mm.g722_decode(d2, mode=2))
@@ -5640,11 +5618,8 @@ def test_g722_in_au_container():
     decodes IDENTICALLY through our core-bit decoder."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_au,
-        encode_au,
-        g722_decode,
-    )
+    from input_data_pipeline_spark.codecs.au import _decode_au, encode_au
+    from input_data_pipeline_spark.codecs.g72x import g722_decode
 
     t = np.arange(1600, dtype=np.float64)
     src = np.round(5000 * np.sin(2 * np.pi * t / 40)).astype(np.int16)
@@ -5671,7 +5646,7 @@ def test_vorbis_primitives():
     identity the lapped transform depends on."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _f1_db,
         _vilog,
         _vorbis_codewords,
@@ -5727,10 +5702,7 @@ def test_vorbis_tdac_reconstruction():
     window breaks it catastrophically."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _imdct,
-        _vorbis_window,
-    )
+    from input_data_pipeline_spark.codecs.ogg import _imdct, _vorbis_window
 
     n = 64
     rng = np.random.RandomState(3)
@@ -5755,7 +5727,7 @@ def _vorbis_expected_pcm(flags, ch, d, rtype, coupling, partitioned,
     OLA), so a slip on either side breaks parity."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import _f1_db
+    from input_data_pipeline_spark.codecs.ogg import _f1_db
 
     table = _f1_db()
 
@@ -5984,7 +5956,7 @@ def test_vorbis_decode_parity():
     the long-after-short negative-start window edge)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _decode_vorbis_float,
         encode_vorbis,
     )
@@ -6025,18 +5997,18 @@ def test_vorbis_contract_and_edges():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _decode_vorbis_float,
         _ogg_crc,
         _ogg_packets,
         _probe_ogg,
         _vorbis_decode_packet,
         _vorbis_setup,
-        decode_media,
         encode_ogg,
         encode_vorbis,
         make_opus_head,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     flags = [0, 0, 1, 0]
     frames, _ = _vorbis_fixture_frames(flags, 1, 4, 1, False, False,
@@ -6085,7 +6057,7 @@ def test_vorbis_contract_and_edges():
     with pytest.raises(NotImplementedError, match="Ogg Opus"):
         decode_media(opus, "audio")
     # floor type 0 (LSP) raises by name
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _VBitsW,
         _vorbis_write_book,
         _VORBIS_FIX_BOOKS,
@@ -6121,7 +6093,7 @@ def test_jpeg_hierarchical_decode():
     import numpy as np
     import pytest
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.jpeg import (
         _decode_jpeg,
         _jpeg_expand,
         encode_jpeg_hierarchical,
@@ -6184,9 +6156,9 @@ def test_audio_content_key_covers_vorbis():
     same decode_media path as every other codec (round-17 final
     session): identical streams key identically, different residue
     content keys apart, and the key length/shape matches the family."""
+    from input_data_pipeline_spark.codecs.ogg import encode_vorbis
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
-        encode_vorbis,
     )
 
     def stream(d):
@@ -6221,9 +6193,7 @@ def test_audio_dsp_resample():
     >60 dB sine SNR up, down, and across the awkward 44.1k family."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        resample_pcm,
-    )
+    from input_data_pipeline_spark.codecs.dsp import resample_pcm
 
     x = np.full(1000, 1234.0)
     for a, b in ((8000, 16000), (44100, 16000), (16000, 8000),
@@ -6259,7 +6229,7 @@ def test_audio_dsp_vad_and_mfcc():
     in the expected mel region."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.dsp import (
         _mel_filterbank,
         mfcc_features,
         vad_segments,
@@ -6313,7 +6283,8 @@ def test_g72x_inlined_loop_matches_spec_blocks():
     driven by full-range noise and arbitrary code streams."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import g72x as mm
+    from tests import codec_reference as ref
 
     rng = np.random.default_rng(42)
     streams = [
@@ -6328,7 +6299,7 @@ def test_g72x_inlined_loop_matches_spec_blocks():
     for law in ("g721", "g723_24", "g723_40"):
         bits = mm._G72X_LAWS[law][0]
         for s in streams:
-            c_ref, r_ref = mm._g72x_encode_ref(
+            c_ref, r_ref = ref._g72x_encode_ref(
                 s, law, return_reconstruction=True
             )
             c_new, r_new = mm.g72x_encode(s, law, return_reconstruction=True)
@@ -6336,11 +6307,11 @@ def test_g72x_inlined_loop_matches_spec_blocks():
             assert np.array_equal(r_ref, r_new)
             assert c_ref.dtype == c_new.dtype and r_ref.dtype == r_new.dtype
             assert np.array_equal(
-                mm._g72x_decode_ref(c_ref, law), mm.g72x_decode(c_new, law)
+                ref._g72x_decode_ref(c_ref, law), mm.g72x_decode(c_new, law)
             )
         allc = rng.integers(0, 1 << bits, 3000).astype(np.uint8)
         assert np.array_equal(
-            mm._g72x_decode_ref(allc, law), mm.g72x_decode(allc, law)
+            ref._g72x_decode_ref(allc, law), mm.g72x_decode(allc, law)
         )
         # long constant-code runs: a sustained same-sign stream drives
         # the zero taps to their ceiling (an = 2^13, or 2^14 at 40 kbit/s)
@@ -6348,7 +6319,7 @@ def test_g72x_inlined_loop_matches_spec_blocks():
         for c in (1, (1 << (bits - 1)) - 1, mask - 1):
             run = np.full(20000, c, np.uint8)
             assert np.array_equal(
-                mm._g72x_decode_ref(run, law), mm.g72x_decode(run, law)
+                ref._g72x_decode_ref(run, law), mm.g72x_decode(run, law)
             )
     # the packed FMULT table agrees with the inline decomposition
     for anmag in (0, 1, 31, 32, 63, 64, 4095, 8191, 8192, 16383, 16384):
@@ -6367,7 +6338,8 @@ def test_g722_block4_unrolled_matches_ref():
     adversarial difference values."""
     import random
 
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import g72x as mm
+    from tests import codec_reference as ref
 
     rng = random.Random(7)
     for det0 in (32, 8):
@@ -6379,7 +6351,7 @@ def test_g722_block4_unrolled_matches_ref():
                  rng.randint(-20456, 20456)]
             )
             mm._g722_block4(b1, d)
-            mm._g722_block4_ref(b2, d)
+            ref._g722_block4_ref(b2, d)
             s1 = (b1.s, b1.sp, b1.sz, list(b1.r), list(b1.p), list(b1.a),
                   list(b1.b), list(b1.d), b1.nb, b1.det)
             s2 = (b2.s, b2.sp, b2.sz, list(b2.r), list(b2.p), list(b2.a),
@@ -6393,7 +6365,7 @@ def test_mp3_sign_fold_lut_census():
     reads on every slot of every valid table_select, and only folds
     where the escape path cannot fire (no x/y == 15 when the table has
     linbits) and the code plus its sign bits fit the peek."""
-    from input_data_pipeline_spark.operators import multimodal as mm
+    from input_data_pipeline_spark.codecs import mpeg as mm
 
     tsels = sorted(
         set(list(mm._MP3_HUFF_DEC) + list(mm._MP3_TABLE_ALIAS)) - {4, 14}

@@ -716,7 +716,7 @@ def test_bitwriter_write_codes_matches_sequential_writes():
     alignments."""
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import _BitWriter
+    from input_data_pipeline_spark.codecs.bits import _BitWriter
 
     rng = random.Random(1712)
     for trial in range(25):
@@ -743,7 +743,7 @@ def test_vorbis_peek8_lut_matches_tree_walk():
     iff exactly one codeword of length <= 8 prefixes the peek's
     LSB-first bit sequence, else it is None (longer-codeword or
     invalid paths fall back to the per-bit walk)."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.ogg import (
         _VBitsW,
         _VorbisBook,
         _VBits,
@@ -793,6 +793,6 @@ def test_vorbis_peek8_lut_matches_tree_walk():
 
 
 def _ilog(x: int) -> int:
-    from input_data_pipeline_spark.operators.multimodal import _vilog
+    from input_data_pipeline_spark.codecs.ogg import _vilog
 
     return _vilog(x)

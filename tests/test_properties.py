@@ -293,7 +293,7 @@ def test_bmp_encode_decode_roundtrip(w, h, bpp, top_down, seed):
     size/depth/orientation (encode pads rows to 4 bytes; decode de-pads)."""
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
     from tests.test_multimodal import make_bmp
 
     rng = random.Random(seed)
@@ -318,7 +318,7 @@ def test_png_encode_decode_roundtrip(w, h, alpha, seed):
     up, average, paeth) is exercised against random pixels."""
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
     from tests.test_multimodal import make_png
 
     rng = random.Random(seed)
@@ -350,7 +350,7 @@ def test_gif_encode_decode_roundtrip(w, h, n_colors, interlace, transparent, see
     interlace inversion and the BGRA alpha face)."""
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
     from tests.test_multimodal import make_gif
 
     rng = random.Random(seed)
@@ -384,12 +384,12 @@ def test_engine_encoders_roundtrip_through_engine_decoders(w, h, seed):
     this property checks the engine compressor against it."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        decode_media,
+    from input_data_pipeline_spark.codecs.image import (
         encode_bmp,
         encode_gif,
         encode_png,
     )
+    from input_data_pipeline_spark.codecs.route import decode_media
 
     rng = np.random.RandomState(seed % 2**32)
     plane = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
@@ -415,7 +415,7 @@ def test_jpeg_encode_decode_roundtrip_within_dct_budget(w, h, color, ri, seed):
     blocks and RST handling all exercised."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
     from tests.test_multimodal import make_jpeg
 
     rng = np.random.default_rng(seed)
@@ -451,7 +451,7 @@ def test_progressive_jpeg_equals_baseline(w, h, color, quant, seed):
     progressive scan kind agrees with the sequential path exactly."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import decode_media
+    from input_data_pipeline_spark.codecs.route import decode_media
     from tests.test_multimodal import make_jpeg, make_progressive_jpeg
 
     rng = np.random.default_rng(seed)
@@ -608,9 +608,7 @@ def test_ima_adpcm_decode_matches_audioop_for_any_signal(pcm, pred0, index0):
 
     audioop = pytest.importorskip("audioop")
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _ima_adpcm_decode_block,
-    )
+    from input_data_pipeline_spark.codecs.wav import _ima_adpcm_decode_block
 
     sig = np.asarray(pcm[: len(pcm) - len(pcm) % 2], dtype="<i2")
     packed, _ = audioop.lin2adpcm(sig.tobytes(), 2, (pred0, index0))
@@ -637,12 +635,12 @@ def test_dhash56_is_codec_invariant_and_matches_reference(w, h, seed):
     (floor-map 8x8 downsample, row-major adjacent comparisons)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        dhash56,
+    from input_data_pipeline_spark.codecs.image import (
         encode_bmp,
         encode_gif,
         encode_png,
     )
+    from input_data_pipeline_spark.operators.multimodal import dhash56
 
     rng = np.random.RandomState(seed)
     gray = rng.randint(0, 256, (h, w)).astype(np.uint8)
@@ -686,10 +684,7 @@ def test_flac_encode_decode_roundtrip(data, block_size, po, escape, verbatim):
     example, so this also fuzzes the checksum plumbing."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_flac,
-        encode_flac,
-    )
+    from input_data_pipeline_spark.codecs.flac import _decode_flac, encode_flac
 
     sig = np.array(data, dtype=np.int16)
     blob = encode_flac(
@@ -737,7 +732,7 @@ def test_mp3_probe_matches_spec_for_any_frame_sequence(
     tail) the probe recovers the exact frame count, sample count,
     per-frame-sum duration, mean bitrate, and VBR verdict from the
     closed-form spec."""
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _MP3_KBPS,
         _MP3_RATES,
         _MP3_SAMPLES_PER_FRAME,
@@ -783,10 +778,7 @@ def test_flac_stereo_roundtrip_all_assignments(data, mode, block_size, lpc):
     exercise the widened width), with FIXED and LPC predictors."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_flac,
-        encode_flac,
-    )
+    from input_data_pipeline_spark.codecs.flac import _decode_flac, encode_flac
 
     sig = np.array(data, dtype=np.int16)
     blob = encode_flac(
@@ -823,7 +815,7 @@ def test_mp3_l3_entropy_layer_roundtrip(seeds, use_crc, use_reservoir, bitrate_i
     on every example."""
     import random
 
-    from input_data_pipeline_spark.operators.multimodal import (
+    from input_data_pipeline_spark.codecs.mpeg import (
         _decode_mp3_l3,
         encode_mp3_l3,
     )
@@ -876,10 +868,7 @@ def test_tiff_roundtrip_any_geometry(w, h, seed, big_endian, compression, rps):
     (including a short last strip and rps > h)."""
     import numpy as np
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _decode_tiff,
-        encode_tiff,
-    )
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
 
     rng = np.random.default_rng(seed)
     # mix random noise with flat runs so PackBits exercises both op kinds

@@ -1388,8 +1388,8 @@ def test_stream_media_probe_matches_batch(spark, tmp_path):
     container='error' row instead of killing the micro-batch."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.avi import encode_avi
     from input_data_pipeline_spark.operators.multimodal import (
-        encode_avi,
         extract_video_metadata,
     )
     from input_data_pipeline_spark.streaming.pipelines import (
@@ -1537,12 +1537,14 @@ def test_stream_image_dedup_drops_reencodes_and_routes_errors(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        _dh_pixels,
-        dhash56,
+    from input_data_pipeline_spark.codecs.image import (
         encode_bmp,
         encode_gif,
         encode_png,
+    )
+    from input_data_pipeline_spark.operators.multimodal import (
+        _dh_pixels,
+        dhash56,
     )
     from input_data_pipeline_spark.streaming.pipelines import (
         run_to_memory,
@@ -1678,10 +1680,12 @@ def test_stream_audio_dedup_keys_on_decoded_content(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from input_data_pipeline_spark.operators.multimodal import (
-        audio_content_key,
+    from input_data_pipeline_spark.codecs.wav import (
         encode_wav,
         encode_wav_codes,
+    )
+    from input_data_pipeline_spark.operators.multimodal import (
+        audio_content_key,
     )
     from input_data_pipeline_spark.streaming.pipelines import (
         run_to_memory,
@@ -1757,11 +1761,11 @@ def test_stream_audio_dedup_robust_mode_folds_lossy_re_encodes(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3_l3
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
         audio_content_key,
-        encode_mp3_l3,
-        decode_media,
-        encode_wav,
     )
     from input_data_pipeline_spark.streaming.pipelines import (
         run_to_memory,
@@ -1838,9 +1842,9 @@ def test_stream_audio_probe_matches_batch(spark, tmp_path):
     micro-batch."""
     import numpy as np
 
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3
+    from input_data_pipeline_spark.codecs.wav import encode_wav
     from input_data_pipeline_spark.operators.multimodal import (
-        encode_mp3,
-        encode_wav,
         extract_audio_metadata,
     )
     from input_data_pipeline_spark.streaming.pipelines import (
