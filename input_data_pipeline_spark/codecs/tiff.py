@@ -466,10 +466,14 @@ def _decode_tiff(payload: bytes) -> dict:
         e = ">"
     else:
         raise ValueError("not a TIFF payload (missing II*/MM* magic)")
+    if len(payload) < 8:
+        raise ValueError("truncated TIFF header")
     (ifd_off,) = struct.unpack_from(e + "I", payload, 4)
     if ifd_off + 2 > len(payload):
         raise ValueError("truncated TIFF: IFD offset past payload")
     (n_tags,) = struct.unpack_from(e + "H", payload, ifd_off)
+    if ifd_off + 2 + 12 * n_tags > len(payload):
+        raise ValueError("truncated TIFF: IFD entry table past payload")
     # tag id -> (type, count, scalar value, offset of the 4-byte value slot)
     tags: dict[int, tuple[int, int, int, int]] = {}
     for t in range(n_tags):
@@ -489,6 +493,8 @@ def _decode_tiff(payload: bytes) -> dict:
         # TIFF 6.0 packs arrays INLINE in the 4-byte value slot when they
         # fit (SHORT x2); only larger arrays live out-of-line at `value`
         base = slot if count * size <= 4 else value
+        if base + count * size > len(payload):
+            raise ValueError(f"truncated TIFF: tag {tid} array past payload")
         return [
             struct.unpack_from(fmt, payload, base + i * size)[0]
             for i in range(count)

@@ -845,8 +845,11 @@ def _sql_floor_div(s: str, n: str) -> str:
     Spark ``DIV`` — so plain ``//`` is NOT floor for negative sums. Adding
     the positive remainder first makes the numerator exactly divisible, at
     which point truncation and floor agree in every engine (and in Python's
-    ``//``, which the driver-side centroid update uses)."""
-    return f"((({s}) - ((({s}) % ({n})) + ({n})) % ({n})) // ({n}))"
+    ``//``, which the driver-side centroid update uses). The numerator is
+    cast to BIGINT first: DuckDB types a literal like -1610612740 as INT32,
+    and the subtraction would overflow INT32."""
+    s = f"CAST(({s}) AS BIGINT)"
+    return f"(({s} - (({s} % ({n})) + ({n})) % ({n})) // ({n}))"
 
 
 # Training CTE chain (seeds -> one Lloyd update -> centroids c1), shared

@@ -1103,60 +1103,46 @@ def bloom_totals(spark: SparkSession, state_dir: str) -> DataFrame:
 def stream_curation_gate(
     docs: DataFrame, accepted_dir: str, ledger_dir: str, checkpoint_dir: str
 ):
-    """Ingest-time curation gate: every micro-batch passes through the
-    BATCH funnel's stage 1-2 semantics (shared expression helper
-    ``operators/curation.funnel_stage_flags`` — min-length + quality
-    score, identical constants) and stage-3 exact dedup against a
-    cross-batch fingerprint LEDGER (parquet, batch-id stamped): within a
-    batch the smallest doc_id per fingerprint wins; across batches the
-    ledger anti-join drops anything any earlier batch accepted. Accepted
-    rows append to ``accepted_dir``; their fingerprints append to the
-    ledger.
+    """Ingest-time curation gate. Each micro-batch applies the batch
+    funnel's stage 1-2 flags (``operators/curation.funnel_stage_flags``),
+    keeps the smallest doc_id per fingerprint, drops fingerprints already
+    in ``accepted_dir`` by a left-anti join, and appends the rest, stamped
+    with the batch id, to ``accepted_dir``. That is one write job of 3
+    stages: the window shuffle, a broadcast of the accepted-dir scan
+    (declared ``fp string`` schema: it reads only ``fp`` and infers
+    nothing) and the write. ``ledger_dir`` is no longer read or written.
 
-    Replay safety: the content-keyed ledger anti-join is the only guard.
-    A replayed batch re-reads the same rows, and once its ledger write
-    landed the ledger holds every stage-2 fingerprint it could accept,
-    so nothing passes again; a partly written ledger is repaired rather
-    than skipped. There is no batch-id check: a fresh checkpoint restarts
-    at batch id 0, and new documents in it must still be accepted. If a
-    crash lands between the accepted write and the ledger write, the
-    replayed batch re-appends accepted rows — which is why
-    ``accepted_docs`` deduplicates by doc_id on read (min batch_id wins),
-    the same merge-on-read discipline as the sketch ledgers. State per
-    batch is one fingerprint row per accepted doc — the ledger grows with
-    the ACCEPTED corpus, not the raw stream. The ledger is read with a
-    declared schema, so a micro-batch runs no schema-inference job."""
+    Replay safety: the content-keyed anti-join is the only guard. A
+    replayed batch finds its own committed rows in ``accepted_dir``, so
+    nothing passes twice, and a partly committed write is completed. There
+    is no batch-id check: a fresh checkpoint restarts at batch 0 and must
+    still accept new documents.
+
+    The probe has no join hint. Spark sizes it from whole files, text
+    included (about 200 B per accepted doc at sf0.1), so it plans as a
+    broadcast below ``spark.sql.autoBroadcastJoinThreshold`` (64 MB in
+    ``get_spark``: about 340k docs). Above that, AQE re-broadcasts the
+    measured fp-only shuffle (about 80 B per doc) up to about 840k docs,
+    one stage more per batch; past that the join stays shuffled."""
     from pyspark.sql import Window
 
     from input_data_pipeline_spark.operators.curation import funnel_stage_flags
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        # Only the expected missing-ledger (first batch) case is swallowed,
-        # and only as AnalysisException: a transient IO failure on the
-        # ledger read must FAIL the batch (foreachBatch retries it), not
-        # silently disable cross-batch dedup — a swallowed `seen` read
-        # would permanently accept duplicate-content docs, since
-        # accepted_docs dedups by doc_id, not fp.
-        from pyspark.errors import AnalysisException
-
-        spark = batch_df.sparkSession
-        flags = funnel_stage_flags(batch_df).filter("f2")
         w = Window.partitionBy("fp").orderBy("doc_id")
         firsts = (
-            flags.withColumn("_rn", F.row_number().over(w))
+            funnel_stage_flags(batch_df).filter("f2")
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
         )
         try:
-            seen = spark.read.schema("fp string").parquet(ledger_dir)
+            seen = batch_df.sparkSession.read.schema("fp string").parquet(accepted_dir)
             fresh = firsts.join(seen, "fp", "left_anti")
-        except AnalysisException:  # first batch only; IO errors propagate
+        except AnalysisException:  # no accepted dir yet; IO errors propagate
             fresh = firsts
-        accepted = fresh.select(
-            "doc_id", "ts", "text", "lang", "source", "fp"
-        ).withColumn("batch_id", F.lit(batch_id))
-        accepted.write.mode("append").parquet(accepted_dir)
-        accepted.select("fp", "batch_id").write.mode("append").parquet(ledger_dir)
+        fresh.select("doc_id", "ts", "text", "lang", "source", "fp").withColumn(
+            "batch_id", F.lit(batch_id)
+        ).write.mode("append").parquet(accepted_dir)
 
     return (
         docs.writeStream.foreachBatch(gate)
@@ -1166,8 +1152,9 @@ def stream_curation_gate(
 
 
 def accepted_docs(spark: SparkSession, accepted_dir: str) -> DataFrame:
-    """Merge-on-read view of the gated corpus: duplicate doc_ids from a
-    crash-replay race collapse to their first acceptance (min batch_id)."""
+    """Merge-on-read view of the gated corpus: a doc_id accepted twice
+    (re-streamed later with new text, so a new fingerprint) collapses to
+    its first acceptance (min batch_id)."""
     from pyspark.sql import Window
 
     df = spark.read.parquet(accepted_dir)

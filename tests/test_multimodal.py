@@ -2840,6 +2840,36 @@ def test_tiff_rejects_malformed_structures():
         _decode_tiff(bytes(bad2))
 
 
+def test_tiff_truncated_ifd_and_tag_array_raise_value_error():
+    """A G4 file cut inside its IFD entry table, or whose out-of-line tag
+    array ends past the payload, raises ValueError, not struct.error."""
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff_g4
+
+    bm = (np.arange(96).reshape(8, 12) % 3 == 0).astype(np.uint8)
+    for e, big in (("<", False), (">", True)):
+        blob = encode_tiff_g4(bm, big_endian=big)
+        ifd_off = struct.unpack_from(e + "I", blob, 4)[0]
+        n_tags = struct.unpack_from(e + "H", blob, ifd_off)[0]
+        # every cut inside the header or entry table, incl. mid-entry
+        for cut in range(4, ifd_off + 2 + 12 * n_tags):
+            with pytest.raises(ValueError, match="truncated"):
+                _decode_tiff(blob[:cut])
+        # BitsPerSample as 3 SHORTs (6 bytes: out of line) whose array
+        # starts 4 bytes before the end of the payload
+        bad = bytearray(blob)
+        for t in range(n_tags):
+            off = ifd_off + 2 + 12 * t
+            if struct.unpack_from(e + "H", bad, off)[0] == 258:
+                struct.pack_into(e + "HHII", bad, off, 258, 3, 3, len(bad) - 4)
+        with pytest.raises(ValueError, match="tag 258 array past payload"):
+            _decode_tiff(bytes(bad))
+
+
 def test_tiff_lzw_width_growth_and_predictor_seam():
     """An LZW strip big enough to cross the 9->10-bit early-change
     boundary round-trips (the libtiff encoder/decoder asymmetry), and the

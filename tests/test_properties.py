@@ -4,7 +4,7 @@ always found; utterance segmentation invariants hold for arbitrary buffers."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from input_data_pipeline_spark.streaming.stateful import _segments_from
 
@@ -154,6 +154,7 @@ def test_rep_stats_matches_naive_reference(toks, sep):
     a=st.integers(min_value=-(10**17), max_value=10**17),
     b=st.integers(min_value=-(10**9), max_value=10**9).filter(lambda x: x != 0),
 )
+@example(a=-1_610_612_740, b=536_870_913)
 @settings(max_examples=60, deadline=None)
 def test_integer_division_semantics_match_duckdb(a, b):
     """The cross-engine arithmetic contract under every round-6 operator:

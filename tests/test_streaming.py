@@ -885,12 +885,12 @@ def _sync_stage_ids(spark) -> dict[int, str]:
 
 
 def test_stream_curation_gate_stage_budget(spark, sf_dir, tmp_path):
-    """Each micro-batch after the first runs 6 Spark stages: per output
-    (accepted rows, ledger rows) one shuffle-map stage for the first-wins
-    window, one broadcast of the ledger scan and one write stage. The
-    ledger is read with a declared schema and probed by the anti-join
-    alone, so there is no batch-id job, no schema-inference job and no
-    distinct() shuffle."""
+    """Each micro-batch after the first runs 3 Spark stages in its one
+    write job: one shuffle-map stage for the first-wins window, one
+    broadcast of the fp-only accepted-dir scan and one write stage. The
+    first batch has no accepted dir to probe, so it runs 2. Every batch
+    reads its source file once: the query's input rows equal the file's
+    rows."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rows = _doc_rows(docs)
     src = tmp_path / "gate_in"
@@ -902,7 +902,7 @@ def test_stream_curation_gate_stage_budget(spark, sf_dir, tmp_path):
     parts = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
 
     q = start(str(tmp_path / "gate_ckpt"))
-    per_batch = []
+    per_batch, input_rows = [], []
     try:
         for i, part in enumerate(parts):
             before = set(_sync_stage_ids(spark))
@@ -912,9 +912,62 @@ def test_stream_curation_gate_stage_budget(spark, sf_dir, tmp_path):
             per_batch.append(
                 sum(1 for s, st in after.items() if s not in before and st != "SKIPPED")
             )
+            input_rows.append(q.lastProgress["numInputRows"])
     finally:
         q.stop()
-    assert per_batch[1:] == [6, 6], per_batch
+    assert per_batch == [2, 3, 3], per_batch
+    assert input_rows == [len(p) for p in parts], input_rows
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """Execution id -> physical-plan text of every SQL execution the
+    status store holds (an AQE execution carries its final plan)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        e.executionId(): e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+    }
+
+
+def test_stream_curation_gate_probe_plan_sf01(spark, tmp_path):
+    """At sf0.1 the second batch's write probes the accepted dir with a
+    broadcast left-anti join whose parquet scan reads only ``fp``, not
+    the accepted rows' text."""
+    from input_data_pipeline_spark.session import DEFAULT_SF_DIR
+
+    docs = spark.read.parquet(f"{DEFAULT_SF_DIR}/documents.parquet")
+    rows = _doc_rows(docs)
+    src = tmp_path / "gate_in"
+    src.mkdir()
+    acc = str(tmp_path / "gate_accepted")
+    start = _gate_starter(spark, src, acc, str(tmp_path / "gate_ledger"))
+    half = len(rows) // 2
+
+    q = start(str(tmp_path / "gate_ckpt"))
+    try:
+        _write_events(src, "a.jsonl", rows[:half])
+        q.processAllAvailable()
+        seen = set(_sql_plans(spark))
+        _write_events(src, "b.jsonl", rows[half:])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    writes = [
+        p for i, p in _sql_plans(spark).items()
+        if i not in seen and "InsertIntoHadoopFsRelationCommand" in p
+    ]
+    assert len(writes) == 1, len(writes)
+    final = writes[0].split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin LeftAnti BuildRight" in final, final
+    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
+    scans = [
+        b for b in writes[0].split("\n\n")
+        if "Scan parquet" in b.partition("\n")[0] and acc in b
+    ]
+    assert scans, writes[0]
+    assert all("ReadSchema: struct<fp:string>" in b for b in scans), scans
 
 
 def test_stream_histogram_update_parity_and_replay(spark, sf_dir, tmp_path):
