@@ -462,15 +462,32 @@ def _fax_row_2d(fb: "_FaxBits", ref: list[int], width: int) -> list[int]:
     return row
 
 
+# Largest bitmap the CCITT decoders allocate, after Pillow's
+# Image.MAX_IMAGE_PIXELS: the canvas and the reference row are sized from
+# TIFF tags, so a flipped width or height must fail by name rather than
+# as a MemoryError or an OOM kill.
+_FAX_MAX_PIXELS = 89_478_485
+
+
+def _fax_canvas(width: int, height: int):
+    """The zeroed (height, width) uint8 bitmap a CCITT decoder fills,
+    refused when it (or one reference row) exceeds _FAX_MAX_PIXELS."""
+    import numpy as np
+
+    if width * max(height, 1) > _FAX_MAX_PIXELS:
+        raise ValueError(
+            f"fax canvas {width}x{height} exceeds {_FAX_MAX_PIXELS} pixels"
+        )
+    return np.zeros((height, width), np.uint8)
+
+
 def _g4_decode(data: bytes, width: int, height: int):
     """ITU-T T.6 decoder: MSB-first bit stream, per-row 2D modes against
     the previous row, T.4 run alphabets inside horizontal mode. Raises
     by name on any unrecognized code (never guesses). Returns a
     height x width numpy uint8 bitmap (1 = black)."""
-    import numpy as np
-
     fb = _FaxBits(data)
-    out = np.zeros((height, width), np.uint8)
+    out = _fax_canvas(width, height)
     ref = [0] * width
     for y in range(height):
         row = _fax_row_2d(fb, ref, width)
@@ -484,10 +501,8 @@ def _g3_decode(data: bytes, width: int, height: int, two_d: bool):
     preceded by an EOL (fill zeros tolerated); with the 2D option each
     EOL carries a tag bit selecting 1D or 2D coding for the next row.
     Raises by name; never guesses."""
-    import numpy as np
-
     fb = _FaxBits(data)
-    out = np.zeros((height, width), np.uint8)
+    out = _fax_canvas(width, height)
     ref = [0] * width
     for y in range(height):
         fb.eol()
@@ -518,10 +533,8 @@ def _mh_decode(data: bytes, width: int, height: int):
     """CCITT Modified Huffman decoder: per byte-aligned row, alternating
     white/black T.4 runs until the row is exactly filled. Raises by name
     on invalid codes or overrun rows; never guesses."""
-    import numpy as np
-
     fb = _FaxBits(data)
-    out = np.zeros((height, width), np.uint8)
+    out = _fax_canvas(width, height)
     for y in range(height):
         out[y] = _fax_row_1d(fb, width)
         fb.align()  # rows are byte-aligned

@@ -451,14 +451,20 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
     import io
     import wave
 
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        return {
-            "n_channels": wf.getnchannels(),
-            "sample_width": wf.getsampwidth(),
-            "frame_rate": wf.getframerate(),
-            "n_frames": wf.getnframes(),
-            "pcm": wf.readframes(wf.getnframes()),
-        }
+    # stdlib wave reports a malformed or unrecognised payload as
+    # wave.Error, RuntimeError (its chunk seek) or EOFError; the decode
+    # contract raises ValueError so callers route it as a bad payload
+    try:
+        with wave.open(io.BytesIO(payload), "rb") as wf:
+            return {
+                "n_channels": wf.getnchannels(),
+                "sample_width": wf.getsampwidth(),
+                "frame_rate": wf.getframerate(),
+                "n_frames": wf.getnframes(),
+                "pcm": wf.readframes(wf.getnframes()),
+            }
+    except (wave.Error, RuntimeError, EOFError) as e:
+        raise ValueError(f"undecodable audio payload: {e}") from e
 
 
 def probe_audio(payload: bytes) -> dict:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from input_data_pipeline_spark.functions import text as T
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import fan_out, load_table, materialize
+from input_data_pipeline_spark.tables import corpus_cached, fan_out, load_table
 
 from input_data_pipeline_spark.functions.text import (
     DUCK_TOKENS as _DUCK_TOKENS,
@@ -43,9 +43,6 @@ _DUCK_SH5 = (
 )
 
 
-_TOKEN_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def corpus_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared exploded token index ``(doc_id, source, pos, tok)``, built and
     persisted ONCE per (session, corpus) and reused by the corpus-hygiene
@@ -60,13 +57,12 @@ def corpus_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned by every hygiene pass (the cross-query promotion of the
     localCheckpointed per-run index inside ``contamination_overlap``).
     MEMORY_AND_DISK so an index bigger than executor memory degrades to
-    local spill, never OOM.
+    local spill, never OOM. Held in the session cache
+    (``tables.corpus_cached``): ``invalidate_table_cache`` drops it.
     """
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOKEN_INDEX_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         # fan_out BEFORE tokenizing: the test-scale corpus arrives as one
         # parquet split, which would run the tokenize+posexplode serially on
         # one core (measured: index build 4.9 s → 1.4 s at sf0.1). At scale
@@ -78,11 +74,11 @@ def corpus_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # analogue is a doc_id-bucketed parquet index, where the bucketing
         # cost is paid once per snapshot, not per session.
         docs = fan_out(load_table(spark, sf_dir, "documents"))
-        df = docs.select(
+        return docs.select(
             "doc_id", "source", F.posexplode(T.tokens("text")).alias("pos", "tok")
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        _TOKEN_INDEX_CACHE[key] = df
-    return df
+
+    return corpus_cached(spark, sf_dir, "token_index", build)
 
 
 def _kgrams_map_only(docs: DataFrame, k: int) -> DataFrame:
@@ -303,7 +299,7 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization Spark re-runs the explode→distinct→df-filter pipeline
     # once per consumer (~4 passes measured). The narrow (doc_id, sh)
     # projection is what materializes.
-    shr = materialize(sh.join(rare, "sh"))
+    shr = sh.join(rare, "sh").localCheckpoint(eager=False)
     ev = shr.filter(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("eval_doc"), "sh"
     )

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from input_data_pipeline_spark.functions.stable import round_micros
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import load_table
+from input_data_pipeline_spark.tables import corpus_cached, load_table
 
 DIM = 64
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -918,31 +918,6 @@ ORDER BY a2.cid
 """
 
 
-# Per-(applicationId, corpus-dir) caches for the quantized-vector frame and
-# the trained centroids. ASSUMPTION (documented contract): a corpus path is
-# immutable within one Spark application — re-writing the parquet under the
-# same path in the same session would serve stale centroids. Regenerating
-# data mid-session requires ``reset_kmeans_caches(spark)`` (or a new path).
-# Bounded: at most _KMEANS_CACHE_MAX corpora stay persisted; older entries
-# are unpersisted and evicted FIFO so a long-lived session touching many
-# corpus dirs cannot accumulate executor storage.
-_KMEANS_CACHE_MAX = 4
-_KMEANS_QVEC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def reset_kmeans_caches(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop all cached quantized-vector frames and trained
-    centroids (for the whole process, or only ``spark``'s application if
-    given). Call after regenerating a corpus under an already-used path."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_KMEANS_QVEC_CACHE):
-        if app is None or key[0] == app:
-            _KMEANS_QVEC_CACHE.pop(key).unpersist()
-    for key in list(_KMEANS_TRAIN_CACHE):
-        if app is None or key[0] == app:
-            del _KMEANS_TRAIN_CACHE[key]
-
-
 def _kmeans_qvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with each component quantized to integer micros,
     persisted once per (session, corpus) — Lloyd makes three passes over
@@ -954,14 +929,14 @@ def _kmeans_qvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     every downstream distance/centroid computation is exact BIGINT
     arithmetic — order-independent, hence comparable across engines.
     Bounds: |component| < 1 → |q| < 1e6, squared diff < 4e12, 64-dim
-    distance < 2.6e14, all comfortably inside long range."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _KMEANS_QVEC_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
+    distance < 2.6e14, all comfortably inside long range. Held in the
+    session cache (``tables.corpus_cached``) like the centroids of
+    :func:`_kmeans_train`; ``invalidate_table_cache`` drops both."""
+    from pyspark import StorageLevel
 
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
-        df = emb.select(
+        return emb.select(
             "vec_id",
             "label",
             F.transform(
@@ -969,12 +944,8 @@ def _kmeans_qvec(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: F.round(x.cast("double") * F.lit(1_000_000)).cast("long"),
             ).alias("q"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        while len(_KMEANS_QVEC_CACHE) >= _KMEANS_CACHE_MAX:
-            old = next(iter(_KMEANS_QVEC_CACHE))
-            _KMEANS_QVEC_CACHE.pop(old).unpersist()
-            _KMEANS_TRAIN_CACHE.pop(old, None)
-        _KMEANS_QVEC_CACHE[key] = df
-    return df
+
+    return corpus_cached(spark, sf_dir, "kmeans_qvec", build)
 
 
 # Above this K*dim, nearest-centroid assignment switches from plan-literal
@@ -1086,9 +1057,6 @@ def _kmeans_assign_np(qv: DataFrame, centroids: list[tuple[int, list[int]]]) -> 
     )
 
 
-_KMEANS_TRAIN_CACHE: dict[tuple[str, str], list[tuple[int, list[int]]]] = {}
-
-
 def _kmeans_train(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
     """One Lloyd update from the deterministic md5 seeds: the trained
     coarse quantizer C1 shared by ``kmeans_embedding_clusters`` (which
@@ -1098,30 +1066,28 @@ def _kmeans_train(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]
     four queries would otherwise re-run the identical two training jobs.
     Driver state is K×(dim+1) longs; Python ``//`` is floor division,
     matching the oracle's floor-div fragment exactly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KMEANS_TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    qv = _kmeans_qvec(spark, sf_dir)
-    seeds = (
-        qv.select(F.md5(F.col("vec_id").cast("string")).alias("h"), "vec_id", "q")
-        .orderBy("h", "vec_id")
-        .limit(KMEANS_K)
-        .collect()
-    )
-    c0 = [(i + 1, list(r["q"])) for i, r in enumerate(seeds)]
 
-    a1 = _kmeans_assign(qv, c0)
-    sums = a1.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(DIM)],
-    ).collect()
-    c1 = [
-        (r["cid"], [r[f"s{i}"] // r["n"] for i in range(DIM)])
-        for r in sorted(sums, key=lambda r: r["cid"])
-    ]
-    _KMEANS_TRAIN_CACHE[key] = c1
-    return c1
+    def build() -> list[tuple[int, list[int]]]:
+        qv = _kmeans_qvec(spark, sf_dir)
+        seeds = (
+            qv.select(F.md5(F.col("vec_id").cast("string")).alias("h"), "vec_id", "q")
+            .orderBy("h", "vec_id")
+            .limit(KMEANS_K)
+            .collect()
+        )
+        c0 = [(i + 1, list(r["q"])) for i, r in enumerate(seeds)]
+
+        a1 = _kmeans_assign(qv, c0)
+        sums = a1.groupBy("cid").agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(DIM)],
+        ).collect()
+        return [
+            (r["cid"], [r[f"s{i}"] // r["n"] for i in range(DIM)])
+            for r in sorted(sums, key=lambda r: r["cid"])
+        ]
+
+    return corpus_cached(spark, sf_dir, "kmeans_train", build)
 
 
 @register("kmeans_embedding_clusters", oracle=_DUCK_KMEANS_ORACLE)

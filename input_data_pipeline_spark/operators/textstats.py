@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from input_data_pipeline_spark.functions import text as T
 from input_data_pipeline_spark.functions.stable import round_micros
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import load_table, materialize
+from input_data_pipeline_spark.tables import load_table
 
 from input_data_pipeline_spark.functions.text import (
     DUCK_TOKENS as _DUCK_TOKENS,
@@ -1972,13 +1972,11 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once (round 17): the stats reduce and the scorer
     # both consume per_doc, and without the checkpoint each leg
     # re-executes the corpus tokenize+groupBy (2 tokenizes -> 1).
-    per_doc = materialize(
-        tok.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("dl"),
-            *[F.sum(F.when(F.col("token") == q, 1).otherwise(0))
-              .alias(f"tf{i}") for i, q in enumerate(BM25_QUERY)],
-        ),
-    )
+    per_doc = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("dl"),
+        *[F.sum(F.when(F.col("token") == q, 1).otherwise(0))
+          .alias(f"tf{i}") for i, q in enumerate(BM25_QUERY)],
+    ).localCheckpoint(eager=False)
     n_docs_df = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     stats = per_doc.agg(
         F.sum("dl").alias("sum_dl"),

@@ -1,6 +1,7 @@
 """Contracts of the ``codecs`` package: its import layering, the
-structural self-checks of its embedded spec tables, and the names the
-benchmark's kernel timer reads through ``operators.multimodal``."""
+structural self-checks of its embedded spec tables, the names the
+benchmark's kernel timer reads through ``operators.multimodal``, and
+malformed input failing as ``ValueError``."""
 
 from __future__ import annotations
 
@@ -80,3 +81,65 @@ def test_perfbench_kernels_time_every_codec():
     ms = kernel_ms_per_doc(0)
     assert sorted(ms) == sorted(KERNELS) and len(ms) == 6
     assert all(v > 0 for v in ms.values()), ms
+
+
+def test_decode_media_reports_malformed_wav_as_valueerror():
+    """The stdlib ``wave`` fallthrough of ``decode_media`` re-raises
+    wave's errors as ValueError chained to the original, so the decode
+    gates' error routing catches them: non-media bytes (wave.Error), a
+    30-byte truncated WAV (EOFError) and a WAV whose fmt chunk size is
+    flipped (RuntimeError from wave's chunk seek)."""
+    import wave
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav
+
+    wav = encode_wav(np.arange(4000, dtype=np.int16))
+    flipped = bytearray(wav)
+    flipped[16:20] = b"\xff\xff\xff\x7f"  # the fmt chunk's size field
+    cases = [
+        (b"hello world, not media at all", wave.Error),
+        (wav[:30], EOFError),
+        (bytes(flipped), RuntimeError),
+    ]
+    for payload, cause in cases:
+        with pytest.raises(ValueError) as exc:
+            decode_media(payload)
+        assert isinstance(exc.value.__cause__, cause)
+
+
+@pytest.mark.parametrize("compression", [2, 3, 4])
+def test_ccitt_canvas_is_bounded(compression):
+    """A CCITT TIFF whose ImageWidth, ImageLength and RowsPerStrip tags
+    are flipped to 0x7FFFFFFF is refused with ValueError before any
+    bitmap is allocated, through ``decode_media`` and through each
+    decoder directly; the clean file still decodes."""
+    import struct
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs import fax
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff_g4
+
+    bm = (np.arange(8 * 64).reshape(8, 64) % 7 == 0).astype(np.uint8)
+    tiff = encode_tiff_g4(bm, compression=compression)
+    assert decode_media(tiff, "image")["n_pixels"] == 8 * 64
+
+    big = 0x7FFFFFFF
+    flipped = bytearray(tiff)
+    (n_tags,) = struct.unpack_from("<H", flipped, 8)  # IFD at offset 8
+    for off in range(10, 10 + 12 * n_tags, 12):
+        if struct.unpack_from("<H", flipped, off)[0] in (256, 257, 278):
+            struct.pack_into("<I", flipped, off + 8, big)
+    with pytest.raises(ValueError, match="fax canvas"):
+        decode_media(bytes(flipped), "image")
+    decode = {
+        2: lambda: fax._mh_decode(b"", big, big),
+        3: lambda: fax._g3_decode(b"", big, big, False),
+        4: lambda: fax._g4_decode(b"", big, big),
+    }[compression]
+    with pytest.raises(ValueError, match="fax canvas"):
+        decode()

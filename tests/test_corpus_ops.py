@@ -53,15 +53,19 @@ def test_hygiene_queries_share_one_token_index(spark, sf_dir):
     token index; the k-gram miners assemble shingles MAP-SIDE from the
     token array (round 17) — no Window exchange+sort and no index
     dependency in their plans."""
+    from input_data_pipeline_spark import tables
     from input_data_pipeline_spark.operators import corpus
 
-    corpus._TOKEN_INDEX_CACHE.clear()
+    def token_indexes() -> list:
+        return [k for k in tables._TABLE_CACHE if k[2] == "token_index"]
+
+    tables.invalidate_table_cache()
     contam = corpus.contamination_overlap(spark, sf_dir)
     boiler = corpus.corpus_boilerplate_shingles(spark, sf_dir)
     # the k-gram miners must NOT have built (or consumed) the index
-    assert len(corpus._TOKEN_INDEX_CACHE) == 0
+    assert len(token_indexes()) == 0
     oov = corpus.oov_rate_by_source(spark, sf_dir)
-    assert len(corpus._TOKEN_INDEX_CACHE) == 1
+    assert len(token_indexes()) == 1
     plan = oov._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan, plan[:500]
     # map-only shingle assembly: the lead-window k-gram form is gone
@@ -73,6 +77,71 @@ def test_hygiene_queries_share_one_token_index(spark, sf_dir):
     boiler_phys = boiler._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in boiler_phys, boiler_phys[:500]
     oov.collect()
+
+
+def test_invalidate_table_cache_reaches_derived_frames(spark, sf_dir, tmp_path):
+    """Regenerating a corpus and calling ``invalidate_table_cache(d)``
+    refreshes every session-cached value of ``d``, not only the table
+    handles: the token index, the quantized k-means vectors and the
+    trained centroids are rebuilt from the new parquet (they match a
+    fresh directory holding the same data), and the old persisted frames
+    are unpersisted."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from input_data_pipeline_spark.operators.corpus import corpus_token_index
+    from input_data_pipeline_spark.operators.similarity import (
+        _kmeans_qvec,
+        _kmeans_train,
+    )
+    from input_data_pipeline_spark.tables import invalidate_table_cache
+
+    d, fresh = tmp_path / "d", tmp_path / "fresh"
+    d.mkdir()
+    fresh.mkdir()
+    for t in ("documents", "embeddings"):
+        shutil.copy(f"{sf_dir}/{t}.parquet", str(d / f"{t}.parquet"))
+    d, fresh = str(d), str(fresh)
+    old_index = corpus_token_index(spark, d)
+    old_qvec = _kmeans_qvec(spark, d)
+    old_centroids = _kmeans_train(spark, d)
+    n_index, n_vecs = old_index.count(), old_qvec.count()
+
+    for t in ("documents", "embeddings"):
+        tbl = pq.read_table(f"{d}/{t}.parquet")
+        half = tbl.slice(0, tbl.num_rows // 2)
+        pq.write_table(half, f"{d}/{t}.parquet")
+        pq.write_table(half, f"{fresh}/{t}.parquet")
+    invalidate_table_cache(d)
+
+    assert old_index.storageLevel.useMemory is False
+    assert old_qvec.storageLevel.useMemory is False
+    index = corpus_token_index(spark, d)
+    assert index.count() == corpus_token_index(spark, fresh).count() < n_index
+    assert _kmeans_qvec(spark, d).count() == n_vecs // 2
+    centroids = _kmeans_train(spark, d)
+    assert centroids == _kmeans_train(spark, fresh)
+    assert centroids != old_centroids
+
+
+def test_invalidate_skips_frames_of_a_stopped_application():
+    """A persisted frame cached by an application that has since stopped
+    is dropped without ``unpersist``, which would raise on the stopped
+    context."""
+    from types import SimpleNamespace
+
+    from input_data_pipeline_spark import tables
+
+    def unpersist():
+        raise AssertionError("unpersist on a stopped application")
+
+    stale = SimpleNamespace(
+        is_cached=True, _sc=SimpleNamespace(_jsc=None), unpersist=unpersist
+    )
+    tables._TABLE_CACHE[("stopped-app", "/nowhere", "token_index")] = stale
+    tables.invalidate_table_cache("/nowhere")
+    assert ("stopped-app", "/nowhere", "token_index") not in tables._TABLE_CACHE
 
 
 def test_quality_calibration_deciles_partition_corpus(spark, sf_dir):

@@ -445,32 +445,45 @@ def test_hq_bin_counts_clamps_out_of_range_values(spark):
     assert all(0 <= b < _HQ_BINS for b in got)
 
 
-def test_kmeans_cache_eviction_unpersists(spark, tmp_path):
-    """The per-corpus quantized-vector cache is bounded: exceeding
-    _KMEANS_CACHE_MAX evicts FIFO and unpersists, and reset_kmeans_caches
-    clears everything for the application."""
+def test_kmeans_cache_eviction_unpersists(spark, sf_dir, tmp_path):
+    """The session cache is bounded per corpus: a corpus beyond
+    _CORPUS_CACHE_MAX evicts the oldest FIFO and unpersists its quantized
+    vectors and token index, and invalidate_table_cache clears
+    everything."""
     import shutil
 
+    from input_data_pipeline_spark import tables
     from input_data_pipeline_spark.operators import similarity as S
+    from input_data_pipeline_spark.operators.corpus import corpus_token_index
 
-    src = "/root/testdata/sf0.001/embeddings.parquet"
+    def cached(name: str) -> list:
+        return [k for k in tables._TABLE_CACHE if k[2] == name]
+
     dirs = []
-    for i in range(S._KMEANS_CACHE_MAX + 1):
+    for i in range(tables._CORPUS_CACHE_MAX + 1):
         d = tmp_path / f"c{i}"
         d.mkdir()
-        shutil.copy(src, str(d / "embeddings.parquet"))
+        for t in ("embeddings", "documents"):
+            shutil.copy(f"{sf_dir}/{t}.parquet", str(d / f"{t}.parquet"))
         dirs.append(str(d))
 
-    S.reset_kmeans_caches(spark)
-    frames = [S._kmeans_qvec(spark, d) for d in dirs]
-    assert len(S._KMEANS_QVEC_CACHE) <= S._KMEANS_CACHE_MAX
+    tables.invalidate_table_cache()
+    frames, indexes = [], []
+    for d in dirs:
+        frames.append(S._kmeans_qvec(spark, d))
+        indexes.append(corpus_token_index(spark, d))
+    assert len(cached("kmeans_qvec")) <= tables._CORPUS_CACHE_MAX
+    assert len(cached("token_index")) <= tables._CORPUS_CACHE_MAX
     # the first corpus was evicted AND unpersisted
     assert frames[0].storageLevel.useMemory is False
+    assert indexes[0].storageLevel.useMemory is False
     # the most recent is still cached + persisted
     assert frames[-1].storageLevel.useMemory is True
-    S.reset_kmeans_caches(spark)
-    assert not any(k[0] == spark.sparkContext.applicationId for k in S._KMEANS_QVEC_CACHE)
+    assert indexes[-1].storageLevel.useMemory is True
+    tables.invalidate_table_cache()
+    assert not any(k[0] == spark.sparkContext.applicationId for k in cached("kmeans_qvec"))
     assert frames[-1].storageLevel.useMemory is False
+    assert indexes[-1].storageLevel.useMemory is False
 
 
 def test_freqitems_no_false_negatives_under_any_partitioning(spark, sf_dir):
