@@ -944,6 +944,8 @@ def _ogg_packets(payload: bytes) -> tuple[list[bytes], int]:
     while pos < len(payload):
         if payload[pos: pos + 4] != b"OggS":
             raise ValueError("Ogg page boundary missing OggS capture")
+        if pos + 27 > len(payload):
+            raise ValueError("truncated Ogg page header")
         htype = payload[pos + 5]
         if bool(htype & 0x01) != mid:
             raise ValueError("Ogg continuation flag disagrees with lacing")

@@ -271,7 +271,7 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
         # lapping); Opus stays a named seam — its SILK/CELT layers
         # need spec data tables this repo cannot certify
         n_segs = payload[26] if len(payload) > 26 else 0
-        lace0 = payload[27] if n_segs else 0
+        lace0 = payload[27] if n_segs and len(payload) > 27 else 0
         first = payload[27 + n_segs: 27 + n_segs + lace0]
         if first[:7] == b"\x01vorbis":
             return _decode_vorbis(payload)
@@ -456,12 +456,15 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
     # contract raises ValueError so callers route it as a bad payload
     try:
         with wave.open(io.BytesIO(payload), "rb") as wf:
+            n_channels, width = wf.getnchannels(), wf.getsampwidth()
+            pcm = wf.readframes(wf.getnframes())
+            # the header's frame count can overstate a short data chunk
             return {
-                "n_channels": wf.getnchannels(),
-                "sample_width": wf.getsampwidth(),
+                "n_channels": n_channels,
+                "sample_width": width,
                 "frame_rate": wf.getframerate(),
-                "n_frames": wf.getnframes(),
-                "pcm": wf.readframes(wf.getnframes()),
+                "n_frames": len(pcm) // (n_channels * width),
+                "pcm": pcm,
             }
     except (wave.Error, RuntimeError, EOFError) as e:
         raise ValueError(f"undecodable audio payload: {e}") from e

@@ -962,7 +962,6 @@ def dsir_stream_thresholds(
 
 _FT_BUCKETS = 4096  # hashing-trick feature space — FIXED, never grows
 _FT_TARGET_LANG = "en"
-_FT_SEP = "\t"  # same bigram separator contract as the bigram LM
 
 
 def ft_bucket(feat_col):
@@ -1268,10 +1267,6 @@ _CANON_FIXTURE = [
     ("r8", "https://other.org/page"),
     ("r9", "https://unique.net/solo?a=1&utm_medium=mail&b=2"),
 ]
-
-_CANON_VALUES = ",\n      ".join(
-    "('{}', '{}')".format(rid, u.replace("'", "''")) for rid, u in _CANON_FIXTURE
-)
 
 # Canonicalization pipeline, stated once as (java_pattern, duck_pattern,
 # java_repl, duck_repl) steps applied IN ORDER on both engines. RE2 (DuckDB)

@@ -835,7 +835,6 @@ def pq_reconstruction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KMEANS_K = 8
-KMEANS_ASSIGN_PASSES = 2  # init -> assign -> update -> assign -> report
 
 
 def _sql_floor_div(s: str, n: str) -> str:

@@ -506,12 +506,6 @@ def charngram_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-language sampling rates (percent of each stratum to keep): downsample
-# the dominant language, keep the tail whole — corpus rebalancing for
-# training-data curation.
-STRATUM_RATES = {"en": 25, "zh": 100, "es": 100, "de": 100, "fr": 100}
-
-
 @register(
     "stratified_doc_sample",
     oracle="""

@@ -1103,14 +1103,19 @@ def bloom_totals(spark: SparkSession, state_dir: str) -> DataFrame:
 def stream_curation_gate(
     docs: DataFrame, accepted_dir: str, ledger_dir: str, checkpoint_dir: str
 ):
-    """Ingest-time curation gate. Each micro-batch applies the batch
-    funnel's stage 1-2 flags (``operators/curation.funnel_stage_flags``),
-    keeps the smallest doc_id per fingerprint, drops fingerprints already
-    in ``accepted_dir`` by a left-anti join, and appends the rest, stamped
-    with the batch id, to ``accepted_dir``. That is one write job of 3
-    stages: the window shuffle, a broadcast of the accepted-dir scan
-    (declared ``fp string`` schema: it reads only ``fp`` and infers
-    nothing) and the write. ``ledger_dir`` is no longer read or written.
+    """Ingest-time curation gate. The batch funnel's stage 1-2 flags
+    (``operators/curation.funnel_stage_flags``) and the ``f2`` filter are
+    applied once, to the streaming ``docs``, when the query is defined:
+    the stream's incremental planner plans them into each micro-batch, so
+    the callback's input is already the six accepted columns of the
+    stage-2 survivors and its Python side does not rebuild them per batch.
+    Each micro-batch then keeps the smallest doc_id per fingerprint, drops
+    fingerprints already in ``accepted_dir`` by a left-anti join, and
+    appends the rest, stamped with the batch id, to ``accepted_dir``. That
+    is one write job of 3 stages: the window shuffle, a broadcast of the
+    accepted-dir scan (declared ``fp string`` schema: it reads only ``fp``
+    and infers nothing) and the write. ``ledger_dir`` is no longer read or
+    written.
 
     Replay safety: the content-keyed anti-join is the only guard. A
     replayed batch finds its own committed rows in ``accepted_dir``, so
@@ -1128,24 +1133,23 @@ def stream_curation_gate(
 
     from input_data_pipeline_spark.operators.curation import funnel_stage_flags
 
+    cols = ["doc_id", "ts", "text", "lang", "source", "fp"]
+    rn = F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
+
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        firsts = (
-            funnel_stage_flags(batch_df).filter("f2")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-        )
+        firsts = batch_df.withColumn("_rn", rn).filter("_rn = 1")
         try:
             seen = batch_df.sparkSession.read.schema("fp string").parquet(accepted_dir)
             fresh = firsts.join(seen, "fp", "left_anti")
         except AnalysisException:  # no accepted dir yet; IO errors propagate
             fresh = firsts
-        fresh.select("doc_id", "ts", "text", "lang", "source", "fp").withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(accepted_dir)
+        fresh.select(*cols, F.lit(batch_id).alias("batch_id")).write.mode(
+            "append"
+        ).parquet(accepted_dir)
 
     return (
-        docs.writeStream.foreachBatch(gate)
+        funnel_stage_flags(docs).filter("f2").select(*cols)
+        .writeStream.foreachBatch(gate)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -25,14 +25,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any scale factor we target.
-# At 100 TB, region/nation stay tiny; customer/supplier/part grow with SF but
-# remain orders of magnitude under the fact tables — we still let AQE decide
-# for them rather than forcing a hint, and hard-broadcast only the fixed-size
-# geography dims.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 # Caching policy: a frame has one of two lifetimes.
 #  - Query-local: an intermediate that several legs of one query build
 #    consume is ``localCheckpoint(eager=False)``-ed on a narrow projection

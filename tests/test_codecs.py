@@ -110,6 +110,50 @@ def test_decode_media_reports_malformed_wav_as_valueerror():
         assert isinstance(exc.value.__cause__, cause)
 
 
+def test_decode_media_wav_frames_are_the_frames_read():
+    """The ``wave`` fallthrough reports the frames it actually read: a
+    WAV whose data-chunk size overstates the samples it carries decodes
+    to the samples present, not the header's count."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.wav import encode_wav
+
+    wav = bytearray(encode_wav(np.arange(4000, dtype=np.int16)))
+    assert decode_media(bytes(wav))["n_frames"] == 4000
+    wav[40:44] = b"\xff\xff\xff\x7f"  # the data chunk's size field
+    got = decode_media(bytes(wav))
+    assert len(got["pcm"]) == 8000
+    assert got["n_frames"] == 4000
+
+
+def test_decode_media_truncated_ogg_vorbis_is_typed():
+    """Every prefix of the Vorbis fixtures either decodes or fails as
+    ValueError/NotImplementedError: a cut inside an Ogg page header (the
+    27 fixed bytes, read by the container sniff and by the page walk)
+    must not surface as IndexError or struct.error."""
+    from input_data_pipeline_spark.codecs.ogg import encode_vorbis
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.operators.multimodal import _vorbis_fixture_plan
+
+    untyped = []
+    for d in range(4):
+        plan = _vorbis_fixture_plan(d)
+        blob = encode_vorbis(
+            plan["frames"], channels=plan["channels"], rate=plan["rate"],
+            residue_type=plan["rtype"], coupling=plan["coupling"],
+            floor_partitioned=plan["partitioned"],
+        )
+        for n in range(len(blob) + 1):
+            try:
+                decode_media(blob[:n], "audio")
+            except (ValueError, NotImplementedError):
+                pass
+            except Exception as e:  # noqa: BLE001 - the untyped errors under test
+                untyped.append((d, n, type(e).__name__))
+    assert not untyped, untyped[:10]
+
+
 @pytest.mark.parametrize("compression", [2, 3, 4])
 def test_ccitt_canvas_is_bounded(compression):
     """A CCITT TIFF whose ImageWidth, ImageLength and RowsPerStrip tags

@@ -970,6 +970,49 @@ def test_stream_curation_gate_probe_plan_sf01(spark, tmp_path):
     assert all("ReadSchema: struct<fp:string>" in b for b in scans), scans
 
 
+def test_stream_curation_gate_plans_flags_in_stream(spark, sf_dir, tmp_path):
+    """The stage 1-2 flags are planned once, in the stream, not rebuilt
+    in the micro-batch callback: the second batch's write reads the six
+    accepted columns from the micro-batch's RDD and computes neither the
+    fingerprint (``sha2``) nor the token band (``regexp_replace``)."""
+    import re
+
+    rows = _doc_rows(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    src = tmp_path / "gate_in"
+    src.mkdir()
+    start = _gate_starter(
+        spark, src, str(tmp_path / "gate_accepted"), str(tmp_path / "gate_ledger")
+    )
+    half = len(rows) // 2
+
+    q = start(str(tmp_path / "gate_ckpt"))
+    try:
+        _write_events(src, "a.jsonl", rows[:half])
+        q.processAllAvailable()
+        seen = set(_sql_plans(spark))
+        _write_events(src, "b.jsonl", rows[half:])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    writes = [
+        p for i, p in _sql_plans(spark).items()
+        if i not in seen and "InsertIntoHadoopFsRelationCommand" in p
+    ]
+    assert len(writes) == 1, len(writes)
+    plan = writes[0]
+    assert "sha2(" not in plan and "regexp_replace(" not in plan, plan
+    scans = [
+        re.search(r"^Output \[\d+\]: \[(.*)\]$", b, re.M)
+        for b in plan.split("\n\n")
+        if "Scan ExistingRDD" in b.strip().partition("\n")[0]
+    ]
+    assert scans and all(scans), plan
+    for scan in scans:
+        names = [c.split("#")[0] for c in scan.group(1).split(", ")]
+        assert names == ["doc_id", "ts", "text", "lang", "source", "fp"], scan[0]
+
+
 def test_stream_histogram_update_parity_and_replay(spark, sf_dir, tmp_path):
     """Sum-merged streaming histogram cells over a 2-micro-batch event
     stream must equal the batch hq_bin_counts over the same events at the
