@@ -549,7 +549,10 @@ def _flac_read_subframe(
                 sum(c * block[-1 - j] for j, c in enumerate(coefs)) >> shift
             )
             block.append(e + pred)
-        block = np.asarray(block, dtype=np.int64)
+        try:
+            block = np.asarray(block, dtype=np.int64)
+        except OverflowError:
+            raise ValueError("FLAC LPC prediction overflows 64 bits") from None
     else:
         raise ValueError("reserved FLAC subframe type")
     if wasted:
@@ -677,6 +680,8 @@ def _decode_flac(payload: bytes) -> dict:
             raise ValueError("invalid FLAC sample-rate code")
         br.align()
         hdr_len = br.byte - frame_start
+        if frame_start + hdr_len >= len(payload):
+            raise ValueError("truncated FLAC frame header")
         if _crc8(payload[frame_start : frame_start + hdr_len]) != payload[
             frame_start + hdr_len
         ]:

@@ -35,12 +35,18 @@ def _jpeg_huff_table(bits: list[int], vals: bytes) -> dict:
     holds a 256-entry peek-8 LUT — ``lut[next8bits]`` is
     ``(length << 8) | symbol`` for codes of ≤ 8 bits, -1 otherwise —
     the fast path of :func:`_jpeg_decode_sym`; integer keys never
-    collide with the (length, code) tuple keys."""
+    collide with the (length, code) tuple keys. Raises ValueError when
+    the BITS counts outrun HUFFVAL or a length holds more codes than
+    its bits can spell (every DHT parser shares this check)."""
+    if len(bits) != 16 or sum(bits) > len(vals):
+        raise ValueError("truncated JPEG DHT table")
     table = {}
     lut = [-1] * 256
     code = 0
     k = 0
     for length in range(1, 17):
+        if code + bits[length - 1] > 1 << length:
+            raise ValueError("JPEG DHT code lengths overflow")
         for _ in range(bits[length - 1]):
             table[(length, code)] = vals[k]
             if length <= 8:
@@ -264,15 +270,13 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
             if sof is None:
                 raise ValueError("JPEG SOS before SOF3 header")
             prec, h, w, comps = sof
-            ns = body[0]
+            scan = _jpeg_sos_selectors(body, comps)
+            ns = len(scan)
             if ns != len(comps):
                 raise ValueError(
                     "lossless JPEG scan must cover every frame component"
                 )
-            tds = {}
-            for si in range(ns):
-                cs, tables = body[1 + 2 * si], body[2 + 2 * si]
-                tds[cs] = tables >> 4
+            tds = {cs: td for cs, (td, _ta) in scan.items()}
             ss = body[1 + 2 * ns]      # predictor selection 1-7
             al = body[3 + 2 * ns] & 0xF  # point transform
             if not 1 <= ss <= 7:
@@ -281,6 +285,10 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
                 raise ValueError("point transform exceeds precision")
             nc = len(comps)
             default = 1 << (prec - al - 1)
+            # each sample costs at least one Huffman bit: refuse a frame
+            # the entropy data cannot fill before allocating its raster
+            if h * w * nc > 8 * (len(payload) - pos - 2 - seglen):
+                raise ValueError("lossless JPEG frame exceeds its scan data")
             r = _JpegBitReader(payload, pos + 2 + seglen)
             out = np.zeros((h, w, nc), np.int64)
             for y in range(h):
@@ -611,39 +619,20 @@ def _decode_jpeg(payload: bytes) -> dict:
         elif marker == 0xDA:  # SOS — entropy data follows the segment
             if sof is None:
                 raise ValueError("JPEG SOS before SOF0 header")
-            if not body:
-                raise ValueError("truncated JPEG SOS segment")
-            ns = body[0]
             width, height, comps, prec = sof
-            if len(body) < 4 + 2 * ns:
-                raise ValueError("truncated JPEG SOS segment")
-            scan = {}
-            scan_ids = []
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s], body[2 + 2 * s]
-                scan[cs] = (tables >> 4, tables & 0xF)
-                scan_ids.append(cs)
-            if not scan_ids or len(set(scan_ids)) != len(scan_ids):
-                raise ValueError("JPEG scan component list empty or duplicated")
+            by_id = {c["id"]: c for c in comps}
+            scan = _jpeg_sos_selectors(body, by_id)
+            ns = len(scan)
             scan_comps = []
-            for cid in scan_ids:
-                c = next((c for c in comps if c["id"] == cid), None)
-                if c is None:
-                    raise ValueError(f"scan names unknown component {cid}")
-                c["td"], c["ta"] = scan[cid]
+            for cid, (td, ta) in scan.items():
+                c = by_id[cid]
+                c["td"], c["ta"] = td, ta
                 if c["tq"] not in qtabs:
                     raise ValueError("JPEG component references undefined DQT table")
                 scan_comps.append(c)
             if not progressive:
                 if ns != len(comps):
                     raise ValueError("JPEG scan must cover all frame components")
-                # ns == len(comps) + distinct known ids => every component
-                # was assigned its scan tables above
-                for c in comps:
-                    if (0, c["td"]) not in htabs or (1, c["ta"]) not in htabs:
-                        raise ValueError(
-                            "JPEG scan references undefined huffman table"
-                        )
                 return _jpeg_scan(
                     payload, body1, width, height, comps, qtabs, htabs,
                     restart_interval, prec,
@@ -665,6 +654,26 @@ def _decode_jpeg(payload: bytes) -> dict:
     if prog_state is not None:  # tolerate a missing EOI after the last scan
         return _jpeg_finish(prog_state)
     raise ValueError("no JPEG scan (SOS) found")
+
+
+def _jpeg_sos_selectors(body: bytes, comp_ids) -> dict[int, tuple[int, int]]:
+    """An SOS header's component selectors, ``{id: (Td, Ta)}`` in scan
+    order. Raises ValueError for a truncated segment, an empty or
+    duplicated list, or an id the frame (``comp_ids``) does not declare;
+    which components a scan must cover is the caller's rule."""
+    if not body or len(body) < 4 + 2 * body[0]:
+        raise ValueError("truncated JPEG SOS segment")
+    scan = {}
+    for s in range(body[0]):
+        cs, tables = body[1 + 2 * s], body[2 + 2 * s]
+        if cs in scan:
+            raise ValueError("JPEG scan component list duplicated")
+        if cs not in comp_ids:
+            raise ValueError(f"scan names unknown component {cs}")
+        scan[cs] = (tables >> 4, tables & 0xF)
+    if not scan:
+        raise ValueError("JPEG scan component list empty")
+    return scan
 
 
 def _jpeg_scan(
@@ -696,6 +705,9 @@ def _jpeg_scan(
     hmax, vmax, mcu_x, mcu_y, grids = _jpeg_geometry(
         width, height, comps, len(payload) - pos, min_bits_per_block=2
     )
+    tabs = [(htabs.get((0, c["td"])), htabs.get((1, c["ta"]))) for c in comps]
+    if any(None in t for t in tabs):
+        raise ValueError("JPEG scan references undefined huffman table")
     r = _JpegBitReader(payload, pos)
     # per component: a (block_rows*block_cols, 64) int32 coefficient grid
     coefs = [np.zeros((gx * gy, 64), dtype=np.int32) for gx, gy in grids]
@@ -707,11 +719,13 @@ def _jpeg_scan(
                 r.restart(m // restart_interval - 1)
                 pred = [0] * len(comps)
             for ci, c in enumerate(comps):
-                dc_tab, ac_tab = htabs[(0, c["td"])], htabs[(1, c["ta"])]
+                dc_tab, ac_tab = tabs[ci]
                 gx = grids[ci][0]
                 for v in range(c["vc"]):
                     for hh in range(c["hc"]):
                         t = _jpeg_decode_sym(r, dc_tab)
+                        if t > 16:
+                            raise ValueError(f"JPEG DC category {t} invalid")
                         dc_diff = _jpeg_extend(r.receive(t), t)
                         # differential hierarchical frames (round 17)
                         # code DC with PRED always zero (T.81 F.1.1.5.1)
@@ -1204,6 +1218,8 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
         if 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
+        if pos + 4 > len(payload):
+            raise ValueError("truncated JPEG segment")
         (seglen,) = struct.unpack_from(">H", payload, pos + 2)
         body = payload[pos + 4: pos + 2 + seglen]
         if pos + 2 + seglen > len(payload):
@@ -1240,12 +1256,13 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
                 )
             if nc not in (1, 3):
                 raise ValueError(f"unsupported component count {nc}")
-            ids = [body[6 + 3 * c] for c in range(nc)]
+            ids = [_jpeg_unpack(">B", body, 6 + 3 * c, "DHP")[0] for c in range(nc)]
             dhp = (w, h, ids)
         elif marker == 0xDF:  # EXP: expand references before next frame
             if refs is None:
                 raise ValueError("JPEG EXP before any reference frame")
-            eh, ev = body[0] >> 4, body[0] & 0xF
+            (e,) = _jpeg_unpack(">B", body, 0, "EXP")
+            eh, ev = e >> 4, e & 0xF
             if eh not in (0, 1) or ev not in (0, 1):
                 raise ValueError("JPEG EXP nibbles must be 0 or 1")
             pending_exp = (eh, ev)
@@ -1297,17 +1314,18 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
             if cur is None:
                 raise ValueError("JPEG SOS before a frame header")
             differential, w, h, comps = cur
-            ns = body[0]
-            if ns != len(comps):
+            scan = _jpeg_sos_selectors(body, [c["id"] for c in comps])
+            if len(scan) != len(comps):
                 raise NotImplementedError(
                     "hierarchical scope is one interleaved scan per "
                     "frame"
                 )
-            for s in range(ns):
-                cs, tables = body[1 + 2 * s], body[2 + 2 * s]
-                for c in comps:
-                    if c["id"] == cs:
-                        c["td"], c["ta"] = tables >> 4, tables & 0xF
+            for c in comps:
+                c["td"], c["ta"] = scan[c["id"]]
+                if c["tq"] not in qtabs:
+                    raise ValueError(
+                        "JPEG component references undefined DQT table"
+                    )
             state = _jpeg_scan(
                 payload, pos + 2 + seglen, w, h, comps, qtabs, htabs,
                 restart_interval, finish=False,

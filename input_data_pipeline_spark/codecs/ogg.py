@@ -230,6 +230,8 @@ def _probe_ogg(payload: bytes) -> dict:
     while pos < len(payload):
         if payload[pos : pos + 4] != b"OggS":
             raise ValueError("Ogg page boundary missing OggS capture")
+        if pos + 27 > len(payload):
+            raise ValueError("truncated Ogg page header")
         if payload[pos + 4] != 0:
             raise ValueError(f"Ogg stream version {payload[pos + 4]} != 0")
         htype = payload[pos + 5]

@@ -269,17 +269,20 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
         # round 17: Ogg Vorbis decodes for REAL (self-describing
         # codebooks, floor 1, residues 0/1/2, coupling, mixed block
         # lapping); Opus stays a named seam — its SILK/CELT layers
-        # need spec data tables this repo cannot certify
+        # need spec data tables this repo cannot certify. Route on the
+        # first packet's magic; a stream cut before it is a bad payload
         n_segs = payload[26] if len(payload) > 26 else 0
         lace0 = payload[27] if n_segs and len(payload) > 27 else 0
         first = payload[27 + n_segs: 27 + n_segs + lace0]
         if first[:7] == b"\x01vorbis":
             return _decode_vorbis(payload)
-        raise NotImplementedError(
-            "Ogg Opus sample decode requires external media libraries "
-            "(SURVEY §2.10 U1/U2); Ogg Vorbis decodes for real (round "
-            "17) and the container probes cover Opus/FLAC framing"
-        )
+        if first[:8] == b"OpusHead":
+            raise NotImplementedError(
+                "Ogg Opus sample decode requires external media libraries "
+                "(SURVEY §2.10 U1/U2); Ogg Vorbis decodes for real (round "
+                "17) and the container probes cover Opus/FLAC framing"
+            )
+        raise ValueError("Ogg stream's first packet is incomplete or unknown")
     if len(payload) >= 12 and payload[4:8] == b"ftyp":
         # ISO BMFF (round 16): sample-table walk + per-codec routing
         return extract_mp4_audio(payload)

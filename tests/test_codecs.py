@@ -129,9 +129,11 @@ def test_decode_media_wav_frames_are_the_frames_read():
 
 def test_decode_media_truncated_ogg_vorbis_is_typed():
     """Every prefix of the Vorbis fixtures either decodes or fails as
-    ValueError/NotImplementedError: a cut inside an Ogg page header (the
-    27 fixed bytes, read by the container sniff and by the page walk)
-    must not surface as IndexError or struct.error."""
+    ValueError: a cut inside an Ogg page header (the 27 fixed bytes, read
+    by the container sniff and by the page walk) must not surface as
+    IndexError or struct.error, and a cut before the identification
+    packet is whole is a bad payload, not the Opus seam
+    (NotImplementedError)."""
     from input_data_pipeline_spark.codecs.ogg import encode_vorbis
     from input_data_pipeline_spark.codecs.route import decode_media
     from input_data_pipeline_spark.operators.multimodal import _vorbis_fixture_plan
@@ -147,10 +149,119 @@ def test_decode_media_truncated_ogg_vorbis_is_typed():
         for n in range(len(blob) + 1):
             try:
                 decode_media(blob[:n], "audio")
-            except (ValueError, NotImplementedError):
+            except ValueError:
                 pass
             except Exception as e:  # noqa: BLE001 - the untyped errors under test
                 untyped.append((d, n, type(e).__name__))
+    assert not untyped, untyped[:10]
+
+
+def _gate_fixtures():
+    """(encoder name, modality, the first six docs' payloads) for the
+    decode and probe gates' closed-form fixtures, built as the gates in
+    ``operators.multimodal`` build them."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.flac import encode_flac
+    from input_data_pipeline_spark.codecs.jpeg import (
+        encode_jpeg_hierarchical,
+        encode_jpeg_lossless,
+    )
+    from input_data_pipeline_spark.codecs.ogg import (
+        encode_ogg,
+        encode_vorbis,
+        make_opus_head,
+        make_vorbis_ident,
+    )
+    from input_data_pipeline_spark.operators.multimodal import _vorbis_fixture_plan
+
+    def lossless(d):
+        prec = [8, 12, 16][d % 3]
+        i, j = np.mgrid[0 : 6 + d % 5, 0 : 9 + d % 6]
+        x = (3 * d + 7 * i * j + 11 * i + 5 * j) % (1 << prec)
+        return encode_jpeg_lossless(x, predictor=1 + d % 7, precision=prec)
+
+    def hierarchical(d):
+        r, c = np.arange(8 + d % 5).reshape(-1, 1), np.arange(9 + d % 8)
+        g = ((7 * d + 11 * r + 5 * c) % 256).astype(np.uint8)
+        if d % 2 == 0:
+            return encode_jpeg_hierarchical(gray_rows=g, levels=2 + d % 3)
+        return encode_jpeg_hierarchical(rows_rgb=np.dstack([g, g, g]), levels=2 + d % 3)
+
+    def flac(d):
+        i = np.arange(192 + (d % 5) * 64, dtype=np.int64)
+        return encode_flac(
+            ((7 * d + 11 * i) % 2001 - 1000).astype(np.int16),
+            sample_rate=8000 + (d % 2) * 8000, block_size=64 << (d % 2),
+            partition_order=d % 3, force_lpc=([3, -1], 1, 4) if d % 3 == 0 else None,
+        )
+
+    def vorbis(d):
+        p = _vorbis_fixture_plan(d)
+        return encode_vorbis(
+            p["frames"], channels=p["channels"], rate=p["rate"],
+            residue_type=p["rtype"], coupling=p["coupling"],
+            floor_partitioned=p["partitioned"],
+        )
+
+    def ogg(d):
+        ch, na = 2 if d % 3 == 0 else 1, 5 + d % 7
+        audio = [bytes([(d + i) % 256]) * (40 + (d + i) % 50) for i in range(na)]
+        if d % 2 == 0:
+            heads = [make_opus_head(channels=ch, pre_skip=312, input_rate=44100),
+                     b"OpusTags" + (7).to_bytes(4, "little") + b"fixture" + bytes(4)]
+            spp, pre = 960, 312
+        else:
+            heads = [make_vorbis_ident(channels=ch, rate=22050 if d % 4 == 1 else 44100),
+                     b"\x03vorbis" + bytes(8) + b"\x01", b"\x05vorbis" + bytes(20)]
+            spp, pre = 512, 0
+        grans = [pre + spp * min(na, 3 * (k + 1)) for k in range((na + 2) // 3)]
+        return encode_ogg(heads + audio, grans, n_header_packets=len(heads),
+                          audio_per_page=3)
+
+    return [
+        ("encode_jpeg_lossless", "image", lossless),
+        ("encode_jpeg_hierarchical", "image", hierarchical),
+        ("encode_flac", "audio", flac),
+        ("encode_vorbis", "audio", vorbis),
+        ("encode_ogg", "audio", ogg),
+    ]
+
+
+def test_gate_fixture_mutants_fail_typed():
+    """Seeded fuzz over the gates' own fixtures: 60 mutants per encoder,
+    alternately a truncation and 1-5 byte flips in the first 256 bytes.
+    ``decode_media`` (and ``probe_audio`` for audio) must decode each or
+    fail as ValueError/NotImplementedError, the two errors the gates
+    route; an IndexError, KeyError, struct.error or OverflowError from a
+    header or table parser is a bug."""
+    import random
+
+    from input_data_pipeline_spark.codecs.route import decode_media, probe_audio
+
+    rng = random.Random(7)
+    untyped = []
+    for name, modality, build in _gate_fixtures():
+        blobs = [build(d) for d in range(6)]
+        calls = [lambda b, m=modality: decode_media(b, m)]
+        if modality == "audio":
+            calls.append(probe_audio)
+        for k in range(60):
+            blob = blobs[k % len(blobs)]
+            if k % 2 == 0:
+                mutant = blob[: rng.randrange(len(blob))]
+            else:
+                flipped = bytearray(blob)
+                for _ in range(rng.randint(1, 5)):
+                    flipped[rng.randrange(min(256, len(blob)))] ^= rng.randrange(1, 256)
+                mutant = bytes(flipped)
+            for call in calls:
+                try:
+                    call(mutant)
+                except (ValueError, NotImplementedError):
+                    pass
+                except Exception as e:  # noqa: BLE001 - the untyped errors under test
+                    untyped.append((name, k, type(e).__name__, str(e)[:60]))
     assert not untyped, untyped[:10]
 
 

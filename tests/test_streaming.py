@@ -213,6 +213,18 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got == [1, 2, 3, 4, 5]  # no dupes (reprocessing), no losses
 
 
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A ``local[...]`` session writes stream checkpoints through Hadoop's
+    FileSystem API (atomic local rename), not FileContext, whose
+    ``RawLocalFs`` link-status calls fork a ``readlink`` process each."""
+    jvm = spark.sparkContext._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt"))
+    cm = checkpointing.CheckpointFileManager.create(path, conf)
+    assert cm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def test_foreachbatch_idempotent_merge(spark, tmp_path):
     """The foreachBatch merge sink deduplicates re-delivered keys across
     batches: replaying overlapping input yields each key exactly once."""
