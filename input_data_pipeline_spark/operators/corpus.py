@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from input_data_pipeline_spark.functions import text as T
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import corpus_cached, fan_out, load_table
+from input_data_pipeline_spark.tables import (
+    corpus_cached,
+    fanned_documents,
+    load_table,
+)
 
 from input_data_pipeline_spark.functions.text import (
     DUCK_TOKENS as _DUCK_TOKENS,
@@ -63,17 +67,13 @@ def corpus_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     def build() -> DataFrame:
-        # fan_out BEFORE tokenizing: the test-scale corpus arrives as one
-        # parquet split, which would run the tokenize+posexplode serially on
-        # one core (measured: index build 4.9 s → 1.4 s at sf0.1). At scale
-        # the scan already has >= cores splits and this is a no-op.
-        # Deliberately NOT pre-repartitioned by doc_id beyond that: shuffling
-        # the full token rows before persist costs more than the
-        # per-consumer window exchanges it would save (measured 7.6 s vs
-        # 3.9 s for the contamination pass at sf0.1); the production
-        # analogue is a doc_id-bucketed parquet index, where the bucketing
-        # cost is paid once per snapshot, not per session.
-        docs = fan_out(load_table(spark, sf_dir, "documents"))
+        # Deliberately NOT repartitioned by doc_id beyond the per-core
+        # fan-out: shuffling the full token rows before persist costs more
+        # than the per-consumer window exchanges it would save (measured
+        # 7.6 s vs 3.9 s for the contamination pass at sf0.1); the
+        # production analogue is a doc_id-bucketed parquet index, where the
+        # bucketing cost is paid once per snapshot, not per session.
+        docs = fanned_documents(spark, sf_dir)
         return docs.select(
             "doc_id", "source", F.posexplode(T.tokens("text")).alias("pos", "tok")
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -220,7 +220,7 @@ def corpus_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     total = docs.agg(F.count(F.lit(1)).alias("n_docs"))  # metadata-only scan
     df = (
-        _kgrams_map_only(fan_out(docs), 2)
+        _kgrams_map_only(fanned_documents(spark, sf_dir), 2)
         .distinct()
         .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -286,9 +286,7 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     and is exactly the frequency-prefiltering production decontamination
     uses. Everything else is map-side-combinable aggregation.
     """
-    sh = _kgrams_map_only(
-        fan_out(load_table(spark, sf_dir, "documents")), 5
-    ).distinct()
+    sh = _kgrams_map_only(fanned_documents(spark, sf_dir), 5).distinct()
     rare = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -498,7 +496,7 @@ def exact_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     table before the document-frequency join; dup verdicts join at
     |distinct shingle| cardinality. All counts/ratios are exact integer
     arithmetic.""".format(k=_ESC_K)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = fanned_documents(spark, sf_dir)
     t = T.tokens("text")
     # 60-bit md5-prefix BIGINT keys: an int64 exchange is measured 1.3-1.8x
     # faster than shuffling the 32-char hex strings until the page cache

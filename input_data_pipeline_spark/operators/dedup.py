@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from input_data_pipeline_spark.functions import text as T
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import load_table
+from input_data_pipeline_spark.tables import fanned_documents, load_table
 
 from input_data_pipeline_spark.functions.text import (
     DUCK_TOKENS as _DUCK_TOKENS,
@@ -883,18 +883,15 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shuffle just to run a windowed min (measured ~5.5s at sf0.1), while
     the semantics are embarrassingly per-doc. So: normalize in codegen
     (string semantics stay JVM/oracle-identical), then one Arrow batch per
-    partition computes gram hashes and sliding mins in numpy — map-only,
-    zero shuffle, ~4× faster, and the same shape scales to any corpus
-    since no per-gram row ever materializes. The gram hash is integer
-    polynomial mixing shared exactly with the DuckDB oracle (md5 would
-    cost 12.5M hashlib calls per 5k docs in Python).
+    partition computes gram hashes and sliding mins in numpy over
+    ``tables.fanned_documents`` — no per-gram row ever materializes or
+    shuffles, ~4× faster, and the same shape scales to any corpus. The
+    gram hash is integer polynomial mixing shared exactly with the DuckDB
+    oracle (md5 would cost 12.5M hashlib calls per 5k docs in Python).
     """
-    from input_data_pipeline_spark.tables import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
     s = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    normed = fan_out(
-        docs.select("doc_id", s.alias("s"), F.length(s).alias("n_chars"))
+    normed = fanned_documents(spark, sf_dir).select(
+        "doc_id", s.alias("s"), F.length(s).alias("n_chars")
     )
     schema = (
         "doc_id long, n_grams long, n_fingerprints long, fp_digest string"
@@ -1032,7 +1029,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     At convergence the edge set is a star forest (child → component min);
     labels read off directly, roots labeling themselves.
     """
-    raw = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    # The edge list is computed once: ``verts`` and the first round's edges
+    # both read this one eager checkpoint, not the (costly) upstream plan.
+    raw = edges.select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    ).localCheckpoint(eager=True)
     # Vertices come from the RAW edge list: a vertex whose only edges are
     # self-loops must still appear in the output (labeled by itself), so it
     # is collected before self-loops are dropped from the propagation set.
@@ -1040,14 +1041,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e0 = (
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = e0
+    e = raw.filter(F.col("u") != F.col("v")).distinct()
     for _ in range(max_iter):
         # Lazy checkpoint + a single symmetric-difference action per round:
         # the convergence count materializes the checkpoint as a side

@@ -66,7 +66,7 @@ from input_data_pipeline_spark.codecs.wav import (
 )
 from input_data_pipeline_spark.codecs.y4m import encode_y4m
 from input_data_pipeline_spark.plans.registry import register
-from input_data_pipeline_spark.tables import load_table
+from input_data_pipeline_spark.tables import fanned_documents, load_table
 
 # read by perfbench/kernels.py
 from input_data_pipeline_spark.codecs.g72x import g72x_decode
@@ -145,16 +145,10 @@ def doc_gate(
     the column order of the flat DDL ``schema`` (zero rows or several are
     fine).
 
-    The kernel is CPU-dense per row over a tiny id list, so the ids are
-    fanned across every core explicitly — the one-file parquet scan
-    otherwise yields a single partition and the whole decode runs on one
-    thread. Map-only mapInPandas: no shuffle after the fan-out."""
+    The ids come from ``tables.fanned_documents``, so the CPU-dense kernel
+    runs on every core; the mapInPandas adds no shuffle of its own."""
     cols = [field.split()[0] for field in schema.split(",")]
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = fanned_documents(spark, sf_dir).select("doc_id")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd

@@ -35,16 +35,14 @@ TABLE_NAMES = (
 #    by ``corpus_cached`` into ``_TABLE_CACHE``, keyed (applicationId,
 #    sf_dir, name): the table handles (plans only; the read plus the dtype
 #    normalization cost ~50-80 ms of driver analysis per call), the
-#    persisted token index and k-means vectors, and the k-means centroids.
-#    At most _CORPUS_CACHE_MAX corpora stay cached, evicted FIFO as a
-#    whole. Parquet regenerated under a loaded sf_dir within one
-#    application needs ``invalidate_table_cache(sf_dir)``.
+#    fanned ``documents`` handle (its split probe is a full analysis + RDD
+#    conversion, ~30-80 ms), the persisted token index and k-means
+#    vectors, and the k-means centroids. At most _CORPUS_CACHE_MAX corpora
+#    stay cached, evicted FIFO as a whole. Parquet regenerated under a
+#    loaded sf_dir within one application needs
+#    ``invalidate_table_cache(sf_dir)``.
 _CORPUS_CACHE_MAX = 4
 _TABLE_CACHE: dict[tuple[str, str, str], Any] = {}
-# fan_out's scan-partition probe forces a full analysis + RDD
-# conversion per call (~30-80 ms driver-side); the answer is a constant
-# of the cached handle's file listing, so memoize it per handle id.
-_NPART_CACHE: dict[int, int] = {}
 
 
 def _drop(key: tuple[str, str, str]) -> None:
@@ -80,7 +78,6 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
     directory within one session."""
     for key in [k for k in _TABLE_CACHE if sf_dir in (None, k[1])]:
         _drop(key)
-    _NPART_CACHE.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -116,39 +113,25 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def fan_out(df: DataFrame) -> DataFrame:
-    """Ensure a frame entering an expensive per-row kernel (Arrow mapInPandas
-    etc.) has at least one partition per core.
+def fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` handle spread over at least one partition per core,
+    for the per-row Python and tokenize kernels that consume it (decode
+    gates, the token index, shingling, winnowing). Callers select their
+    columns on it; Catalyst prunes them below the exchange.
 
-    Small test-scale parquet arrives as a SINGLE file split, which would
-    serialize the kernel on one core of 32 (measured: winnowing 3.5 s →
-    0.9 s at sf0.1 after fanning out). At production scale the scan already
-    has ≥ cores splits and this is a no-op — the repartition only fires on
-    degenerate inputs, so the shuffle it adds is bounded by tiny-input
-    cases by construction.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if _scan_partitions(df) < target:
-        return df.repartition(target)
-    return df
+    Test-scale parquet arrives as a single file split, which would run the
+    kernel on one core (measured: winnowing 3.5 s → 0.9 s at sf0.1 after
+    fanning out). A scan that already has as many splits as cores is
+    returned as is, so at production scale this adds no shuffle."""
 
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        sc = spark.sparkContext
+        if docs.rdd.getNumPartitions() < sc.defaultParallelism:
+            return docs.repartition(sc.defaultParallelism)
+        return docs
 
-def _scan_partitions(df: DataFrame) -> int:
-    """Memoized ``df.rdd.getNumPartitions()`` (round 18, guide §5 driver
-    work): the probe forces a full analysis + physical-plan + RDD
-    conversion on the driver per call, but its answer is a constant of
-    the frame's file listing — for the cached ``load_table`` handles one
-    probe per session suffices. Keyed by object id with a weakref
-    finalizer so a collected frame can never serve a stale id."""
-    import weakref
-
-    key = id(df)
-    n = _NPART_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _NPART_CACHE[key] = n
-        weakref.finalize(df, _NPART_CACHE.pop, key, None)
-    return n
+    return corpus_cached(spark, sf_dir, "documents_fanned", build)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

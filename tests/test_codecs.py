@@ -1,7 +1,8 @@
 """Contracts of the ``codecs`` package: its import layering, the
 structural self-checks of its embedded spec tables, the names the
 benchmark's kernel timer reads through ``operators.multimodal``, and
-malformed input failing as ``ValueError``."""
+malformed input failing as ``ValueError``; plus one package-wide layering
+rule, that the per-core fan-out lives only in ``tables``."""
 
 from __future__ import annotations
 
@@ -51,6 +52,26 @@ def test_codecs_import_only_stdlib_numpy_and_siblings():
                 continue
             bad.append(f"{path.name}:{line} imports {mod}")
     assert not bad, bad
+
+
+def test_per_core_fan_out_lives_only_in_tables():
+    """One partitioning rule: ``tables.fanned_documents`` is the only
+    unkeyed ``.repartition(…defaultParallelism)`` in the package; keyed
+    repartitions (``repartition(n, cols…)``) are not fan-outs."""
+    pkg = CODECS.parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and len(node.args) == 1
+                and not node.keywords
+                and "defaultParallelism" in ast.unparse(node.args[0])
+            ):
+                found.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert found and all(f.startswith("tables.py:") for f in found), found
 
 
 @pytest.mark.parametrize(

@@ -125,6 +125,41 @@ def test_invalidate_table_cache_reaches_derived_frames(spark, sf_dir, tmp_path):
     assert centroids != old_centroids
 
 
+def test_fanned_documents_repartitions_only_a_short_scan(spark, sf_dir, tmp_path):
+    """``fanned_documents`` is the one fan-out rule: the one-file corpus
+    gets a round-robin exchange to every core under its kernels, a
+    ``documents`` of at least one file per core is scanned as is, and the
+    handle is built once per corpus and dropped by
+    ``invalidate_table_cache``."""
+    from input_data_pipeline_spark import tables
+
+    n_cores = spark.sparkContext.defaultParallelism
+    assert n_cores > 1
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    one_file = tables.fanned_documents(spark, sf_dir)
+    lines = plan(one_file.select("doc_id")).splitlines()
+    [ex] = [n for n, line in enumerate(lines) if "Exchange" in line]
+    assert f"Exchange RoundRobinPartitioning({n_cores})" in lines[ex]
+    assert "Scan parquet" in "\n".join(lines[ex + 1 :])
+
+    d = str(tmp_path / "many")
+    docs = tables.load_table(spark, sf_dir, "documents")
+    docs.repartition(2 * n_cores).write.parquet(f"{d}/documents.parquet")
+    many = tables.fanned_documents(spark, d)
+    assert many.rdd.getNumPartitions() >= n_cores
+    assert "Exchange" not in plan(many.select("doc_id"))
+    assert sorted(many.collect()) == sorted(docs.collect())
+
+    assert tables.fanned_documents(spark, d) is many
+    key = (spark.sparkContext.applicationId, d, "documents_fanned")
+    assert key in tables._TABLE_CACHE
+    tables.invalidate_table_cache(d)
+    assert key not in tables._TABLE_CACHE
+
+
 def test_invalidate_skips_frames_of_a_stopped_application():
     """A persisted frame cached by an application that has since stopped
     is dropped without ``unpersist``, which would raise on the stopped

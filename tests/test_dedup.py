@@ -85,6 +85,30 @@ def test_connected_components_transitive_chain(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
 
+def test_connected_components_computes_edge_list_once(spark):
+    """The upstream edge plan (the costly pair graph in the dedup queries)
+    runs once per ``connected_components`` call: a counting UDF in the
+    edge frame sees each edge row exactly once, results included."""
+    import pyspark.sql.functions as F
+
+    from input_data_pipeline_spark.operators.dedup import connected_components
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        seen.add(1)
+        return x
+
+    count_udf = F.udf(counted, "long")
+    # chains 0-1-2 and 10-11-12 plus a self-loop on 20: 5 edges, 7 vertices
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (10, 11), (11, 12), (20, 20)], "a long, b long"
+    ).select(count_udf("a").alias("src"), F.col("b").alias("dst"))
+    got = {r.id: r.label for r in connected_components(edges).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10, 20: 20}
+    assert seen.value == 5
+
+
 def test_cluster_assignment_matches_pairs(spark, sf_dir):
     from input_data_pipeline_spark.operators.dedup import (
         dedup_cluster_assignment,
