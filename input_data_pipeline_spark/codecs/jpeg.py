@@ -29,36 +29,133 @@ def _jpeg_zigzag_np():
     return _JPEG_ZIGZAG_NP
 
 
-def _jpeg_huff_table(bits: list[int], vals: bytes) -> dict:
-    """Canonical huffman table from a DHT segment's BITS/HUFFVAL arrays
-    (T.81 Annex C): {(code_length, code): symbol}. Key ``-1`` (round 17)
-    holds a 256-entry peek-8 LUT — ``lut[next8bits]`` is
-    ``(length << 8) | symbol`` for codes of ≤ 8 bits, -1 otherwise —
-    the fast path of :func:`_jpeg_decode_sym`; integer keys never
-    collide with the (length, code) tuple keys. Raises ValueError when
-    the BITS counts outrun HUFFVAL or a length holds more codes than
-    its bits can spell (every DHT parser shares this check)."""
-    if len(bits) != 16 or sum(bits) > len(vals):
-        raise ValueError("truncated JPEG DHT table")
-    table = {}
-    lut = [-1] * 256
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        if code + bits[length - 1] > 1 << length:
-            raise ValueError("JPEG DHT code lengths overflow")
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            if length <= 8:
-                lo = code << (8 - length)
-                lut[lo : lo + (1 << (8 - length))] = [
-                    (length << 8) | vals[k]
-                ] * (1 << (8 - length))
-            code += 1
-            k += 1
-        code <<= 1
-    table[-1] = lut
-    return table
+# ---------------------------------------------------------------------------
+# The JPEG segment layer (T.81 Annex B), shared by every decoder and
+# encoder here and in ``tiff``: one marker-segment reader and writer, one
+# DQT and one DHT parser, one byte-stuffing entropy writer.
+# ---------------------------------------------------------------------------
+
+def _jpeg_segment(payload: bytes, pos: int) -> tuple[int, int, int]:
+    """Read the marker segment at ``pos``: ``(marker, body_start,
+    body_end)``, the next segment starting at ``body_end``. 0xFF fill
+    bytes (B.1.1.2) and standalone RSTn markers are skipped; EOI, and
+    the end of the payload where an EOI is missing, read as
+    ``(0xD9, end, end)``. A length below 2 or a segment running past
+    the payload raises ``ValueError("truncated JPEG segment")``. What
+    follows an SOS segment (entropy data) is the caller's to walk."""
+    n = len(payload)
+    while pos + 2 <= n:
+        if payload[pos] != 0xFF:
+            raise ValueError(f"bad marker alignment at offset {pos}")
+        marker = payload[pos + 1]
+        if marker == 0xFF:
+            pos += 1
+        elif 0xD0 <= marker <= 0xD7:
+            pos += 2
+        elif marker == 0xD9:
+            return marker, pos + 2, pos + 2
+        else:
+            seglen = int.from_bytes(payload[pos + 2: pos + 4], "big")
+            if pos + 4 > n or seglen < 2 or pos + 2 + seglen > n:
+                raise ValueError("truncated JPEG segment")
+            return marker, pos + 4, pos + 2 + seglen
+    return 0xD9, n, n
+
+
+def _jpeg_dqt(body: bytes, qtabs: dict) -> None:
+    """Parse a DQT segment body into ``qtabs``: ``{Tq: 8x8 int32 steps
+    in row-major order}``. Pq=1 tables carry 16-bit big-endian steps
+    (B.2.4.1; low-quality and high-dynamic-range encoders emit steps
+    past 255)."""
+    import numpy as np
+
+    i = 0
+    while i < len(body):
+        pq, tq = body[i] >> 4, body[i] & 0xF
+        if pq not in (0, 1):
+            raise ValueError(f"bad JPEG DQT precision {pq}")
+        step = 2 if pq else 1
+        if i + 1 + 64 * step > len(body):
+            raise ValueError("truncated JPEG DQT segment")
+        q = np.zeros(64, dtype=np.int32)
+        q[_JPEG_ZIGZAG] = np.frombuffer(
+            body[i + 1: i + 1 + 64 * step], ">u2" if pq else np.uint8
+        )
+        qtabs[tq] = q.reshape(8, 8)
+        i += 1 + 64 * step
+
+
+def _jpeg_dht(body: bytes, htabs: dict) -> None:
+    """Parse a DHT segment body into ``htabs``: ``{(Tc, Th): table}``,
+    each the canonical Huffman code of its BITS/HUFFVAL arrays (Annex C)
+    as ``{(code_length, code): symbol}``. Key ``-1`` holds a 256-entry
+    peek-8 LUT: ``lut[next8bits]`` is ``(length << 8) | symbol`` for
+    codes of at most 8 bits, -1 otherwise (the fast path of
+    :func:`_jpeg_decode_sym`; integer keys never collide with the tuple
+    keys). Raises ValueError when the BITS counts outrun the segment or
+    a length holds more codes than its bits can spell."""
+    i = 0
+    while i < len(body):
+        bits = body[i + 1: i + 17]
+        nv = sum(bits)
+        if len(bits) != 16 or i + 17 + nv > len(body):
+            raise ValueError("truncated JPEG DHT segment")
+        vals = body[i + 17: i + 17 + nv]
+        table = {}
+        lut = [-1] * 256
+        code = 0
+        k = 0
+        for length in range(1, 17):
+            if code + bits[length - 1] > 1 << length:
+                raise ValueError("JPEG DHT code lengths overflow")
+            for _ in range(bits[length - 1]):
+                table[(length, code)] = vals[k]
+                if length <= 8:
+                    lo = code << (8 - length)
+                    lut[lo: lo + (1 << (8 - length))] = [
+                        (length << 8) | vals[k]
+                    ] * (1 << (8 - length))
+                code += 1
+                k += 1
+            code <<= 1
+        table[-1] = lut
+        htabs[(body[i] >> 4, body[i] & 0xF)] = table
+        i += 17 + nv
+
+
+def _jpeg_segment_bytes(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker, the 16-bit length (which
+    counts itself) and the body."""
+    if len(body) > 0xFFFD:
+        raise ValueError("JPEG segment body longer than 65533 bytes")
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _jpeg_stuffed_bits(values, widths) -> bytes:
+    """One restart interval of entropy-coded data (F.1.2.3, B.1.1.5):
+    the low ``widths[i]`` bits of each ``values[i]``, MSB first (a zero
+    width adds nothing), the last byte padded with 1-bits, and a 0x00
+    stuffed after every 0xFF byte. All the bits go through one
+    ``np.packbits``; ``tests/codec_reference.py`` keeps the bit-at-a-time
+    form this must match."""
+    import numpy as np
+
+    if not len(widths):
+        return b""
+    v = np.asarray(values, dtype=np.int64)
+    w = np.asarray(widths, dtype=np.int64)
+    ends = np.cumsum(w)
+    total = int(ends[-1])
+    shift = np.repeat(ends, w) - 1 - np.arange(total, dtype=np.int64)
+    bits = ((np.repeat(v, w) >> shift) & 1).astype(np.uint8)
+    pad = (-total) % 8
+    if pad:
+        bits = np.concatenate([bits, np.ones(pad, np.uint8)])
+    arr = np.packbits(bits)
+    ff = np.flatnonzero(arr == 0xFF)
+    if len(ff):
+        arr = np.insert(arr, ff + 1, np.uint8(0))
+    return arr.tobytes()
 
 
 class _JpegBitReader:
@@ -220,8 +317,6 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
     means bit-exact, not display-close. DRI raises by name (restart
     prediction reset is out of scope). The reference shells to external
     image codecs for exactly this class of file (SURVEY §2.10 U1)."""
-    import struct
-
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -229,24 +324,15 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
     htabs: dict[tuple[int, int], dict] = {}
     sof = None
     pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at offset {pos}")
-        marker = payload[pos + 1]
+    while True:
+        marker, body0, pos = _jpeg_segment(payload, pos)
         if marker == 0xD9:
             break
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4: pos + 2 + seglen]
-        if marker == 0xC4:  # DHT
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1: i + 17])
-                nv = sum(bits)
-                htabs[(tc, th)] = _jpeg_huff_table(
-                    bits, body[i + 17: i + 17 + nv]
-                )
-                i += 17 + nv
+        body = payload[body0:pos]
+        if marker == 0xDB:  # unused by lossless, but a bad one is bad here too
+            _jpeg_dqt(body, {})
+        elif marker == 0xC4:
+            _jpeg_dht(body, htabs)
         elif marker == 0xC3:
             prec, h, w, nc = _jpeg_unpack(">BHHB", body, 0, "SOF3")
             if not 2 <= prec <= 16:
@@ -287,9 +373,9 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
             default = 1 << (prec - al - 1)
             # each sample costs at least one Huffman bit: refuse a frame
             # the entropy data cannot fill before allocating its raster
-            if h * w * nc > 8 * (len(payload) - pos - 2 - seglen):
+            if h * w * nc > 8 * (len(payload) - pos):
                 raise ValueError("lossless JPEG frame exceeds its scan data")
-            r = _JpegBitReader(payload, pos + 2 + seglen)
+            r = _JpegBitReader(payload, pos)
             out = np.zeros((h, w, nc), np.int64)
             for y in range(h):
                 for x in range(w):
@@ -353,7 +439,6 @@ def _decode_jpeg_lossless(payload: bytes) -> dict:
                 "point_transform": al,
                 "samples": samples,
             }
-        pos += 2 + seglen
     raise ValueError("lossless JPEG has no SOS scan")
 
 
@@ -394,8 +479,7 @@ def encode_jpeg_lossless(samples, predictor: int = 1, precision: int = 8,
         t = int(abs(diff)).bit_length()
         return t, (diff if diff >= 0 else diff + (1 << t) - 1), t
 
-    toks = [[] for _ in range(nc)]  # per component, in MCU order
-    order = []
+    toks = []  # (component, SSSS, extra bits, their width) in MCU order
     for y in range(h):
         for x in range(w):
             for ci in range(nc):
@@ -411,58 +495,30 @@ def encode_jpeg_lossless(samples, predictor: int = 1, precision: int = 8,
                     c = int(coded[y - 1, x - 1, ci])
                     px = [a, b, c, a + b - c, a + ((b - c) >> 1),
                           b + ((a - c) >> 1), (a + b) >> 1][predictor - 1]
-                t, bv, nb = mag(int(coded[y, x, ci]) - px)
-                toks[ci].append((t, bv, nb))
-                order.append(ci)
+                toks.append((ci, *mag(int(coded[y, x, ci]) - px)))
     tabs = [
-        _jpeg_canonical_tables({t for t, _, _ in toks[ci]} or {0})
+        _jpeg_canonical_tables({t for c, t, _, _ in toks if c == ci} or {0})
         for ci in range(nc)
     ]
-    out = bytearray()
-    acc, nacc = 0, 0
-
-    def put(val, nb):
-        # chunked bit accumulation (round 17): same MSB-first stream and
-        # 0xFF00 stuffing as the per-bit loop, one append per byte
-        nonlocal acc, nacc
-        acc = (acc << nb) | (val & ((1 << nb) - 1))
-        nacc += nb
-        while nacc >= 8:
-            nacc -= 8
-            b = (acc >> nacc) & 0xFF
-            out.append(b)
-            if b == 0xFF:
-                out.append(0x00)
-        acc &= (1 << nacc) - 1
-
-    idx = [0] * nc
-    for ci in order:
-        t, bv, nb = toks[ci][idx[ci]]
-        idx[ci] += 1
+    vals, widths = [], []
+    for ci, t, bv, nb in toks:
         L, code = tabs[ci][2][t]
-        put(code, L)
-        if nb and t != 16:
-            put(bv, nb)
-    if nacc:
-        put((1 << (8 - nacc)) - 1, 8 - nacc)
+        vals += (code, bv)
+        widths += (L, nb)
 
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    hdr = b"\xff\xd8"
     sofb = struct.pack(">BHHB", precision, h, w, nc)
     for ci in range(nc):
         sofb += bytes([ci + 1, 0x11, 0])
-    hdr += seg(0xC3, sofb)
+    hdr = b"\xff\xd8" + _jpeg_segment_bytes(0xC3, sofb)
     for ci in range(nc):
-        bits, vals, _enc = tabs[ci]
-        hdr += seg(0xC4, bytes([ci]) + bytes(bits) + vals)
+        bits, vals_ci, _enc = tabs[ci]
+        hdr += _jpeg_segment_bytes(0xC4, bytes([ci]) + bytes(bits) + vals_ci)
     sos = bytes([nc])
     for ci in range(nc):
         sos += bytes([ci + 1, ci << 4])
     sos += bytes([predictor, 0, point_transform])
-    hdr += seg(0xDA, sos)
-    return hdr + bytes(out) + b"\xff\xd9"
+    hdr += _jpeg_segment_bytes(0xDA, sos)
+    return hdr + _jpeg_stuffed_bits(vals, widths) + b"\xff\xd9"
 
 
 def _decode_jpeg(payload: bytes) -> dict:
@@ -496,14 +552,13 @@ def _decode_jpeg(payload: bytes) -> dict:
     replication on divisor files) and 12-bit SOF1 extended-sequential
     streams (2^(P-1) level shift, rescaled onto the 8-bit contract).
 
-    Out of scope, rejected loudly: the rare arithmetic and
-    hierarchical modes — at that point a real libjpeg belongs behind
-    the per-executor singleton codec seam (U2). Only the per-symbol
-    huffman loop is per-bit Python; everything after the coefficient
-    tensor is numpy.
+    SOF3 lossless and DHP-led hierarchical streams hand over to
+    :func:`_decode_jpeg_lossless` and :func:`_decode_jpeg_hierarchical`.
+    Out of scope, rejected by name: arithmetic coding — at that point a
+    real libjpeg belongs behind the per-executor singleton codec seam
+    (U2). Only the per-symbol huffman loop is per-bit Python; everything
+    after the coefficient tensor is numpy.
     """
-    import struct
-
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -515,52 +570,15 @@ def _decode_jpeg(payload: bytes) -> dict:
     prog_state = None
     restart_interval = 0
     pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at offset {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI: finish progressive decode, else no scan
-            if prog_state is not None:
-                return _jpeg_finish(prog_state)
+    while True:
+        marker, body0, pos = _jpeg_segment(payload, pos)
+        if marker == 0xD9:
             break
-        if 0xD0 <= marker <= 0xD7:  # stray RSTn between scans: skip
-            pos += 2
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        body0, body1 = pos + 4, pos + 2 + seglen
-        if body1 > len(payload):
-            raise ValueError("truncated JPEG segment")
-        body = payload[body0:body1]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0xF
-                if pq not in (0, 1):
-                    raise ValueError(f"bad JPEG DQT precision {pq}")
-                # Pq=1 (round 15): 16-bit big-endian table entries —
-                # T.81 B.2.4.1; low-quality/high-dynamic-range encoders
-                # emit steps past 255
-                step = 2 if pq else 1
-                if i + 1 + 64 * step > len(body):
-                    raise ValueError("truncated JPEG DQT segment")
-                q = np.zeros(64, dtype=np.int32)
-                q[_JPEG_ZIGZAG] = np.frombuffer(
-                    body[i + 1 : i + 1 + 64 * step], ">u2" if pq else np.uint8
-                )
-                qtabs[tq] = q.reshape(8, 8)
-                i += 1 + 64 * step
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(body):
-                if i + 17 > len(body):
-                    raise ValueError("truncated JPEG DHT segment")
-                tc, th = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1 : i + 17])
-                nv = sum(bits)
-                if i + 17 + nv > len(body):
-                    raise ValueError("truncated JPEG DHT segment")
-                htabs[(tc, th)] = _jpeg_huff_table(bits, body[i + 17 : i + 17 + nv])
-                i += 17 + nv
+        body = payload[body0:pos]
+        if marker == 0xDB:
+            _jpeg_dqt(body, qtabs)
+        elif marker == 0xC4:
+            _jpeg_dht(body, htabs)
         elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline / SOF1 extended sequential (round 17: the
             # 12-bit home) / SOF2 progressive
@@ -634,24 +652,22 @@ def _decode_jpeg(payload: bytes) -> dict:
                 if ns != len(comps):
                     raise ValueError("JPEG scan must cover all frame components")
                 return _jpeg_scan(
-                    payload, body1, width, height, comps, qtabs, htabs,
+                    payload, pos, width, height, comps, qtabs, htabs,
                     restart_interval, prec,
                 )
             ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
             ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0xF
             if prog_state is None:
                 prog_state = _jpeg_progressive_init(
-                    payload, body1, width, height, comps, qtabs
+                    payload, pos, width, height, comps, qtabs
                 )
                 prog_state["prec"] = prec
             pos = _jpeg_progressive_scan(
-                prog_state, body1, scan_comps, ss, se, ah, al, htabs,
+                prog_state, pos, scan_comps, ss, se, ah, al, htabs,
                 restart_interval,
             )
-            continue
-        # APPn / COM / unknown: skip
-        pos = body1
-    if prog_state is not None:  # tolerate a missing EOI after the last scan
+        # APPn / COM / unknown: skipped
+    if prog_state is not None:  # after EOI, or a missing one
         return _jpeg_finish(prog_state)
     raise ValueError("no JPEG scan (SOS) found")
 
@@ -768,9 +784,17 @@ def _jpeg_scan(
 
 
 def _jpeg_finish(state: dict) -> dict:
-    """Shared back half of baseline and progressive decode: dequant +
-    IDCT over the accumulated coefficient grids, per-component plane
-    assembly, chroma sample replication, BT.601, BGR bytes."""
+    """Shared back half of baseline and progressive decode: the planes
+    of :func:`_jpeg_planes`, then :func:`_jpeg_bgr`."""
+    return _jpeg_bgr(_jpeg_planes(state), state["width"], state["height"])
+
+
+def _jpeg_planes(state: dict, differential: bool = False) -> list:
+    """Dequant + IDCT over a scan state's coefficient grids, one frame-
+    size float plane per component: level shift by 2^(P-1) except in a
+    differential hierarchical frame (its samples are differences, T.81
+    A.3.1), 12-bit planes rescaled onto the 8-bit range, and
+    subsampled components upsampled."""
     import numpy as np
 
     width, height = state["width"], state["height"]
@@ -784,12 +808,12 @@ def _jpeg_finish(state: dict) -> dict:
         deq = (
             state["coefs"][ci].reshape(-1, 8, 8) * qtabs[c["tq"]]
         ).astype(np.float64)
-        # level shift by 2^(P-1); 12-bit planes (round 17, SOF1/SOF2)
-        # rescale to the uniform 8-bit BGR contract — the chroma center
-        # 2048/16 lands back on 128, so the BT.601 step is unchanged
-        spatial = np.einsum("ki,nkl,lj->nij", m8, deq, m8) + float(
-            1 << (prec - 1)
-        )
+        spatial = np.einsum("ki,nkl,lj->nij", m8, deq, m8)
+        if not differential:
+            spatial += float(1 << (prec - 1))
+        # 12-bit planes (round 17, SOF1/SOF2) rescale to the uniform
+        # 8-bit BGR contract — the chroma center 2048/16 lands back on
+        # 128, so the BT.601 step is unchanged
         if prec == 12:
             spatial = spatial / 16.0
         sub = (
@@ -803,6 +827,14 @@ def _jpeg_finish(state: dict) -> dict:
         ridx = np.arange(height) * c["vc"] // vmax
         cidx = np.arange(width) * c["hc"] // hmax
         planes.append(sub[np.ix_(ridx, cidx)])
+    return planes
+
+
+def _jpeg_bgr(planes: list, width: int, height: int) -> dict:
+    """The image contract from decoded component planes: grayscale
+    replicated into all three channels, or BT.601 YCbCr to BGR."""
+    import numpy as np
+
     if len(planes) == 1:
         y = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
         bgr = np.repeat(y[:, :, None], 3, axis=2)
@@ -1151,34 +1183,6 @@ def _jpeg_expand(plane, eh: int, ev: int):
     return plane
 
 
-def _jpeg_hier_spatial(state: dict, differential: bool):
-    """Per-component spatial planes from a finish=False scan state:
-    dequant + IDCT, PLUS the 2^(P-1) level shift only in
-    non-differential frames (T.81 A.3.1 — differential frames code
-    sample differences, which are not level-shifted). Cropped to frame
-    dims (hierarchical scope is 1x1 factors, so plane dims == frame
-    dims)."""
-    import numpy as np
-
-    m8 = _idct_matrix()
-    out = []
-    for ci, c in enumerate(state["comps"]):
-        deq = (
-            state["coefs"][ci].reshape(-1, 8, 8)
-            * state["qtabs"][c["tq"]]
-        ).astype(np.float64)
-        sp = np.einsum("ki,nkl,lj->nij", m8, deq, m8)
-        if not differential:
-            sp += 128.0
-        gx, gy = state["grids"][ci]
-        plane = (
-            sp.reshape(gy, gx, 8, 8).transpose(0, 2, 1, 3)
-            .reshape(gy * 8, gx * 8)
-        )
-        out.append(plane[: state["height"], : state["width"]])
-    return out
-
-
 def _decode_jpeg_hierarchical(payload: bytes) -> dict:
     """Hierarchical JPEG decode (T.81 Annex J, round 17; closes the
     hierarchical half of the arithmetic/hierarchical named seam): a
@@ -1195,8 +1199,6 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
     QM-coder's 113-row Qe state table is spec data this repo cannot
     certify from recall). Final references feed the same grayscale /
     BT.601 back half as baseline."""
-    import struct
-
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -1209,43 +1211,15 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
     cur = None  # current frame: (differential, w, h, comps)
     pending_exp = (0, 0)
     pos = 2
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"bad marker alignment at offset {pos}")
-        marker = payload[pos + 1]
+    while True:
+        marker, body0, pos = _jpeg_segment(payload, pos)
         if marker == 0xD9:
             break
-        if 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if pos + 4 > len(payload):
-            raise ValueError("truncated JPEG segment")
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4: pos + 2 + seglen]
-        if pos + 2 + seglen > len(payload):
-            raise ValueError("truncated JPEG segment")
+        body = payload[body0:pos]
         if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0xF
-                if pq != 0:
-                    raise ValueError("hierarchical scope is 8-bit DQT")
-                q = np.zeros(64, dtype=np.int32)
-                q[_JPEG_ZIGZAG] = np.frombuffer(
-                    body[i + 1: i + 65], np.uint8
-                )
-                qtabs[tq] = q.reshape(8, 8)
-                i += 65
+            _jpeg_dqt(body, qtabs)
         elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1: i + 17])
-                nv = sum(bits)
-                htabs[(tc, th)] = _jpeg_huff_table(
-                    bits, body[i + 17: i + 17 + nv]
-                )
-                i += 17 + nv
+            _jpeg_dht(body, htabs)
         elif marker == 0xDD:
             (restart_interval,) = _jpeg_unpack(">H", body, 0, "DRI")
         elif marker == 0xDE:  # DHP: hierarchical frame parameters
@@ -1327,11 +1301,11 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
                         "JPEG component references undefined DQT table"
                     )
             state = _jpeg_scan(
-                payload, pos + 2 + seglen, w, h, comps, qtabs, htabs,
+                payload, pos, w, h, comps, qtabs, htabs,
                 restart_interval, finish=False,
                 dc_predict=not differential,
             )
-            planes = _jpeg_hier_spatial(state, differential)
+            planes = _jpeg_planes(state, differential)
             if differential:
                 eh, ev = pending_exp
                 pending_exp = (0, 0)
@@ -1355,9 +1329,7 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
                     for p in planes
                 ]
             cur = None
-            pos = _jpeg_next_marker(payload, pos + 2 + seglen)
-            continue
-        pos += 2 + seglen
+            pos = _jpeg_next_marker(payload, pos)
     if refs is None or dhp is None:
         raise ValueError("hierarchical JPEG produced no image")
     w, h, _ids = dhp
@@ -1365,29 +1337,7 @@ def _decode_jpeg_hierarchical(payload: bytes) -> dict:
         raise ValueError(
             "hierarchical references do not reach the DHP dimensions"
         )
-    if len(refs) == 1:
-        y = refs[0].astype(np.uint8)
-        bgr = np.repeat(y[:, :, None], 3, axis=2)
-    else:
-        y = refs[0].astype(np.float64)
-        cb = refs[1].astype(np.float64) - 128.0
-        cr = refs[2].astype(np.float64) - 128.0
-        bgr = np.stack(
-            [
-                y + 1.772 * cb,
-                y - 0.344136 * cb - 0.714136 * cr,
-                y + 1.402 * cr,
-            ],
-            axis=2,
-        )
-        bgr = np.clip(np.round(bgr), 0, 255).astype(np.uint8)
-    return {
-        "width": w,
-        "height": h,
-        "bit_count": 24,
-        "n_pixels": w * h,
-        "pixels": bgr.tobytes(),
-    }
+    return _jpeg_bgr(refs, w, h)
 
 
 def encode_jpeg_hierarchical(gray_rows=None, rows_rgb=None,
@@ -1513,65 +1463,40 @@ def encode_jpeg_hierarchical(gray_rows=None, rows_rgb=None,
             ))
             for t in range(n_dest)
         ]
-        out = bytearray()
-        acc, nacc = 0, 0
-
-        def put(val, nb):
-            nonlocal acc, nacc
-            for i in range(nb - 1, -1, -1):
-                acc = (acc << 1) | ((val >> i) & 1)
-                nacc += 1
-                if nacc == 8:
-                    out.append(acc)
-                    if acc == 0xFF:
-                        out.append(0x00)
-                    acc, nacc = 0, 0
-
+        seg_v, seg_w = [], []
         for ci, toks in stream:
             for kind, sym, bv, nb in toks:
                 L, code = (
                     dc_tabs if kind == "dc" else ac_tabs
                 )[dest[ci]][2][sym]
-                put(code, L)
-                if nb:
-                    put(bv, nb)
-        if nacc:
-            put((1 << (8 - nacc)) - 1, 8 - nacc)
-
-        def seg(marker, sbody):
-            return bytes([0xFF, marker]) + struct.pack(
-                ">H", len(sbody) + 2
-            ) + sbody
+                seg_v += (code, bv)
+                seg_w += (L, nb)
 
         segs = b""
         for t in range(n_dest):
             for tc, (bits, vals, _) in ((0, dc_tabs[t]),
                                         (1, ac_tabs[t])):
-                segs += seg(0xC4, bytes([(tc << 4) | t]) + bytes(bits)
-                            + vals)
+                segs += _jpeg_segment_bytes(
+                    0xC4, bytes([(tc << 4) | t]) + bytes(bits) + vals
+                )
         sof = struct.pack(">BHHB", 8, fh, fw, ncomp)
         for ci in range(ncomp):
             sof += bytes([ci + 1, 0x11, 0])
-        segs += seg(0xC5 if differential else 0xC0, sof)
+        segs += _jpeg_segment_bytes(0xC5 if differential else 0xC0, sof)
         sos = bytes([ncomp])
         for ci in range(ncomp):
             sos += bytes([ci + 1, (dest[ci] << 4) | dest[ci]])
         sos += b"\x00\x3f\x00"
-        segs += seg(0xDA, sos)
-        return segs + bytes(out), recon
-
-    def seg(marker, sbody):
-        return bytes([0xFF, marker]) + struct.pack(
-            ">H", len(sbody) + 2
-        ) + sbody
+        segs += _jpeg_segment_bytes(0xDA, sos)
+        return segs + _jpeg_stuffed_bits(seg_v, seg_w), recon
 
     out = bytearray(b"\xff\xd8")
     zz_q = bytes(int(qtab.reshape(-1)[z]) for z in _JPEG_ZIGZAG)
-    out += seg(0xDB, bytes([0x00]) + zz_q)
+    out += _jpeg_segment_bytes(0xDB, bytes([0x00]) + zz_q)
     dhp = struct.pack(">BHHB", 8, h, w, ncomp)
     for ci in range(ncomp):
         dhp += bytes([ci + 1, 0x11, 0])
-    out += seg(0xDE, dhp)
+    out += _jpeg_segment_bytes(0xDE, dhp)
     # coarsest: non-differential frame; encoder mirrors the decoder's
     # clamp-to-int after every stage so residuals are computed against
     # the decoder's actual references
@@ -1584,7 +1509,7 @@ def encode_jpeg_hierarchical(gray_rows=None, rows_rgb=None,
         eh = 1 if tw > refs[0].shape[1] else 0
         ev = 1 if th > refs[0].shape[0] else 0
         if eh or ev:
-            out += seg(0xDF, bytes([(eh << 4) | ev]))
+            out += _jpeg_segment_bytes(0xDF, bytes([(eh << 4) | ev]))
             refs = [_jpeg_expand(r, eh, ev)[:th, :tw] for r in refs]
         diffs = [t.astype(np.int64) - r for t, r in zip(tgt, refs)]
         body, recon = frame(diffs, True)
@@ -1750,80 +1675,53 @@ def encode_jpeg(rows_rgb=None, gray_rows=None, quant=1, restart_interval=0,
         for t in range(n_dest)
     ]
 
-    # pass 2: emit the entropy stream with byte stuffing + restarts.
-    # Round-18 bulk form (guide §4.2): gather every (code, width) per
-    # restart segment, pack the whole segment's bits with one
-    # np.packbits (padding the tail with 1s, as the per-put flush did),
-    # then insert the 0x00 stuffing byte after every emitted 0xFF —
-    # byte-identical to the round-17 per-token put() loop by
-    # construction (stuffing never altered the bit accumulator).
+    # pass 2: the entropy stream, one stuffed writer call per restart
+    # interval
     out = bytearray()
     seg_v: list = []
     seg_w: list = []
-
-    def emit_segment() -> None:
-        if not seg_v:
-            return
-        v = np.asarray(seg_v, dtype=np.int64)
-        w = np.asarray(seg_w, dtype=np.int64)
-        ends = np.cumsum(w)
-        total = int(ends[-1])
-        shift = np.repeat(ends, w) - 1 - np.arange(total, dtype=np.int64)
-        bits = ((np.repeat(v, w) >> shift) & 1).astype(np.uint8)
-        pad = (-total) % 8
-        if pad:
-            bits = np.concatenate([bits, np.ones(pad, np.uint8)])
-        arr = np.packbits(bits)
-        ff = np.flatnonzero(arr == 0xFF)
-        if len(ff):
-            arr = np.insert(arr, ff + 1, np.uint8(0))
-        out.extend(arr.tobytes())
-        seg_v.clear()
-        seg_w.clear()
-
     for item in stream:
         if item[0] == "rst":
-            emit_segment()
+            out += _jpeg_stuffed_bits(seg_v, seg_w)
             out += bytes([0xFF, 0xD0 + item[1]])
+            seg_v, seg_w = [], []
             continue
         _, ci, toks = item
         for kind, sym, bv, nb in toks:
             enc = (dc_tabs if kind == "dc" else ac_tabs)[dest[ci]][2]
             L, code = enc[sym]
-            seg_v.append(code)
-            seg_w.append(L)
-            if nb:
-                seg_v.append(bv)
-                seg_w.append(nb)
-    emit_segment()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+            seg_v += (code, bv)
+            seg_w += (L, nb)
+    out += _jpeg_stuffed_bits(seg_v, seg_w)
 
     hdr = b"\xff\xd8"
-    hdr += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    hdr += _jpeg_segment_bytes(
+        0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    )
     if quant16:  # Pq=1: 16-bit big-endian table entries (T.81 B.2.4.1)
         zz_q = b"".join(
             struct.pack(">H", int(qtab.reshape(-1)[z])) for z in _JPEG_ZIGZAG
         )
-        hdr += seg(0xDB, bytes([0x10]) + zz_q)
+        hdr += _jpeg_segment_bytes(0xDB, bytes([0x10]) + zz_q)
     else:
         zz_q = bytes(int(qtab.reshape(-1)[z]) for z in _JPEG_ZIGZAG)
-        hdr += seg(0xDB, bytes([0x00]) + zz_q)
+        hdr += _jpeg_segment_bytes(0xDB, bytes([0x00]) + zz_q)
     sof = struct.pack(">BHHB", precision, height, width, ncomp)
     for ci, (hc, vc) in enumerate(facs):
         sof += bytes([ci + 1, (hc << 4) | vc, 0])
-    hdr += seg(0xC0 if precision == 8 else 0xC1, sof)
+    hdr += _jpeg_segment_bytes(0xC0 if precision == 8 else 0xC1, sof)
     for t in range(n_dest):
         for tc, (bits, vals, _) in ((0, dc_tabs[t]), (1, ac_tabs[t])):
-            hdr += seg(0xC4, bytes([(tc << 4) | t]) + bytes(bits) + vals)
+            hdr += _jpeg_segment_bytes(
+                0xC4, bytes([(tc << 4) | t]) + bytes(bits) + vals
+            )
     if restart_interval:
-        hdr += seg(0xDD, struct.pack(">H", restart_interval))
+        hdr += _jpeg_segment_bytes(0xDD, struct.pack(">H", restart_interval))
     sos = bytes([ncomp])
     for ci in range(ncomp):
         sos += bytes([ci + 1, (dest[ci] << 4) | dest[ci]])
     sos += b"\x00\x3f\x00"
-    hdr += seg(0xDA, sos)
+    hdr += _jpeg_segment_bytes(0xDA, sos)
     return hdr + bytes(out) + b"\xff\xd9"
 
 
@@ -2063,19 +1961,18 @@ def encode_jpeg_progressive(rows_rgb=None, gray_rows=None, quant=1,
         scans.append(([ci], 1, 5, 1, 0, ac_refine_tokens(ci, 1, 5, 0)))
         scans.append(([ci], 6, 63, 1, 0, ac_refine_tokens(ci, 6, 63, 0)))
 
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _jpeg_segment_bytes(
+        0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    )
     zz_q = bytes(int(qtab.reshape(-1)[z]) for z in zz)
-    out += seg(0xDB, bytes([0x00]) + zz_q)
+    out += _jpeg_segment_bytes(0xDB, bytes([0x00]) + zz_q)
     sof = struct.pack(">BHHB", 8, height, width, ncomp)
     for ci, (hc, vc) in enumerate(facs):
         sof += bytes([ci + 1, (hc << 4) | vc, 0])
-    out += seg(0xC2, sof)  # SOF2: progressive
+    out += _jpeg_segment_bytes(0xC2, sof)  # SOF2: progressive
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
+        out += _jpeg_segment_bytes(0xDD, struct.pack(">H", restart_interval))
 
     for scan_cis, ss, se, ah, al, toks in scans:
         # per-scan canonical tables over the symbols actually emitted
@@ -2086,44 +1983,29 @@ def encode_jpeg_progressive(rows_rgb=None, gray_rows=None, quant=1,
         encs = {}
         for (tc, ci), ss_set in syms.items():
             bits, vals, enc = _jpeg_canonical_tables(ss_set)
-            out += seg(0xC4, bytes([(tc << 4) | ci]) + bytes(bits) + vals)
+            out += _jpeg_segment_bytes(
+                0xC4, bytes([(tc << 4) | ci]) + bytes(bits) + vals
+            )
             encs[(tc, ci)] = enc
         sos = bytes([len(scan_cis)])
         for ci in scan_cis:
             sos += bytes([ci + 1, (ci << 4) | ci])
         sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos)
-        # bitstream
-        acc, nacc = 0, 0
-        ent = bytearray()
+        out += _jpeg_segment_bytes(0xDA, sos)
+        # entropy data, one stuffed writer call per restart interval
+        seg_v, seg_w = [], []
         for tok in toks:
             if tok[0] == "rst":
-                if nacc:  # pad to the byte boundary with 1s
-                    acc = (acc << (8 - nacc)) | ((1 << (8 - nacc)) - 1)
-                    ent.append(acc)
-                    if acc == 0xFF:
-                        ent.append(0x00)
-                    acc, nacc = 0, 0
-                ent += bytes([0xFF, 0xD0 + tok[1]])
-                continue
-            if tok[0] == "sym":
+                out += _jpeg_stuffed_bits(seg_v, seg_w)
+                out += bytes([0xFF, 0xD0 + tok[1]])
+                seg_v, seg_w = [], []
+            elif tok[0] == "sym":
                 L, code = encs[tok[1]][tok[2]]
-                val, nb = code, L
+                seg_v.append(code)
+                seg_w.append(L)
             else:
-                _, val, nb = tok
-            for i in range(nb - 1, -1, -1):
-                acc = (acc << 1) | ((val >> i) & 1)
-                nacc += 1
-                if nacc == 8:
-                    ent.append(acc)
-                    if acc == 0xFF:
-                        ent.append(0x00)
-                    acc, nacc = 0, 0
-        if nacc:
-            acc = (acc << (8 - nacc)) | ((1 << (8 - nacc)) - 1)
-            ent.append(acc)
-            if acc == 0xFF:
-                ent.append(0x00)
-        out += ent
+                seg_v.append(tok[1])
+                seg_w.append(tok[2])
+        out += _jpeg_stuffed_bits(seg_v, seg_w)
     out += b"\xff\xd9"
     return bytes(out)

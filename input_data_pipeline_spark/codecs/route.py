@@ -206,11 +206,10 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
     :func:`decode_mp3_to_pcm`; the synthesis window stance is documented
     at ``_MP3_SYNTH_PROTO``), and REAL for CCITT bilevel TIFF — G4/MH
     round 14, T.4-with-EOL G3 (1D and 2D) also round 14, JPEG-in-TIFF
-    round 17. Only genuinely external codecs (compressed video/audio
-    SAMPLE decode: H.264/AAC in MP4, interframe AVI codecs, Ogg
-    Opus/Vorbis payloads, arithmetic/hierarchical JPEG, headerless
-    tag-51x OJPEG — the JPEGInterchangeFormat OJPEG form decodes, round
-    17) stay the documented
+    round 17, both OJPEG forms round 17. Only genuinely external
+    codecs (compressed video/audio SAMPLE decode: H.264/AAC in MP4,
+    interframe AVI codecs, Ogg Opus payloads, arithmetic-coded JPEG)
+    stay the documented
     seam: those aren't in this container, and on a real cluster the
     call MUST go through a per-executor singleton (one codec/model
     instance per worker process), never per row — reference pattern U2.

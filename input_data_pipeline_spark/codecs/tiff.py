@@ -13,7 +13,13 @@ from input_data_pipeline_spark.codecs.fax import (
     g4_encode,
     mh_encode,
 )
-from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg, encode_jpeg
+from input_data_pipeline_spark.codecs.jpeg import (
+    _decode_jpeg,
+    _jpeg_segment,
+    _jpeg_segment_bytes,
+    _jpeg_sos_selectors,
+    encode_jpeg,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -70,68 +76,6 @@ def _packbits_decode(data: bytes, expect: int) -> bytes:
     if len(out) != expect:
         raise ValueError("PackBits output length mismatch")
     return bytes(out)
-
-
-def _ojpeg_split_tables(stream: bytes):
-    """Split a baseline JPEG interchange stream into the pieces the
-    deprecated TIFF 6.0 §22 tag-51x form stores separately: the
-    quantization tables (64 zigzag bytes each, keyed by destination),
-    the Huffman tables (16 BITS counts + VALUES, keyed by class and
-    destination), the SOF0 component specs, the SOS table bindings,
-    and the raw entropy-coded bytes (byte-stuffed, EOI stripped).
-    The inverse of the reassembly :func:`_decode_tiff` performs for
-    compression-6 files without tags 513/514."""
-    pos = 2
-    dqt: dict[int, bytes] = {}
-    dht: dict[tuple[int, int], bytes] = {}
-    sof = None
-    sos = None
-    while pos + 4 <= len(stream):
-        if stream[pos] != 0xFF:
-            raise ValueError("bad JPEG segment stream")
-        m = stream[pos + 1]
-        ln = int.from_bytes(stream[pos + 2: pos + 4], "big")
-        body = stream[pos + 4: pos + 2 + ln]
-        if m == 0xDB:
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 15
-                if pq:
-                    raise ValueError("tag-51x OJPEG stores 8-bit Q tables")
-                dqt[tq] = bytes(body[i + 1: i + 65])
-                i += 65
-        elif m == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 15
-                n = sum(body[i + 1: i + 17])
-                dht[(tc, th)] = bytes(body[i + 1: i + 17 + n])
-                i += 17 + n
-        elif m == 0xC0:
-            ncomp = body[5]
-            sof = [
-                (body[6 + 3 * k], body[7 + 3 * k] >> 4,
-                 body[7 + 3 * k] & 15, body[8 + 3 * k])
-                for k in range(ncomp)
-            ]
-        elif m == 0xDA:
-            ns = body[0]
-            scomps = [
-                (body[1 + 2 * k], body[2 + 2 * k] >> 4,
-                 body[2 + 2 * k] & 15)
-                for k in range(ns)
-            ]
-            entropy = stream[pos + 2 + ln:]
-            if entropy.endswith(b"\xff\xd9"):
-                entropy = entropy[:-2]
-            sos = (scomps, bytes(entropy))
-            break
-        elif m != 0xC0 and 0xC1 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            raise ValueError("tag-51x OJPEG wants a baseline (SOF0) stream")
-        pos += 2 + ln
-    if sof is None or sos is None:
-        raise ValueError("JPEG stream missing SOF0/SOS")
-    return dqt, dht, sof, sos
 
 
 def encode_tiff(
@@ -217,21 +161,32 @@ def encode_tiff(
         import struct as _struct
 
         stream = encode_jpeg(rows_rgb=rgb, subsampling=jpeg_subsampling)
-        dqt, dht, sof, (scomps, entropy) = _ojpeg_split_tables(stream)
+        # split the stream into what the tag-51x form stores apart:
+        # encode_jpeg writes one table per DQT/DHT segment, so a table is
+        # its segment body after the Pq|Tq (Tc|Th) byte
+        tables = {}
+        pos = 2
+        while True:
+            m, b0, pos = _jpeg_segment(stream, pos)
+            body = stream[b0:pos]
+            if m in (0xDB, 0xC4):
+                tables[m, body[0]] = body[1:]
+            elif m == 0xC0:  # component specs: (id, Hi|Vi, Tq)
+                sof = [body[6 + 3 * k: 9 + 3 * k] for k in range(body[5])]
+            elif m == 0xDA:
+                break
+        scan = _jpeg_sos_selectors(body, [c[0] for c in sof])
+        entropy = stream[pos:-2]  # byte-stuffed, EOI stripped
         ncomp = len(sof)
-        if ncomp != 3:
-            raise ValueError("headerless OJPEG fixture wants 3 components")
-        y_h, y_v = sof[0][1], sof[0][2]
-        if any(c[1] != 1 or c[2] != 1 for c in sof[1:]):
+        if any(c[1] != 0x11 for c in sof[1:]):
             raise ValueError("tag 530 expresses Y-factor subsampling only")
-        td = {c[0]: c[1] for c in scomps}
-        ta = {c[0]: c[2] for c in scomps}
+        y_h, y_v = sof[0][1] >> 4, sof[0][1] & 15
         # per-component raw table blobs in the tag-51x shape (Q: 64
         # zigzag bytes; DC/AC: 16 BITS counts + VALUES, no class/dest
         # byte — TIFF 6.0 §22's field definitions)
-        qblob = [dqt[sof[k][3]] for k in range(ncomp)]
-        dblob = [dht[(0, td[sof[k][0]])] for k in range(ncomp)]
-        ablob = [dht[(1, ta[sof[k][0]])] for k in range(ncomp)]
+        qblob = [tables[0xDB, c[2]] for c in sof]
+        dblob = [tables[0xC4, scan[c[0]][0]] for c in sof]
+        ablob = [tables[0xC4, 0x10 | scan[c[0]][1]] for c in sof]
         e = ">" if big_endian else "<"
         n_tags = 14
         ifd_size = 2 + n_tags * 12 + 4
@@ -344,36 +299,26 @@ def encode_tiff(
                 subsampling=jpeg_subsampling,
             ))
         if jpeg_tables:
-            def _hoist_dqt(stream: bytes) -> tuple[bytes, bytes]:
-                pos = 2
-                dqt = b""
-                rest = b""
-                while True:
-                    if stream[pos] != 0xFF:
-                        raise ValueError("bad JPEG segment stream")
-                    m = stream[pos + 1]
-                    if m == 0xDA:
-                        rest += stream[pos:]
-                        break
-                    ln = int.from_bytes(stream[pos + 2: pos + 4], "big")
-                    seg = stream[pos: pos + 2 + ln]
-                    if m == 0xDB:
-                        dqt += seg
-                    else:
-                        rest += seg
-                    pos += 2 + ln
-                return dqt, rest
-
+            # TTN2 abbreviation: every strip's DQT segments move into
+            # one tag-347 table stream
             dqt0 = None
-            hoisted = []
-            for s in strips:
-                dqt, rest = _hoist_dqt(s)
+            for si, s in enumerate(strips):
+                dqt, rest, pos = b"", b"\xff\xd8", 2
+                while True:
+                    m, b0, end = _jpeg_segment(s, pos)
+                    if m == 0xDA:
+                        rest += s[b0 - 4:]
+                        break
+                    if m == 0xDB:
+                        dqt += s[b0 - 4: end]
+                    else:
+                        rest += s[b0 - 4: end]
+                    pos = end
                 if dqt0 is None:
                     dqt0 = dqt
                 elif dqt != dqt0:
                     raise ValueError("strip DQT tables must agree")
-                hoisted.append(b"\xff\xd8" + rest)
-            strips = hoisted
+                strips[si] = rest
             tables347 = b"\xff\xd8" + (dqt0 or b"") + b"\xff\xd9"
     elif planar2:
         # planar: one row source per component, R strips then G then B
@@ -717,12 +662,30 @@ def _decode_tiff(payload: bytes) -> dict:
         quniq, qids = _dests(qoffs)
         duniq, dids = _dests(dcoffs)
         auniq, aids = _dests(acoffs)
-        head = bytearray(b"\xff\xd8")
+        rps_o = tags.get(278, (4, 1, h))[2] or h
+        if 273 not in tags or 279 not in tags:
+            raise ValueError("TIFF missing StripOffsets/StripByteCounts")
+        offsets, counts = arr(273), arr(279)
+        if len(offsets) != len(counts):
+            raise ValueError("TIFF strip offset/count tables disagree")
+        # the rebuilt SOF0 and DRI carry these in 16-bit fields
+        strip_rows = [
+            min(rps_o, h - si * rps_o) for si in range(len(offsets))
+        ]
+        if not 0 < w <= 0xFFFF or dri > 0xFFFF or any(
+            not 0 < n <= 0xFFFF for n in strip_rows
+        ):
+            raise ValueError(
+                "headerless OJPEG geometry outside JPEG's 16-bit frame "
+                "fields (width and strip rows 1..65535)"
+            )
+        head = b"\xff\xd8"
         for tid, o in enumerate(quniq):
             if o + 64 > len(payload):
                 raise ValueError("truncated JPEGQTables data")
-            head += b"\xff\xdb" + (67).to_bytes(2, "big")
-            head += bytes([tid]) + payload[o: o + 64]
+            head += _jpeg_segment_bytes(
+                0xDB, bytes([tid]) + payload[o: o + 64]
+            )
         for cls, uniq in ((0, duniq), (1, auniq)):
             for tid, o in enumerate(uniq):
                 if o + 16 > len(payload):
@@ -730,34 +693,26 @@ def _decode_tiff(payload: bytes) -> dict:
                 n = 16 + sum(payload[o: o + 16])
                 if o + n > len(payload):
                     raise ValueError("truncated JPEG Huffman table tag")
-                head += b"\xff\xc4" + (3 + n).to_bytes(2, "big")
-                head += bytes([(cls << 4) | tid]) + payload[o: o + n]
+                head += _jpeg_segment_bytes(
+                    0xC4, bytes([(cls << 4) | tid]) + payload[o: o + n]
+                )
         if dri:
-            head += b"\xff\xdd\x00\x04" + int(dri).to_bytes(2, "big")
-        rps_o = tags.get(278, (4, 1, h))[2] or h
-        if 273 not in tags or 279 not in tags:
-            raise ValueError("TIFF missing StripOffsets/StripByteCounts")
-        offsets, counts = arr(273), arr(279)
-        if len(offsets) != len(counts):
-            raise ValueError("TIFF strip offset/count tables disagree")
+            head += _jpeg_segment_bytes(0xDD, struct.pack(">H", dri))
+        sos = bytes([spp])
+        for k in range(spp):
+            sos += bytes([k + 1, (dids[k] << 4) | aids[k]])
+        sos = _jpeg_segment_bytes(0xDA, sos + b"\x00\x3f\x00")
         rows_out = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
+        for o, c, n_rows in zip(offsets, counts, strip_rows):
             if o + c > len(payload):
                 raise ValueError("truncated OJPEG strip")
-            n_rows = min(rps_o, h - si * rps_o)
-            sof = b"\xff\xc0" + (8 + 3 * spp).to_bytes(2, "big")
-            sof += bytes([8]) + int(n_rows).to_bytes(2, "big")
-            sof += int(w).to_bytes(2, "big") + bytes([spp])
+            sof = struct.pack(">BHHB", 8, n_rows, w, spp)
             for k in range(spp):
                 hv = (sub_h << 4) | sub_v if k == 0 else 0x11
                 sof += bytes([k + 1, hv, qids[k]])
-            sos = b"\xff\xda" + (6 + 2 * spp).to_bytes(2, "big")
-            sos += bytes([spp])
-            for k in range(spp):
-                sos += bytes([k + 1, (dids[k] << 4) | aids[k]])
-            sos += b"\x00\x3f\x00"
             m = _decode_jpeg(
-                bytes(head) + sof + sos + payload[o: o + c] + b"\xff\xd9"
+                head + _jpeg_segment_bytes(0xC0, sof) + sos
+                + payload[o: o + c] + b"\xff\xd9"
             )
             if m["width"] != w or m["height"] != n_rows:
                 raise ValueError("OJPEG strip geometry disagrees with IFD")

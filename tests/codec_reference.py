@@ -4,6 +4,8 @@
   ``_g72x_decode_ref``) and the G.722 block-4 reference
   (``_g722_block4_ref``), which the inlined production loops must match
   bit for bit.
+- ``_jpeg_stuffed_bits_ref``, the bit-at-a-time JPEG entropy writer
+  that the ``np.packbits`` writer in ``codecs.jpeg`` must match.
 - ``encode_ima_wav``, the IMA ADPCM WAV fixture encoder.
 - The structural self-checks of the embedded spec tables. Each raises
   ``AssertionError`` naming the broken invariant; tests run them against
@@ -46,6 +48,32 @@ from input_data_pipeline_spark.codecs.wav import (
     _MS_ADPCM_COEFS,
     _WAVE_FORMAT_IMA_ADPCM,
 )
+
+
+def _jpeg_stuffed_bits_ref(values, widths) -> bytes:
+    """One restart interval of JPEG entropy data, one bit at a time
+    (T.81 F.1.2.3, B.1.1.5): the low ``widths[i]`` bits of each
+    ``values[i]`` MSB first, the last byte padded with 1-bits, a 0x00
+    stuffed after every 0xFF byte."""
+    out = bytearray()
+    acc = nacc = 0
+
+    def put(bit: int) -> None:
+        nonlocal acc, nacc
+        acc = (acc << 1) | bit
+        nacc += 1
+        if nacc == 8:
+            out.append(acc)
+            if acc == 0xFF:
+                out.append(0x00)
+            acc = nacc = 0
+
+    for val, nb in zip(values, widths):
+        for i in range(nb - 1, -1, -1):
+            put((val >> i) & 1)
+    while nacc:
+        put(1)
+    return bytes(out)
 
 
 def encode_ima_wav(

@@ -185,8 +185,10 @@ def _gate_fixtures():
 
     from input_data_pipeline_spark.codecs.flac import encode_flac
     from input_data_pipeline_spark.codecs.jpeg import (
+        encode_jpeg,
         encode_jpeg_hierarchical,
         encode_jpeg_lossless,
+        encode_jpeg_progressive,
     )
     from input_data_pipeline_spark.codecs.ogg import (
         encode_ogg,
@@ -194,7 +196,60 @@ def _gate_fixtures():
         make_opus_head,
         make_vorbis_ident,
     )
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff
     from input_data_pipeline_spark.operators.multimodal import _vorbis_fixture_plan
+
+    def card(d, w, h):  # jpeg_decode_features' neutral-chroma card
+        r, c = np.arange(h).reshape(-1, 1), np.arange(w)
+        return np.dstack([(7 * d + 5 * r + 3 * c) % 236 + 10] * 3)
+
+    def jpeg(d):
+        if d % 3 == 2:  # jpeg_precision12_features: 12-bit, gray on odd d
+            r, c = np.arange(9 + d % 6).reshape(-1, 1), np.arange(10 + d % 7)
+            x = ((97 * d + 173 * r + 311 * c) % 4096).astype(np.float64)
+            if d % 2:
+                return encode_jpeg(gray_rows=x, precision=12)
+            return encode_jpeg(rows_rgb=np.stack([x] * 3, axis=2), precision=12)
+        # jpeg_decode_features' baseline rows: 4:4:4 (Pq=1 at d % 5 == 0)
+        # and 4:2:0 with a restart interval
+        v = d % 2
+        return encode_jpeg(
+            rows_rgb=card(d, 9 + d % 8 + 8 * v, 8 + d % 5), quant=1,
+            subsampling="420" if v else "444", restart_interval=v,
+            quant16=v == 0 and d % 5 == 0,
+        )
+
+    def progressive(d):
+        return encode_jpeg_progressive(
+            rows_rgb=card(d, 9 + d % 8, 8 + d % 5), quant=1,
+            subsampling="420" if d % 2 else "444",
+        )
+
+    def jpeg_in_tiff(d):
+        # jpeg_in_tiff_decode_features: d % 7 == 4 OJPEG interchange,
+        # d % 7 == 2 headerless OJPEG, else JPEG strips, tables hoisted
+        # on odd d, non-divisor sampling at d % 5 == 3
+        w, h = 9 + d % 8, 8 + d % 5
+        oj, hl = d % 7 == 4, d % 7 == 2
+        if d % 5 == 3 and not (oj or hl):
+            g = np.tile((3 * d) % 120 + 8 * np.arange(w), (h, 1))
+            sub = ((2, 1), (3, 1), (3, 1))
+        else:
+            r, c = np.arange(h).reshape(-1, 1), np.arange(w)
+            g = (7 * d + 11 * r + 5 * c) % 256
+            sub = "420" if hl and d % 2 else "444"
+        plane = np.dstack([g, g, g]).astype(np.uint8)
+        be = d % 3 == 2
+        if oj:
+            return encode_tiff(plane, ojpeg=True, big_endian=be, jpeg_subsampling=sub)
+        if hl:
+            return encode_tiff(
+                plane, ojpeg_headerless=True, big_endian=be, jpeg_subsampling=sub
+            )
+        return encode_tiff(
+            plane, rows_per_strip=3 + d % 3, jpeg=True, jpeg_tables=d % 2 == 1,
+            big_endian=be, jpeg_subsampling=sub,
+        )
 
     def lossless(d):
         prec = [8, 12, 16][d % 3]
@@ -241,6 +296,9 @@ def _gate_fixtures():
                           audio_per_page=3)
 
     return [
+        ("encode_jpeg", "image", jpeg),
+        ("encode_jpeg_progressive", "image", progressive),
+        ("encode_tiff", "image", jpeg_in_tiff),
         ("encode_jpeg_lossless", "image", lossless),
         ("encode_jpeg_hierarchical", "image", hierarchical),
         ("encode_flac", "audio", flac),
@@ -284,6 +342,79 @@ def test_gate_fixture_mutants_fail_typed():
                 except Exception as e:  # noqa: BLE001 - the untyped errors under test
                     untyped.append((name, k, type(e).__name__, str(e)[:60]))
     assert not untyped, untyped[:10]
+
+
+def test_jpeg_stuffed_writer_matches_bitwise_reference():
+    """The ``np.packbits`` entropy writer every JPEG encoder shares is
+    byte-identical to the bit-at-a-time reference, on long random inputs
+    and on degenerate ones: runs of all-ones codes that emit consecutive
+    0xFF bytes, 16-bit codes, zero-width entries, an empty interval, and
+    1-bit padding that completes an 0xFF byte at the interval's end."""
+    import random
+
+    from input_data_pipeline_spark.codecs.jpeg import _jpeg_stuffed_bits
+
+    ref = codec_reference._jpeg_stuffed_bits_ref
+    cases = [
+        ([], []),
+        ([5, 0, 7], [0, 0, 0]),
+        ([0xFFFF] * 300, [16] * 300),
+        ([1] * 2000, [1] * 2000),
+        ([0x7F], [7]),
+        ([0x3, 0x7F, 0x1], [2, 7, 1]),
+        ([0xABCD, 0x5], [4, 0]),
+    ]
+    rng = random.Random(16)
+    for _ in range(30):
+        n = rng.randrange(1, 4000)
+        widths = [rng.choice([0, 1, 2, 3, 7, 8, 9, 15, 16]) for _ in range(n)]
+        # half the entries all-ones so 0xFF bytes (and runs of them) occur
+        values = [
+            (1 << w) - 1 if rng.random() < 0.5 else rng.getrandbits(16)
+            for w in widths
+        ]
+        cases.append((values, widths))
+    for values, widths in cases:
+        assert _jpeg_stuffed_bits(values, widths) == ref(values, widths), (
+            values[:8], widths[:8])
+    assert _jpeg_stuffed_bits([0xFFFF] * 300, [16] * 300) == b"\xff\x00" * 600
+    assert _jpeg_stuffed_bits([0x7F], [7]) == b"\xff\x00"
+    assert _jpeg_stuffed_bits([5], [0]) == b""
+
+
+def test_headerless_ojpeg_geometry_is_bounded():
+    """The headerless OJPEG rebuild writes ImageWidth and each strip's row
+    count into 16-bit SOF0 fields: a width or a strip height above 65,535,
+    and a strip with no rows left (more strips than rows), are refused as
+    ValueError instead of overflowing; the clean file still decodes."""
+    import struct
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff
+
+    g = ((11 * np.arange(8)[:, None] + 5 * np.arange(9)) % 256).astype(np.uint8)
+    tiff = encode_tiff(np.dstack([g, g, g]), ojpeg_headerless=True)
+    assert decode_media(tiff, "image")["n_pixels"] == 8 * 9
+
+    def patched(edits):  # {tag: [(byte offset in the IFD entry, LONG)]}
+        out = bytearray(tiff)
+        (n_tags,) = struct.unpack_from("<H", out, 8)  # IFD at offset 8
+        for off in range(10, 10 + 12 * n_tags, 12):
+            for at, value in edits.get(struct.unpack_from("<H", out, off)[0], ()):
+                struct.pack_into("<I", out, off + at, value)
+        return bytes(out)
+
+    count, value = 4, 8
+    for edits in (
+        {256: [(value, 70_000)]},  # ImageWidth
+        {257: [(value, 70_000)], 278: [(value, 70_000)]},  # a 70,000-row strip
+        # three strips of RowsPerStrip 8 over 8 rows: 0 and -8 rows left
+        {273: [(count, 3)], 279: [(count, 3)]},
+    ):
+        with pytest.raises(ValueError, match="16-bit frame fields"):
+            decode_media(patched(edits), "image")
 
 
 @pytest.mark.parametrize("compression", [2, 3, 4])

@@ -1188,18 +1188,60 @@ def test_decode_jpeg_rejects_non_baseline():
         decode_media(b"\xff\xd8" + struct.pack(">BBH", 0xFF, 0xFE, 4) + b"zz" + b"\xff\xd9", "image")
 
 
-def test_decode_jpeg_malformed_segments_raise_value_error():
+@pytest.mark.parametrize("kind", ["sof0", "sof3", "dhp"])
+def test_decode_jpeg_malformed_segments_raise_value_error(kind):
     """Every bad-bytes path in the JPEG header/entropy layers must raise
     ValueError (the shared malformed-payload contract) — never a bare
     struct.error, IndexError, or TypeError a decode-failure filter would
-    miss."""
+    miss. The three frame kinds (baseline SOF0, lossless SOF3,
+    hierarchical DHP) walk their segments with one reader and parse
+    tables with one DQT and one DHT parser, so a malformed segment
+    inserted after the frame header fails the same way in each, and
+    fill bytes or a stray RSTn there are skipped."""
     import struct
 
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.jpeg import (
+        _jpeg_segment,
+        _jpeg_segment_bytes as seg,
+        encode_jpeg_hierarchical,
+        encode_jpeg_lossless,
+    )
 
     gray = [[7 * r + c for c in range(8)] for r in range(8)]
-    ok = make_jpeg(gray_rows=gray)
+    ok = {
+        "sof0": lambda: make_jpeg(gray_rows=gray),
+        "sof3": lambda: encode_jpeg_lossless(np.array(gray)),
+        "dhp": lambda: encode_jpeg_hierarchical(gray_rows=np.array(gray)),
+    }[kind]()
+    pos = 2  # to the end of the (first) frame header
+    while True:
+        marker, _, pos = _jpeg_segment(ok, pos)
+        if marker in (0xC0, 0xC3):
+            break
+    head, tail = ok[:pos], ok[pos:]
+    want = decode_media(ok, "image")["pixels"]
+    for skipped in (b"\xff\xd3", b"\xff\xff\xff"):  # stray RSTn, fill
+        assert decode_media(head + skipped + tail, "image")["pixels"] == want
+    for bad, msg in (
+        (seg(0xC4, b"\x00" + b"\x01" * 8), "truncated JPEG DHT segment"),
+        (seg(0xC4, b"\x00" + bytes([4] + [0] * 15) + b"\x01"),
+         "truncated JPEG DHT segment"),
+        (seg(0xDB, b"\x00" + b"\x01" * 9), "truncated JPEG DQT segment"),
+        (seg(0xDA, b""), "truncated JPEG SOS segment"),
+        (b"\xff\xe1\x00\x00", "truncated JPEG segment"),
+        (b"\xff\xe1\x00\x01", "truncated JPEG segment"),
+    ):
+        with pytest.raises(ValueError) as exc:
+            decode_media(head + bad + tail, "image")
+        assert str(exc.value) == msg, (bad, exc.value)
+    # a segment running past the payload
+    with pytest.raises(ValueError) as exc:
+        decode_media(head + b"\xff\xe1\x00\x40" + b"x" * 10, "image")
+    assert str(exc.value) == "truncated JPEG segment"
+    if kind != "sof0":
+        return
 
     # entropy stream ending ON an 0xFF byte (dangling, no stuffed/marker
     # byte after it): must be 'truncated', not a TypeError from the
@@ -1209,27 +1251,9 @@ def test_decode_jpeg_malformed_segments_raise_value_error():
     cut = scan_at + 2 + sos_len + 1  # keep 1 entropy byte, then dangle
     with pytest.raises(ValueError, match="truncated JPEG entropy"):
         decode_media(ok[:cut] + b"\xff", "image")
-
     # short SOF0 body (2 bytes): ValueError, not struct.error
     with pytest.raises(ValueError, match="truncated JPEG SOF0"):
         decode_media(b"\xff\xd8" + seg(0xC0, b"\x08\x00") + b"\xff\xd9", "image")
-    # DHT whose BITS array is cut short: ValueError, not IndexError
-    with pytest.raises(ValueError, match="truncated JPEG DHT"):
-        decode_media(b"\xff\xd8" + seg(0xC4, b"\x00" + b"\x01" * 8) + b"\xff\xd9", "image")
-    # DHT whose HUFFVAL list is cut short
-    with pytest.raises(ValueError, match="truncated JPEG DHT"):
-        decode_media(
-            b"\xff\xd8" + seg(0xC4, b"\x00" + bytes([4] + [0] * 15) + b"\x01")
-            + b"\xff\xd9",
-            "image",
-        )
-    # DQT shorter than one 65-byte table
-    with pytest.raises(ValueError, match="truncated JPEG DQT"):
-        decode_media(b"\xff\xd8" + seg(0xDB, b"\x00" + b"\x01" * 10) + b"\xff\xd9", "image")
-    # empty SOS body: ValueError, not IndexError
-    sof = seg(0xC0, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-    with pytest.raises(ValueError, match="truncated JPEG SOS"):
-        decode_media(b"\xff\xd8" + sof + seg(0xDA, b"") + b"\xff\xd9", "image")
 
     # a tiny crafted file declaring huge dimensions must be rejected
     # BEFORE any coefficient tensor is allocated
