@@ -57,11 +57,36 @@ def _decode_bmp(payload: bytes) -> dict:
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
+def _inflate(data: bytes, cap: int, what: str) -> bytes:
+    """Inflate one zlib stream, stopping after ``cap`` bytes of output.
+    A caller passes its expected size plus one, so an over-long stream
+    (a deflate bomb included) stops one byte past that size and fails the
+    caller's length check. Malformed-payload contract: a corrupt or
+    truncated stream raises ValueError, never a bare ``zlib.error``, so
+    callers filtering decode failures catch it too."""
+    import sys
+    import zlib
+
+    # max_length 0 would mean "no limit"; above sys.maxsize it overflows
+    cap = min(max(cap, 1), sys.maxsize)
+    inflater = zlib.decompressobj()
+    try:
+        out = inflater.decompress(data, cap)
+    except zlib.error as e:
+        raise ValueError(f"corrupt {what} DEFLATE stream: {e}") from e
+    if not inflater.eof and len(out) < cap:
+        raise ValueError(
+            f"corrupt {what} DEFLATE stream: incomplete or truncated stream"
+        )
+    return out
+
+
 def _decode_png(payload: bytes) -> dict:
     """Parse an 8-bit truecolor PNG (RGB/RGBA, non-interlaced) with stdlib
     ``struct`` + ``zlib`` — PNG's pixel stream is plain DEFLATE, so no
     external codec is needed: a chunk walk collects IHDR/IDAT, one
-    ``zlib.decompress`` inflates the scanlines, and the five standard
+    :func:`_inflate` capped at the size IHDR implies inflates the
+    scanlines, and the five standard
     per-scanline filters (none/sub/up/average/paeth, RFC 2083 §6) are
     inverted row by row. Returns the same contract as :func:`_decode_bmp`
     (``width, height, bit_count, n_pixels, pixels``) with ``pixels``
@@ -80,7 +105,6 @@ def _decode_png(payload: bytes) -> dict:
     like every heavy decoder (U2).
     """
     import struct
-    import zlib
 
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload (missing signature)")
@@ -121,16 +145,20 @@ def _decode_png(payload: bytes) -> dict:
         raise ValueError(f"unknown PNG interlace method {interlace}")
     if not idat:
         raise ValueError("no IDAT chunk found")
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as e:
-        # malformed-payload contract: every bad-bytes path raises
-        # ValueError, so callers filtering decode failures catch this too
-        raise ValueError(f"corrupt PNG DEFLATE stream: {e}") from e
+    sb = depth // 8  # bytes per sample
+    # the inflated size IHDR implies: each (Adam7 pass) scanline is a
+    # filter byte plus its samples; one byte more fails the size checks
+    # below, so inflating stops there
+    size = 0
+    for x0, y0, dx, dy in _PNG_ADAM7 if interlace else ((0, 0, 1, 1),):
+        pw = (width - x0 + dx - 1) // dx
+        ph = (height - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            size += ph * (1 + pw * ch * sb)
+    raw = _inflate(bytes(idat), size + 1, "PNG")
 
     import numpy as np
 
-    sb = depth // 8  # bytes per sample
     if interlace == 0:
         rows, off = _png_unfilter(raw, 0, width, height, ch, sb)
         if off != len(raw):

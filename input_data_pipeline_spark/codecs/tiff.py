@@ -4,6 +4,8 @@ JPEG (old- and new-style) strips, plus the fixture encoders.
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from input_data_pipeline_spark.codecs.bits import _BitReader, _BitWriter
 from input_data_pipeline_spark.codecs.fax import (
     _g3_decode,
@@ -13,6 +15,7 @@ from input_data_pipeline_spark.codecs.fax import (
     g4_encode,
     mh_encode,
 )
+from input_data_pipeline_spark.codecs.image import _inflate
 from input_data_pipeline_spark.codecs.jpeg import (
     _decode_jpeg,
     _jpeg_segment,
@@ -20,6 +23,52 @@ from input_data_pipeline_spark.codecs.jpeg import (
     _jpeg_sos_selectors,
     encode_jpeg,
 )
+
+
+# ---------------------------------------------------------------------------
+# The IFD layer: one writer for every encoder below; the strip-table
+# reader lives in ``_decode_tiff``, next to the tag table it reads
+# ---------------------------------------------------------------------------
+
+def _tiff_data_at(n_entries: int) -> int:
+    """Offset of the first byte after the 8-byte header and an IFD of
+    ``n_entries`` entries (entry count, 12-byte entries, next-IFD offset)
+    — where every encoder below starts its out-of-line data."""
+    return 8 + 2 + 12 * n_entries + 4
+
+
+def _tiff_file(big_endian: bool, entries, *data) -> bytes:
+    """One TIFF file: the II*/MM* header, ONE IFD at offset 8 holding
+    ``entries`` and a zero next-IFD offset, then the ``data`` parts in
+    order. An entry is (tag, type, count, value) and the entries must be
+    in ascending tag order (TIFF 6.0 §2). A SHORT scalar sits
+    left-justified in the 4-byte value slot, a tuple value is SHORTs
+    packed inline (tag 530's subsampling pair), any other value is a
+    LONG scalar or an offset. A data part is bytes, or (type, values)
+    packed as SHORTs (type 3) or LONGs in the file's byte order."""
+    import struct
+
+    tids = [t[0] for t in entries]
+    if any(a >= b for a, b in zip(tids, tids[1:])):
+        raise ValueError(f"TIFF IFD entries out of ascending tag order: {tids}")
+    e = ">" if big_endian else "<"
+    out = bytearray(b"MM\x00*" if big_endian else b"II*\x00")
+    out += struct.pack(e + "IH", 8, len(entries))
+    for tid, ttype, count, value in entries:
+        out += struct.pack(e + "HHI", tid, ttype, count)
+        if isinstance(value, tuple):
+            out += struct.pack(f"{e}{len(value)}H", *value).ljust(4, b"\0")
+        elif ttype == 3 and count == 1:
+            out += struct.pack(e + "HH", value, 0)
+        else:
+            out += struct.pack(e + "I", value)
+    out += struct.pack(e + "I", 0)  # next IFD: none
+    for part in data:
+        if isinstance(part, tuple):
+            ttype, values = part
+            part = struct.pack(f"{e}{len(values)}{'H' if ttype == 3 else 'I'}", *values)
+        out += part
+    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -147,8 +196,6 @@ def encode_tiff(
         raise ValueError("jpeg_tables requires jpeg")
     if predictor2 and not (lzw or deflate):
         raise ValueError("predictor 2 pairs with LZW/deflate (TIFF 6.0 section 14)")
-    import struct
-
     import numpy as np
 
     arr = np.asarray(plane, dtype=np.uint8)
@@ -158,8 +205,6 @@ def encode_tiff(
     rps = rows_per_strip or h
     rgb = arr[:, :, ::-1]  # TIFF stores RGB samples
     if ojpeg_headerless:
-        import struct as _struct
-
         stream = encode_jpeg(rows_rgb=rgb, subsampling=jpeg_subsampling)
         # split the stream into what the tag-51x form stores apart:
         # encode_jpeg writes one table per DQT/DHT segment, so a table is
@@ -180,17 +225,15 @@ def encode_tiff(
         ncomp = len(sof)
         if any(c[1] != 0x11 for c in sof[1:]):
             raise ValueError("tag 530 expresses Y-factor subsampling only")
-        y_h, y_v = sof[0][1] >> 4, sof[0][1] & 15
         # per-component raw table blobs in the tag-51x shape (Q: 64
         # zigzag bytes; DC/AC: 16 BITS counts + VALUES, no class/dest
         # byte — TIFF 6.0 §22's field definitions)
         qblob = [tables[0xDB, c[2]] for c in sof]
         dblob = [tables[0xC4, scan[c[0]][0]] for c in sof]
         ablob = [tables[0xC4, 0x10 | scan[c[0]][1]] for c in sof]
-        e = ">" if big_endian else "<"
-        n_tags = 14
-        ifd_size = 2 + n_tags * 12 + 4
-        bps_off = 8 + ifd_size
+        # layout: header | IFD | BitsPerSample | Q/DC/AC offset arrays |
+        # table bytes | entropy strip
+        bps_off = _tiff_data_at(14)
         qoff_off = bps_off + 6
         doff_off = qoff_off + 4 * ncomp
         aoff_off = doff_off + 4 * ncomp
@@ -207,89 +250,43 @@ def encode_tiff(
                 table_bytes.extend(b)
             return blob_at[b]
 
-        qoffs = [_place(b) for b in qblob]
-        doffs = [_place(b) for b in dblob]
-        aoffs = [_place(b) for b in ablob]
-        data_off = tbl_off + len(table_bytes)
-
-        def _htag(tid: int, ttype: int, count: int, value: int) -> bytes:
-            if ttype == 3 and count == 1:
-                return _struct.pack(
-                    e + "HHI", tid, ttype, count
-                ) + _struct.pack(e + "HH", value, 0)
-            return _struct.pack(e + "HHII", tid, ttype, count, value)
-
-        ifd = _struct.pack(e + "H", n_tags)
-        ifd += _htag(256, 4, 1, w)
-        ifd += _htag(257, 4, 1, h)
-        ifd += _htag(258, 3, 3, bps_off)
-        ifd += _htag(259, 3, 1, 6)            # Compression: OJPEG
-        ifd += _htag(262, 3, 1, 6)            # Photometric: YCbCr
-        ifd += _htag(273, 4, 1, data_off)     # StripOffsets: raw entropy
-        ifd += _htag(277, 3, 1, 3)
-        ifd += _htag(278, 4, 1, h)
-        ifd += _htag(279, 4, 1, len(entropy))
-        ifd += _htag(512, 3, 1, 1)            # JPEGProc: baseline
-        ifd += _htag(519, 4, ncomp, qoff_off)  # JPEGQTables
-        ifd += _htag(520, 4, ncomp, doff_off)  # JPEGDCTables
-        ifd += _htag(521, 4, ncomp, aoff_off)  # JPEGACTables
-        # YCbCrSubSampling: two SHORTs, packed INLINE in the value slot
-        ifd += _struct.pack(e + "HHI", 530, 3, 2) + _struct.pack(
-            e + "HH", y_h, y_v
-        )
-        ifd += _struct.pack(e + "I", 0)
-        out = bytearray()
-        out += (b"MM" if big_endian else b"II") + _struct.pack(e + "H", 42)
-        out += _struct.pack(e + "I", 8)
-        out += ifd
-        out += _struct.pack(e + "HHH", 8, 8, 8)
-        for o in qoffs + doffs + aoffs:
-            out += _struct.pack(e + "I", o)
-        out += table_bytes
-        out += entropy
-        return bytes(out)
+        offs = [_place(b) for b in qblob + dblob + ablob]
+        return _tiff_file(big_endian, [
+            (256, 4, 1, w),
+            (257, 4, 1, h),
+            (258, 3, 3, bps_off),
+            (259, 3, 1, 6),                   # Compression: OJPEG
+            (262, 3, 1, 6),                   # Photometric: YCbCr
+            (273, 4, 1, tbl_off + len(table_bytes)),  # raw entropy strip
+            (277, 3, 1, 3),
+            (278, 4, 1, h),
+            (279, 4, 1, len(entropy)),
+            (512, 3, 1, 1),                   # JPEGProc: baseline
+            (519, 4, ncomp, qoff_off),        # JPEGQTables
+            (520, 4, ncomp, doff_off),        # JPEGDCTables
+            (521, 4, ncomp, aoff_off),        # JPEGACTables
+            # YCbCrSubSampling: two SHORTs, packed INLINE in the value slot
+            (530, 3, 2, (sof[0][1] >> 4, sof[0][1] & 15)),
+        ], (3, (8, 8, 8)), (4, offs), bytes(table_bytes), entropy)
     if ojpeg:
-        import struct as _struct
-
         stream = encode_jpeg(rows_rgb=rgb, subsampling=jpeg_subsampling)
-        e = ">" if big_endian else "<"
-        n_tags = 9
-        ifd_size = 2 + n_tags * 12 + 4
-        bps_off = 8 + ifd_size
-        data_off = bps_off + 6
-
-        def _tag(tid: int, ttype: int, count: int, value: int) -> bytes:
-            if ttype == 3 and count == 1:
-                return _struct.pack(
-                    e + "HHI", tid, ttype, count
-                ) + _struct.pack(e + "HH", value, 0)
-            return _struct.pack(e + "HHII", tid, ttype, count, value)
-
-        ifd = _struct.pack(e + "H", n_tags)
-        ifd += _tag(256, 4, 1, w)
-        ifd += _tag(257, 4, 1, h)
-        ifd += _tag(258, 3, 3, bps_off)
-        ifd += _tag(259, 3, 1, 6)          # Compression: OJPEG
-        ifd += _tag(262, 3, 1, 6)          # Photometric: YCbCr
-        ifd += _tag(277, 3, 1, 3)
-        ifd += _tag(278, 4, 1, h)
-        ifd += _tag(513, 4, 1, data_off)   # JPEGInterchangeFormat
-        ifd += _tag(514, 4, 1, len(stream))
-        ifd += _struct.pack(e + "I", 0)
-        out = bytearray()
-        out += (b"MM" if big_endian else b"II") + _struct.pack(e + "H", 42)
-        out += _struct.pack(e + "I", 8)
-        out += ifd
-        out += _struct.pack(e + "HHH", 8, 8, 8)
-        out += stream
-        return bytes(out)
+        bps_off = _tiff_data_at(9)
+        return _tiff_file(big_endian, [
+            (256, 4, 1, w),
+            (257, 4, 1, h),
+            (258, 3, 3, bps_off),
+            (259, 3, 1, 6),                   # Compression: OJPEG
+            (262, 3, 1, 6),                   # Photometric: YCbCr
+            (277, 3, 1, 3),
+            (278, 4, 1, h),
+            (513, 4, 1, bps_off + 6),         # JPEGInterchangeFormat
+            (514, 4, 1, len(stream)),
+        ], (3, (8, 8, 8)), stream)
     if predictor2:
         # horizontal differencing per row, per sample channel (mod 256)
-        import numpy as _np
-
-        diff = rgb.astype(_np.int16)
-        diff[:, 1:, :] = diff[:, 1:, :] - rgb[:, :-1, :].astype(_np.int16)
-        rgb = (diff % 256).astype(_np.uint8)
+        diff = rgb.astype(np.int16)
+        diff[:, 1:, :] = diff[:, 1:, :] - rgb[:, :-1, :].astype(np.int16)
+        rgb = (diff % 256).astype(np.uint8)
     tables347 = b""
     if jpeg:
         strips = []
@@ -339,63 +336,51 @@ def encode_tiff(
 
                     block = zlib.compress(block, 6)
                 strips.append(block)
-    e = ">" if big_endian else "<"
     n_strips = len(strips)
-    # layout: header(8) | IFD | bits_per_sample(6) | offsets(4n) |
-    # counts(4n) | [JPEGTables] | strips
-    n_tags = 10 + (1 if predictor2 else 0) + (1 if tables347 else 0)
-    ifd_size = 2 + n_tags * 12 + 4
-    bps_off = 8 + ifd_size
+    counts = [len(s) for s in strips]
+    # layout: header | IFD | BitsPerSample | offsets | counts |
+    # [JPEGTables] | strips; both strip tables are written even when one
+    # strip lets its offset and count sit inline in the IFD
+    bps_off = _tiff_data_at(10 + predictor2 + bool(tables347))
     soff_off = bps_off + 6
     scnt_off = soff_off + 4 * n_strips
     tbl_off = scnt_off + 4 * n_strips
-    data_off = tbl_off + len(tables347)
-    strip_offsets = []
-    pos = data_off
-    for s in strips:
-        strip_offsets.append(pos)
-        pos += len(s)
-
-    def tag(tid: int, ttype: int, count: int, value: int) -> bytes:
-        # SHORT values sit left-justified in the 4-byte value slot
-        if ttype == 3 and count == 1:
-            return struct.pack(e + "HHI", tid, ttype, count) + struct.pack(
-                e + "HH", value, 0
-            )
-        return struct.pack(e + "HHII", tid, ttype, count, value)
-
-    ifd = struct.pack(e + "H", n_tags)
-    ifd += tag(256, 4, 1, w)                     # ImageWidth LONG
-    ifd += tag(257, 4, 1, h)                     # ImageLength LONG
-    ifd += tag(258, 3, 3, bps_off)               # BitsPerSample 3xSHORT
+    offsets = list(accumulate(counts, initial=tbl_off + len(tables347)))[:-1]
     comp_tag = 7 if jpeg else (
         32773 if packbits else (5 if lzw else (8 if deflate else 1))
     )
-    ifd += tag(259, 3, 1, comp_tag)              # Compression
-    ifd += tag(262, 3, 1, 6 if jpeg else 2)      # Photometric: YCbCr/RGB
-    ifd += tag(273, 4, n_strips, strip_offsets[0] if n_strips == 1 else soff_off)
-    ifd += tag(277, 3, 1, 3)                     # SamplesPerPixel
-    ifd += tag(278, 4, 1, rps)                   # RowsPerStrip
-    ifd += tag(279, 4, n_strips, len(strips[0]) if n_strips == 1 else scnt_off)
-    ifd += tag(284, 3, 1, 2 if planar2 else 1)   # PlanarConfig
+    entries = [
+        (256, 4, 1, w),                           # ImageWidth LONG
+        (257, 4, 1, h),                           # ImageLength LONG
+        (258, 3, 3, bps_off),                     # BitsPerSample 3xSHORT
+        (259, 3, 1, comp_tag),                    # Compression
+        (262, 3, 1, 6 if jpeg else 2),            # Photometric: YCbCr/RGB
+        (273, 4, n_strips, offsets[0] if n_strips == 1 else soff_off),
+        (277, 3, 1, 3),                           # SamplesPerPixel
+        (278, 4, 1, rps),                         # RowsPerStrip
+        (279, 4, n_strips, counts[0] if n_strips == 1 else scnt_off),
+        (284, 3, 1, 2 if planar2 else 1),         # PlanarConfig
+    ]
     if predictor2:
-        ifd += tag(317, 3, 1, 2)                 # Predictor: horizontal
+        entries.append((317, 3, 1, 2))            # Predictor: horizontal
     if tables347:
-        ifd += tag(347, 7, len(tables347), tbl_off)  # JPEGTables
-    ifd += struct.pack(e + "I", 0)               # next IFD: none
-    out = bytearray()
-    out += (b"MM" if big_endian else b"II") + struct.pack(e + "H", 42)
-    out += struct.pack(e + "I", 8)
-    out += ifd
-    out += struct.pack(e + "HHH", 8, 8, 8)
-    for o in strip_offsets:
-        out += struct.pack(e + "I", o)
-    for s in strips:
-        out += struct.pack(e + "I", len(s))
-    out += tables347
-    for s in strips:
-        out += s
-    return bytes(out)
+        entries.append((347, 7, len(tables347), tbl_off))  # JPEGTables
+    return _tiff_file(
+        big_endian, entries, (3, (8, 8, 8)), (4, offsets), (4, counts),
+        tables347, *strips,
+    )
+
+
+def _tiff_image(w: int, h: int, pixels: bytes) -> dict:
+    """The uniform image contract every TIFF branch returns: 24-bit,
+    top-down BGR ``pixels``."""
+    return {
+        "width": w,
+        "height": h,
+        "bit_count": 24,
+        "n_pixels": w * h,
+        "pixels": pixels,
+    }
 
 
 def _decode_tiff(payload: bytes) -> dict:
@@ -404,6 +389,8 @@ def _decode_tiff(payload: bytes) -> dict:
     deflate, any strip layout) into the uniform top-down BGR contract.
     Unsupported baseline variants raise by name; nothing is guessed."""
     import struct
+
+    import numpy as np
 
     if payload[:4] == b"II*\x00":
         e = "<"
@@ -445,6 +432,40 @@ def _decode_tiff(payload: bytes) -> dict:
             for i in range(count)
         ]
 
+    def strips(planar2: bool = False, check_rows=None):
+        """The strip table every strip-coded branch reads: an iterator of
+        each strip's (row count, bytes) from RowsPerStrip, StripOffsets
+        and StripByteCounts. A missing or disagreeing table raises here,
+        ``check_rows`` sees every strip's row count before any strip is
+        read, and a strip past the payload raises when the iterator
+        reaches it. ``planar2`` (round 15): StripsPerImage = 3 x
+        ceil(h/rps), the full R-plane strip run first, then G, then B,
+        so strip si covers band si % bands."""
+        if 273 not in tags or 279 not in tags:
+            raise ValueError("TIFF missing StripOffsets/StripByteCounts")
+        rps = tags.get(278, (4, 1, h))[2] or h
+        offsets, counts = arr(273), arr(279)
+        if len(offsets) != len(counts):
+            raise ValueError("TIFF strip offset/count tables disagree")
+        # rps is 0 only when ImageLength is 0
+        bands = (h + rps - 1) // rps if rps else 0
+        if planar2 and len(offsets) != 3 * bands:
+            raise ValueError("TIFF planar strip count disagrees with geometry")
+        rows = [
+            min(rps, h - (si % bands if planar2 else si) * rps)
+            for si in range(len(offsets))
+        ]
+        if check_rows is not None:
+            check_rows(rows)
+
+        def read():
+            for n_rows, o, c in zip(rows, offsets, counts):
+                if o + c > len(payload):
+                    raise ValueError("truncated TIFF strip")
+                yield n_rows, payload[o: o + c]
+
+        return read()
+
     comp = tags.get(259, (3, 1, 1))[2]
     # interchange-form OJPEG files carry tags 513/514 INSTEAD of strip
     # tables (TIFF 6.0 §22 files commonly omit or corrupt them)
@@ -471,8 +492,6 @@ def _decode_tiff(payload: bytes) -> dict:
         # with EOLs, comp 3, 1D and 2D per T4Options bit 0) and Modified
         # Huffman (1D T.4 rows, comp 2). Strips reset the coder state,
         # so each decodes independently.
-        import numpy as np
-
         if spp != 1 or photo not in (0, 1):
             raise ValueError(
                 "TIFF G4 decode supports bilevel photometric 0/1 only"
@@ -489,26 +508,14 @@ def _decode_tiff(payload: bytes) -> dict:
                 "(T4Options bit 1 without bit 0) unsupported; 2D "
                 "uncompressed decodes (round 16)"
             )
-        rps_g4 = tags.get(278, (4, 1, h))[2] or h
-        if 273 not in tags or 279 not in tags:
-            raise ValueError("TIFF missing StripOffsets/StripByteCounts")
-        offsets, counts = arr(273), arr(279)
-        if len(offsets) != len(counts):
-            raise ValueError("TIFF strip offset/count tables disagree")
         parts = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            if o + c > len(payload):
-                raise ValueError("truncated TIFF strip")
-            n_rows = min(rps_g4, h - si * rps_g4)
+        for n_rows, strip in strips():
             if comp == 4:
-                parts.append(_g4_decode(payload[o: o + c], w, n_rows))
+                parts.append(_g4_decode(strip, w, n_rows))
             elif comp == 3:
-                parts.append(
-                    _g3_decode(payload[o: o + c], w, n_rows,
-                               bool(t4opts & 0b1))
-                )
+                parts.append(_g3_decode(strip, w, n_rows, bool(t4opts & 0b1)))
             else:
-                parts.append(_mh_decode(payload[o: o + c], w, n_rows))
+                parts.append(_mh_decode(strip, w, n_rows))
         black = np.concatenate(parts, axis=0)
         if black.shape != (h, w):
             raise ValueError("TIFF G4 pixel plane incomplete")
@@ -516,14 +523,7 @@ def _decode_tiff(payload: bytes) -> dict:
         gray = (
             (1 - black) * 255 if photo == 0 else black * 255
         ).astype(np.uint8)
-        bgr = np.repeat(gray[:, :, None], 3, axis=2)
-        return {
-            "width": w,
-            "height": h,
-            "bit_count": 24,
-            "n_pixels": w * h,
-            "pixels": bgr.tobytes(),
-        }
+        return _tiff_image(w, h, np.repeat(gray[:, :, None], 3, axis=2).tobytes())
     if comp == 7:
         # New-style JPEG-in-TIFF (round 17; TIFF Technical Note 2 /
         # TIFF-EP): each strip is a complete — or, with tag 347
@@ -531,8 +531,6 @@ def _decode_tiff(payload: bytes) -> dict:
         # by the SAME in-repo JPEG decoder (baseline + progressive):
         # the shared table stream's body splices in after each strip's
         # SOI, exactly the TTN2 rule. Strips stack top-down.
-        import numpy as np
-
         if planar != 1:
             raise ValueError(
                 "JPEG-in-TIFF requires chunky planar configuration"
@@ -557,19 +555,11 @@ def _decode_tiff(payload: bytes) -> dict:
                     "JPEGTables must be an abbreviated SOI..EOI stream"
                 )
             tables = tbl[2:-2]
-        rps_j = tags.get(278, (4, 1, h))[2] or h
-        offsets, counts = arr(273), arr(279)
-        if len(offsets) != len(counts):
-            raise ValueError("TIFF strip offset/count tables disagree")
         rows_out = []
-        for si, (o, c) in enumerate(zip(offsets, counts)):
-            if o + c > len(payload):
-                raise ValueError("truncated TIFF strip")
-            strip = payload[o: o + c]
+        for n_rows, strip in strips():
             if strip[:2] != b"\xff\xd8":
                 raise ValueError("JPEG-in-TIFF strip missing SOI")
             m = _decode_jpeg(b"\xff\xd8" + tables + strip[2:])
-            n_rows = min(rps_j, h - si * rps_j)
             if m["width"] != w or m["height"] != n_rows:
                 raise ValueError("JPEG-in-TIFF strip geometry mismatch")
             rows_out.append(
@@ -580,13 +570,7 @@ def _decode_tiff(payload: bytes) -> dict:
         bgr = np.concatenate(rows_out, axis=0)
         if bgr.shape != (h, w, 3):
             raise ValueError("JPEG-in-TIFF pixel plane incomplete")
-        return {
-            "width": w,
-            "height": h,
-            "bit_count": 24,
-            "n_pixels": w * h,
-            "pixels": bgr.tobytes(),
-        }
+        return _tiff_image(w, h, bgr.tobytes())
     if comp == 6:
         # Old-style OJPEG (round 17): TIFF 6.0 §22 was underspecified
         # enough that TTN2 deprecated it, but real scanner/digicam files
@@ -600,8 +584,6 @@ def _decode_tiff(payload: bytes) -> dict:
         # decoder reassembles a conforming interchange stream per strip
         # — exactly libtiff's tif_ojpeg reassembly — and routes it
         # through the same in-repo JPEG decoder.
-        import numpy as np
-
         if spp != 3 or photo != 6:
             raise ValueError(
                 "OJPEG decode supports 3-sample photometric 6 (YCbCr) "
@@ -619,13 +601,7 @@ def _decode_tiff(payload: bytes) -> dict:
             m = _decode_jpeg(stream)
             if m["width"] != w or m["height"] != h:
                 raise ValueError("OJPEG stream geometry disagrees with IFD")
-            return {
-                "width": w,
-                "height": h,
-                "bit_count": 24,
-                "n_pixels": w * h,
-                "pixels": m["pixels"],
-            }
+            return _tiff_image(w, h, m["pixels"])
         proc = tags.get(512, (3, 1, 1, 0))[2]
         if proc != 1:
             raise NotImplementedError(
@@ -662,23 +638,18 @@ def _decode_tiff(payload: bytes) -> dict:
         quniq, qids = _dests(qoffs)
         duniq, dids = _dests(dcoffs)
         auniq, aids = _dests(acoffs)
-        rps_o = tags.get(278, (4, 1, h))[2] or h
-        if 273 not in tags or 279 not in tags:
-            raise ValueError("TIFF missing StripOffsets/StripByteCounts")
-        offsets, counts = arr(273), arr(279)
-        if len(offsets) != len(counts):
-            raise ValueError("TIFF strip offset/count tables disagree")
-        # the rebuilt SOF0 and DRI carry these in 16-bit fields
-        strip_rows = [
-            min(rps_o, h - si * rps_o) for si in range(len(offsets))
-        ]
-        if not 0 < w <= 0xFFFF or dri > 0xFFFF or any(
-            not 0 < n <= 0xFFFF for n in strip_rows
-        ):
-            raise ValueError(
-                "headerless OJPEG geometry outside JPEG's 16-bit frame "
-                "fields (width and strip rows 1..65535)"
-            )
+
+        def frame_fields(strip_rows: list[int]) -> None:
+            # the rebuilt SOF0 and DRI carry these in 16-bit fields
+            if not 0 < w <= 0xFFFF or dri > 0xFFFF or any(
+                not 0 < n <= 0xFFFF for n in strip_rows
+            ):
+                raise ValueError(
+                    "headerless OJPEG geometry outside JPEG's 16-bit frame "
+                    "fields (width and strip rows 1..65535)"
+                )
+
+        table = strips(check_rows=frame_fields)
         head = b"\xff\xd8"
         for tid, o in enumerate(quniq):
             if o + 64 > len(payload):
@@ -703,16 +674,14 @@ def _decode_tiff(payload: bytes) -> dict:
             sos += bytes([k + 1, (dids[k] << 4) | aids[k]])
         sos = _jpeg_segment_bytes(0xDA, sos + b"\x00\x3f\x00")
         rows_out = []
-        for o, c, n_rows in zip(offsets, counts, strip_rows):
-            if o + c > len(payload):
-                raise ValueError("truncated OJPEG strip")
+        for n_rows, strip in table:
             sof = struct.pack(">BHHB", 8, n_rows, w, spp)
             for k in range(spp):
                 hv = (sub_h << 4) | sub_v if k == 0 else 0x11
                 sof += bytes([k + 1, hv, qids[k]])
             m = _decode_jpeg(
-                head + _jpeg_segment_bytes(0xC0, sof) + sos
-                + payload[o: o + c] + b"\xff\xd9"
+                head + _jpeg_segment_bytes(0xC0, sof) + sos + strip
+                + b"\xff\xd9"
             )
             if m["width"] != w or m["height"] != n_rows:
                 raise ValueError("OJPEG strip geometry disagrees with IFD")
@@ -722,13 +691,7 @@ def _decode_tiff(payload: bytes) -> dict:
         bgr = np.concatenate(rows_out, axis=0)
         if bgr.shape != (h, w, 3):
             raise ValueError("OJPEG pixel plane incomplete")
-        return {
-            "width": w,
-            "height": h,
-            "bit_count": 24,
-            "n_pixels": w * h,
-            "pixels": bgr.tobytes(),
-        }
+        return _tiff_image(w, h, bgr.tobytes())
     if photo != 2 or spp != 3:
         raise ValueError("TIFF decode supports 3-sample RGB (photometric 2)")
     if 258 in tags and arr(258) != [8, 8, 8]:
@@ -741,39 +704,23 @@ def _decode_tiff(payload: bytes) -> dict:
     predictor = tags.get(317, (3, 1, 1))[2]
     if predictor not in (1, 2):
         raise ValueError(f"TIFF predictor {predictor} unsupported")
-    rps = tags.get(278, (4, 1, h))[2] or h
-    offsets, counts = arr(273), arr(279)
-    if len(offsets) != len(counts):
-        raise ValueError("TIFF strip offset/count tables disagree")
-    # planar config 2 (round 15): StripsPerImage = 3 x ceil(h/rps), the
-    # full R-plane strip run first, then G, then B; strip rows carry one
-    # byte per pixel instead of three
-    bands = (h + rps - 1) // rps
-    if planar == 2 and len(offsets) != 3 * bands:
-        raise ValueError("TIFF planar strip count disagrees with geometry")
     rows = bytearray()
+    # planar strip rows carry one byte per pixel instead of three
     row_bytes = w if planar == 2 else w * 3
-    for si, (o, c) in enumerate(zip(offsets, counts)):
-        if o + c > len(payload):
-            raise ValueError("truncated TIFF strip")
-        band = si % bands if planar == 2 else si
-        n_rows = min(rps, h - band * rps)
-        raw = payload[o: o + c]
+    for n_rows, raw in strips(planar2=planar == 2):
         if comp == 32773:
             raw = _packbits_decode(raw, n_rows * row_bytes)
         elif comp == 5:
             raw = _tiff_lzw_decode(raw, n_rows * row_bytes)
         elif comp == 8:
-            import zlib
-
-            raw = zlib.decompress(raw)
+            # one byte past the strip's size is enough to fail the
+            # length check below, so a deflate bomb stops there
+            raw = _inflate(raw, n_rows * row_bytes + 1, "TIFF")
         if len(raw) != n_rows * row_bytes:
             raise ValueError("TIFF strip length mismatch")
         rows += raw
     if len(rows) != h * w * 3:
         raise ValueError("TIFF pixel plane incomplete")
-    import numpy as np
-
     if planar == 2:
         # (plane, h, w) -> interleaved (h, w, 3); the predictor undo
         # below is layout-independent (it differences within a component
@@ -787,13 +734,7 @@ def _decode_tiff(payload: bytes) -> dict:
         # undo horizontal differencing: per-row cumulative sum mod 256
         rgb = np.cumsum(rgb.astype(np.int64), axis=1) % 256
         rgb = rgb.astype(np.uint8)
-    return {
-        "width": w,
-        "height": h,
-        "bit_count": 24,
-        "n_pixels": w * h,
-        "pixels": rgb[:, :, ::-1].tobytes(),  # RGB -> BGR contract
-    }
+    return _tiff_image(w, h, rgb[:, :, ::-1].tobytes())  # RGB -> BGR contract
 
 
 # TIFF 6.0 §13 LZW: MSB-first code packing, 9->12 bit widths with the
@@ -888,8 +829,6 @@ def encode_tiff_g4(bitmap, big_endian: bool = False,
     resync row) or 2 (Modified Huffman 1D rows), BitsPerSample 1,
     SamplesPerPixel 1, photometric 0 (WhiteIsZero, the fax convention)
     or 1 (inverted), single strip."""
-    import struct
-
     import numpy as np
 
     arr = np.asarray(bitmap, dtype=np.uint8)
@@ -905,29 +844,18 @@ def encode_tiff_g4(bitmap, big_endian: bool = False,
         strip = g3_encode(rows, two_d=two_d, uncompressed=uncompressed)[0]
     else:
         strip = g4_encode(rows)[0]
-    e = ">" if big_endian else "<"
-    hdr = (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(e + "I", 8)
-    n_tags = 9 + (1 if compression == 3 else 0)
-    ifd_size = 2 + 12 * n_tags + 4
-    data_off = 8 + ifd_size
-
-    def tag(tid: int, ttype: int, count: int, value: int) -> bytes:
-        if ttype == 3:
-            return struct.pack(e + "HHIHH", tid, ttype, count, value, 0)
-        return struct.pack(e + "HHII", tid, ttype, count, value)
-
-    ifd = struct.pack(e + "H", n_tags)
-    ifd += tag(256, 4, 1, w)
-    ifd += tag(257, 4, 1, h)
-    ifd += tag(258, 3, 1, 1)             # BitsPerSample 1
-    ifd += tag(259, 3, 1, compression)   # Compression: T.6 / T.4 / MH
-    ifd += tag(262, 3, 1, photometric)
-    ifd += tag(273, 4, 1, data_off)      # StripOffsets
-    ifd += tag(277, 3, 1, 1)             # SamplesPerPixel
-    ifd += tag(278, 4, 1, h)             # RowsPerStrip
-    ifd += tag(279, 4, 1, len(strip))    # StripByteCounts
+    entries = [
+        (256, 4, 1, w),
+        (257, 4, 1, h),
+        (258, 3, 1, 1),                   # BitsPerSample 1
+        (259, 3, 1, compression),         # Compression: T.6 / T.4 / MH
+        (262, 3, 1, photometric),
+        (273, 4, 1, _tiff_data_at(9 + (compression == 3))),  # StripOffsets
+        (277, 3, 1, 1),                   # SamplesPerPixel
+        (278, 4, 1, h),                   # RowsPerStrip
+        (279, 4, 1, len(strip)),          # StripByteCounts
+    ]
     if compression == 3:
         # T4Options: bit 0 = 2D coding, bit 1 = uncompressed mode allowed
-        ifd += tag(292, 4, 1, (1 if two_d else 0) | (2 if uncompressed else 0))
-    ifd += struct.pack(e + "I", 0)
-    return hdr + ifd + strip
+        entries.append((292, 4, 1, (1 if two_d else 0) | (2 if uncompressed else 0)))
+    return _tiff_file(big_endian, entries, strip)

@@ -988,6 +988,24 @@ def stream_selection_tags(
     return out
 
 
+def _replayed(batch_df: DataFrame, state_dir: str, batch_id: int) -> bool:
+    """Whether the batch-id-stamped ledger in ``state_dir`` already holds
+    rows of ``batch_id``: foreachBatch is at-least-once, so a sketch
+    ledger whose increments must fold in exactly once skips a batch it
+    has already appended."""
+    try:
+        return (
+            batch_df.sparkSession.read.parquet(state_dir)
+            .filter(F.col("batch_id") == batch_id)
+            .limit(1)
+            .count()
+            > 0
+        )
+    except AnalysisException:  # first batch only; IO errors must
+        # fail the batch, not silently skip replay protection
+        return False
+
+
 def stream_countmin_update(docs: DataFrame, state_dir: str, checkpoint_dir: str):
     """Streaming face of the count-min sketch (the per-window frequency
     tracking the batch ``countmin_token_freq`` operator is built for):
@@ -1009,19 +1027,8 @@ def stream_countmin_update(docs: DataFrame, state_dir: str, checkpoint_dir: str)
     from input_data_pipeline_spark.operators.textstats import cms_cells
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            replayed = (
-                spark.read.parquet(state_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        except AnalysisException:  # first batch only; IO errors must
-            # fail the batch, not silently skip replay protection
-            pass
+        if _replayed(batch_df, state_dir, batch_id):
+            return
         counts = (
             batch_df.select(F.explode(T.tokens("text")).alias("token"))
             .groupBy("token")
@@ -1065,19 +1072,8 @@ def stream_bloom_update(docs: DataFrame, state_dir: str, checkpoint_dir: str):
     from input_data_pipeline_spark.operators.dedup import bloom_bitmap
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            replayed = (
-                spark.read.parquet(state_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        except AnalysisException:  # first batch only; IO errors must
-            # fail the batch, not silently skip replay protection
-            pass
+        if _replayed(batch_df, state_dir, batch_id):
+            return
         fps = batch_df.select(T.fingerprint("text").alias("fp")).distinct()
         words = bloom_bitmap(fps).withColumn("batch_id", F.lit(batch_id))
         words.write.mode("append").parquet(state_dir)
@@ -1189,20 +1185,11 @@ def stream_histogram_update(
     from input_data_pipeline_spark.operators.windows import hq_bin_counts
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            replayed = (
-                spark.read.parquet(state_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        except AnalysisException:  # first batch only; IO errors must
-            # fail the batch, not silently skip replay protection
-            pass
-        bdf = spark.createDataFrame(bounds, "event_type string, lo long, hi long")
+        if _replayed(batch_df, state_dir, batch_id):
+            return
+        bdf = batch_df.sparkSession.createDataFrame(
+            bounds, "event_type string, lo long, hi long"
+        )
         vm = batch_df.select("event_type", micros("value").alias("v"))
         cells = hq_bin_counts(vm, bdf).withColumn("batch_id", F.lit(batch_id))
         cells.write.mode("append").parquet(state_dir)
@@ -1243,19 +1230,8 @@ def stream_hll_update(docs: DataFrame, state_dir: str, checkpoint_dir: str):
     )
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            replayed = (
-                spark.read.parquet(state_dir)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if replayed:
-                return
-        except AnalysisException:  # first batch only; IO errors must
-            # fail the batch, not silently skip replay protection
-            pass
+        if _replayed(batch_df, state_dir, batch_id):
+            return
         tok = batch_df.select(
             "source", F.explode(T.tokens("text")).alias("token")
         ).distinct()

@@ -307,6 +307,20 @@ def _gate_fixtures():
     ]
 
 
+def _mutants(rng, blobs, n=60):
+    """(k, mutant) for ``n`` mutants cycling over ``blobs``: alternately a
+    truncation and 1-5 byte flips in the first 256 bytes."""
+    for k in range(n):
+        blob = blobs[k % len(blobs)]
+        if k % 2 == 0:
+            yield k, blob[: rng.randrange(len(blob))]
+        else:
+            flipped = bytearray(blob)
+            for _ in range(rng.randint(1, 5)):
+                flipped[rng.randrange(min(256, len(blob)))] ^= rng.randrange(1, 256)
+            yield k, bytes(flipped)
+
+
 def test_gate_fixture_mutants_fail_typed():
     """Seeded fuzz over the gates' own fixtures: 60 mutants per encoder,
     alternately a truncation and 1-5 byte flips in the first 256 bytes.
@@ -325,15 +339,7 @@ def test_gate_fixture_mutants_fail_typed():
         calls = [lambda b, m=modality: decode_media(b, m)]
         if modality == "audio":
             calls.append(probe_audio)
-        for k in range(60):
-            blob = blobs[k % len(blobs)]
-            if k % 2 == 0:
-                mutant = blob[: rng.randrange(len(blob))]
-            else:
-                flipped = bytearray(blob)
-                for _ in range(rng.randint(1, 5)):
-                    flipped[rng.randrange(min(256, len(blob)))] ^= rng.randrange(1, 256)
-                mutant = bytes(flipped)
+        for k, mutant in _mutants(rng, blobs):
             for call in calls:
                 try:
                     call(mutant)
@@ -342,6 +348,236 @@ def test_gate_fixture_mutants_fail_typed():
                 except Exception as e:  # noqa: BLE001 - the untyped errors under test
                     untyped.append((name, k, type(e).__name__, str(e)[:60]))
     assert not untyped, untyped[:10]
+
+
+def _tiff_fixture(form, d):
+    """Doc ``d`` of one non-JPEG TIFF form, built as the gates build it:
+    ``tiff_decode_features``' RGB card, byte order and strip height with
+    the form's coding, or ``tiff_g4_decode_features``' bilevel page with
+    the form's CCITT coding. No gate emits deflate, so its forms are
+    named here."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.tiff import encode_tiff, encode_tiff_g4
+
+    ccitt = {
+        "g4": dict(compression=4),
+        "g3_1d": dict(compression=3),
+        "g3_2d": dict(compression=3, two_d=True),
+        "g3_2d_uncompressed": dict(compression=3, two_d=True, uncompressed=True),
+        "mh": dict(compression=2),
+    }
+    if form in ccitt:
+        w, h = 18 + d % 13, 10 + d % 7
+        i, j = np.mgrid[0:h, 0:w]
+        bm = (((7 * j + 3 * i * i + d) % 11) < 4).astype(np.uint8)
+        return encode_tiff_g4(
+            bm, big_endian=d % 2 == 1, photometric=(d // 2) % 2, **ccitt[form]
+        )
+    coding = {
+        "raw": {},
+        "packbits": dict(packbits=True),
+        "lzw": dict(lzw=True),
+        "lzw_predictor2": dict(lzw=True, predictor2=True),
+        "deflate": dict(deflate=True),
+        "deflate_predictor2": dict(deflate=True, predictor2=True),
+        "planar2": dict(planar2=True),
+    }[form]
+    w, h = 6 + d % 3, 5 + d % 4
+    r, c = np.arange(h).reshape(-1, 1), np.arange(w)
+    plane = np.dstack([
+        (19 * d + 7 * r + 31 * c) % 256,
+        (11 * d + 5 * r + 23 * c) % 256,
+        (3 * d + 13 * r + 37 * c) % 256,
+    ]).astype(np.uint8)
+    return encode_tiff(
+        plane, big_endian=d % 2 == 1, rows_per_strip=1 + d % 3, **coding
+    )
+
+
+_TIFF_FORMS = [
+    "raw", "packbits", "lzw", "lzw_predictor2", "deflate",
+    "deflate_predictor2", "planar2",
+    "g4", "g3_1d", "g3_2d", "g3_2d_uncompressed", "mh",
+]
+
+
+@pytest.mark.parametrize("form", _TIFF_FORMS)
+def test_tiff_fixture_mutants_fail_typed(form):
+    """The gate fuzz's seed and mutation rule over the non-JPEG TIFF
+    forms: every mutant decodes or fails as ValueError/NotImplementedError.
+    A corrupt deflate strip must not escape as ``zlib.error``."""
+    import random
+
+    from input_data_pipeline_spark.codecs.route import decode_media
+
+    blobs = [_tiff_fixture(form, d) for d in range(6)]
+    for blob in blobs:
+        decode_media(blob, "image")  # the clean fixtures decode
+    untyped = []
+    for k, mutant in _mutants(random.Random(7), blobs):
+        try:
+            decode_media(mutant, "image")
+        except (ValueError, NotImplementedError):
+            pass
+        except Exception as e:  # noqa: BLE001 - the untyped errors under test
+            untyped.append((k, type(e).__name__, str(e)[:60]))
+    assert not untyped, untyped[:10]
+
+
+def test_inflate_stops_at_the_expected_size():
+    """A deflate strip or IDAT that inflates past the size its header
+    implies stops one byte past it and fails the length check as
+    ValueError, without inflating the rest."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.image import _decode_png, _inflate, encode_png
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
+
+    bomb = zlib.compress(bytes(16 << 20), 9)  # 16 MiB of zeros in ~16 KB
+    assert len(_inflate(bomb, 101, "test")) == 101
+    with pytest.raises(ValueError, match="truncated"):
+        _inflate(zlib.compress(bytes(1000))[:-5], 1 << 30, "test")
+    with pytest.raises(ValueError, match="corrupt test DEFLATE"):
+        _inflate(b"\xff\xff not deflate", 10, "test")
+
+    plane = np.zeros((4, 5, 3), dtype=np.uint8)
+    tiff = encode_tiff(plane, deflate=True)
+    strip = zlib.compress(bytes(4 * 5 * 3))
+    assert tiff.endswith(strip)
+    # the one strip's offset and count sit inline: point them at a bomb
+    big = bytearray(tiff[: -len(strip)] + bomb)
+    (n_tags,) = struct.unpack_from("<H", big, 8)
+    for off in range(10, 10 + 12 * n_tags, 12):
+        if struct.unpack_from("<H", big, off)[0] == 279:
+            struct.pack_into("<I", big, off + 8, len(bomb))
+    with pytest.raises(ValueError, match="strip length mismatch"):
+        _decode_tiff(bytes(big))
+
+    for interlace in (False, True):
+        png = encode_png(np.zeros((3, 4, 3), dtype=np.uint8), interlace=interlace)
+        at = png.index(b"IDAT") - 4
+        (n,) = struct.unpack_from(">I", png, at)
+        body = b"IDAT" + bomb
+        swapped = (
+            png[:at] + struct.pack(">I", len(bomb)) + body
+            + struct.pack(">I", zlib.crc32(body)) + png[at + 12 + n:]
+        )
+        with pytest.raises(ValueError, match="mismatch"):
+            _decode_png(swapped)
+
+
+def test_tiff_zero_image_length_is_typed():
+    """ImageLength 0 with RowsPerStrip 0 leaves no strip height to divide
+    by: the planar and chunky baseline paths fail as ValueError, not
+    ZeroDivisionError."""
+    import struct
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.tiff import _decode_tiff, encode_tiff
+
+    for planar2 in (False, True):
+        blob = bytearray(encode_tiff(np.zeros((2, 3, 3), np.uint8), planar2=planar2))
+        (n_tags,) = struct.unpack_from("<H", blob, 8)
+        for off in range(10, 10 + 12 * n_tags, 12):
+            if struct.unpack_from("<H", blob, off)[0] in (257, 278):
+                struct.pack_into("<I", blob, off + 8, 0)
+        with pytest.raises(ValueError):
+            _decode_tiff(bytes(blob))
+
+
+def _ifd_entries(blob):
+    """(tag, type, count, 4-byte value slot) for each entry of the first
+    IFD, with the byte order and the next-IFD offset."""
+    import struct
+
+    e = "<" if blob[:2] == b"II" else ">"
+    (ifd,) = struct.unpack_from(e + "I", blob, 4)
+    (n,) = struct.unpack_from(e + "H", blob, ifd)
+    entries = [
+        struct.unpack_from(e + "HHI", blob, ifd + 2 + 12 * t)
+        + (blob[ifd + 10 + 12 * t: ifd + 14 + 12 * t],)
+        for t in range(n)
+    ]
+    (next_ifd,) = struct.unpack_from(e + "I", blob, ifd + 2 + 12 * n)
+    return e, entries, next_ifd, ifd + 6 + 12 * n
+
+
+def test_tiff_ifds_are_sorted_with_left_justified_shorts():
+    """Every IFD ``encode_tiff`` and ``encode_tiff_g4`` write lists its
+    entries in ascending tag order (TIFF 6.0 §2), holds each SHORT scalar
+    left-justified in its value slot, keeps every out-of-line array
+    inside the file past the IFD, and ends the IFD chain: all forms, both
+    byte orders, one strip and several. The shared writer refuses
+    unsorted entries."""
+    import struct
+
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.tiff import (
+        _decode_tiff,
+        _tiff_file,
+        encode_tiff,
+        encode_tiff_g4,
+    )
+
+    r, c = np.arange(7).reshape(-1, 1), np.arange(9)
+    g = ((11 * r + 5 * c) % 256).astype(np.uint8)
+    plane = np.dstack([g, (g * 3) % 256, (g * 7) % 256])
+    strip_forms = [
+        {}, dict(packbits=True), dict(lzw=True), dict(lzw=True, predictor2=True),
+        dict(deflate=True), dict(deflate=True, predictor2=True),
+        dict(planar2=True), dict(planar2=True, lzw=True, predictor2=True),
+        dict(jpeg=True), dict(jpeg=True, jpeg_tables=True),
+    ]
+    blobs = [
+        encode_tiff(plane, big_endian=be, rows_per_strip=rps, **kw)
+        for kw in strip_forms for be in (False, True) for rps in (None, 2)
+    ]
+    blobs += [
+        encode_tiff(plane, big_endian=be, **kw)
+        for kw in (dict(ojpeg=True), dict(ojpeg_headerless=True),
+                   dict(ojpeg_headerless=True, jpeg_subsampling="420"))
+        for be in (False, True)
+    ]
+    bm = ((7 * c + 3 * r * r) % 11 < 4).astype(np.uint8)
+    blobs += [
+        encode_tiff_g4(bm, big_endian=be, **kw)
+        for kw in (dict(compression=4), dict(compression=3),
+                   dict(compression=3, two_d=True),
+                   dict(compression=3, two_d=True, uncompressed=True),
+                   dict(compression=2))
+        for be in (False, True)
+    ]
+    multi_strip = 0
+    for blob in blobs:
+        e, entries, next_ifd, ifd_end = _ifd_entries(blob)
+        tids = [t[0] for t in entries]
+        assert tids == sorted(set(tids)), tids
+        assert next_ifd == 0
+        for tid, ttype, count, slot in entries:
+            size = {3: 2, 4: 4, 7: 1}[ttype] * count
+            if size <= 4:
+                # inline values fill the slot from its first byte
+                assert slot[size:] == bytes(4 - size), (e, tid, slot)
+            else:
+                (at,) = struct.unpack(e + "I", slot)
+                assert ifd_end <= at and at + size <= len(blob), (e, tid)
+        shorts = {t[0]: struct.unpack(e + "H", t[3][:2])[0] for t in entries
+                  if t[1] == 3 and t[2] == 1}
+        meta = _decode_tiff(blob)
+        assert shorts[277] in (1, 3) and shorts[259] in (1, 2, 3, 4, 5, 6, 7, 8, 32773)
+        assert meta["n_pixels"] == 9 * 7
+        multi_strip += dict((t[0], t[2]) for t in entries).get(273, 1) > 1
+    assert multi_strip > 0
+    with pytest.raises(ValueError, match="ascending tag order"):
+        _tiff_file(False, [(257, 4, 1, 1), (256, 4, 1, 1)])
+    with pytest.raises(ValueError, match="ascending tag order"):
+        _tiff_file(True, [(256, 4, 1, 1), (256, 4, 1, 1)])
 
 
 def test_jpeg_stuffed_writer_matches_bitwise_reference():
