@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 from input_data_pipeline_spark.codecs.g711 import _g711_compress, _g711_expand
+from input_data_pipeline_spark.codecs.riff import _iff_chunk, _iff_chunks
 from input_data_pipeline_spark.codecs.wav import (
     _ima_adpcm_decode_block,
     _IMA_INDEX_ADJ,
@@ -36,6 +37,8 @@ def _f80_decode(b: bytes) -> float:
         return 0.0
     if exp == 0x7FFF:
         raise ValueError("non-finite AIFF sample rate")
+    if exp > 16383 + 63:  # 2**64 Hz or more: no rate, and may overflow
+        raise ValueError(f"AIFF sample rate exponent {exp - 16383} out of range")
     return sign * mant * 2.0 ** (exp - 16383 - 63)
 
 
@@ -179,13 +182,8 @@ def _aiff_chunks(payload: bytes) -> tuple:
     comm = None
     comp = b"NONE"
     ssnd = None
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from(">I", payload, pos + 4)
-        body0, body1 = pos + 8, pos + 8 + size
-        if body1 > len(payload):
-            raise ValueError("truncated AIFF: chunk extends past payload")
+    for cid, body0, body1 in _iff_chunks(payload, 12, len(payload), ">"):
+        size = body1 - body0
         if cid == b"COMM":
             if size < 18:
                 raise ValueError(f"COMM chunk too small ({size} bytes)")
@@ -201,7 +199,6 @@ def _aiff_chunks(payload: bytes) -> tuple:
                 raise ValueError("SSND chunk too small")
             off, _blk = struct.unpack_from(">II", payload, body0)
             ssnd = payload[body0 + 8 + off : body1]
-        pos = body1 + (size & 1)
     if comm is None:
         raise ValueError("AIFF payload missing COMM chunk")
     ch, nframes, bits, rate = comm
@@ -358,13 +355,10 @@ def encode_aiff(
     )
     if form == b"AIFC":
         commbody += comp + b"\x00\x00"  # empty pstring, even-padded
-    comm = b"COMM" + struct.pack(">I", len(commbody)) + commbody
-    ssndbody = struct.pack(">II", 0, 0) + data
-    ssnd = b"SSND" + struct.pack(">I", len(ssndbody)) + ssndbody
-    if len(ssndbody) & 1:
-        ssnd += b"\x00"
-    body = form + comm + ssnd
-    return b"FORM" + struct.pack(">I", len(body)) + body
+    body = form + _iff_chunk(b"COMM", commbody, ">") + _iff_chunk(
+        b"SSND", struct.pack(">II", 0, 0) + data, ">"
+    )
+    return _iff_chunk(b"FORM", body, ">")
 
 
 # --- CAF (round 17) -----------------------------------------------------------

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from input_data_pipeline_spark.codecs.g711 import _g711_compress
 from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg
+from input_data_pipeline_spark.codecs.riff import _iff_chunk, _iff_chunks
 
 
 def encode_avi(frames, usec_per_frame: int = 40000, audio=None,
@@ -37,13 +38,13 @@ def encode_avi(frames, usec_per_frame: int = 40000, audio=None,
         rows[:, : w * 3] = p.reshape(h, w * 3)[::-1]
         return rows.tobytes()
 
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) % 2 else b""
+    def strl(strh: bytes, strf: bytes) -> bytes:  # one stream's header list
+        return _iff_chunk(
+            b"LIST",
+            b"strl" + _iff_chunk(b"strh", strh, "<")
+            + _iff_chunk(b"strf", strf, "<"),
+            "<",
         )
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return b"LIST" + struct.pack("<I", 4 + len(body)) + ltype + body
 
     avih = struct.pack(
         "<10I4x4x4x4x", usec_per_frame, 0, 0, 0, len(planes), 0,
@@ -53,8 +54,8 @@ def encode_avi(frames, usec_per_frame: int = 40000, audio=None,
     strf = struct.pack(
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 0, 0, 0, 0
     )
-    strls = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    movi_chunks = b"".join(chunk(b"00db", dib(p)) for p in planes)
+    strls = strl(strh, strf)
+    movi = b"movi" + b"".join(_iff_chunk(b"00db", dib(p), "<") for p in planes)
     if audio is not None:
         ext = b""
         if audio_format == "mp3":
@@ -88,14 +89,11 @@ def encode_avi(frames, usec_per_frame: int = 40000, audio=None,
         )
         if ext:
             astrf += struct.pack("<H", len(ext)) + ext  # cbSize + extension
-        strls += lst(b"strl", chunk(b"strh", astrh) + chunk(b"strf", astrf))
-        movi_chunks += chunk(b"01wb", adata)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strls)
-    movi = lst(b"movi", movi_chunks)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
+        strls += strl(astrh, astrf)
+        movi += _iff_chunk(b"01wb", adata, "<")
+    hdrl = b"hdrl" + _iff_chunk(b"avih", avih, "<") + strls
+    body = b"AVI " + _iff_chunk(b"LIST", hdrl, "<") + _iff_chunk(b"LIST", movi, "<")
+    return _iff_chunk(b"RIFF", body, "<")
 
 
 def _decode_avi(payload: bytes, probe: bool = False) -> dict:
@@ -149,13 +147,8 @@ def _decode_avi(payload: bytes, probe: bool = False) -> dict:
         # would otherwise be read against the stale type), and a strl
         # whose strf has no preceding strh matches nothing
         stream_type = None
-        pos = start
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body0, body1 = pos + 8, pos + 8 + size
-            if body1 > end:
-                raise ValueError("truncated AVI: chunk extends past its parent")
+        for cid, body0, body1 in _iff_chunks(payload, start, end, "<"):
+            size = body1 - body0
             if cid == b"LIST":
                 walk(body0 + 4, body1)  # skip the 4-byte list type, recurse
             elif cid == b"avih":
@@ -184,7 +177,6 @@ def _decode_avi(payload: bytes, probe: bool = False) -> dict:
                 compressed = True
                 if not probe:
                     raw_frames.append(("dc", payload[body0:body1]))
-            pos = body1 + (size & 1)  # RIFF pads chunks to even offsets
 
     walk(12, len(payload))
     if avih is None:

@@ -31,14 +31,15 @@ from input_data_pipeline_spark.codecs.jpeg import _decode_jpeg
 from input_data_pipeline_spark.codecs.mp4 import _probe_mp4, extract_mp4_audio
 from input_data_pipeline_spark.codecs.mpeg import _probe_adts, probe_mpeg_audio
 from input_data_pipeline_spark.codecs.ogg import _decode_vorbis, _probe_ogg
+from input_data_pipeline_spark.codecs.riff import _iff_chunks
 from input_data_pipeline_spark.codecs.tiff import _decode_tiff
 from input_data_pipeline_spark.codecs.wav import (
     _decode_ima_adpcm,
     _mp3_stream_meta,
     _ms_adpcm_decode,
     _parse_wav_chunks,
+    _wav_file,
     _WAVE_FORMAT_ALAW,
-    _WAVE_FORMAT_EXTENSIBLE,
     _WAVE_FORMAT_IEEE_FLOAT,
     _WAVE_FORMAT_IMA_ADPCM,
     _WAVE_FORMAT_MPEGLAYER3,
@@ -59,8 +60,6 @@ def extract_avi_audio(payload: bytes) -> dict:
     G.711 both laws, IMA-ADPCM) with zero new codec code, and feeds
     ``audio_content_key`` like any first-class audio container. An AVI
     without an audio stream, or with several, raises by name."""
-    import struct
-
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload (missing RIFF/'AVI ' magic)")
     fmts: list[bytes] = []
@@ -68,39 +67,26 @@ def extract_avi_audio(payload: bytes) -> dict:
 
     def walk(start: int, end: int) -> None:
         stream_type = None
-        pos = start
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body0, body1 = pos + 8, pos + 8 + size
-            if body1 > end:
-                raise ValueError("truncated AVI: chunk extends past its parent")
+        for cid, body0, body1 in _iff_chunks(payload, start, end, "<"):
             if cid == b"LIST":
                 walk(body0 + 4, body1)
             elif cid == b"strh":
                 stream_type = payload[body0 : body0 + 4]
             elif cid == b"strf" and stream_type == b"auds":
-                if size < 16:
-                    raise ValueError(f"audio 'strf' chunk too small ({size} bytes)")
+                if body1 - body0 < 16:
+                    raise ValueError(
+                        f"audio 'strf' chunk too small ({body1 - body0} bytes)"
+                    )
                 fmts.append(payload[body0:body1])
             elif cid[2:4] == b"wb":
                 audio.extend(payload[body0:body1])
-            pos = body1 + (size & 1)
 
     walk(12, len(payload))
     if not fmts:
         raise ValueError("AVI has no audio ('auds') stream")
     if len(fmts) > 1:
         raise ValueError(f"AVI has {len(fmts)} audio streams; expected one")
-
-    def wchunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) % 2 else b""
-        )
-
-    wav_body = b"WAVE" + wchunk(b"fmt ", fmts[0]) + wchunk(b"data", bytes(audio))
-    wav = b"RIFF" + struct.pack("<I", len(wav_body)) + wav_body
-    return decode_media(wav, "audio")
+    return decode_media(_wav_file(fmts[0], None, bytes(audio)), "audio")
 
 
 def probe_video(payload: bytes) -> dict:
@@ -159,6 +145,123 @@ def probe_video(payload: bytes) -> dict:
         "probe of non-AVI/MP4/Y4M video containers requires external "
         "media libraries (SURVEY §2.10 U1/U2)"
     )
+
+
+def _decode_wav(w: dict) -> dict:
+    """Decode a parsed WAV (:func:`_parse_wav_chunks`) that stdlib
+    ``wave`` cannot read: the companded, ADPCM, float and MP3 format
+    tags, and PCM in the extensible or RF64 form."""
+    tag = w["tag"]
+
+    def int16_pcm(pcm: bytes, codec: str) -> dict:
+        return {
+            "n_channels": w["n_channels"],
+            "sample_width": 2,
+            "frame_rate": w["frame_rate"],
+            "n_frames": len(pcm) // 2 // w["n_channels"],
+            "pcm": pcm,
+            "codec": codec,
+        }
+
+    if tag in (_WAVE_FORMAT_ALAW, _WAVE_FORMAT_MULAW):
+        if w["bits"] != 8:
+            raise ValueError(
+                f"G.711 WAV must be 8-bit, got {w['bits']}-bit"
+            )
+        law = "alaw" if tag == _WAVE_FORMAT_ALAW else "ulaw"
+        codes = w["data"]
+        if w["fact_frames"] is not None:
+            # fact counts FRAMES; expansion itself is per-byte and
+            # channel-agnostic (round 17: stereo G.711 decodes)
+            codes = codes[: w["fact_frames"] * w["n_channels"]]
+        import numpy as np
+
+        # the EXPANDED width is 2; the source codes are 8-bit
+        pcm = _g711_expand(np.frombuffer(codes, np.uint8), law)
+        return int16_pcm(pcm.tobytes(), law)
+    if tag == _WAVE_FORMAT_IMA_ADPCM:
+        pcm = _decode_ima_adpcm(
+            w["data"], w["block_align"], w["fact_frames"],
+            w["n_channels"],
+        )
+        return int16_pcm(pcm, "ima_adpcm")
+    if tag == _WAVE_FORMAT_IEEE_FLOAT:
+        # round 14: IEEE float WAV (little-endian float32/float64),
+        # the same nominal [-1, 1) -> int16 transform as float AU
+        import numpy as np
+
+        if w["bits"] not in (32, 64):
+            raise ValueError(
+                f"IEEE float WAV must be 32- or 64-bit, got {w['bits']}"
+            )
+        width = w["bits"] // 8
+        data = w["data"]
+        if w["fact_frames"] is not None:
+            data = data[: w["fact_frames"] * width * w["n_channels"]]
+        if len(data) % width:
+            raise ValueError("float WAV data not a whole number of samples")
+        f = np.frombuffer(
+            data, "<f4" if width == 4 else "<f8"
+        ).astype(np.float64)
+        if len(f) % w["n_channels"]:
+            raise ValueError("float WAV data not a whole number of frames")
+        if not np.isfinite(f).all():
+            raise ValueError("non-finite float WAV sample")
+        scaled = f * 32768.0
+        pcm = np.clip(
+            np.sign(scaled) * np.floor(np.abs(scaled) + 0.5),
+            -32768, 32767,
+        ).astype(np.int16)
+        return int16_pcm(pcm.tobytes(), f"pcm_f{8 * width}le")
+    if tag == _WAVE_FORMAT_MPEGLAYER3:
+        # round 16: MP3-in-WAV (MPEGLAYER3WAVEFORMAT) routes the
+        # 'data' chunk — a plain MP3 elementary stream — to the
+        # EXISTING full MP3 PCM chain; the container's fact chunk
+        # (dwSampleLength) truncates the decode when present.
+        # extract_avi_audio repackages AVI 'auds' streams as WAV, so
+        # wFormatTag 0x0055 AVI audio inherits this arm for free.
+        meta = _mp3_stream_meta(w["data"])
+        if (
+            w["fact_frames"] is not None
+            and w["fact_frames"] < meta["n_frames"]
+        ):
+            n = w["fact_frames"]
+            meta["pcm"] = meta["pcm"][: n * 2 * meta["n_channels"]]
+            meta["n_frames"] = n
+        return meta
+    if tag == _WAVE_FORMAT_MS_ADPCM:
+        # round 17: MS ADPCM (the other ubiquitous WAV speech codec
+        # next to IMA) — mono or stereo, exact integer transform
+        pcm = _ms_adpcm_decode(
+            w["data"], w["block_align"], w["n_channels"],
+            w["fact_frames"],
+        )
+        return int16_pcm(pcm, "ms_adpcm")
+    if tag != _WAVE_FORMAT_PCM:
+        raise NotImplementedError(
+            f"WAV format tag 0x{tag:04x} (e.g. AAC-in-WAV; MP3-in-WAV "
+            "decodes since round 16) requires external media libraries "
+            "(SURVEY §2.10 U1/U2)"
+        )
+    # extensible-PCM / RF64-PCM: stdlib wave cannot read either
+    # container form, but the samples are plain interleaved LE PCM —
+    # emit the exact dict shape of the stdlib path so the content key
+    # matches the same audio in a classic WAV
+    if w["bits"] % 8 or not 1 <= w["bits"] // 8 <= 4:
+        raise ValueError(f"PCM bit depth {w['bits']} unsupported")
+    width = w["bits"] // 8
+    data = w["data"]
+    if w["fact_frames"] is not None:
+        data = data[: w["fact_frames"] * width * w["n_channels"]]
+    if len(data) % (width * w["n_channels"]):
+        raise ValueError("PCM data not a whole number of frames")
+    return {
+        "n_channels": w["n_channels"],
+        "sample_width": width,
+        "frame_rate": w["frame_rate"],
+        "n_frames": len(data) // width // w["n_channels"],
+        "pcm": data,
+    }
 
 
 def decode_media(payload: bytes, modality: str = "audio") -> dict:
@@ -293,169 +396,34 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
         # full-scale 32768 and folded into the uniform PCM contract, so
         # audio_content_key treats an MP3 like any other container
         return _mp3_stream_meta(payload)
+    walk_error = None
     if (
         len(payload) >= 12
         and payload[:4] in (b"RIFF", b"RF64", b"BW64")
         and payload[8:12] == b"WAVE"
     ):
-        import struct
-
-        # peek the format tag: stdlib wave only reads PCM, and the
-        # companded/ADPCM speech formats are exact integer transforms we
-        # decode for real (round 11)
-        at = payload.find(b"fmt ")
-        tag = (
-            struct.unpack_from("<H", payload, at + 8)[0]
-            if 0 <= at <= len(payload) - 10
-            else _WAVE_FORMAT_PCM
-        )
-        # round 17: WAVE_FORMAT_EXTENSIBLE resolves to its SubFormat's
-        # embedded tag, and RF64 needs the ds64-aware chunk walk; both
-        # then dispatch through the SAME per-codec arms below
-        ext_or_rf64 = (
-            tag == _WAVE_FORMAT_EXTENSIBLE or payload[:4] != b"RIFF"
-        )
-        if ext_or_rf64:
-            tag = _parse_wav_chunks(payload)["tag"]
-        if tag in (_WAVE_FORMAT_ALAW, _WAVE_FORMAT_MULAW):
+        # one chunk walk picks the arm: stdlib wave reads only classic
+        # PCM, and every other WAV form decodes in _decode_wav
+        try:
             w = _parse_wav_chunks(payload)
-            if w["bits"] != 8:
-                raise ValueError(
-                    f"G.711 WAV must be 8-bit, got {w['bits']}-bit"
-                )
-            law = "alaw" if tag == _WAVE_FORMAT_ALAW else "ulaw"
-            codes = w["data"]
-            if w["fact_frames"] is not None:
-                # fact counts FRAMES; expansion itself is per-byte and
-                # channel-agnostic (round 17: stereo G.711 decodes)
-                codes = codes[: w["fact_frames"] * w["n_channels"]]
-            import numpy as np
-
-            pcm = _g711_expand(np.frombuffer(codes, np.uint8), law)
-            return {
-                "n_channels": w["n_channels"],
-                "sample_width": 2,  # EXPANDED width; source codes are 8-bit
-                "frame_rate": w["frame_rate"],
-                "n_frames": len(codes) // w["n_channels"],
-                "pcm": pcm.tobytes(),
-                "codec": law,
-            }
-        if tag == _WAVE_FORMAT_IMA_ADPCM:
-            w = _parse_wav_chunks(payload)
-            pcm = _decode_ima_adpcm(
-                w["data"], w["block_align"], w["fact_frames"],
-                w["n_channels"],
-            )
-            return {
-                "n_channels": w["n_channels"],
-                "sample_width": 2,
-                "frame_rate": w["frame_rate"],
-                "n_frames": len(pcm) // 2 // w["n_channels"],
-                "pcm": pcm,
-                "codec": "ima_adpcm",
-            }
-        if tag == _WAVE_FORMAT_IEEE_FLOAT:
-            # round 14: IEEE float WAV (little-endian float32/float64),
-            # the same nominal [-1, 1) -> int16 transform as float AU
-            import numpy as np
-
-            w = _parse_wav_chunks(payload)
-            if w["bits"] not in (32, 64):
-                raise ValueError(
-                    f"IEEE float WAV must be 32- or 64-bit, got {w['bits']}"
-                )
-            width = w["bits"] // 8
-            data = w["data"]
-            if w["fact_frames"] is not None:
-                data = data[: w["fact_frames"] * width * w["n_channels"]]
-            if len(data) % width:
-                raise ValueError("float WAV data not a whole number of samples")
-            f = np.frombuffer(
-                data, "<f4" if width == 4 else "<f8"
-            ).astype(np.float64)
-            if len(f) % w["n_channels"]:
-                raise ValueError("float WAV data not a whole number of frames")
-            if not np.isfinite(f).all():
-                raise ValueError("non-finite float WAV sample")
-            scaled = f * 32768.0
-            pcm = np.clip(
-                np.sign(scaled) * np.floor(np.abs(scaled) + 0.5),
-                -32768, 32767,
-            ).astype(np.int16)
-            return {
-                "n_channels": w["n_channels"],
-                "sample_width": 2,
-                "frame_rate": w["frame_rate"],
-                "n_frames": len(pcm) // w["n_channels"],
-                "pcm": pcm.tobytes(),
-                "codec": "pcm_f32le" if width == 4 else "pcm_f64le",
-            }
-        if tag == _WAVE_FORMAT_MPEGLAYER3:
-            # round 16: MP3-in-WAV (MPEGLAYER3WAVEFORMAT) routes the
-            # 'data' chunk — a plain MP3 elementary stream — to the
-            # EXISTING full MP3 PCM chain; the container's fact chunk
-            # (dwSampleLength) truncates the decode when present.
-            # extract_avi_audio repackages AVI 'auds' streams as WAV, so
-            # wFormatTag 0x0055 AVI audio inherits this arm for free.
-            w = _parse_wav_chunks(payload)
-            meta = _mp3_stream_meta(w["data"])
+        except ValueError as e:
+            if payload[:4] != b"RIFF":
+                raise
+            walk_error = e  # stdlib wave may still read a classic PCM WAV
+        else:
             if (
-                w["fact_frames"] is not None
-                and w["fact_frames"] < meta["n_frames"]
+                w["tag"] != _WAVE_FORMAT_PCM
+                or w["rf64"]
+                or w["valid_bits"] is not None  # set only when extensible
             ):
-                n = w["fact_frames"]
-                meta["pcm"] = meta["pcm"][: n * 2 * meta["n_channels"]]
-                meta["n_frames"] = n
-            return meta
-        if tag == _WAVE_FORMAT_MS_ADPCM:
-            # round 17: MS ADPCM (the other ubiquitous WAV speech codec
-            # next to IMA) — mono or stereo, exact integer transform
-            w = _parse_wav_chunks(payload)
-            pcm = _ms_adpcm_decode(
-                w["data"], w["block_align"], w["n_channels"],
-                w["fact_frames"],
-            )
-            return {
-                "n_channels": w["n_channels"],
-                "sample_width": 2,
-                "frame_rate": w["frame_rate"],
-                "n_frames": len(pcm) // 2 // w["n_channels"],
-                "pcm": pcm,
-                "codec": "ms_adpcm",
-            }
-        if tag != _WAVE_FORMAT_PCM:
-            raise NotImplementedError(
-                f"WAV format tag 0x{tag:04x} (e.g. AAC-in-WAV; MP3-in-WAV "
-                "decodes since round 16) requires external media libraries "
-                "(SURVEY §2.10 U1/U2)"
-            )
-        if ext_or_rf64:
-            # extensible-PCM / RF64-PCM: stdlib wave cannot read either
-            # container form, but the samples are plain interleaved LE
-            # PCM — emit the exact dict shape of the stdlib path so the
-            # content key matches the same audio in a classic WAV
-            w = _parse_wav_chunks(payload)
-            if w["bits"] % 8 or not 1 <= w["bits"] // 8 <= 4:
-                raise ValueError(f"PCM bit depth {w['bits']} unsupported")
-            width = w["bits"] // 8
-            data = w["data"]
-            if w["fact_frames"] is not None:
-                data = data[: w["fact_frames"] * width * w["n_channels"]]
-            if len(data) % (width * w["n_channels"]):
-                raise ValueError("PCM data not a whole number of frames")
-            return {
-                "n_channels": w["n_channels"],
-                "sample_width": width,
-                "frame_rate": w["frame_rate"],
-                "n_frames": len(data) // width // w["n_channels"],
-                "pcm": data,
-            }
+                return _decode_wav(w)
     import io
     import wave
 
     # stdlib wave reports a malformed or unrecognised payload as
     # wave.Error, RuntimeError (its chunk seek) or EOFError; the decode
-    # contract raises ValueError so callers route it as a bad payload
+    # contract raises ValueError so callers route it as a bad payload,
+    # with the chunk walk's reason when the walk refused it too
     try:
         with wave.open(io.BytesIO(payload), "rb") as wf:
             n_channels, width = wf.getnchannels(), wf.getsampwidth()
@@ -469,6 +437,8 @@ def decode_media(payload: bytes, modality: str = "audio") -> dict:
                 "pcm": pcm,
             }
     except (wave.Error, RuntimeError, EOFError) as e:
+        if walk_error is not None:
+            raise walk_error from e
         raise ValueError(f"undecodable audio payload: {e}") from e
 
 

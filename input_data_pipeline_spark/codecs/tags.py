@@ -4,6 +4,8 @@ chunk, read into one flat dict.
 
 from __future__ import annotations
 
+from input_data_pipeline_spark.codecs.riff import _iff_chunk, _iff_chunks
+
 
 # --- audio tag / metadata extraction (round 17) -------------------------------
 #
@@ -149,16 +151,17 @@ def _parse_vorbis_comments(packet: bytes, skip: int) -> dict:
     UTF-8 'KEY=value' entries; keys case-insensitive."""
     import struct
 
-    pos = skip
-    (vlen,) = struct.unpack_from("<I", packet, pos)
-    pos += 4 + vlen
-    (count,) = struct.unpack_from("<I", packet, pos)
-    pos += 4
+    def u32(at: int) -> int:
+        if at + 4 > len(packet):
+            raise ValueError("truncated Vorbis comment block")
+        return struct.unpack_from("<I", packet, at)[0]
+
+    vlen = u32(skip)
+    count = u32(skip + 4 + vlen)
+    pos = skip + 8 + vlen
     tags: dict = {}
     for _ in range(count):
-        if pos + 4 > len(packet):
-            raise ValueError("truncated Vorbis comment block")
-        (ln,) = struct.unpack_from("<I", packet, pos)
+        ln = u32(pos)
         pos += 4
         entry = packet[pos : pos + ln].decode("utf-8")
         pos += ln
@@ -178,8 +181,6 @@ def extract_audio_tags(payload: bytes) -> dict:
     v2 lacks), a bare trailing ID3v1 block, the Vorbis-comment packet
     of an Ogg stream (OpusTags or packet-type-3 vorbis), or RIFF
     LIST/INFO. Containers with no tag system yield {}."""
-    import struct
-
     if payload[:3] == b"ID3":
         tags, total = _parse_id3v2(payload)
         for k, v in _parse_id3v1(payload).items():
@@ -192,6 +193,8 @@ def extract_audio_tags(payload: bytes) -> dict:
         while pos < len(payload) and len(packets) < 3:
             if payload[pos : pos + 4] != b"OggS":
                 raise ValueError("Ogg page boundary missing OggS capture")
+            if pos + 27 > len(payload):
+                raise ValueError("truncated Ogg page header")
             n_segs = payload[pos + 26]
             lace = payload[pos + 27 : pos + 27 + n_segs]
             off = pos + 27 + n_segs
@@ -213,24 +216,15 @@ def extract_audio_tags(payload: bytes) -> dict:
         b"WAVE", b"AVI "
     ):
         tags: dict = {}
-        pos = 12
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body0 = pos + 8
-            if cid == b"LIST" and payload[body0 : body0 + 4] == b"INFO":
-                at = body0 + 4
-                while at + 8 <= body0 + size:
-                    sub = payload[at : at + 4]
-                    (ssz,) = struct.unpack_from("<I", payload, at + 4)
-                    key = _WAV_INFO.get(sub)
-                    if key and key not in tags:
-                        tags[key] = payload[
-                            at + 8 : at + 8 + ssz
-                        ].split(b"\x00")[0].decode("utf-8",
-                                                   errors="replace")
-                    at += 8 + ssz + (ssz & 1)
-            pos = body0 + size + (size & 1)
+        for cid, body0, body1 in _iff_chunks(payload, 12, len(payload), "<"):
+            if cid != b"LIST" or payload[body0 : body0 + 4] != b"INFO":
+                continue
+            for sub, at, end in _iff_chunks(payload, body0 + 4, body1, "<"):
+                key = _WAV_INFO.get(sub)
+                if key and key not in tags:
+                    tags[key] = payload[at:end].split(b"\x00")[0].decode(
+                        "utf-8", errors="replace"
+                    )
         return tags
     if _parse_id3v1(payload):
         return _parse_id3v1(payload)
@@ -319,17 +313,17 @@ def make_vorbis_comments(
 
 def encode_wav_info(wav: bytes, tags: dict) -> bytes:
     """Append a RIFF LIST/INFO chunk with the normalized tags to an
-    existing WAV, fixing up the RIFF size."""
+    existing WAV, fixing up the RIFF size (in ds64 for RF64/BW64)."""
     import struct
 
     rev = {v: k for k, v in _WAV_INFO.items()}
-    body = b"INFO"
-    for key, val in tags.items():
-        vb = val.encode("utf-8") + b"\x00"
-        body += rev[key] + struct.pack("<I", len(vb)) + vb
-        if len(vb) & 1:
-            body += b"\x00"
-    chunk = b"LIST" + struct.pack("<I", len(body)) + body
-    out = bytearray(wav + chunk)
-    struct.pack_into("<I", out, 4, len(out) - 8)
+    body = b"INFO" + b"".join(
+        _iff_chunk(rev[key], val.encode("utf-8") + b"\x00", "<")
+        for key, val in tags.items()
+    )
+    out = bytearray(wav + _iff_chunk(b"LIST", body, "<"))
+    if out[:4] == b"RIFF":
+        struct.pack_into("<I", out, 4, len(out) - 8)
+    else:  # RF64/BW64: the size field is a sentinel; ds64 holds riffSize
+        struct.pack_into("<Q", out, 20, len(out) - 8)
     return bytes(out)

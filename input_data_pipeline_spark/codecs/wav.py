@@ -10,6 +10,7 @@ from input_data_pipeline_spark.codecs.mpeg import (
     decode_mpeg1_layer1,
     decode_mpeg1_layer2,
 )
+from input_data_pipeline_spark.codecs.riff import _iff_chunk, _iff_chunks
 
 
 def encode_wav(samples, frame_rate: int = 16000) -> bytes:
@@ -101,6 +102,15 @@ def _mp3_stream_meta(stream: bytes) -> dict:
     }
 
 
+def _wav_file(fmt: bytes, fact: bytes | None, data: bytes) -> bytes:
+    """A RIFF/WAVE file: the 'fmt ' chunk, the 'fact' chunk when
+    ``fact`` is given, then the 'data' chunk."""
+    body = b"WAVE" + _iff_chunk(b"fmt ", fmt, "<")
+    if fact is not None:
+        body += _iff_chunk(b"fact", fact, "<")
+    return _iff_chunk(b"RIFF", body + _iff_chunk(b"data", data, "<"), "<")
+
+
 def encode_wav_mp3(
     mp3: bytes, frame_rate: int = 44100, n_frames: int | None = None,
     n_channels: int = 1,
@@ -118,17 +128,8 @@ def encode_wav_mp3(
         "<HHIIHHH", _WAVE_FORMAT_MPEGLAYER3, n_channels, frame_rate,
         0, 1, 0, len(ext),
     ) + ext
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) % 2 else b""
-        )
-
-    body = b"WAVE" + chunk(b"fmt ", fmt)
-    if n_frames is not None:
-        body += chunk(b"fact", struct.pack("<I", n_frames))
-    body += chunk(b"data", mp3)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    fact = None if n_frames is None else struct.pack("<I", n_frames)
+    return _wav_file(fmt, fact, mp3)
 
 
 def encode_wav_codes(codes: bytes, fmt_tag: int, frame_rate: int = 8000) -> bytes:
@@ -143,12 +144,7 @@ def encode_wav_codes(codes: bytes, fmt_tag: int, frame_rate: int = 8000) -> byte
         raise ValueError(f"encode_wav_codes writes G.711 tags 6/7, got {fmt_tag}")
     fmt = struct.pack("<HHIIHHH", fmt_tag, 1, frame_rate, frame_rate, 1, 8, 0)
     fact = struct.pack("<I", len(codes))
-    body = b"WAVE"
-    for cid, chunk in ((b"fmt ", fmt), (b"fact", fact), (b"data", codes)):
-        body += cid + struct.pack("<I", len(chunk)) + chunk
-        if len(chunk) % 2:
-            body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav_file(fmt, fact, codes)
 
 
 def encode_wav_float(samples, frame_rate: int = 16000, width: int = 4,
@@ -174,12 +170,7 @@ def encode_wav_float(samples, frame_rate: int = 16000, width: int = 4,
         frame_rate * block, block, width * 8, 0,
     )
     fact = struct.pack("<I", len(s) // n_channels)
-    body = b"WAVE"
-    for cid, chunk in ((b"fmt ", fmt), (b"fact", fact), (b"data", data)):
-        body += cid + struct.pack("<I", len(chunk)) + chunk
-        if len(chunk) % 2:
-            body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav_file(fmt, fact, data)
 
 
 # IMA ADPCM step-size and index-adjust tables (IMA 1992 recommended
@@ -303,17 +294,18 @@ _KS_SUBTYPE_TAIL = bytes.fromhex("000010008000" + "00aa00389b71")
 
 
 def _parse_wav_chunks(payload: bytes) -> dict:
-    """RIFF/WAVE chunk walk for the non-PCM formats stdlib ``wave``
-    rejects: returns fmt fields + the raw data chunk + the 'fact' frame
-    count (required by the spec for compressed formats).
+    """RIFF/WAVE chunk parse, run once per WAV by ``decode_media`` and
+    ``probe_audio``: returns fmt fields + the raw data chunk + the 'fact'
+    frame count (required by the spec for compressed formats).
 
     Round 17 extensions — the two forms modern writers emit:
     WAVE_FORMAT_EXTENSIBLE (0xFFFE) resolves ``tag`` to the SubFormat
     GUID's embedded equivalent tag (tail validated against the fixed
     KSDATAFORMAT suffix) and surfaces ``valid_bits`` / ``channel_mask``;
-    RF64/BW64 (EBU 3306 — WAVs past the 4 GiB RIFF limit) reads the
-    mandatory leading 'ds64' chunk and substitutes its 64-bit sizes
-    wherever a 32-bit field carries the 0xFFFFFFFF sentinel."""
+    RF64/BW64 (EBU 3306 — WAVs past the 4 GiB RIFF limit) carries the
+    real 64-bit sizes in its mandatory leading 'ds64' chunk:
+    :func:`_iff_chunks` reads the data size from it, and a 'fact' count
+    of 0xFFFFFFFF takes its sample count."""
     import struct
 
     rf64 = payload[:4] in (b"RF64", b"BW64")
@@ -324,37 +316,19 @@ def _parse_wav_chunks(payload: bytes) -> dict:
     fmt = None
     data = None
     fact_frames = None
-    ds64 = None
-    pos = 12
-    first_chunk = True
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if rf64 and first_chunk:
-            if cid != b"ds64":
-                raise ValueError("RF64 must lead with the ds64 chunk")
-            if size < 28:
-                raise ValueError("ds64 chunk too small")
-            riff_sz, data_sz, sample_cnt = struct.unpack_from(
-                "<QQQ", payload, pos + 8
-            )
-            ds64 = {"riff": riff_sz, "data": data_sz, "samples": sample_cnt}
-        first_chunk = False
-        if cid == b"data" and size == 0xFFFFFFFF:
-            if ds64 is None:
-                raise ValueError(
-                    "data size sentinel 0xFFFFFFFF without a ds64 chunk"
-                )
-            size = ds64["data"]
-        body0, body1 = pos + 8, pos + 8 + size
-        if body1 > len(payload):
-            raise ValueError("truncated WAV: chunk extends past the payload")
-        if cid == b"fmt ":
+    ds64_samples = None
+    for cid, body0, body1 in _iff_chunks(payload, 12, len(payload), "<"):
+        size = body1 - body0
+        if rf64 and body0 == 20:  # the leading ds64, checked by the walk
+            (ds64_samples,) = struct.unpack_from("<Q", payload, body0 + 16)
+        elif cid == b"fmt ":
             if size < 16:
                 raise ValueError(f"'fmt ' chunk too small ({size} bytes)")
             tag, ch, rate, _br, align, bits = struct.unpack_from(
                 "<HHIIHH", payload, body0
             )
+            if ch == 0:
+                raise ValueError("'fmt ' chunk declares zero channels")
             fmt = {
                 "tag": tag, "n_channels": ch, "frame_rate": rate,
                 "block_align": align, "bits": bits,
@@ -381,11 +355,10 @@ def _parse_wav_chunks(payload: bytes) -> dict:
                 fmt["channel_mask"] = mask
         elif cid == b"fact" and size >= 4:
             (fact_frames,) = struct.unpack_from("<I", payload, body0)
-            if fact_frames == 0xFFFFFFFF and ds64 is not None:
-                fact_frames = ds64["samples"]
+            if fact_frames == 0xFFFFFFFF and ds64_samples is not None:
+                fact_frames = ds64_samples
         elif cid == b"data":
             data = payload[body0:body1]
-        pos = body1 + (size & 1)  # RIFF pads chunks to even offsets
     if fmt is None or data is None:
         raise ValueError("WAV payload missing 'fmt ' or 'data' chunk")
     fmt["fact_frames"] = fact_frames
@@ -591,14 +564,7 @@ def encode_wav_ms_adpcm(
     )
     for c1, c2 in _MS_ADPCM_COEFS:
         fmt += struct.pack("<hh", c1, c2)
-    fact = struct.pack("<I", n_frames)
-    body = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    return _wav_file(fmt, struct.pack("<I", n_frames), data)
 
 
 def encode_wav_extensible(
@@ -622,24 +588,21 @@ def encode_wav_extensible(
         frame_rate * align, align, bits, 22,
         valid_bits if valid_bits is not None else bits, channel_mask,
     ) + sub_tag.to_bytes(4, "little") + _KS_SUBTYPE_TAIL
-    body = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    if n_frames is not None:
-        body += b"fact" + struct.pack(
-            "<I", 4
-        ) + struct.pack("<I", 0xFFFFFFFF if rf64 else n_frames)
-    data_size = 0xFFFFFFFF if rf64 else len(data)
-    body += b"data" + struct.pack("<I", data_size) + data
-    if len(data) & 1:
-        body += b"\x00"
-    if rf64:
-        ds64 = struct.pack(
-            "<QQQI", 0, len(data), n_frames or 0, 0
-        )
-        body = b"ds64" + struct.pack("<I", len(ds64)) + ds64 + body
-        out = b"RF64" + struct.pack("<I", 0xFFFFFFFF) + b"WAVE" + body
-        # ds64's riffSize field: total file bytes minus the 8-byte
-        # RF64 header, patched now that the layout is final
-        out = bytearray(out)
-        struct.pack_into("<Q", out, 20, len(out) - 8)
-        return bytes(out)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    fact = None if n_frames is None else struct.pack(
+        "<I", 0xFFFFFFFF if rf64 else n_frames
+    )
+    out = _wav_file(fmt, fact, data)
+    if not rf64:
+        return out
+    # RF64: the magic, 0xFFFFFFFF for the RIFF and data sizes, and the
+    # real sizes in a leading ds64 chunk (riffSize counts the file past
+    # its 8-byte header, which grows by the 36-byte ds64 chunk)
+    ds64 = struct.pack("<QQQI", len(out) + 28, len(data), n_frames or 0, 0)
+    out = bytearray(
+        b"RF64" + b"\xff" * 4 + b"WAVE" + _iff_chunk(b"ds64", ds64, "<")
+        + out[12:]
+    )
+    struct.pack_into(
+        "<I", out, len(out) - len(data) - (len(data) & 1) - 4, 0xFFFFFFFF
+    )
+    return bytes(out)

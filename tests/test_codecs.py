@@ -686,3 +686,301 @@ def test_ccitt_canvas_is_bounded(compression):
     }[compression]
     with pytest.raises(ValueError, match="fax canvas"):
         decode()
+
+
+def _md5_granule(tag, d, gi, gg):
+    """The MP3 gates' md5-derived Layer III granule (doc-injective line
+    pattern), as ``cross_codec_audio_dedup`` ("xc") and
+    ``mp3_container_routing_features`` ("mc") build it."""
+    import hashlib
+
+    seed = hashlib.md5(f"{tag}:{d}:{gi}".encode()).digest()
+    is_vals = [0] * 576
+    for i in range(480):
+        b = hashlib.md5(seed + i.to_bytes(2, "big")).digest()[0]
+        if b < 64:
+            is_vals[i] = 1 if b % 2 == 0 else -1
+    return {"is": is_vals, "global_gain": gg, "scalefac": [0] * 21,
+            "big_values": 240, "scalefac_scale": 1, "scalefac_compress": 0}
+
+
+def _riff_fixture(form, d):
+    """Doc ``d`` of one RIFF/AIFF form, built as its gate in
+    ``operators.multimodal`` builds it."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs import wav
+    from input_data_pipeline_spark.codecs.aiff_caf import encode_aiff
+    from input_data_pipeline_spark.codecs.avi import encode_avi
+    from input_data_pipeline_spark.codecs.g711 import _g711_expand
+    from input_data_pipeline_spark.codecs.mpeg import encode_mp3_l3
+    from input_data_pipeline_spark.codecs.ogg import encode_ogg, make_opus_head
+    from input_data_pipeline_spark.codecs.route import decode_media
+    from input_data_pipeline_spark.codecs.tags import (
+        encode_id3v1, encode_id3v2, encode_wav_info, make_vorbis_comments,
+    )
+
+    def sine(n, ch, amp, period, shift):  # the ADPCM/AIFF gates' sine card
+        i = np.arange(n, dtype=np.float64)
+        return np.stack([
+            np.round(amp * np.sin(2.0 * np.pi * (i + shift * c) / period))
+            .astype(np.int16) for c in range(ch)
+        ], axis=1).reshape(-1)
+
+    def small_frames(nf):  # the AVI audio gates' flat video frames
+        return [np.full((3, 4, 3), (d + 17 * f) % 256, np.uint8) for f in range(nf)]
+
+    if form == "avi_video":  # video_decode_features
+        w, h, nf = 4 + d % 3, 3 + d % 2, 2 + d % 3
+        r, c = np.arange(h, dtype=np.int64).reshape(-1, 1), np.arange(w, dtype=np.int64)
+        return encode_avi([np.dstack([
+            (3 * d + 7 * f + 11 * r + 13 * c) % 256,
+            (5 * d + 9 * f + 3 * r + 17 * c) % 256,
+            (d + 2 * f + 23 * r + 29 * c) % 256,
+        ]).astype(np.uint8) for f in range(nf)])
+    if form == "avi_audio":  # avi_audio_extract_features
+        i = np.arange(256 + (d % 4) * 64, dtype=np.int64)
+        sr = 8000 + (d % 3) * 4000
+        if d % 2 == 0:
+            src = _g711_expand(((13 * d + 7 * i) % 256).astype(np.uint8), "ulaw")
+            return encode_avi(small_frames(2 + d % 3), audio=src.astype(np.int16),
+                              audio_rate=sr, audio_format="ulaw")
+        src = ((11 * d + 5 * i) % 4001 - 2000).astype(np.int16)
+        return encode_avi(small_frames(2 + d % 3), audio=src, audio_rate=sr)
+    if form in ("avi_mp3", "wav_mp3"):  # mp3_container_routing_features
+        gg = 170 + 4 * (d % 3)
+        mp3 = encode_mp3_l3([_md5_granule("mc", d, 0, gg), _md5_granule("mc", d, 1, gg)])
+        if form == "wav_mp3":
+            return wav.encode_wav_mp3(mp3, 44100, n_frames=1200 + (d % 5) * 100)
+        return encode_avi(small_frames(2 + d % 3), audio=mp3, audio_rate=44100,
+                          audio_format="mp3")
+    if form == "wav_codes":  # g711_decode_features
+        i = np.arange(128 + (d % 5) * 32, dtype=np.int64)
+        tag = wav._WAVE_FORMAT_MULAW if d % 2 == 0 else wav._WAVE_FORMAT_ALAW
+        codes = ((17 * d + 31 * i) % 256).astype(np.uint8).tobytes()
+        return wav.encode_wav_codes(codes, tag)
+    if form == "wav_float":  # cross_codec_audio_dedup's float WAV
+        gg = 170 + 4 * (d % 3)
+        silent = {"is": [0] * 576, "global_gain": 210, "scalefac": [0] * 21,
+                  "big_values": 0, "scalefac_scale": 1, "scalefac_compress": 0}
+        mp3 = encode_mp3_l3([silent, _md5_granule("xc", d, 0, gg),
+                             _md5_granule("xc", d, 1, gg), silent])
+        y = np.frombuffer(decode_media(mp3, "audio")["pcm"], "<i2")
+        return wav.encode_wav_float(y, frame_rate=44100)
+    if form == "wav_ms_adpcm":  # ms_adpcm_decode_features
+        ch, n = 1 + d % 2, 128 * (2 + d % 3)
+        src = sine(n, ch, 2500.0 + 100.0 * (d % 8), 20 + d % 12, 5.0)
+        data, ba, _ = wav.encode_ms_adpcm(src, n_channels=ch, frames_per_block=128,
+                                          predictor=d % 7)
+        fact = n - (7 if d % 5 == 0 else 0)
+        rate = (8000, 11025, 16000)[d % 3]
+        return wav.encode_wav_ms_adpcm(data, ba, ch, rate, fact, 128)
+    if form.startswith("wav_ext_") or form == "wav_rf64":  # wav_ext_decode_features
+        v, ch, n = d % 4, 2 if d % 3 == 0 else 1, 160 + (d % 7) * 16
+        rate = (16000, 22050, 48000)[d % 3]
+        mask = 0x3 if ch == 2 else 0x4
+        j = np.arange(n * ch, dtype=np.int64)
+        src = ((11 * d + 7 * j) % 2001 - 1000).astype(np.int16)
+        if v == 1:
+            f = (src.astype(np.float32) / np.float32(32768.0)).astype("<f4").tobytes()
+            return wav.encode_wav_extensible(
+                f, wav._WAVE_FORMAT_IEEE_FLOAT, ch, rate, 32, channel_mask=mask
+            )
+        if v == 2:
+            codes = ((17 * d + 31 * j) % 256).astype(np.uint8).tobytes()
+            return wav.encode_wav_extensible(codes, wav._WAVE_FORMAT_ALAW, ch, rate, 8,
+                                             valid_bits=8, channel_mask=mask)
+        return wav.encode_wav_extensible(
+            src.astype("<i2").tobytes(), wav._WAVE_FORMAT_PCM, ch, rate, 16,
+            channel_mask=mask, **(dict(n_frames=n, rf64=True) if v == 3 else {}),
+        )
+    if form.startswith("aiff_"):  # aiff_decode_features
+        comp, width = ((b"NONE", 2), (b"sowt", 2), (b"NONE", 1), (b"fl32", 2),
+                       (b"ulaw", 2), (b"alaw", 2), (b"ima4", 2))[d % 7]
+        ch = 2 if d % 3 == 0 else 1
+        src = sine(64 * (3 + d % 3), ch, 2600.0 + 90.0 * (d % 9), 19 + d % 14, 7.0)
+        return encode_aiff(src, (8000, 22050, 44100)[d % 3], comp=comp,
+                           n_channels=ch, width=width)
+    # audio_tags_features
+    v = d % 5
+    tags = {"title": f"Tïtle-{d}", "artist": f"Ärtist-{d % 97}",
+            "album": f"Album-{d % 53}", "date": str(1990 + d % 30)}
+    if v == 2:
+        return encode_ogg([make_opus_head(), make_vorbis_comments(tags), bytes(40)],
+                          [960], n_header_packets=2)
+    if v == 3:
+        i = np.arange(64, dtype=np.int64)
+        pcm = ((7 * d + 11 * i) % 1001 - 500).astype(np.int16)
+        return encode_wav_info(wav.encode_wav(pcm), tags)
+    return encode_id3v2(
+        {k: tags[k] for k in ("title", "artist", "date")},
+        version={0: 4, 1: 3, 4: 2}[v], utf16=v in (1, 4), unsync=v == 1,
+    ) + encode_id3v1({"album": tags["album"]})
+
+
+# form -> (modality, doc-id step, first doc id): each form's six docs are
+# the gate's docs that build it
+_RIFF_FORMS = {
+    "avi_video": ("video", 1, 0),
+    "avi_audio": ("video", 1, 0),
+    "avi_mp3": ("video", 2, 1),
+    "wav_mp3": ("audio", 2, 0),
+    "wav_codes": ("audio", 1, 0),
+    "wav_float": ("audio", 1, 0),
+    "wav_ms_adpcm": ("audio", 1, 0),
+    "wav_ext_pcm16": ("audio", 4, 0),
+    "wav_ext_f32": ("audio", 4, 1),
+    "wav_ext_alaw": ("audio", 4, 2),
+    "wav_rf64": ("audio", 4, 3),
+    **{f"aiff_{name}": ("audio", 7, v) for v, name in enumerate(
+        ("pcm16", "sowt", "pcm8", "fl32", "ulaw", "alaw", "ima4"))},
+    **{f"tags_{name}": ("audio", 5, v) for v, name in enumerate(
+        ("id3v24", "id3v23_unsync", "ogg", "wav_info", "id3v22_utf16"))},
+}
+
+
+@pytest.mark.parametrize("form", sorted(_RIFF_FORMS))
+def test_riff_fixture_mutants_fail_typed(form):
+    """The gate fuzz's seed and mutation rule over the RIFF/AIFF forms
+    and the audio-tag forms: ``decode_media``, the probe,
+    ``extract_avi_audio`` (AVI) and ``extract_audio_tags`` must each
+    return or raise ValueError/NotImplementedError on every mutant; a
+    ``struct.error``, ``IndexError`` or ``OverflowError`` from a chunk
+    walk or a header field is a bug."""
+    import random
+
+    from input_data_pipeline_spark.codecs.route import (
+        decode_media, extract_avi_audio, probe_audio, probe_video,
+    )
+    from input_data_pipeline_spark.codecs.tags import extract_audio_tags
+
+    modality, step, first = _RIFF_FORMS[form]
+    blobs = [_riff_fixture(form, first + step * k) for k in range(6)]
+    calls = [lambda b: decode_media(b, modality), extract_audio_tags]
+    calls += [probe_video, extract_avi_audio] if modality == "video" else [probe_audio]
+    if not form.startswith("tags_"):
+        for blob in blobs:  # the clean fixtures decode
+            decode_media(blob, modality)
+    untyped = []
+    for k, mutant in _mutants(random.Random(7), blobs):
+        for call in calls:
+            try:
+                call(mutant)
+            except (ValueError, NotImplementedError):
+                pass
+            except Exception as e:  # noqa: BLE001 - the untyped errors under test
+                untyped.append((k, call.__name__, type(e).__name__, str(e)[:60]))
+    assert not untyped, untyped[:10]
+
+
+def test_extract_audio_tags_prefixes_are_typed():
+    """Every prefix of the ``wav_info`` and Ogg tag fixtures, and the
+    ``wav_info`` file with its LIST size flipped past the payload, yields
+    tags or ValueError: the RIFF branch walks chunks with the checked
+    walker, and the Ogg branch checks the 27-byte page header and the
+    comment block's lengths before it reads them."""
+    import struct
+
+    from input_data_pipeline_spark.codecs.tags import extract_audio_tags
+
+    info = _riff_fixture("tags_wav_info", 3)
+    flipped = bytearray(info)
+    struct.pack_into("<I", flipped, info.index(b"LIST") + 4, 0x7FFFFFFF)
+    untyped = []
+    for blob in (info, _riff_fixture("tags_ogg", 2)):
+        for payload in [blob[:n] for n in range(len(blob) + 1)] + [bytes(flipped)]:
+            try:
+                extract_audio_tags(payload)
+            except ValueError:
+                pass
+            except Exception as e:  # noqa: BLE001 - the untyped errors under test
+                untyped.append((len(payload), type(e).__name__))
+    assert not untyped, untyped[:10]
+
+
+def test_extract_audio_tags_reads_rf64_info_after_data():
+    """An RF64 WAV's data chunk carries the 0xFFFFFFFF size sentinel; the
+    walk takes the real size from ds64, so a LIST/INFO chunk after the
+    data comes back as it does from the same tags on a RIFF WAV."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.tags import encode_wav_info, extract_audio_tags
+    from input_data_pipeline_spark.codecs.wav import (
+        _WAVE_FORMAT_PCM, _parse_wav_chunks, encode_wav_extensible,
+    )
+
+    tags = {"title": "Tïtle", "artist": "Ärtist", "date": "1999"}
+    pcm = np.arange(33, dtype="<i2").tobytes()  # odd frame count: a padded data chunk
+    for rf64 in (False, True):
+        wav = encode_wav_extensible(
+            pcm, _WAVE_FORMAT_PCM, 1, 8000, 16, n_frames=33, rf64=rf64
+        )
+        blob = encode_wav_info(wav, tags)
+        assert extract_audio_tags(blob) == tags
+        assert _parse_wav_chunks(blob)["data"] == pcm
+    assert blob[:8] == b"RF64\xff\xff\xff\xff"
+    assert int.from_bytes(blob[20:28], "little") == len(blob) - 8  # ds64 riffSize
+
+
+def test_probe_and_decode_agree_past_a_junk_chunk():
+    """A JUNK chunk before 'fmt ' whose body spells ``fmt `` does not
+    fool either reader: both walk the chunks and report the same 64
+    PCM frames."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.route import decode_media, probe_audio
+    from input_data_pipeline_spark.codecs.wav import encode_wav
+
+    wav = encode_wav(np.arange(64, dtype=np.int16))
+    junk = b"JUNK" + (12).to_bytes(4, "little") + b"fmt " + bytes(8)
+    body = wav[8:12] + junk + wav[12:]
+    blob = wav[:4] + len(body).to_bytes(4, "little") + body
+    assert probe_audio(blob)["n_frames"] == 64
+    got = decode_media(blob, "audio")
+    assert got["n_frames"] == 64
+    assert got["pcm"] == np.arange(64, dtype="<i2").tobytes()
+
+
+def test_aiff_rate_exponent_out_of_range_is_typed():
+    """An 80-bit COMM sample rate whose exponent puts it at 2**64 Hz or
+    beyond is refused as ValueError (it overflowed a float before), and
+    through ``decode_media``/``probe_audio`` too."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs.aiff_caf import _f80_decode, encode_aiff
+    from input_data_pipeline_spark.codecs.route import decode_media, probe_audio
+
+    def f80(exp):  # 1.0 * 2**(exp - 16383)
+        return exp.to_bytes(2, "big") + bytes([0x80]) + bytes(7)
+
+    assert _f80_decode(f80(16383 + 63)) == 2.0 ** 63
+    for exp in (16383 + 64, 0x7FFE):
+        with pytest.raises(ValueError, match="out of range"):
+            _f80_decode(f80(exp))
+    blob = bytearray(encode_aiff(np.zeros(64, np.int16), 8000))
+    at = blob.index(b"COMM") + 16  # the rate's sign-and-exponent bytes
+    blob[at : at + 2] = (0x7F00).to_bytes(2, "big")
+    for call in (lambda b: decode_media(b, "audio"), probe_audio):
+        with pytest.raises(ValueError, match="out of range"):
+            call(bytes(blob))
+
+
+def test_wav_zero_channels_is_typed():
+    """A 'fmt ' chunk declaring zero channels is refused by the chunk
+    parse, so the G.711, float and extensible-PCM arms never divide by
+    the channel count."""
+    import numpy as np
+
+    from input_data_pipeline_spark.codecs import wav
+    from input_data_pipeline_spark.codecs.route import decode_media, probe_audio
+
+    for blob in (
+        wav.encode_wav_codes(bytes(100), wav._WAVE_FORMAT_MULAW),
+        wav.encode_wav_float(np.zeros(10, np.int16)),
+        wav.encode_wav_extensible(bytes(20), wav._WAVE_FORMAT_PCM, 1, 8000, 16),
+    ):
+        zeroed = bytearray(blob)
+        zeroed[22:24] = bytes(2)  # the fmt chunk's channel count
+        for call in (lambda b: decode_media(b, "audio"), probe_audio):
+            with pytest.raises(ValueError, match="zero channels"):
+                call(bytes(zeroed))
